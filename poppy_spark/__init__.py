@@ -12,6 +12,8 @@ Public surface mirrors the reference Python binding
 extended with DataFrame verbs under :mod:`poppy_spark.spark`.
 """
 
+import sys
+
 from .core import (
     BloomFilter,
     InvalidVersion,
@@ -35,6 +37,17 @@ from .sketches import (
 )
 
 __version__ = "0.1.0"
+
+# Every library UDF imports this package when a Spark Python worker
+# unpickles it; from then on the worker's per-task import-cache reset costs
+# a stat per zip archive instead of a re-parse (see _worker).
+if "pyspark" in sys.modules:
+    from pyspark.taskcontext import TaskContext
+
+    if TaskContext.get() is not None:
+        from ._worker import install_lazy_zip_invalidation
+
+        install_lazy_zip_invalidation()
 
 __all__ = [
     "BloomFilter",

@@ -244,14 +244,6 @@ def fnv1_batch(mat: np.ndarray, lens: np.ndarray) -> np.ndarray:
     return h
 
 
-def _le64_at(mat: np.ndarray, off: np.ndarray, j: int) -> np.ndarray:
-    """Little-endian u64 read at per-row byte offset ``off + j``."""
-    idx = off[:, None] + (np.arange(j, j + 8, dtype=np.int64)[None, :])
-    g = np.take_along_axis(mat, idx, axis=1).astype(U64)
-    shifts = (np.arange(8, dtype=np.uint64) * U64(8))[None, :]
-    return (g << shifts).sum(axis=1, dtype=U64)
-
-
 def _read_rest_words(w: np.ndarray, t: np.ndarray) -> np.ndarray:
     """Vectorized exact-length composed read from the little-endian u64 word
     ``w`` holding the 8 bytes at the read position; ``t`` is the per-row

@@ -15,7 +15,7 @@ import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 
 from poppy_spark.core import BloomFilter
 
@@ -69,9 +69,9 @@ def bloom_contains_udf(
 ):
     """A reusable boolean vectorized UDF testing membership in ``filt``.
 
-    Uses an Arrow-native UDF when the runtime has one (Spark 4.1+): the key
-    column arrives as a ``pyarrow.Array`` and feeds ``pack_arrow`` directly —
-    no Arrow -> pandas object-string -> Arrow round trip.
+    An Arrow-native UDF: the key column arrives as a ``pyarrow.Array`` and
+    feeds ``pack_arrow`` directly — no Arrow -> pandas object-string ->
+    Arrow round trip.
 
     ``int_keys`` must match the BUILD side's mode.  With the default
     ``"string"`` the UDF expects text keys and raises on integer input (the
@@ -85,35 +85,15 @@ def bloom_contains_udf(
     cache_key = f"bloom-{_broadcast_id(bc)}"
     int_mode = _INT_MODE[int_keys]
 
-    try:
-        from pyspark.sql.functions import arrow_udf
-    except ImportError:
-        arrow_udf = None
-
-    if arrow_udf is not None:
-
-        @arrow_udf("boolean")
-        def contains(keys: pa.Array) -> pa.Array:
-            f = _get_filter(bc, cache_key)
-            from poppy_spark.core.hashkern import pack_arrow
-
-            mat, lens = pack_arrow(keys, int_mode=int_mode)
-            return pa.array(f.contains_packed(mat, lens))
-
-        return contains
-
-    @pandas_udf("boolean")
-    def contains_pd(keys: pd.Series) -> pd.Series:
+    @arrow_udf("boolean")
+    def contains(keys: pa.Array) -> pa.Array:
         f = _get_filter(bc, cache_key)
-        # the Spark-side key expression already canonicalized the column to
-        # string or passed binary through; no astype that would mangle bytes
-        arr = pa.Array.from_pandas(keys)
         from poppy_spark.core.hashkern import pack_arrow
 
-        mat, lens = pack_arrow(arr, int_mode=int_mode)
-        return pd.Series(f.contains_packed(mat, lens))
+        mat, lens = pack_arrow(keys, int_mode=int_mode)
+        return pa.array(f.contains_packed(mat, lens))
 
-    return contains_pd
+    return contains
 
 
 def bloom_contains(

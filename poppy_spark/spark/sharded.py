@@ -164,6 +164,49 @@ def _bit_parts(
     return byte_off, (np.uint8(1) << (flat & np.uint64(7)).astype(np.uint8))
 
 
+def _cogroup_probe(df: DataFrame, output_col: str, p: _Params):
+    """``(out_schema, check)`` of a single-shuffle cogroup probe: ``check``
+    tests each left row's routed bits (``__ib``, ``__idx``) against the one
+    shard state on the right and appends ``output_col`` to the carried
+    ``df`` columns; a left group without a state (untouched shard, group
+    never built) probes all-False.
+
+    Input timestamps arrive tagged with the session zone (``Etc/UTC``,
+    ``America/New_York``, ...) while Spark checks the result against
+    ``tz=UTC``; the final cast to Spark's Arrow schema only rewrites that
+    type metadata."""
+    import pyspark.sql.types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from poppy_spark.spark.agg import decompress_blob
+
+    in_cols = list(df.columns)
+    k, bps = p.n_hash_buck, p.bps
+    out_schema = T.StructType(
+        list(df.schema.fields) + [T.StructField(output_col, T.BooleanType())]
+    )
+    large = df.sparkSession.conf.get("spark.sql.execution.arrow.useLargeVarTypes", "false")
+    arrow_out = to_arrow_schema(out_schema, prefers_large_types=large.lower() == "true")
+
+    def check(left: pa.Table, right: pa.Table) -> pa.Table:
+        n = left.num_rows
+        if n == 0 or right.num_rows == 0:
+            hit = np.zeros(n, dtype=bool)
+        else:
+            buckets = np.frombuffer(
+                decompress_blob(right.column("state")[0].as_py()), dtype=np.uint8
+            )
+            shard_id = int(right.column("__shard_id")[0].as_py())
+            ib_local = left.column("__ib").to_numpy(zero_copy_only=False) - shard_id * bps
+            idx = _binary_to_idx(left.column("__idx"), k)
+            byte_off, bitmask = _bit_parts(ib_local, idx, buckets.size)
+            hit = ((buckets[byte_off] & bitmask) != 0).reshape(-1, k).all(axis=1)
+        keep = left.select(in_cols).append_column(output_col, pa.array(hit))
+        return keep.cast(arrow_out)
+
+    return out_schema, check
+
+
 def _or_bits_into(buckets: np.ndarray, ib_local: np.ndarray, idx: np.ndarray) -> None:
     # no dedup sort: the bitwise_or.at scatter makes duplicate bit ids
     # harmless — and the sort was the phase-2 scaling bottleneck (this
@@ -329,68 +372,39 @@ class ShardedBloom:
         ride the shard shuffle directly.  The former ``mapInArrow`` route
         serialized every column to Python and back once before the shuffle
         (~1.5x the whole probe on the 11-column bench table)."""
-        import pyspark.sql.types as T  # noqa: F401  (schema strings below)
+        from pyspark.sql.functions import arrow_udf
 
-        from poppy_spark.spark.agg import _as_key, decompress_blob
+        from poppy_spark.spark.agg import _as_key
 
         p = self.params
         int_mode = _INT_MODE[int_keys]
         in_cols = list(df.columns)
         keyed = df.select("*", _as_key(df, col, int_keys).alias("__key"))
 
-        try:
-            from pyspark.sql.functions import arrow_udf
-        except ImportError:
-            arrow_udf = None
-
-        if arrow_udf is not None:
-
-            def route1(keys):
-                if isinstance(keys, pa.ChunkedArray):
-                    keys = keys.combine_chunks()
-                shard, ib, idx, _ = _route_batch(keys, p, dedup=False, int_mode=int_mode)
-                return pa.StructArray.from_arrays(
-                    [
-                        pa.array(shard, type=pa.int32()),
-                        pa.array(ib, type=pa.int64()),
-                        _idx_to_binary(idx),
-                    ],
-                    ["s", "ib", "idx"],
-                )
-
-            route1.__annotations__ = {"keys": pa.Array, "return": pa.Array}
-            udf = arrow_udf(route1, "struct<s:int, ib:bigint, idx:binary>")
-            tuples = (
-                keyed.withColumn("__r", udf(F.col("__key")))
-                .select(
-                    *in_cols,
-                    F.col("__r.s").alias("__shard_id"),
-                    F.col("__r.ib").alias("__ib"),
-                    F.col("__r.idx").alias("__idx"),
-                )
+        def route1(keys):
+            if isinstance(keys, pa.ChunkedArray):
+                keys = keys.combine_chunks()
+            shard, ib, idx, _ = _route_batch(keys, p, dedup=False, int_mode=int_mode)
+            return pa.StructArray.from_arrays(
+                [
+                    pa.array(shard, type=pa.int32()),
+                    pa.array(ib, type=pa.int64()),
+                    _idx_to_binary(idx),
+                ],
+                ["s", "ib", "idx"],
             )
-        else:  # pre-4.1 runtime: whole-row mapInArrow route
 
-            def index_fn(batches):
-                for b in batches:
-                    shard, ib, idx, _ = _route_batch(
-                        b.column(b.num_columns - 1), p, dedup=False, int_mode=int_mode
-                    )
-                    cols = [b.column(i) for i in range(b.num_columns - 1)]
-                    yield pa.RecordBatch.from_arrays(
-                        cols + [pa.array(shard), pa.array(ib), _idx_to_binary(idx)],
-                        in_cols + ["__shard_id", "__ib", "__idx"],
-                    )
-
-            route_schema = T.StructType(
-                list(df.schema.fields)
-                + [
-                    T.StructField("__shard_id", T.IntegerType()),
-                    T.StructField("__ib", T.LongType()),
-                    T.StructField("__idx", T.BinaryType()),
-                ]
+        route1.__annotations__ = {"keys": pa.Array, "return": pa.Array}
+        udf = arrow_udf(route1, "struct<s:int, ib:bigint, idx:binary>")
+        tuples = (
+            keyed.withColumn("__r", udf(F.col("__key")))
+            .select(
+                *in_cols,
+                F.col("__r.s").alias("__shard_id"),
+                F.col("__r.ib").alias("__ib"),
+                F.col("__r.idx").alias("__idx"),
             )
-            tuples = keyed.mapInArrow(index_fn, route_schema)
+        )
         if salt > 1:
             tuples = tuples.withColumn(
                 "salt", F.pmod(F.xxhash64("__ib"), F.lit(salt)).cast("int")
@@ -403,31 +417,7 @@ class ShardedBloom:
         else:
             states = self.states.withColumnRenamed("shard_id", "__shard_id")
             gkeys = ["__shard_id"]
-
-        k, bps = p.n_hash_buck, p.bps
-        out_schema = T.StructType(
-            list(df.schema.fields) + [T.StructField(output_col, T.BooleanType())]
-        )
-
-        def check(left: pa.Table, right: pa.Table) -> pa.Table:
-            keep = left.select(in_cols)
-            n = left.num_rows
-            if n == 0:
-                return keep.append_column(output_col, pa.array([], pa.bool_()))
-            if right.num_rows == 0:  # untouched shard: all-zero buckets
-                return keep.append_column(
-                    output_col, pa.array(np.zeros(n, dtype=bool))
-                )
-            buckets = np.frombuffer(
-                decompress_blob(right.column("state")[0].as_py()), dtype=np.uint8
-            )
-            shard_id = int(right.column("__shard_id")[0].as_py())
-            ib_local = left.column("__ib").to_numpy(zero_copy_only=False) - shard_id * bps
-            idx = _binary_to_idx(left.column("__idx"), k)
-            byte_off, bitmask = _bit_parts(ib_local, idx, buckets.size)
-            hit = ((buckets[byte_off] & bitmask) != 0).reshape(-1, k).all(axis=1)
-            return keep.append_column(output_col, pa.array(hit))
-
+        out_schema, check = _cogroup_probe(df, output_col, p)
         return (
             tuples.groupBy(*gkeys)
             .cogroup(states.groupBy(*gkeys))
@@ -934,7 +924,7 @@ class GroupedShardedBloom:
         no join-back."""
         import pyspark.sql.types as T
 
-        from poppy_spark.spark.agg import _as_key, decompress_blob
+        from poppy_spark.spark.agg import _as_key
 
         p = self.params
         g = self.group_col
@@ -963,28 +953,7 @@ class GroupedShardedBloom:
         )
         tuples = keyed.mapInArrow(index_fn, route_schema)
         states = self.states.withColumnRenamed("shard_id", "__shard_id")
-        k, bps = p.n_hash_buck, p.bps
-        out_schema = T.StructType(
-            list(df.schema.fields) + [T.StructField(output_col, T.BooleanType())]
-        )
-
-        def check(left: pa.Table, right: pa.Table) -> pa.Table:
-            keep = left.select(in_cols)
-            n = left.num_rows
-            if n == 0:
-                return keep.append_column(output_col, pa.array([], pa.bool_()))
-            if right.num_rows == 0:  # group never built or shard untouched
-                return keep.append_column(output_col, pa.array(np.zeros(n, dtype=bool)))
-            buckets = np.frombuffer(
-                decompress_blob(right.column("state")[0].as_py()), dtype=np.uint8
-            )
-            shard_id = int(right.column("__shard_id")[0].as_py())
-            ib_local = left.column("__ib").to_numpy(zero_copy_only=False) - shard_id * bps
-            idx = _binary_to_idx(left.column("__idx"), k)
-            byte_off, bitmask = _bit_parts(ib_local, idx, buckets.size)
-            hit = ((buckets[byte_off] & bitmask) != 0).reshape(-1, k).all(axis=1)
-            return keep.append_column(output_col, pa.array(hit))
-
+        out_schema, check = _cogroup_probe(df, output_col, p)
         return (
             tuples.groupBy(g, "__shard_id")
             .cogroup(states.groupBy(g, "__shard_id"))

@@ -126,18 +126,8 @@ def with_normalized(df: DataFrame, vec_col: str, out_col: str = "vec_n") -> Data
     The UDF is opaque to both rewrites, and
     :func:`_normalize_rows_exact` reproduces the JVM float semantics
     bit-for-bit (pytest-pinned), so results are unchanged."""
-    try:
-        from pyspark.sql.functions import arrow_udf
-    except ImportError:  # pre-4.1 runtime: keep the JVM expression form
-        n = _norm(F.col(vec_col))
-        return df.withColumn(
-            out_col,
-            F.transform(
-                F.col(vec_col), lambda v: (v / F.greatest(n, F.lit(1e-12))).cast("double")
-            ),
-        )
-
     import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
     def norm_rows(arr):
         return _normalize_rows_exact(arr)

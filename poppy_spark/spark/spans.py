@@ -74,6 +74,13 @@ def _span_tuples(
     ).select("__id", F.col("s.pos").alias("__pos"), F.col("s.key").alias("__key"))
 
 
+def _check_span_args(span_words: int, stride: int) -> None:
+    if span_words < 2:
+        raise ValueError(f"span_words must be >= 2, got {span_words}")
+    if stride < 1:
+        raise ValueError(f"stride must be >= 1, got {stride}")
+
+
 def repeated_spans(
     df: DataFrame,
     text_col: str,
@@ -87,10 +94,7 @@ def repeated_spans(
     distinct documents.  ``first_*`` is the globally smallest
     ``(id, word position)`` occurrence — a deterministic representative
     for extraction (:func:`span_texts`)."""
-    if span_words < 2:
-        raise ValueError(f"span_words must be >= 2, got {span_words}")
-    if stride < 1:
-        raise ValueError(f"stride must be >= 1, got {stride}")
+    _check_span_args(span_words, stride)
     spans = _span_tuples(df, text_col, id_col, span_words, stride)
     # two-phase distinct-doc count: (key, id) first so the per-doc phase
     # map-combines, then the per-key rollup sees one row per (key, doc)
@@ -148,6 +152,7 @@ def remove_repeated_spans(
     text is the final doc-keyed equi-join (unique key, skew-free) with
     an in-place array filter.  ``stride`` thins detection AND removal by
     the same content rule, so they stay consistent under subsampling."""
+    _check_span_args(span_words, stride)
     out = output_col or text_col
     # ONE span scan shared by detection and removal: the former shape ran
     # ``_span_tuples`` twice (once here, once inside ``repeated_spans``),

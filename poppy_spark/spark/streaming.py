@@ -253,8 +253,9 @@ class BloomStreamDedup:
         out_path: str,
         max_state_bytes: int = 1 << 30,
     ):
-        sk0 = factory()
-        est = len(sk0.dumps())
+        # from the parameters: the filter's pages stay untouched, where
+        # serializing it to measure would commit the whole state
+        est = factory().filter.size_in_bytes()
         if est > max_state_bytes:
             raise ValueError(
                 f"filter state is ~{est} bytes; BloomStreamDedup probes and "

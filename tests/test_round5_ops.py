@@ -448,6 +448,20 @@ class TestRemoveRepeatedSpans:
             (r["doc_id"], r["text"]) for r in b.collect()
         )
 
+    def test_rejects_short_spans(self, spark):
+        from poppy_spark.spark.spans import remove_repeated_spans
+
+        df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+        with pytest.raises(ValueError, match="span_words"):
+            remove_repeated_spans(df, "text", "doc_id", span_words=1)
+
+    def test_rejects_zero_stride(self, spark):
+        from poppy_spark.spark.spans import remove_repeated_spans
+
+        df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+        with pytest.raises(ValueError, match="stride"):
+            remove_repeated_spans(df, "text", "doc_id", stride=0)
+
 
 class TestPngCodec:
     def test_roundtrip_gray_rgb_rgba(self):

@@ -581,3 +581,49 @@ class TestAutoCapacity:
         df = spark.range(10).select(F.col("id").cast("string").alias("k"))
         with pytest.raises(TypeError):
             build_sharded_bloom(df, "k", capacity=1.5)
+
+
+class TestProbeSessionZones:
+    """Every shuffle and grouped probe carries a timestamp column through
+    under any session zone: Spark sends timestamps tagged with the session
+    zone and checks ``applyInArrow`` results against ``tz=UTC``."""
+
+    @pytest.fixture(params=["Etc/UTC", "America/New_York"])
+    def zone(self, request, spark):
+        key = "spark.sql.session.timeZone"
+        before = spark.conf.get(key)
+        spark.conf.set(key, request.param)
+        yield request.param
+        spark.conf.set(key, before)
+
+    @pytest.fixture(scope="class")
+    def ts_df(self, spark):
+        return spark.range(0, 2000).select(
+            (F.col("id") % 5).cast("string").alias("g"),
+            F.format_string("tz-key-%06d", "id").alias("k"),
+            F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id") * 37).alias("ts"),
+        )
+
+    def _check(self, probed, ts_df):
+        got = sorted((r["k"], r["ts"], r["hit"]) for r in probed.collect())
+        want = sorted((r["k"], r["ts"], True) for r in ts_df.collect())
+        assert got == want
+        assert probed.schema["ts"].dataType == ts_df.schema["ts"].dataType
+
+    def test_sharded_shuffle_probes(self, spark, zone, ts_df):
+        sb = build_sharded_bloom(ts_df, "k", capacity=2000, fpp=0.001, n_shards=4)
+        for carry in ("columns", "join"):
+            self._check(sb.contains(ts_df, "k", carry=carry, strategy="shuffle"), ts_df)
+
+    def test_grouped_probes(self, spark, zone, ts_df):
+        from poppy_spark.sketches import BloomSketch
+        from poppy_spark.spark.agg import build_sketch_grouped
+        from poppy_spark.spark.probe import bloom_contains_grouped_join
+        from poppy_spark.spark.sharded import build_sharded_bloom_grouped
+
+        gsb = build_sharded_bloom_grouped(
+            ts_df, "k", "g", capacity=2000, fpp=0.001, n_shards=2
+        )
+        self._check(gsb.contains(ts_df, "k"), ts_df)
+        states = build_sketch_grouped(ts_df, "k", ["g"], BloomSketch.factory(2000, 0.001))
+        self._check(bloom_contains_grouped_join(ts_df, "k", "g", states), ts_df)
