@@ -6,8 +6,8 @@ Spark-first:
 
 * **update**: ``df.mapInArrow`` builds ONE sketch state per input partition
   (Arrow batches -> numpy kernels; no per-row Python, no row shuffle);
-* **merge**: a bounded-fan-in tree of ``groupBy().applyInPandas`` stages ORs
-  the partial states together (shuffle volume = n_partitions x state_size,
+* **merge**: a bounded-fan-in tree of :func:`fold_groups` stages ORs the
+  partial states together (shuffle volume = n_partitions x state_size,
   never the data).
 
 Why not a pandas GROUPED_AGG UDF: Spark's grouped-agg pandas UDFs do not
@@ -18,14 +18,20 @@ a 10^12-row table.
 Grouped variant: phase 1 emits one state per (partition x group) — shuffling
 sketch states instead of rows; phase 2 merges per group.  Skewed group keys
 therefore cost one state per partition, not one shuffle partition of rows.
+
+:func:`fold_groups` is the one shape of every grouped state merge in the
+package (this module, ``sharded``, ``profile``, ``streaming``); its run
+finder also drives the grouped-join probe in ``probe``.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Sequence
+from typing import Any, Callable, Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
@@ -132,30 +138,172 @@ def _update_fn(
     return update
 
 
-def _merge_pdf(factory: Callable[[], Sketch], final: bool = False):
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        cls = type(factory())
-        sk = None
-        for raw in pdf["state"]:
-            part = _z_loads(cls, raw)
-            if sk is None:
-                sk = part
+_STATES_SCHEMA = StructType(
+    [
+        StructField("pid", LongType()),
+        StructField("state", BinaryType()),
+        StructField("n_rows", LongType()),
+    ]
+)
+
+#: stand-in for NaN in dict keys: Python's NaN != NaN, Spark groups NaNs as one
+_NAN = ("__nan__",)
+
+
+def _nan_key(v):
+    """A group value as a dict key that holds NaN equal to NaN."""
+    return _NAN if isinstance(v, float) and v != v else v
+
+
+def _run_starts(cols: Sequence[pa.Array], n: int) -> np.ndarray:
+    """Start offsets of the runs of equal keys in ``n`` rows of sorted key
+    columns, found with Arrow compute (no per-row Python).  NULL equals NULL
+    and NaN equals NaN, as Spark groups them; no key columns is one run."""
+    change = np.zeros(max(n - 1, 0), dtype=bool)
+    for c in cols:
+        a, b = c.slice(1), c.slice(0, n - 1)
+        ne = pc.not_equal(a, b)
+        if pa.types.is_floating(c.type):
+            ne = pc.and_(ne, pc.invert(pc.and_(pc.is_nan(a), pc.is_nan(b))))
+        if c.null_count:
+            ne = pc.coalesce(ne, pc.not_equal(pc.is_valid(a), pc.is_valid(b)))
+        change |= ne.to_numpy(zero_copy_only=False)
+    return np.concatenate(([0], np.flatnonzero(change) + 1))
+
+
+def _key_runs(batches: Iterator[pa.RecordBatch], n_keys: int):
+    """Runs of equal keys over a stream of batches sorted by their first
+    ``n_keys`` columns: yields ``(batch, bounds, cont)`` per non-empty batch,
+    where run ``j`` is rows ``[bounds[j], bounds[j + 1])`` and ``cont`` says
+    the first run continues the previous batch's last run."""
+    last = None
+    for b in batches:
+        n = b.num_rows
+        if not n:
+            continue
+        keys = b.columns[:n_keys]
+        cont = last is not None and len(
+            _run_starts([pa.concat_arrays([l, k.slice(0, 1)]) for l, k in zip(last, keys)], 2)
+        ) == 1
+        last = [k.take([n - 1]) for k in keys]
+        yield b, np.append(_run_starts(keys, n), n), cont
+
+
+def _rows_to_batch(rows: list, arrow_schema: pa.Schema) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(zip(*rows), arrow_schema)],
+        schema=arrow_schema,
+    )
+
+
+#: pending output of one fold task before it is yielded as a batch
+_FLUSH_ROWS = 1024
+_FLUSH_BYTES = 64 << 20
+
+
+def fold_groups(
+    df: DataFrame,
+    keys: Sequence[str],
+    schema: StructType | str,
+    start: Callable[[tuple], Any],
+    add: Callable[[Any, Any, int, int], None],
+    emit: Callable[[tuple, Any], tuple | None],
+    prepare: Callable[[pa.RecordBatch], Any] | None = None,
+) -> DataFrame:
+    """Fold the rows that share ``keys`` into one output row per group.
+
+    The one shape of every grouped state merge: ``repartition(*keys)``,
+    ``sortWithinPartitions(*keys)``, then ONE ``mapInArrow`` pass that finds
+    runs of equal keys per Arrow batch (:func:`_run_starts`) and folds
+    thousands of groups per Python call.  Not ``groupBy().applyInPandas``:
+    that builds a pandas frame and makes one Python call per group (round-5
+    sf1 finding: ~1.5M few-row invocations = the per-row-Python anti-pattern
+    at group granularity, 63% of the suite's wall), and holds a whole group
+    in one frame.  Here task memory is one accumulator plus one batch (and
+    at most ``_FLUSH_ROWS`` rows / ``_FLUSH_BYTES`` of pending output).
+
+    Per group: ``acc = start(key)`` once, ``add(acc, view, lo, hi)`` once
+    per batch slice ``[lo, hi)`` (a run spanning a batch boundary continues
+    into the next batch; ``view = prepare(batch)``, default the batch with
+    the key columns first), then ``emit(key, acc)`` returns one output row
+    in ``schema`` order (a ``StructType`` or DDL string) or ``None``.
+    ``key`` holds the group's values as Python objects; NULL equals NULL
+    and NaN equals NaN, as Spark groups them.  No ``keys`` folds everything
+    into one group in one task.
+
+    Merge order within a group is shuffle arrival order, exactly as
+    ``applyInPandas``' was: every sketch either merges order-invariantly
+    (Bloom/HLL/CMS/MinHash/Theta) or is gated by rank-bound oracles
+    (KLL/t-digest).
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    keys = list(keys)
+    n_keys = len(keys)
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rest = [c for c in df.columns if c not in keys]
+    df = df.select(*keys, *rest)
+    df = df.repartition(*keys).sortWithinPartitions(*keys) if keys else df.repartition(1)
+
+    def groups(batches: Iterator[pa.RecordBatch]):
+        """``(key, acc)`` of each group once all its rows were added."""
+        key = acc = None
+        for b, bounds, cont in _key_runs(batches, n_keys):
+            view = prepare(b) if prepare is not None else b
+            heads = [b.column(i).take(bounds[:-1]).to_pylist() for i in range(n_keys)]
+            for j in range(len(bounds) - 1):
+                if j or not cont:
+                    if key is not None:
+                        yield key, acc
+                    key = tuple(h[j] for h in heads)
+                    acc = start(key)
+                add(acc, view, int(bounds[j]), int(bounds[j + 1]))
+        if key is not None:
+            yield key, acc
+
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        out: list = []
+        out_bytes = 0
+        for key, acc in groups(batches):
+            row = emit(key, acc)
+            if row is None:
+                continue
+            out.append(row)
+            out_bytes += sum(len(v) for v in row if isinstance(v, bytes))
+            if len(out) >= _FLUSH_ROWS or out_bytes >= _FLUSH_BYTES:
+                yield _rows_to_batch(out, arrow_schema)
+                out, out_bytes = [], 0
+        if out:
+            yield _rows_to_batch(out, arrow_schema)
+
+    return df.mapInArrow(fold, schema)
+
+
+class _StateMerge:
+    """:func:`fold_groups` accumulator merging a group's ``state`` and
+    ``n_rows`` rows (lz4-wrapped or raw states alike) into one sketch."""
+
+    __slots__ = ("cls", "sk", "n_rows")
+
+    def __init__(self, cls: type):
+        self.cls, self.sk, self.n_rows = cls, None, 0
+
+    def add(self, b: pa.RecordBatch, lo: int, hi: int) -> None:
+        states = b.column("state")
+        for i in range(lo, hi):
+            part = _z_loads(self.cls, states[i].as_py())
+            if self.sk is None:
+                self.sk = part
             else:
-                sk.merge(part)
-        if final:
-            sk.finalize_merge()
-        return pd.DataFrame(
-            {
-                "pid": [int(pdf["pid"].min())],
-                "state": [sk.dumps() if final else _z_dumps(sk)],
-                "n_rows": [int(pdf["n_rows"].sum())],
-            }
-        )
+                self.sk.merge(part)
+        self.n_rows += pc.sum(b.column("n_rows").slice(lo, hi - lo)).as_py() or 0
 
-    return merge
+    def final_state(self) -> bytes:
+        self.sk.finalize_merge()
+        return self.sk.dumps()
 
-
-_STATES_SCHEMA = "pid bigint, state binary, n_rows bigint"
 
 #: Spark types whose values feed hash-based sketches as utf-8 strings.  Keys
 #: are canonicalized with CAST(.. AS STRING) so that build and probe always
@@ -248,35 +396,30 @@ def _reassemble_states_df(sb) -> DataFrame:
     driver.  The single task must hold the whole filter: inherent to the
     one-state contract of ``build_sketch_df`` (callers needing filters past
     one worker keep the ShardedBloom itself)."""
-    import numpy as np
-
     from poppy_spark.core.statekern import BUCKET_SIZE
 
     p = sb.params
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
+    def start(key):
+        return [np.zeros(p.n_buckets * BUCKET_SIZE, dtype=np.uint8), 0]
+
+    def add(acc, b, lo, hi):
+        for i in range(lo, hi):
+            off = int(b.column("shard_id")[i].as_py()) * p.bps * BUCKET_SIZE
+            v = np.frombuffer(decompress_blob(b.column("state")[i].as_py()), dtype=np.uint8)
+            acc[0][off : off + v.size] = v
+        acc[1] += pc.sum(b.column("n_rows").slice(lo, hi - lo)).as_py() or 0
+
+    def emit(key, acc):
         from poppy_spark.core.v2 import BloomV2
 
-        buckets = np.zeros(p.n_buckets * BUCKET_SIZE, dtype=np.uint8)
-        for sid, blob in zip(pdf["shard_id"], pdf["state"]):
-            lo = int(sid) * p.bps * BUCKET_SIZE
-            v = np.frombuffer(decompress_blob(blob), dtype=np.uint8)
-            buckets[lo : lo + v.size] = v
-        filt = BloomV2(p.capacity, p.fpp, p.n_hash_buck, p.n_buckets, 0, 0, buckets)
+        filt = BloomV2(p.capacity, p.fpp, p.n_hash_buck, p.n_buckets, 0, 0, acc[0])
         filt.update_count()
         # a BloomSketch state IS the poppy v2 file, so the assembled filter's
         # bytes are directly loadable by the sketch class downstream
-        return pd.DataFrame(
-            {
-                "pid": [0],
-                "state": [filt.dumps()],
-                "n_rows": [int(pdf["n_rows"].sum())],
-            }
-        )
+        return (0, filt.dumps(), acc[1])
 
-    return sb.states.groupBy(F.lit(0).alias("__g")).applyInPandas(
-        assemble, _STATES_SCHEMA
-    )
+    return fold_groups(sb.states, [], _STATES_SCHEMA, start, add, emit)
 
 
 def build_sketch_df(
@@ -341,15 +484,28 @@ def merge_states_tree(
     """Reduce a ``(pid, state, n_rows)`` DataFrame to one finalized state row
     via a bounded-fan-in merge tree (poppy folds sequentially; we tree-reduce
     so no single task ORs more than ``merge_fanout`` multi-MB states)."""
-    merge = _merge_pdf(factory)
+    cls = type(factory())
+
+    def start(key):
+        return _StateMerge(cls)
+
     while n_parts > merge_fanout:
         n_parts = (n_parts + merge_fanout - 1) // merge_fanout
-        states = states.groupBy(
-            (F.col("pid") % F.lit(n_parts)).alias("__g")
-        ).applyInPandas(lambda pdf: merge(pdf), _STATES_SCHEMA)
-    final_merge = _merge_pdf(factory, final=True)
-    return states.groupBy(F.lit(0).alias("__g")).applyInPandas(
-        lambda pdf: final_merge(pdf), _STATES_SCHEMA
+        states = fold_groups(
+            states.withColumn("pid", F.col("pid") % F.lit(n_parts)),
+            ["pid"],
+            _STATES_SCHEMA,
+            start,
+            _StateMerge.add,
+            lambda key, m: (key[0], _z_dumps(m.sk), m.n_rows),
+        )
+    return fold_groups(
+        states,
+        [],
+        _STATES_SCHEMA,
+        start,
+        _StateMerge.add,
+        lambda key, m: (0, m.final_state(), m.n_rows),
     )
 
 
@@ -465,283 +621,101 @@ def build_sketch_grouped(
     if repartition and repartition != n_parts:
         sel = sel.repartition(repartition)
     out_schema = _grouped_schema(df, group_cols)
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(out_schema)
-
     n_group_cols = len(group_cols)
+    cls = type(factory())
+    template: list = []  # one routing template per Python worker, made on first use
+
+    def new_sketch() -> Sketch:
+        sk = factory()
+        sk.int_keys = int_keys
+        return sk
+
+    def keyed_view(b: pa.RecordBatch):
+        # hash-once fast path: sketches that can route the whole batch once
+        # absorb each group's rows as a pre-routed numpy scatter
+        # (``batch_context``/``update_slice``); others take ``update_arrow``
+        # on a zero-copy slice
+        if not template:
+            template.append(new_sketch())
+        key_col = b.column(n_group_cols)
+        return key_col, template[0].batch_context(key_col)
+
+    def absorb(ent: list, view, lo: int, hi: int) -> None:
+        key_col, ctx = view
+        if ctx is not None:
+            ent[0].update_slice(ctx, lo, hi)
+        else:
+            ent[0].update_arrow(key_col.slice(lo, hi - lo))
+        ent[1] += hi - lo
+
+    def emit_final(key: tuple, ent: list) -> tuple:
+        ent[0].finalize_merge()
+        return (*key, ent[0].dumps(), ent[1])
 
     if shuffle == "rows":
         # single-shuffle shape: co-locate each group's rows, sort them
         # contiguous, and fold finalized states directly — no partials
-        rows2 = sel.repartition(*[F.col(c) for c in group_cols]).sortWithinPartitions(
-            *group_cols
+        return fold_groups(
+            sel, group_cols, out_schema,
+            lambda key: [new_sketch(), 0], absorb, emit_final, prepare=keyed_view,
         )
 
-        def build_sorted(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            unset = object()
-            nan_key = ("__nan__",)  # python NaN != NaN; Spark groups NaN equal
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-            def normg(v):
-                return nan_key if isinstance(v, float) and v != v else v
-
-            template = factory()
-            template.int_keys = int_keys
-            cur_key = unset
-            cur_vals: tuple = ()
-            cur_sk = None
-            cur_n = 0
-            out_groups: list = []
-            out_states: list = []
-            out_n: list = []
-
-            def close_group():
-                nonlocal cur_sk, cur_n
-                cur_sk.finalize_merge()
-                out_groups.append(cur_vals)
-                out_states.append(cur_sk.dumps())
-                out_n.append(cur_n)
-                cur_sk, cur_n = None, 0
-
-            def drain():
-                cols = [
-                    pa.array(
-                        [g[i] for g in out_groups], type=arrow_schema.field(i).type
-                    )
-                    for i in range(n_group_cols)
-                ]
-                cols.append(pa.array(out_states, type=pa.binary()))
-                cols.append(pa.array(out_n, type=pa.int64()))
-                batch = pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
-                out_groups.clear()
-                out_states.clear()
-                out_n.clear()
-                return batch
-
-            for b in batches:
-                n = b.num_rows
-                if not n:
-                    continue
-                key_col = b.column(n_group_cols)
-                gcols_py = [b.column(i).to_pylist() for i in range(n_group_cols)]
-                ctx = template.batch_context(key_col)
-                r = 0
-                while r < n:
-                    key = (
-                        normg(gcols_py[0][r])
-                        if n_group_cols == 1
-                        else tuple(normg(col[r]) for col in gcols_py)
-                    )
-                    r2 = r + 1
-                    while r2 < n and all(
-                        normg(col[r2]) == normg(col[r]) for col in gcols_py
-                    ):
-                        r2 += 1
-                    if key != cur_key:
-                        if cur_sk is not None:
-                            close_group()
-                        cur_key = key
-                        cur_vals = tuple(col[r] for col in gcols_py)
-                    if cur_sk is None:
-                        cur_sk = factory()
-                        cur_sk.int_keys = int_keys
-                    if ctx is not None:
-                        cur_sk.update_slice(ctx, r, r2)
-                    else:
-                        cur_sk.update_arrow(key_col.slice(r, r2 - r))
-                    cur_n += r2 - r
-                    r = r2
-                if len(out_groups) >= 1024:
-                    yield drain()
-            if cur_sk is not None:
-                close_group()
-            if out_groups:
-                yield drain()
-
-        return rows2.mapInArrow(build_sorted, out_schema)
+    arrow_schema = to_arrow_schema(out_schema)
 
     def update(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # Per-batch shape (round-6 rework, guide §4.2): sort the batch by
         # the group key once (Arrow C++), so each group's rows are a
-        # CONTIGUOUS slice — per-group work is then a dict probe plus either
-        # a pre-routed numpy scatter (``batch_context``/``update_slice``,
-        # sketches that can hash the whole batch once) or an
-        # ``update_arrow`` on a zero-copy slice.  The former pandas
-        # ``groupby().indices`` + per-group ``take`` + ``iloc`` shape cost
-        # ~360us per (partition, group) — 63% of the sf1 suite wall on the
-        # high-cardinality row.
-        import pyarrow.compute as pc
-
+        # CONTIGUOUS run — per-group work is then a dict probe plus one
+        # ``absorb`` of the run.  The former pandas ``groupby().indices`` +
+        # per-group ``take`` + ``iloc`` shape cost ~360us per (partition,
+        # group) — 63% of the sf1 suite wall on the high-cardinality row.
         states: dict = {}
-        group_vals: dict = {}
-        state_bytes_est = 0  # serialized size of ONE empty state, set lazily
-        template = factory()
-        template.int_keys = int_keys
+        state_bytes_est = 0  # in-memory size of ONE state, set lazily
         sort_keys = [(c, "ascending") for c in group_cols]
 
         def flush():
-            items = list(states.items())
-            arrs = [
-                pa.array(
-                    [group_vals[k][i] for k, _ in items],
-                    type=arrow_schema.field(i).type,
-                )
-                for i in range(n_group_cols)
-            ]
-            arrs.append(
-                pa.array([_z_dumps(ent[0]) for _, ent in items], type=pa.binary())
-            )
-            arrs.append(pa.array([ent[1] for _, ent in items], type=pa.int64()))
+            rows = [(*vals, _z_dumps(sk), n) for sk, n, vals in states.values()]
             states.clear()
-            group_vals.clear()
-            return [pa.RecordBatch.from_arrays(arrs, schema=arrow_schema)]
+            return _rows_to_batch(rows, arrow_schema)
 
         for batch in batches:
             n = batch.num_rows
             if not n:
                 continue
             sb = batch.take(pc.sort_indices(batch, sort_keys=sort_keys))
-            key_col = sb.column(n_group_cols)
-            gcols_py = [sb.column(i).to_pylist() for i in range(n_group_cols)]
-            ctx = template.batch_context(key_col)
-            r = 0
-            if n_group_cols == 1:
-                g0 = gcols_py[0]
-                while r < n:
-                    gkey = g0[r]
-                    r2 = r + 1
-                    while r2 < n and g0[r2] == gkey:
-                        r2 += 1
-                    ent = states.get(gkey)
-                    if ent is None:
-                        sk_new = factory()
-                        sk_new.int_keys = int_keys
-                        if not state_bytes_est:
-                            # in-memory bound, NOT len(dumps()): sketches
-                            # with a compact serialized form (sparse HLL)
-                            # still cost their dense size once updated
-                            state_bytes_est = max(sk_new.memory_bound_bytes(), 1)
-                        ent = states[gkey] = [sk_new, 0]
-                        group_vals[gkey] = (gkey,)
-                    if ctx is not None:
-                        ent[0].update_slice(ctx, r, r2)
-                    else:
-                        ent[0].update_arrow(key_col.slice(r, r2 - r))
-                    ent[1] += r2 - r
-                    r = r2
-            else:
-                while r < n:
-                    gkey = tuple(col[r] for col in gcols_py)
-                    r2 = r + 1
-                    while r2 < n and all(col[r2] == col[r] for col in gcols_py):
-                        r2 += 1
-                    ent = states.get(gkey)
-                    if ent is None:
-                        sk_new = factory()
-                        sk_new.int_keys = int_keys
-                        if not state_bytes_est:
-                            state_bytes_est = max(sk_new.memory_bound_bytes(), 1)
-                        ent = states[gkey] = [sk_new, 0]
-                        group_vals[gkey] = gkey
-                    if ctx is not None:
-                        ent[0].update_slice(ctx, r, r2)
-                    else:
-                        ent[0].update_arrow(key_col.slice(r, r2 - r))
-                    ent[1] += r2 - r
-                    r = r2
-            if states:
-                # re-estimate from a LIVE sketch each batch: bounds that
-                # depend on observed data (TopK key sizes) grow after the
-                # fresh-sketch estimate was taken (round-3 advice)
-                live = next(iter(states.values()))[0]
-                state_bytes_est = max(state_bytes_est, live.memory_bound_bytes())
+            view = keyed_view(sb)
+            bounds = np.append(_run_starts(sb.columns[:n_group_cols], n), n)
+            heads = [sb.column(i).take(bounds[:-1]).to_pylist() for i in range(n_group_cols)]
+            for j, vals in enumerate(zip(*heads)):
+                gkey = tuple(_nan_key(v) for v in vals)
+                ent = states.get(gkey)
+                if ent is None:
+                    ent = states[gkey] = [new_sketch(), 0, vals]
+                    if not state_bytes_est:
+                        # in-memory bound, NOT len(dumps()): sketches with a
+                        # compact serialized form (sparse HLL) still cost
+                        # their dense size once updated
+                        state_bytes_est = max(ent[0].memory_bound_bytes(), 1)
+                absorb(ent, view, int(bounds[j]), int(bounds[j + 1]))
+            # re-estimate from a LIVE sketch each batch: bounds that depend
+            # on observed data (TopK key sizes) grow after the fresh-sketch
+            # estimate was taken (round-3 advice)
+            live = next(iter(states.values()))[0]
+            state_bytes_est = max(state_bytes_est, live.memory_bound_bytes())
             if len(states) * state_bytes_est > max_task_state_bytes:
-                yield from flush()
+                yield flush()
         if states:
-            yield from flush()
+            yield flush()
 
+    # Phase 2: merge partials per group in one fold pass.
     partials = sel.mapInArrow(update, out_schema)
-
-    # Phase 2: merge partials per group.  NOT groupBy().applyInPandas — that
-    # invokes the Python merge function once per group (round-5 sf1 finding:
-    # ~1.5M few-row invocations = the per-row-Python anti-pattern at group
-    # granularity, 63% of the suite's wall).  Instead shuffle the partials by
-    # group, sort within partitions so each group's rows are contiguous, and
-    # fold segments in ONE mapInArrow pass — thousands of groups per Python
-    # call.  Merge order within a group stays arbitrary exactly as the
-    # cogrouped shape's was (shuffle arrival order); all sketches either
-    # merge order-invariantly (Bloom/HLL/CMS/MinHash/Theta) or are gated by
-    # rank-bound oracles (KLL/t-digest).
-    part2 = partials.repartition(*[F.col(c) for c in group_cols]).sortWithinPartitions(
-        *group_cols
+    return fold_groups(
+        partials, group_cols, out_schema,
+        lambda key: _StateMerge(cls), _StateMerge.add,
+        lambda key, m: (*key, m.final_state(), m.n_rows),
     )
-    n_group_cols = len(group_cols)
-    cls = type(factory())
-
-    def merge_sorted(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        unset = object()
-        nan_key = ("__nan__",)  # python NaN != NaN; Spark groups NaN as equal
-
-        def normg(v):
-            return nan_key if isinstance(v, float) and v != v else v
-
-        cur_key = unset
-        cur_vals: tuple = ()
-        cur_sk = None
-        cur_n = 0
-        out_groups: list = []
-        out_states: list = []
-        out_n: list = []
-
-        def close_group():
-            nonlocal cur_sk, cur_n
-            cur_sk.finalize_merge()
-            out_groups.append(cur_vals)
-            out_states.append(cur_sk.dumps())
-            out_n.append(cur_n)
-            cur_sk, cur_n = None, 0
-
-        def drain():
-            cols = []
-            for i in range(n_group_cols):
-                cols.append(
-                    pa.array([g[i] for g in out_groups], type=arrow_schema.field(i).type)
-                )
-            cols.append(pa.array(out_states, type=pa.binary()))
-            cols.append(pa.array(out_n, type=pa.int64()))
-            batch = pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
-            out_groups.clear()
-            out_states.clear()
-            out_n.clear()
-            return batch
-
-        for b in batches:
-            if not b.num_rows:
-                continue
-            gcols_py = [b.column(i).to_pylist() for i in range(n_group_cols)]
-            states_col = b.column(n_group_cols)
-            nrows_col = b.column(n_group_cols + 1).to_pylist()
-            for r in range(b.num_rows):
-                key = tuple(normg(col[r]) for col in gcols_py)
-                if key != cur_key:
-                    if cur_sk is not None:
-                        close_group()
-                    cur_key = key
-                    cur_vals = tuple(col[r] for col in gcols_py)
-                part = _z_loads(cls, states_col[r].as_py())
-                if cur_sk is None:
-                    cur_sk = part
-                else:
-                    cur_sk.merge(part)
-                cur_n += int(nrows_col[r])
-            if len(out_groups) >= 1024:
-                yield drain()
-        if cur_sk is not None:
-            close_group()
-        if out_groups:
-            yield drain()
-
-    return part2.mapInArrow(merge_sorted, out_schema)
 
 
 def sketch_value_column(

@@ -274,21 +274,10 @@ def bloom_contains_grouped_join(
     def probe_fn(batches):
         from poppy_spark.core import loads
         from poppy_spark.core.hashkern import pack_arrow
+        from poppy_spark.spark.agg import _key_runs
 
-        unset = object()
-        nan_key = ("__nan__",)  # python NaN != NaN; Spark groups NaN as equal
-
-        def normg(v):
-            return nan_key if isinstance(v, float) and v != v else v
-
-        cur_g = unset
         cur_f = None
-        cur_has_state = False
-        for b in batches:
-            n = b.num_rows
-            if not n:
-                continue
-            gs = [normg(v) for v in b.column(0).to_pylist()]
+        for b, bounds, cont in _key_runs(batches, 1):
             tags = b.column(1).to_numpy(zero_copy_only=False)
             states_col = b.column(3)
             probe_pos = np.flatnonzero(tags == 1)
@@ -296,44 +285,29 @@ def bloom_contains_grouped_join(
             route = None  # (template_filter, ibucket, idx, bucket_hash)
             if probe_pos.size:
                 mat, lens = pack_arrow(b.column(2).take(pa.array(probe_pos)))
-            # segment scan: state rows (tag 0) sort before their group's
-            # probe rows; pi walks the probe-row subarray in step
-            pi = 0
-            r = 0
-            while r < n:
-                if gs[r] != cur_g:
-                    cur_g = gs[r]
-                    cur_f, cur_has_state = None, False
-                if tags[r] == 0:
-                    if not cur_has_state:  # first state row wins, as before
-                        cur_f = loads(bytes(states_col[r].as_py()))
-                        cur_has_state = True
-                    r += 1
+            # per group run: its state rows (tag 0) sort before its probe
+            # rows, which are probe_pos[pb[j]:pb[j + 1]]
+            n_state = np.add.reduceat((tags == 0).astype(np.int64), bounds[:-1])
+            pb = np.searchsorted(probe_pos, bounds)
+            for j in range(len(bounds) - 1):
+                if j or not cont:
+                    cur_f = None
+                if n_state[j] and cur_f is None:  # first state row wins
+                    cur_f = loads(bytes(states_col[int(bounds[j])].as_py()))
+                if cur_f is None or pb[j] == pb[j + 1]:
+                    continue
+                sel = slice(pb[j], pb[j + 1])
+                # route the batch ONCE (same-params filters share hashing)
+                # and test each group's slice against its own filter: ~7x
+                # cheaper than a full pack+hash+test per segment
+                if route is None and getattr(cur_f, "version", None) == 2:
+                    route = (cur_f, *cur_f.route_packed(mat, lens))
+                if route is not None and route[0].has_same_params(cur_f):
+                    hit[sel] = cur_f.contains_routed(
+                        route[1][sel], route[2][sel], route[3][sel]
+                    )
                 else:
-                    # consume the whole run of probe rows sharing this group
-                    r2 = r + 1
-                    while r2 < n and tags[r2] == 1 and gs[r2] == cur_g:
-                        r2 += 1
-                    pi2 = pi + (r2 - r)
-                    if cur_f is not None:
-                        sel = slice(pi, pi2)
-                        # route the batch ONCE (same-params filters share
-                        # hashing) and test each group's slice against its
-                        # own filter: ~7x cheaper than a full
-                        # pack+hash+test per segment
-                        if (
-                            route is None
-                            and getattr(cur_f, "version", None) == 2
-                        ):
-                            route = (cur_f, *cur_f.route_packed(mat, lens))
-                        if route is not None and route[0].has_same_params(cur_f):
-                            hit[sel] = cur_f.contains_routed(
-                                route[1][sel], route[2][sel], route[3][sel]
-                            )
-                        else:
-                            hit[sel] = cur_f.contains_packed(mat[sel], lens[sel])
-                    pi = pi2
-                    r = r2
+                    hit[sel] = cur_f.contains_packed(mat[sel], lens[sel])
             if probe_pos.size:
                 take = pa.array(probe_pos)
                 cols = [b.column(n_meta + i).take(take) for i in range(len(in_cols))]

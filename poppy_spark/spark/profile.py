@@ -33,10 +33,9 @@ def build_sketches_multi(
     emitting one (name, state) row per (partition, spec); the merge groups
     by name — states are KBs, so the collect is O(specs).
     """
-    import pandas as pd
     import pyarrow as pa
 
-    from poppy_spark.spark.agg import _key_expr, _z_dumps, _z_loads
+    from poppy_spark.spark.agg import _StateMerge, _key_expr, _z_dumps, fold_groups
 
     names = list(specs)
     if not names:
@@ -76,31 +75,19 @@ def build_sketches_multi(
             ["name", "state", "n_rows"],
         )
 
-    states = sel.mapInArrow(update, "name string, state binary, n_rows long")
+    schema = "name string, state binary, n_rows long"
+    states = sel.mapInArrow(update, schema)
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        name = pdf["name"].iloc[0]
-        cls = type(factories[name]())
-        sk = None
-        for raw in pdf["state"]:
-            part = _z_loads(cls, raw)
-            if sk is None:
-                sk = part
-            else:
-                sk.merge(part)
-        sk.finalize_merge()
-        return pd.DataFrame(
-            {"name": [name], "state": [sk.dumps()], "n_rows": [int(pdf["n_rows"].sum())]}
-        )
-
-    merged = states.groupBy("name").applyInPandas(
-        merge, "name string, state binary, n_rows long"
+    classes = {n: type(factories[n]()) for n in names}
+    merged = fold_groups(
+        states, ["name"], schema,
+        lambda key: _StateMerge(classes[key[0]]), _StateMerge.add,
+        lambda key, m: (key[0], m.final_state(), m.n_rows),
     )
-    out = {}
-    for r in merged.collect():
-        cls = type(factories[r["name"]]())
-        out[r["name"]] = (cls.loads(bytes(r["state"])), int(r["n_rows"]))
-    return out
+    return {
+        r["name"]: (classes[r["name"]].loads(bytes(r["state"])), int(r["n_rows"]))
+        for r in merged.collect()
+    }
 
 
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,

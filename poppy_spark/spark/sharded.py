@@ -18,13 +18,14 @@ Shapes (and why they scale):
   Shuffle volume is ~``4 + 8 + 2k`` bytes per distinct key — when the filter
   is far larger than any partition's data (the 10^12 regime), shipping index
   tuples beats shipping partial filter states by orders of magnitude.
-* **probe** — same phase-1 indexing, then a cogrouped ``applyInPandas`` on
+* **probe** — same phase-1 indexing, then a cogrouped ``applyInArrow`` on
   ``shard_id``: each group sees (its probe tuples, its ONE shard state), so
   every shard state crosses the shuffle exactly once — a probe row never
   drags a copy of the state along (a plain join would).  An optional
   ``salt`` replicates each state R ways to bound the per-group probe count.
-* **algebra** — union/intersection are per-shard byte OR/AND (a join on
-  shard_id); the count estimate is poppy's per-bucket-sum formula
+* **algebra** — union/intersection are per-shard byte OR/AND: both sides'
+  shard rows, tagged by side, fold per shard (``agg.fold_groups``, no
+  join); the count estimate is poppy's per-bucket-sum formula
   (``v2.rs:575-588``), which decomposes exactly over contiguous shards.
 
 ``to_poppy_bytes()`` reassembles a byte-identical single poppy v2 file (the
@@ -44,15 +45,22 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from poppy_spark.core.params import MergeError, cap_from_bit_size, k as k_fn
 from poppy_spark.core.statekern import BUCKET_BITS, BUCKET_SIZE
 
 __all__ = ["ShardedBloom", "ShardedBloomStream", "build_sharded_bloom"]
 
-_STATE_SCHEMA = "shard_id int, state binary, n_rows bigint"
+_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("shard_id", T.IntegerType()),
+        T.StructField("state", T.BinaryType()),
+        T.StructField("n_rows", T.LongType()),
+    ]
+)
 
 
 @dataclass(frozen=True)
@@ -175,7 +183,6 @@ def _cogroup_probe(df: DataFrame, output_col: str, p: _Params):
     ``America/New_York``, ...) while Spark checks the result against
     ``tz=UTC``; the final cast to Spark's Arrow schema only rewrites that
     type metadata."""
-    import pyspark.sql.types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from poppy_spark.spark.agg import decompress_blob
@@ -434,47 +441,7 @@ class ShardedBloom:
     def _merge(self, other: "ShardedBloom", op: str) -> "ShardedBloom":
         if self.params != other.params:
             raise MergeError("cannot merge sharded blooms with different parameters")
-        from poppy_spark.spark.agg import compress_blob, decompress_blob
-
-        # union-with-side-tag + per-shard vectorized combine — the same
-        # kernel shape as _or_merge_states (round-3: replaces the per-row
-        # itertuples loop over a two-sided join).  Within a side duplicate
-        # shard rows OR first; across sides apply ``op``.  Intersection
-        # semantics: a shard present on one side only ANDs with the other
-        # side's implicit all-zero shard -> the row is dropped.
-        a = self.states.withColumn("__src", F.lit(0))
-        b = other.states.withColumn("__src", F.lit(1))
-        both = a.unionByName(b)
-        inner = op == "and"
-
-        def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-            src = pdf["__src"].to_numpy()
-            sides = []
-            for s in (0, 1):
-                blobs = [
-                    np.frombuffer(decompress_blob(raw), dtype=np.uint8)
-                    for raw in pdf["state"][src == s]
-                ]
-                if blobs:
-                    sides.append(_reduce_blobs(blobs, "or"))
-            if inner and len(sides) < 2:
-                return pd.DataFrame(
-                    {
-                        "shard_id": pd.Series(dtype="int32"),
-                        "state": pd.Series(dtype=object),
-                        "n_rows": pd.Series(dtype="int64"),
-                    }
-                )
-            acc = _reduce_blobs(sides, op)
-            return pd.DataFrame(
-                {
-                    "shard_id": [int(pdf["shard_id"].iloc[0])],
-                    "state": [compress_blob(acc.tobytes())],
-                    "n_rows": [int(pdf["n_rows"].sum())],
-                }
-            )
-
-        merged = both.groupBy("shard_id").applyInPandas(combine, _STATE_SCHEMA)
+        merged = _fold_shards(self.states, other.states, ["shard_id"], op, _STATE_SCHEMA)
         return ShardedBloom(self.params, merged)
 
     def union(self, other: "ShardedBloom") -> "ShardedBloom":
@@ -646,33 +613,63 @@ class ShardedBloom:
         return cls(p, spark.read.parquet(os.path.join(directory, "shards")))
 
 
-def _reduce_blobs(blobs: list, op: str) -> np.ndarray:
-    """Elementwise OR/AND fold of equal-length uint8 arrays (vectorized)."""
-    acc = blobs[0].copy()
-    f = np.bitwise_or if op == "or" else np.bitwise_and
-    for v in blobs[1:]:
-        f(acc, v, out=acc)
-    return acc
+def _shard_row(key: tuple, bits: np.ndarray, n_rows: int) -> tuple:
+    """One folded ``(group?, shard_id, state, n_rows)`` output row."""
+    from poppy_spark.spark.agg import compress_blob
+
+    return (*key, compress_blob(bits.tobytes()), n_rows)
+
+
+def _fold_shards(
+    a: DataFrame,
+    b: DataFrame | None,
+    keys: list,
+    op: str,
+    schema: T.StructType,
+    finish=_shard_row,
+) -> DataFrame:
+    """The one shape of the shard algebra: fold the shard rows of ``a`` (and
+    of ``b``, tagged by ``__src``) per ``keys`` — ``shard_id`` or ``(group,
+    shard_id)`` — OR-ing each side's rows in place.  With ``op="and"`` the
+    two sides then AND, and a key present on one side only (AND with the
+    implicit all-zero shard) is dropped.  ``finish(key, bits, n_rows)``
+    makes the output row in ``schema`` order; ``n_rows`` sums both sides."""
+    from poppy_spark.spark.agg import decompress_blob, fold_groups
+
+    both = a.withColumn("__src", F.lit(0))
+    if b is not None:
+        both = both.unionByName(b.withColumn("__src", F.lit(1)))
+    sided = op == "and"
+
+    def add(acc: list, rows: pa.RecordBatch, lo: int, hi: int) -> None:
+        src, states = rows.column("__src"), rows.column("state")
+        for i in range(lo, hi):
+            s = src[i].as_py() if sided else 0
+            v = np.frombuffer(decompress_blob(states[i].as_py()), dtype=np.uint8)
+            if acc[s] is None:
+                acc[s] = v.copy()
+            else:
+                np.bitwise_or(acc[s], v, out=acc[s])
+        acc[2] += pc.sum(rows.column("n_rows").slice(lo, hi - lo)).as_py() or 0
+
+    def emit(key: tuple, acc: list):
+        bits, other, n_rows = acc
+        if sided:
+            if bits is None or other is None:
+                return None
+            np.bitwise_and(bits, other, out=bits)
+        return finish(key, bits, n_rows)
+
+    return fold_groups(both, keys, schema, lambda key: [None, None, 0], add, emit)
+
+
+def _grouped_state_schema(gfield: T.StructField) -> T.StructType:
+    return T.StructType([gfield, *_STATE_SCHEMA.fields])
 
 
 def _or_merge_states(states: DataFrame) -> DataFrame:
     """Collapse duplicate shard rows (appended deltas) by bitwise OR."""
-    from poppy_spark.spark.agg import compress_blob, decompress_blob
-
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = _reduce_blobs(
-            [np.frombuffer(decompress_blob(raw), dtype=np.uint8) for raw in pdf["state"]],
-            "or",
-        )
-        return pd.DataFrame(
-            {
-                "shard_id": [int(pdf["shard_id"].iloc[0])],
-                "state": [compress_blob(acc.tobytes())],
-                "n_rows": [int(pdf["n_rows"].sum())],
-            }
-        )
-
-    return states.groupBy("shard_id").applyInPandas(combine, _STATE_SCHEMA)
+    return _fold_shards(states, None, ["shard_id"], "or", _STATE_SCHEMA)
 
 
 class ShardedBloomStream:
@@ -922,8 +919,6 @@ class GroupedShardedBloom:
         group filter?  Groups never built probe all-False (nothing was
         inserted).  Single shuffle, columns carried through the cogroup —
         no join-back."""
-        import pyspark.sql.types as T
-
         from poppy_spark.spark.agg import _as_key
 
         p = self.params
@@ -963,52 +958,27 @@ class GroupedShardedBloom:
     def semi_join(self, df: DataFrame, col: str) -> DataFrame:
         return self.contains(df, col, "__hit__").filter(F.col("__hit__")).drop("__hit__")
 
+    def _fold(self, other: "GroupedShardedBloom", op: str, schema, finish=_shard_row):
+        """Per-(group, shard) two-sided fold of both filters' state rows."""
+        if self.params != other.params or self.group_col != other.group_col:
+            raise MergeError(
+                f"cannot combine grouped sharded blooms ({op}) with different "
+                "parameters or group columns"
+            )
+        keys = [self.group_col, "shard_id"]
+        return _fold_shards(self.states, other.states, keys, op, schema, finish)
+
+    def _gfield(self) -> T.StructField:
+        return self.states.schema[self.group_col]
+
     def union(self, other: "GroupedShardedBloom") -> "GroupedShardedBloom":
         """Per-(group, shard) bitwise OR — poppy ``union_merge`` semantics
         applied independently to every group's filter; groups present on
         one side only pass through unchanged (OR with all-zero).  Same
-        vectorized two-sided combine as ``ShardedBloom._merge``, keyed by
-        (group, shard)."""
-        if self.params != other.params or self.group_col != other.group_col:
-            raise MergeError(
-                "cannot merge grouped sharded blooms with different parameters "
-                "or group columns"
-            )
-        import pyspark.sql.types as T
-
-        from poppy_spark.spark.agg import compress_blob, decompress_blob
-
-        g = self.group_col
-        a = self.states.withColumn("__src", F.lit(0))
-        b = other.states.withColumn("__src", F.lit(1))
-        both = a.unionByName(b)
-        gfield = [f for f in self.states.schema.fields if f.name == g][0]
-        out_schema = T.StructType(
-            [
-                gfield,
-                T.StructField("shard_id", T.IntegerType()),
-                T.StructField("state", T.BinaryType()),
-                T.StructField("n_rows", T.LongType()),
-            ]
-        )
-
-        def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-            blobs = [
-                np.frombuffer(decompress_blob(raw), dtype=np.uint8)
-                for raw in pdf["state"]
-            ]
-            acc = _reduce_blobs(blobs, "or")
-            return pd.DataFrame(
-                {
-                    g: [pdf[g].iloc[0]],
-                    "shard_id": [int(pdf["shard_id"].iloc[0])],
-                    "state": [compress_blob(acc.tobytes())],
-                    "n_rows": [int(pdf["n_rows"].sum())],
-                }
-            )
-
-        merged = both.groupBy(g, "shard_id").applyInPandas(combine, out_schema)
-        return GroupedShardedBloom(self.params, g, merged)
+        two-sided fold as ``ShardedBloom._merge``, keyed by (group,
+        shard)."""
+        merged = self._fold(other, "or", _grouped_state_schema(self._gfield()))
+        return GroupedShardedBloom(self.params, self.group_col, merged)
 
     def intersection(self, other: "GroupedShardedBloom") -> "GroupedShardedBloom":
         """Per-(group, shard) bitwise AND — poppy ``intersection_merge``
@@ -1020,60 +990,11 @@ class GroupedShardedBloom:
         ``n_rows`` is reset to 0 (insert counts do not survive an AND;
         poppy re-estimates — ``reassemble_group``'s ``update_count`` and
         ``count_estimates`` both recompute from the bits)."""
-        if self.params != other.params or self.group_col != other.group_col:
-            raise MergeError(
-                "cannot intersect grouped sharded blooms with different "
-                "parameters or group columns"
-            )
-        import pyspark.sql.types as T
-
-        from poppy_spark.spark.agg import compress_blob, decompress_blob
-
-        g = self.group_col
-        a = self.states.withColumn("__src", F.lit(0))
-        b = other.states.withColumn("__src", F.lit(1))
-        both = a.unionByName(b)
-        gfield = [f for f in self.states.schema.fields if f.name == g][0]
-        out_schema = T.StructType(
-            [
-                gfield,
-                T.StructField("shard_id", T.IntegerType()),
-                T.StructField("state", T.BinaryType()),
-                T.StructField("n_rows", T.LongType()),
-            ]
+        merged = self._fold(
+            other, "and", _grouped_state_schema(self._gfield()),
+            lambda key, bits, n_rows: _shard_row(key, bits, 0),
         )
-
-        def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-            src = pdf["__src"].to_numpy()
-            sides = []
-            for s in (0, 1):
-                blobs = [
-                    np.frombuffer(decompress_blob(raw), dtype=np.uint8)
-                    for raw in pdf["state"][src == s]
-                ]
-                if blobs:
-                    sides.append(_reduce_blobs(blobs, "or"))
-            if len(sides) < 2:  # one-sided -> AND with zeros -> drop
-                return pd.DataFrame(
-                    {
-                        g: pd.Series(dtype=object),
-                        "shard_id": pd.Series(dtype="int32"),
-                        "state": pd.Series(dtype=object),
-                        "n_rows": pd.Series(dtype="int64"),
-                    }
-                )
-            acc = _reduce_blobs(sides, "and")
-            return pd.DataFrame(
-                {
-                    g: [pdf[g].iloc[0]],
-                    "shard_id": [int(pdf["shard_id"].iloc[0])],
-                    "state": [compress_blob(acc.tobytes())],
-                    "n_rows": [0],
-                }
-            )
-
-        merged = both.groupBy(g, "shard_id").applyInPandas(combine, out_schema)
-        return GroupedShardedBloom(self.params, g, merged)
+        return GroupedShardedBloom(self.params, self.group_col, merged)
 
     def count_common(self, other: "GroupedShardedBloom") -> DataFrame:
         """Per-group common-entry estimates ``(group, estimate)`` — poppy
@@ -1083,49 +1004,21 @@ class GroupedShardedBloom:
         two reassembled filters (empty buckets estimate 0, so shards or
         groups touched on one side only contribute nothing; groups with no
         commonly-touched shard are omitted — their estimate is 0).  One
-        cogrouped AND+popcount pass, states cross the wire once; no
-        intersection filter is materialized."""
-        if self.params != other.params or self.group_col != other.group_col:
-            raise MergeError(
-                "cannot compare grouped sharded blooms with different "
-                "parameters or group columns"
-            )
-        import pyspark.sql.types as T
+        AND+popcount fold, states cross the wire once; no intersection
+        filter is materialized."""
+        import decimal
 
         from poppy_spark.core.statekern import _sum_bucket_estimates, v2_bucket_ones
-        from poppy_spark.spark.agg import decompress_blob
 
-        g = self.group_col
         n_hash = self.params.n_hash_buck
-        a = self.states.withColumn("__src", F.lit(0))
-        b = other.states.withColumn("__src", F.lit(1))
-        both = a.unionByName(b)
-        gfield = [f for f in self.states.schema.fields if f.name == g][0]
-        part_schema = T.StructType(
-            [gfield, T.StructField("partial", T.DecimalType(38, 0))]
-        )
 
-        def common(pdf: pd.DataFrame) -> pd.DataFrame:
-            import decimal
+        def common(key, bits, n_rows):
+            ones = v2_bucket_ones(bits, bits.size // BUCKET_SIZE)
+            return (key[0], decimal.Decimal(_sum_bucket_estimates(ones, n_hash)))
 
-            src = pdf["__src"].to_numpy()
-            sides = []
-            for s in (0, 1):
-                blobs = [
-                    np.frombuffer(decompress_blob(raw), dtype=np.uint8)
-                    for raw in pdf["state"][src == s]
-                ]
-                if blobs:
-                    sides.append(_reduce_blobs(blobs, "or"))
-            if len(sides) < 2:
-                return pd.DataFrame({g: pd.Series(dtype=object), "partial": []})
-            acc = _reduce_blobs(sides, "and")
-            nb = acc.size // BUCKET_SIZE
-            est = _sum_bucket_estimates(v2_bucket_ones(acc, nb), n_hash)
-            return pd.DataFrame({g: [pdf[g].iloc[0]], "partial": [decimal.Decimal(est)]})
-
-        partials = both.groupBy(g, "shard_id").applyInPandas(common, part_schema)
-        return partials.groupBy(g).agg(
+        schema = T.StructType([self._gfield(), T.StructField("partial", T.DecimalType(38, 0))])
+        partials = self._fold(other, "and", schema, common)
+        return partials.groupBy(self.group_col).agg(
             F.sum("partial").cast("long").alias("estimate")
         )
 
@@ -1248,8 +1141,6 @@ def build_sharded_bloom_grouped(
     sized ``capacity``/``fpp`` each.  Shuffle carries index tuples keyed
     by (group, shard); each task materializes one (group, shard) slice at
     a time, so task memory = one shard's bytes regardless of group count."""
-    import pyspark.sql.types as T
-
     from poppy_spark.spark.agg import _as_key, compress_blob
 
     total_buckets = math.ceil(capacity / cap_from_bit_size(BUCKET_BITS, fpp))
@@ -1281,14 +1172,7 @@ def build_sharded_bloom_grouped(
     )
     tuples = keyed.mapInArrow(index_fn, route_schema)
     k, bps, n_buckets = p.n_hash_buck, p.bps, p.n_buckets
-    state_schema = T.StructType(
-        [
-            gfield,
-            T.StructField("shard_id", T.IntegerType()),
-            T.StructField("state", T.BinaryType()),
-            T.StructField("n_rows", T.LongType()),
-        ]
-    )
+    state_schema = _grouped_state_schema(gfield)
 
     def build_fn(tbl: pa.Table) -> pa.Table:
         s = int(tbl.column("shard_id")[0].as_py())

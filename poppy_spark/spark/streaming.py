@@ -17,6 +17,7 @@ import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 from poppy_spark.sketches.base import Sketch
 
@@ -125,25 +126,23 @@ def merge_grouped_states(
     spark_df: DataFrame, group_cols: list[str], factory: Callable[[], Sketch]
 ) -> DataFrame:
     """Merge appended (group..., state, n_rows) rows down to one per group —
-    the read-side compaction for :func:`windowed_grouped_sketch_sink`."""
-    import pandas as pd
+    the read-side compaction for :func:`windowed_grouped_sketch_sink`.
+    The output keeps ``spark_df``'s column order; columns other than
+    ``group_cols``, ``state`` and ``n_rows`` are dropped."""
+    from poppy_spark.spark.agg import _StateMerge, fold_groups
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        cls = type(factory())
-        sk = None
-        for raw in pdf["state"]:
-            part = cls.loads(bytes(raw))
-            if sk is None:
-                sk = part
-            else:
-                sk.merge(part)
-        sk.finalize_merge()
-        head = pdf.iloc[[0]].copy()
-        head["state"] = [sk.dumps()]
-        head["n_rows"] = [int(pdf["n_rows"].sum())]
-        return head
+    cls = type(factory())
+    names = [c for c in spark_df.columns if c in (*group_cols, "state", "n_rows")]
+    schema = StructType([spark_df.schema[c] for c in names])
 
-    return spark_df.groupBy(*group_cols).applyInPandas(merge, spark_df.schema)
+    def emit(key: tuple, m: _StateMerge) -> tuple:
+        row = dict(zip(group_cols, key), state=m.final_state(), n_rows=m.n_rows)
+        return tuple(row[c] for c in names)
+
+    return fold_groups(
+        spark_df.select(*names), group_cols, schema,
+        lambda key: _StateMerge(cls), _StateMerge.add, emit,
+    )
 
 
 def stateful_grouped_sketch(

@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from poppy_spark.sketches import BloomSketch, HllSketch
+from poppy_spark.sketches import BloomSketch, CmsSketch, HllSketch
 from poppy_spark.spark.checkpoint import SketchCheckpoint
 
 
@@ -98,6 +98,8 @@ class TestStreamingFold:
         assert folded.dumps() == single.dumps()
 
     def test_grouped_state_compaction(self, spark, tmp_path):
+        """Merging appended grouped states equals one grouped build, byte
+        for byte (order-invariant sketches), at any input partition count."""
         from poppy_spark.spark.agg import build_sketch_grouped
         from poppy_spark.spark.streaming import merge_grouped_states
 
@@ -105,18 +107,31 @@ class TestStreamingFold:
             (F.col("id") % 3).cast("string").alias("g"),
             F.format_string("v-%d", "id").alias("v"),
         )
-        factory = HllSketch.factory(12)
-        s1 = build_sketch_grouped(df.filter("id < 2500"), "v", ["g"], factory)
-        s2 = build_sketch_grouped(df.filter("id >= 2500"), "v", ["g"], factory)
-        appended = s1.unionAll(s2)
-        compacted = merge_grouped_states(appended, ["g"], factory)
-        assert compacted.count() == 3
-        got = {
-            r["g"]: HllSketch.loads(bytes(r["state"])).result()
-            for r in compacted.collect()
+        factories = {
+            "hll": HllSketch.factory(12),
+            "cms": CmsSketch.factory(w=1024, d=4),
+            "bloom": BloomSketch.factory(5000, 0.001),
         }
-        for g, est in got.items():
-            assert est == pytest.approx(5000 / 3, rel=0.05), g
+        for name, factory in factories.items():
+            one_shot = {
+                r["g"]: bytes(r["state"])
+                for r in build_sketch_grouped(df, "v", ["g"], factory).collect()
+            }
+            for parts in (1, 7):
+                s1, s2 = (
+                    build_sketch_grouped(half.repartition(parts), "v", ["g"], factory)
+                    for half in (df.filter("id < 2500"), df.filter("id >= 2500"))
+                )
+                compacted = merge_grouped_states(s1.unionAll(s2), ["g"], factory).collect()
+                assert len(compacted) == 3
+                assert {r["g"]: r["n_rows"] for r in compacted} == {
+                    "0": 1667, "1": 1667, "2": 1666
+                }
+                assert {r["g"]: bytes(r["state"]) for r in compacted} == one_shot, (name, parts)
+                if name == "hll":
+                    for r in compacted:
+                        est = HllSketch.loads(bytes(r["state"])).result()
+                        assert est == pytest.approx(5000 / 3, rel=0.05), r["g"]
 
 
 class TestMultimodalPlumbing:

@@ -1,0 +1,202 @@
+"""The sorted-segment fold behind every grouped state merge
+(``agg.fold_groups``): runs that span Arrow batch boundaries, multi-column
+and temporal keys, NULL/NaN keys, empty partitions, dropped groups — plus a
+source guard pinning the one-shape rule."""
+
+import ast
+import math
+import pathlib
+import re
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pytest
+
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from poppy_spark.spark.agg import _run_starts, fold_groups
+
+SPARK_DIR = pathlib.Path(__file__).resolve().parent.parent / "poppy_spark" / "spark"
+
+
+@pytest.fixture(scope="module")
+def small_batches(spark):
+    """Three-row Arrow batches, so every non-trivial group spans batches."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    yield spark
+    spark.conf.set(key, prev)
+
+
+def _count_fold(df, keys, keep=lambda n: True):
+    """Per group: rows, sum of ``v`` and the number of ``add`` slices."""
+
+    def add(acc, b, lo, hi):
+        acc[0] += hi - lo
+        acc[1] += pc.sum(b.column("v").slice(lo, hi - lo)).as_py() or 0
+        acc[2] += 1
+
+    def emit(key, acc):
+        return (*key, *acc) if keep(acc[0]) else None
+
+    schema = T.StructType(
+        [df.schema[k] for k in keys]
+        + [T.StructField(c, T.LongType()) for c in ("n", "total", "slices")]
+    )
+    return fold_groups(df, keys, schema, lambda key: [0, 0, 0], add, emit)
+
+
+def _norm(v):
+    return "NaN" if isinstance(v, float) and math.isnan(v) else v
+
+
+def _by_key(rows, keys, cols):
+    out = {}
+    for r in rows:
+        k = tuple(_norm(r[c]) for c in keys)
+        assert k not in out, f"group {k} emitted twice"
+        out[k] = tuple(r[c] for c in cols)
+    return out
+
+
+def _assert_matches_group_by(df, keys, folded):
+    exact = df.groupBy(*keys).agg(F.count("*").alias("n"), F.sum("v").alias("total"))
+    got = _by_key(folded.collect(), keys, ("n", "total"))
+    assert got == _by_key(exact.collect(), keys, ("n", "total"))
+    return got
+
+
+class TestRunStarts:
+    def test_nan_and_null_runs(self):
+        nan = float("nan")
+        a = pa.array([1.0, 1.0, nan, nan, None, None, 2.0])
+        assert _run_starts([a], 7).tolist() == [0, 2, 4, 6]
+        b = pa.array(["x", "x", "x", "y", None, None, None])
+        assert _run_starts([a, b], 7).tolist() == [0, 2, 3, 4, 6]
+
+    def test_no_key_columns_is_one_run(self):
+        assert _run_starts([], 5).tolist() == [0]
+
+
+class TestFoldGroups:
+    def test_group_larger_than_a_batch(self, small_batches):
+        spark = small_batches
+        df = spark.range(0, 60).select(
+            F.when(F.col("id") < 40, F.lit("hot")).otherwise(F.format_string("k%d", "id")).alias("g"),
+            F.col("id").alias("v"),
+        )
+        folded = _count_fold(df, ["g"])
+        got = _assert_matches_group_by(df, ["g"], folded)
+        assert got[("hot",)] == (40, sum(range(40)))
+        slices = {r["g"]: r["slices"] for r in folded.collect()}
+        assert slices["hot"] >= 40 // 3
+
+    def test_multi_column_keys(self, small_batches):
+        spark = small_batches
+        df = spark.range(0, 90).select(
+            (F.col("id") % 3).cast("int").alias("a"),
+            F.format_string("b%d", F.col("id") % 5).alias("b"),
+            F.col("id").alias("v"),
+        )
+        got = _assert_matches_group_by(df, ["a", "b"], _count_fold(df, ["a", "b"]))
+        assert len(got) == 15
+
+    def test_date_and_timestamp_keys(self, small_batches):
+        spark = small_batches
+        df = spark.range(0, 50).select(
+            F.to_date(F.timestamp_seconds(F.col("id") % 4 * 86400)).alias("d"),
+            F.timestamp_seconds(F.col("id") % 3 * 3600).alias("ts"),
+            F.col("id").alias("v"),
+        )
+        got = _assert_matches_group_by(df, ["d", "ts"], _count_fold(df, ["d", "ts"]))
+        assert len(got) == 12
+
+    def test_null_and_nan_keys(self, small_batches):
+        spark = small_batches
+        df = spark.range(0, 40).select(
+            F.when(F.col("id") % 4 == 0, F.lit(float("nan")))
+            .when(F.col("id") % 4 == 1, F.lit(None).cast("double"))
+            .otherwise((F.col("id") % 2).cast("double"))
+            .alias("x"),
+            F.when(F.col("id") % 5 == 0, F.lit(None).cast("string"))
+            .otherwise(F.lit("s"))
+            .alias("s"),
+            F.col("id").alias("v"),
+        )
+        got = _assert_matches_group_by(df, ["x"], _count_fold(df, ["x"]))
+        assert set(got) == {("NaN",), (None,), (0.0,), (1.0,)}
+        _assert_matches_group_by(df, ["x", "s"], _count_fold(df, ["x", "s"]))
+
+    def test_empty_partitions(self, small_batches):
+        spark = small_batches
+        df = spark.range(0, 20).select(
+            (F.col("id") % 2).alias("g"), F.col("id").alias("v")
+        )
+        # two groups over the shuffle's partitions: most fold tasks see nothing
+        _assert_matches_group_by(df, ["g"], _count_fold(df, ["g"]))
+        assert _count_fold(df.filter("v < 0"), ["g"]).count() == 0
+        assert _count_fold(df.filter("v < 0"), []).count() == 0
+        whole = _count_fold(df, []).collect()
+        assert [(r["n"], r["total"]) for r in whole] == [(20, sum(range(20)))]
+
+    def test_emit_none_drops_group(self, small_batches):
+        spark = small_batches
+        df = spark.range(0, 30).select(
+            (F.col("id") % 5).alias("g"), F.col("id").alias("v")
+        )
+        df = df.filter((F.col("g") != 0) | (F.col("v") < 10))  # group 0 has 2 rows
+        folded = _count_fold(df, ["g"], keep=lambda n: n > 2)
+        assert sorted(r["g"] for r in folded.collect()) == [1, 2, 3, 4]
+
+
+class _Sites(ast.NodeVisitor):
+    """Enclosing class/function path of every ``.applyInPandas(`` call."""
+
+    def __init__(self):
+        self.path, self.sites = [], []
+
+    def _scope(self, node):
+        self.path.append(node.name)
+        self.generic_visit(node)
+        self.path.pop()
+
+    visit_ClassDef = visit_FunctionDef = _scope
+
+    def visit_Call(self, node):
+        if isinstance(node.func, ast.Attribute) and node.func.attr == "applyInPandas":
+            self.sites.append(".".join(self.path))
+        self.generic_visit(node)
+
+
+class TestOneShapeGuard:
+    def test_apply_in_pandas_sites(self):
+        """Grouped state merges go through ``fold_groups``; ``applyInPandas``
+        stays only where per-group compute IS the algorithm (bin packing,
+        per-cell similarity edges) and in the ``carry="join"`` probe."""
+        sites = []
+        for p in sorted(SPARK_DIR.glob("*.py")):
+            src = p.read_text()
+            v = _Sites()
+            v.visit(ast.parse(src))
+            # every textual call site is one the AST walk attributed
+            assert src.count("applyInPandas(") == len(v.sites), p.name
+            sites += [f"{p.name}:{s}" for s in v.sites]
+        assert sorted(sites) == [
+            "packing.py:pack_assignments",
+            "sharded.py:ShardedBloom.contains",
+            "similarity.py:_cell_edges",
+        ]
+        # the sharded site is the carry="join" cogroup, not the columns path
+        src = (SPARK_DIR / "sharded.py").read_text()
+        assert src.index('if carry == "columns"') < src.index("applyInPandas(")
+
+    def test_nan_key_defined_once(self):
+        pkg = SPARK_DIR.parent
+        defs = [
+            (p.name, m.group(0))
+            for p in sorted(pkg.rglob("*.py"))
+            for m in re.finditer(r"def _?nan_key\b|\b_?nan_key\s*=[^=]", p.read_text())
+        ]
+        assert len(defs) == 1, defs

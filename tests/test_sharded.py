@@ -85,24 +85,30 @@ class TestShardedAlgebra:
     def test_union_equals_combined_build(self, spark):
         a_keys = spark.range(0, 8000).select(F.format_string("union-a-%06d", "id").alias("k"))
         b_keys = spark.range(4000, 12000).select(F.format_string("union-a-%06d", "id").alias("k"))
-        a = build_sharded_bloom(a_keys, "k", capacity=12000, fpp=0.001, n_shards=4)
-        b = build_sharded_bloom(b_keys, "k", capacity=12000, fpp=0.001, n_shards=4)
-        u = a.union(b)
         both = a_keys.unionAll(b_keys)
-        combined = build_sharded_bloom(both, "k", capacity=12000, fpp=0.001, n_shards=4)
-        assert u.to_poppy_bytes() == combined.to_poppy_bytes()
+        kw = dict(capacity=12000, fpp=0.001, n_shards=4)
+        combined = build_sharded_bloom(both, "k", **kw)
+        for parts in (1, 7):
+            a = build_sharded_bloom(a_keys.repartition(parts), "k", **kw)
+            b = build_sharded_bloom(b_keys.repartition(parts), "k", **kw)
+            assert a.union(b).to_poppy_bytes() == combined.to_poppy_bytes(), parts
 
     def test_intersection_counts(self, spark):
         a_keys = spark.range(0, 6000).select(F.format_string("int-%06d", "id").alias("k"))
         b_keys = spark.range(3000, 9000).select(F.format_string("int-%06d", "id").alias("k"))
-        a = build_sharded_bloom(a_keys, "k", capacity=9000, fpp=0.001, n_shards=4)
-        b = build_sharded_bloom(b_keys, "k", capacity=9000, fpp=0.001, n_shards=4)
-        i = a.intersection(b)
-        est = i.count_estimate()
-        # the AND-of-bitsets estimate has an inherent positive bias from
-        # coincidentally-shared bits (same as poppy's count_common_entries
-        # at this load factor): assert the order of magnitude, never under
-        assert 3000 <= est <= 3000 * 1.3
+        kw = dict(capacity=9000, fpp=0.001, n_shards=4)
+        blobs = []
+        for parts in (1, 7):
+            a = build_sharded_bloom(a_keys.repartition(parts), "k", **kw)
+            b = build_sharded_bloom(b_keys.repartition(parts), "k", **kw)
+            i = a.intersection(b)
+            est = i.count_estimate()
+            # the AND-of-bitsets estimate has an inherent positive bias from
+            # coincidentally-shared bits (same as poppy's count_common_entries
+            # at this load factor): assert the order of magnitude, never under
+            assert 3000 <= est <= 3000 * 1.3
+            blobs.append(i.to_poppy_bytes())
+        assert blobs[0] == blobs[1]
 
 
 class TestShardedPartitionInvariance:
@@ -201,25 +207,29 @@ class TestImportFromPoppyBytes:
 class TestShardedStream:
     def test_microbatch_deltas_equal_batch_build(self, spark, tmp_path):
         """Folding 4 micro-batches through ShardedBloomStream yields the
-        same poppy bytes as one batch build; compaction is idempotent."""
+        same poppy bytes as one batch build at any input partition count;
+        compaction is idempotent."""
         from pyspark.sql import functions as F
 
         from poppy_spark.spark.sharded import ShardedBloomStream
 
         full = spark.range(0, 12000).select(F.format_string("st-%06d", "id").alias("value"))
-        sink = ShardedBloomStream(str(tmp_path / "sbstream"), capacity=12000, fpp=0.001, n_shards=4)
-        for b in range(4):
-            sink(full.filter(F.col("value").substr(4, 10).cast("long") % 4 == b), b)
-        merged = sink.current(spark)
         single = build_sharded_bloom(full, "value", 12000, 0.001, n_shards=4)
-        assert merged.to_poppy_bytes() == single.to_poppy_bytes()
-        # deltas were appended, not rewritten
-        raw_rows = spark.read.parquet(str(tmp_path / "sbstream" / "shards")).count()
-        assert raw_rows > merged.states.count()
-        sink.compact(spark)
-        compacted = spark.read.parquet(str(tmp_path / "sbstream" / "shards"))
-        assert compacted.count() <= 4
-        assert sink.current(spark).to_poppy_bytes() == single.to_poppy_bytes()
+        for parts in (1, 7):
+            d = tmp_path / f"sbstream{parts}"
+            sink = ShardedBloomStream(str(d), capacity=12000, fpp=0.001, n_shards=4)
+            for b in range(4):
+                batch = full.filter(F.col("value").substr(4, 10).cast("long") % 4 == b)
+                sink(batch.repartition(parts), b)
+            merged = sink.current(spark)
+            assert merged.to_poppy_bytes() == single.to_poppy_bytes()
+            # deltas were appended, not rewritten
+            raw_rows = spark.read.parquet(str(d / "shards")).count()
+            assert raw_rows > merged.states.count()
+            sink.compact(spark)
+            compacted = spark.read.parquet(str(d / "shards"))
+            assert compacted.count() <= 4
+            assert sink.current(spark).to_poppy_bytes() == single.to_poppy_bytes()
 
     def test_compact_preserves_concurrent_append(self, spark, tmp_path):
         """ADVICE r2: compact must never drop a delta appended while it runs.
@@ -414,15 +424,16 @@ class TestGroupedSharded:
         from poppy_spark.spark.sharded import build_sharded_bloom_grouped
 
         ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        lo = ev.filter(F.col("user_id") % 2 == 0)
-        hi = ev.filter(F.col("user_id") % 2 == 1)
         kw = dict(capacity=5_000, fpp=0.001, n_shards=4)
-        merged = build_sharded_bloom_grouped(lo, "user_id", "event_type", **kw).union(
-            build_sharded_bloom_grouped(hi, "user_id", "event_type", **kw)
-        )
         full = build_sharded_bloom_grouped(ev, "user_id", "event_type", **kw)
-        for gval in ["click", "view"]:
-            assert merged.reassemble_group(gval) == full.reassemble_group(gval)
+        for parts in (1, 7):
+            lo = ev.filter(F.col("user_id") % 2 == 0).repartition(parts)
+            hi = ev.filter(F.col("user_id") % 2 == 1).repartition(parts)
+            merged = build_sharded_bloom_grouped(lo, "user_id", "event_type", **kw).union(
+                build_sharded_bloom_grouped(hi, "user_id", "event_type", **kw)
+            )
+            for gval in ["click", "view"]:
+                assert merged.reassemble_group(gval) == full.reassemble_group(gval), parts
 
     def test_grouped_count_estimates(self, spark):
         from pyspark.sql import functions as F
@@ -445,30 +456,32 @@ class TestGroupedSharded:
     def test_grouped_intersection_parity_with_reassembled(self, spark):
         """Round-4 (verdict #7): per-group intersection must equal
         BloomV2.intersection_merge on the two reassembled group filters —
-        byte parity via reassemble_group, plus ghost-group vanishing."""
+        byte parity via reassemble_group at any input partition count,
+        plus ghost-group vanishing."""
         from pyspark.sql import functions as F
 
         from poppy_spark.core import loads as core_loads
         from poppy_spark.spark.sharded import build_sharded_bloom_grouped
 
         ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        lo = ev.filter(F.col("user_id") % 3 != 0)
-        hi = ev.filter(F.col("user_id") % 3 != 1)
         kw = dict(capacity=5_000, fpp=0.001, n_shards=4)
-        a = build_sharded_bloom_grouped(lo, "user_id", "event_type", **kw)
-        # drop one group from side b entirely -> it must vanish from the AND
-        b = build_sharded_bloom_grouped(
-            hi.filter(F.col("event_type") != "view"), "user_id", "event_type", **kw
-        )
-        inter = a.intersection(b)
-        groups = {r[0] for r in inter.states.select("event_type").distinct().collect()}
-        assert "view" not in groups  # one-sided group vanished
+        for parts in (1, 7):
+            lo = ev.filter(F.col("user_id") % 3 != 0).repartition(parts)
+            hi = ev.filter(F.col("user_id") % 3 != 1).repartition(parts)
+            a = build_sharded_bloom_grouped(lo, "user_id", "event_type", **kw)
+            # drop one group from side b entirely -> it must vanish from the AND
+            b = build_sharded_bloom_grouped(
+                hi.filter(F.col("event_type") != "view"), "user_id", "event_type", **kw
+            )
+            inter = a.intersection(b)
+            groups = {r[0] for r in inter.states.select("event_type").distinct().collect()}
+            assert groups and "view" not in groups  # one-sided group vanished
 
-        for gval in sorted(groups):
-            fa = core_loads(a.reassemble_group(gval))
-            fb = core_loads(b.reassemble_group(gval))
-            fa.intersection_merge(fb)
-            assert inter.reassemble_group(gval) == fa.dumps()
+            for gval in sorted(groups):
+                fa = core_loads(a.reassemble_group(gval))
+                fb = core_loads(b.reassemble_group(gval))
+                fa.intersection_merge(fb)
+                assert inter.reassemble_group(gval) == fa.dumps(), parts
 
         # a vanished group probes all-False, like a never-built group
         ghost = ev.filter(F.col("event_type") == "view").select(
@@ -478,32 +491,34 @@ class TestGroupedSharded:
 
     def test_grouped_count_common_parity_with_reassembled(self, spark):
         """count_common must equal BloomV2.count_common_entries per group
-        on the reassembled filters, and track the exact overlap."""
+        on the reassembled filters at any input partition count, and track
+        the exact overlap."""
         from pyspark.sql import functions as F
 
         from poppy_spark.core import loads as core_loads
         from poppy_spark.spark.sharded import build_sharded_bloom_grouped
 
         ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        lo = ev.filter(F.col("user_id") % 3 != 0)
-        hi = ev.filter(F.col("user_id") % 3 != 1)
         kw = dict(capacity=5_000, fpp=0.001, n_shards=4)
-        a = build_sharded_bloom_grouped(lo, "user_id", "event_type", **kw)
-        b = build_sharded_bloom_grouped(hi, "user_id", "event_type", **kw)
-        got = {r["event_type"]: r["estimate"] for r in a.count_common(b).collect()}
-        assert got  # at least one overlapping group
-        for gval, est in got.items():
-            fa = core_loads(a.reassemble_group(gval))
-            fb = core_loads(b.reassemble_group(gval))
-            assert est == fa.count_common_entries(fb)
-            exact = (
-                lo.join(hi.select("user_id").distinct(), "user_id", "left_semi")
-                .filter(F.col("event_type") == gval)
-                .select("user_id")
-                .distinct()
-                .count()
-            )
-            assert abs(est - exact) <= max(5, 0.15 * exact)
+        for parts in (1, 7):
+            lo = ev.filter(F.col("user_id") % 3 != 0).repartition(parts)
+            hi = ev.filter(F.col("user_id") % 3 != 1).repartition(parts)
+            a = build_sharded_bloom_grouped(lo, "user_id", "event_type", **kw)
+            b = build_sharded_bloom_grouped(hi, "user_id", "event_type", **kw)
+            got = {r["event_type"]: r["estimate"] for r in a.count_common(b).collect()}
+            assert got  # at least one overlapping group
+            for gval, est in got.items():
+                fa = core_loads(a.reassemble_group(gval))
+                fb = core_loads(b.reassemble_group(gval))
+                assert est == fa.count_common_entries(fb), parts
+                exact = (
+                    lo.join(hi.select("user_id").distinct(), "user_id", "left_semi")
+                    .filter(F.col("event_type") == gval)
+                    .select("user_id")
+                    .distinct()
+                    .count()
+                )
+                assert abs(est - exact) <= max(5, 0.15 * exact)
 
     def test_grouped_intersection_param_mismatch_raises(self, spark):
         import pytest as _pytest

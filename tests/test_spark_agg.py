@@ -333,6 +333,57 @@ class TestGroupedJoinProbe:
         assert probed.count() == 1000
 
 
+class TestNanNullGroupKeys:
+    """A double group column holding NaN, NULL and ordinary values: Spark
+    groups every NaN together and every NULL together, and so must the
+    grouped build (both shuffle shapes) and the grouped-join probe."""
+
+    @pytest.fixture(scope="class")
+    def planted(self, spark):
+        return spark.range(0, 3000).select(
+            F.when(F.col("id") % 5 == 0, F.lit(float("nan")))
+            .when(F.col("id") % 5 == 1, F.lit(None).cast("double"))
+            .otherwise((F.col("id") % 3).cast("double"))
+            .alias("g"),
+            F.format_string("planted-key-%06d", "id").alias("k"),
+        ).repartition(7)
+
+    @staticmethod
+    def _by_group(rows, col):
+        out = {}
+        for r in rows:
+            g = r["g"]
+            g = "NaN" if g is not None and g != g else g
+            assert g not in out, f"group {g!r} emitted twice"
+            out[g] = r[col]
+        return out
+
+    @pytest.mark.parametrize("shuffle", ["states", "rows"])
+    def test_one_row_per_spark_group(self, spark, planted, shuffle):
+        from poppy_spark.spark.probe import bloom_contains_grouped_join
+
+        states = build_sketch_grouped(
+            planted, "k", ["g"], BloomSketch.factory(3000, 0.001), shuffle=shuffle
+        )
+        exact = self._by_group(planted.groupBy("g").count().collect(), "count")
+        assert set(exact) == {"NaN", None, 0.0, 1.0, 2.0}
+        assert self._by_group(states.collect(), "n_rows") == exact
+        probed = bloom_contains_grouped_join(planted, "k", "g", states)
+        assert probed.count() == 3000
+        assert probed.filter("NOT hit").count() == 0
+
+    def test_shapes_byte_equal(self, spark, planted):
+        factory = BloomSketch.factory(3000, 0.001)
+        by_shape = [
+            self._by_group(
+                build_sketch_grouped(planted, "k", ["g"], factory, shuffle=s).collect(),
+                "state",
+            )
+            for s in ("states", "rows")
+        ]
+        assert by_shape[0] == by_shape[1]
+
+
 class TestSqlRegistration:
     def test_bloom_probe_from_pure_sql(self, spark, orders):
         from poppy_spark.sketches import BloomSketch
