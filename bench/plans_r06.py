@@ -138,7 +138,7 @@ def main() -> None:
     dump("grouped_hc_build", states)
     dump("grouped_hc_probe", bloom_contains_grouped_join(li, "l_partkey", "l_orderkey", states))
 
-    # sharded shuffle probe over the full-width table (the carry=columns path)
+    # sharded shuffle probe over the full-width table (rows carried through the cogroup)
     from poppy_spark.spark.sharded import build_sharded_bloom
 
     sb = build_sharded_bloom(li_full, "l_orderkey", capacity=20000, fpp=0.001, n_shards=8)

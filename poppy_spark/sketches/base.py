@@ -83,10 +83,11 @@ class Sketch(abc.ABC):
         Default: no-op."""
 
 
-#: Sketch.int_keys -> hashkern.pack_arrow int_mode.  In "string" mode the
-#: Spark layer already cast keys to text, so an integer column reaching the
-#: pack path means the caller bypassed canonicalization — fail loudly
-#: rather than hash bytes the build side never saw.
+#: ``int_keys`` (``Sketch.int_keys``, the Spark verbs' argument) ->
+#: hashkern.pack_arrow int_mode.  In "string" mode the Spark layer already
+#: cast keys to text, so an integer column reaching the pack path means the
+#: caller bypassed canonicalization or build/probe modes diverged — fail
+#: loudly rather than hash bytes the build side never saw.
 _INT_MODE = {"string": "raise", "le8": "le8", "typed": "typed"}
 
 

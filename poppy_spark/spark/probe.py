@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import arrow_udf, pandas_udf
 
 from poppy_spark.core import BloomFilter
+from poppy_spark.sketches.base import _INT_MODE
 
 #: per-worker cache of deserialized filters, keyed by broadcast id (avoids
 #: re-parsing the state for every Arrow batch).  Bounded: long-lived
@@ -55,13 +56,6 @@ def _get_filter(bc, key: str) -> BloomFilter:
         filt = loads(bytes(bc.value))
         _cache_put(key, filt)
     return filt
-
-
-#: probe-side int_keys -> pack_arrow int_mode.  "string" maps to "raise":
-#: the build canonicalized keys to decimal text, so an integer column
-#: reaching the UDF means build/probe modes diverged — membership would be
-#: silently all-False; fail loudly instead.
-_INT_MODE = {"string": "raise", "le8": "le8", "typed": "typed"}
 
 
 def bloom_contains_udf(
@@ -175,12 +169,14 @@ def bloom_contains_grouped(
 
     spark = df.sparkSession
     gname = states_df.columns[0] if group_col not in states_df.columns else group_col
-    rows = states_df.select(gname, "state").collect()
+    # at most max_groups + 1 states reach the driver: past the guard, the
+    # rest are never pulled
+    rows = states_df.select(gname, "state").limit(max_groups + 1).collect()
     if len(rows) > max_groups:
         raise ValueError(
-            f"bloom_contains_grouped: {len(rows)} group states exceed the "
-            f"broadcast guard ({max_groups}); group-by key cardinality is too "
-            "high for a broadcast probe — use a shuffle join on the states "
+            f"bloom_contains_grouped: more than max_groups={max_groups} group "
+            "states; group-by key cardinality is too high for a broadcast "
+            "probe — use a shuffle join on the states "
             "DataFrame or poppy_spark.spark.sharded instead"
         )
     states = {r[gname]: bytes(r["state"]) for r in rows}
@@ -230,9 +226,9 @@ def bloom_contains_grouped_join(
     per-row-Python anti-pattern at group granularity, 599 s at sf1 — plus
     a full-input ``localCheckpoint`` pinning a ``monotonically_increasing_
     id`` for the join-back).  Rows ride the shuffle as columns and come
-    back with ``output_col`` appended (the ``ShardedBloom.contains(carry=
-    "columns")`` shape), so there is no row id, no materialization, and no
-    join-back; each group's filter crosses the wire exactly once.  Rows
+    back with ``output_col`` appended (as in the sharded filters' shuffle
+    probe), so there is no row id, no materialization, and no join-back;
+    each group's filter crosses the wire exactly once.  Rows
     whose group has no state probe False.  Output = ``df`` columns +
     ``output_col``.
     """

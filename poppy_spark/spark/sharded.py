@@ -18,11 +18,13 @@ Shapes (and why they scale):
   Shuffle volume is ~``4 + 8 + 2k`` bytes per distinct key — when the filter
   is far larger than any partition's data (the 10^12 regime), shipping index
   tuples beats shipping partial filter states by orders of magnitude.
-* **probe** — same phase-1 indexing, then a cogrouped ``applyInArrow`` on
-  ``shard_id``: each group sees (its probe tuples, its ONE shard state), so
-  every shard state crosses the shuffle exactly once — a probe row never
-  drags a copy of the state along (a plain join would).  An optional
-  ``salt`` replicates each state R ways to bound the per-group probe count.
+* **probe** — broadcast the reassembled filter when it fits, else ONE
+  shuffle probe for flat and per-group filters alike (:func:`_shard_probe`):
+  a key-only Arrow UDF routes each row to its shard, then a cogrouped
+  ``applyInArrow`` on ``(group?, shard_id)`` sees (its rows, its ONE shard
+  state) and appends the hit — every shard state crosses the shuffle
+  exactly once, a probe row never drags a copy of the state along (a plain
+  join would), and there is no row id or join-back.
 * **algebra** — union/intersection are per-shard byte OR/AND: both sides'
   shard rows, tagged by side, fold per shard (``agg.fold_groups``, no
   join); the count estimate is poppy's per-bucket-sum formula
@@ -51,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from poppy_spark.core.params import MergeError, cap_from_bit_size, k as k_fn
 from poppy_spark.core.statekern import BUCKET_BITS, BUCKET_SIZE
+from poppy_spark.sketches.base import _INT_MODE
 
 __all__ = ["ShardedBloom", "ShardedBloomStream", "build_sharded_bloom"]
 
@@ -88,12 +91,6 @@ class _Params:
     def shard_buckets(self, shard_id: int) -> int:
         lo = shard_id * self.bps
         return min(self.bps, self.n_buckets - lo)
-
-
-#: int_keys -> pack_arrow int_mode ("string" raises on integer columns: the
-#: key expression already canonicalized to text, so ints reaching the kernel
-#: mean a build/probe mode mismatch that must fail loudly)
-_INT_MODE = {"string": "raise", "le8": "le8", "typed": "typed"}
 
 
 def _spread_low_split(sel: DataFrame) -> DataFrame:
@@ -172,21 +169,38 @@ def _bit_parts(
     return byte_off, (np.uint8(1) << (flat & np.uint64(7)).astype(np.uint8))
 
 
-def _cogroup_probe(df: DataFrame, output_col: str, p: _Params):
-    """``(out_schema, check)`` of a single-shuffle cogroup probe: ``check``
-    tests each left row's routed bits (``__ib``, ``__idx``) against the one
-    shard state on the right and appends ``output_col`` to the carried
-    ``df`` columns; a left group without a state (untouched shard, group
-    never built) probes all-False.
+def _shard_probe(
+    df: DataFrame,
+    col: str,
+    groups: list,
+    states: DataFrame,
+    p: _Params,
+    output_col: str,
+    int_keys: str,
+) -> DataFrame:
+    """The one shuffle probe of both sharded filters: append ``output_col``
+    — is ``col`` set in the filter of its row's ``groups`` values (``[]``
+    for a flat filter)?  ``states`` holds ``(*groups, shard_id, state,
+    ...)`` rows.
+
+    Routing is a scalar Arrow UDF over ONLY the key column: the payload
+    columns never cross the Python boundary during routing — they stay in
+    the JVM row and ride the shard shuffle directly.  ``cogroup`` on ``(*groups, shard_id)``
+    then hands ``check`` one group's rows and its ONE shard state, which
+    crosses the shuffle once; rows come back with the hit appended, so
+    there is no row id and no join-back.  A group without a state
+    (untouched shard, group never built) probes all-False.
 
     Input timestamps arrive tagged with the session zone (``Etc/UTC``,
     ``America/New_York``, ...) while Spark checks the result against
     ``tz=UTC``; the final cast to Spark's Arrow schema only rewrites that
     type metadata."""
+    from pyspark.sql.functions import arrow_udf
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from poppy_spark.spark.agg import decompress_blob
+    from poppy_spark.spark.agg import _as_key, decompress_blob
 
+    int_mode = _INT_MODE[int_keys]
     in_cols = list(df.columns)
     k, bps = p.n_hash_buck, p.bps
     out_schema = T.StructType(
@@ -194,6 +208,32 @@ def _cogroup_probe(df: DataFrame, output_col: str, p: _Params):
     )
     large = df.sparkSession.conf.get("spark.sql.execution.arrow.useLargeVarTypes", "false")
     arrow_out = to_arrow_schema(out_schema, prefers_large_types=large.lower() == "true")
+
+    def route1(keys):
+        if isinstance(keys, pa.ChunkedArray):
+            keys = keys.combine_chunks()
+        shard, ib, idx, _ = _route_batch(keys, p, dedup=False, int_mode=int_mode)
+        return pa.StructArray.from_arrays(
+            [
+                pa.array(shard, type=pa.int32()),
+                pa.array(ib, type=pa.int64()),
+                _idx_to_binary(idx),
+            ],
+            ["s", "ib", "idx"],
+        )
+
+    route1.__annotations__ = {"keys": pa.Array, "return": pa.Array}
+    udf = arrow_udf(route1, "struct<s:int, ib:bigint, idx:binary>")
+    tuples = (
+        df.select("*", _as_key(df, col, int_keys).alias("__key"))
+        .withColumn("__r", udf(F.col("__key")))
+        .select(
+            *in_cols,
+            F.col("__r.s").alias("__shard_id"),
+            F.col("__r.ib").alias("__ib"),
+            F.col("__r.idx").alias("__idx"),
+        )
+    )
 
     def check(left: pa.Table, right: pa.Table) -> pa.Table:
         n = left.num_rows
@@ -211,7 +251,12 @@ def _cogroup_probe(df: DataFrame, output_col: str, p: _Params):
         keep = left.select(in_cols).append_column(output_col, pa.array(hit))
         return keep.cast(arrow_out)
 
-    return out_schema, check
+    gkeys = [*groups, "__shard_id"]
+    return (
+        tuples.groupBy(*gkeys)
+        .cogroup(states.withColumnRenamed("shard_id", "__shard_id").groupBy(*gkeys))
+        .applyInArrow(check, out_schema)
+    )
 
 
 def _or_bits_into(buckets: np.ndarray, ib_local: np.ndarray, idx: np.ndarray) -> None:
@@ -240,13 +285,12 @@ class ShardedBloom:
         df: DataFrame,
         col: str,
         output_col: str = "hit",
-        salt: int = 1,
         int_keys: str = "string",
-        carry: str = "columns",
         strategy: str = "auto",
         broadcast_budget: int = 128 << 20,
     ) -> DataFrame:
-        """Append a boolean membership column.
+        """Append a boolean membership column; output columns are
+        ``df.columns + [output_col]``.
 
         ``strategy`` picks the probe's physical shape:
 
@@ -256,34 +300,11 @@ class ShardedBloom:
           transformation ~2.5x faster at bench scale), shuffle otherwise.
         * ``"broadcast"`` — force the reassembled broadcast probe (raises
           past the budget).
-        * ``"shuffle"`` — force the cogrouped shuffle probe: rows shuffle to
-          their shard, each shard state crosses the wire exactly once — the
-          only shape for filters no single worker can hold.
-
-        ``carry`` (shuffle strategy only) picks how the input row reunites
-        with its hit bit:
-
-        * ``"columns"`` (default) — all columns flow through the cogroup as
-          Arrow and come back with ``hit`` appended: ONE shuffle, no
-          join-back, fully deterministic.
-        * ``"join"`` — probe tuples ship only ``(rid, shard_id, ibucket,
-          2k idx bytes)`` and join back on a row id; the original (wide)
-          rows cross no shuffle — they are pinned once to executor storage
-          via ``localCheckpoint`` instead.  The checkpoint is REQUIRED for
-          correctness, not an optimization: the row id is
-          ``monotonically_increasing_id``, and without materialization the
-          id-bearing subtree would be evaluated twice (probe side and
-          join-back side) — a shuffled/AQE-replanned input or a task retry
-          could reorder rows between evaluations and attach hits to the
-          wrong rows.  Costs one executor-storage copy of ``df``; prefer
-          the default unless rows are very wide and re-shuffling them is
-          worse than storing them.
-
-        Either way each shard state crosses the wire exactly once (``salt``
-        times if salted).
+        * ``"shuffle"`` — force the shuffle probe (:func:`_shard_probe`):
+          rows carry their columns to their shard and come back with the
+          hit appended, each shard state crosses the wire exactly once —
+          the only shape for filters no single worker can hold.
         """
-        from poppy_spark.spark.agg import _as_key, decompress_blob
-
         if strategy == "auto":
             strategy = (
                 "broadcast" if self.size_in_bytes() <= broadcast_budget else "shuffle"
@@ -304,132 +325,7 @@ class ShardedBloom:
                     max_bytes=broadcast_budget
                 )
             return bloom_contains(df, col, raw, output_col, int_keys)
-
-        if carry == "columns":
-            return self._contains_columns(df, col, output_col, salt, int_keys)
-
-        p = self.params
-        int_mode = _INT_MODE[int_keys]
-        keyed = df.withColumn("__rid", F.monotonically_increasing_id()).localCheckpoint(
-            eager=False
-        )
-        probes = keyed.select("__rid", _as_key(keyed, col, int_keys).alias("__key"))
-
-        def index_fn(batches):
-            for b in batches:
-                shard, ib, idx, _ = _route_batch(b.column(1), p, dedup=False, int_mode=int_mode)
-                yield pa.RecordBatch.from_arrays(
-                    [b.column(0), pa.array(shard), pa.array(ib), _idx_to_binary(idx)],
-                    ["rid", "shard_id", "ib", "idx"],
-                )
-
-        tuples = probes.mapInArrow(
-            index_fn, "rid bigint, shard_id int, ib bigint, idx binary"
-        )
-        if salt > 1:
-            tuples = tuples.withColumn(
-                "salt", F.pmod(F.xxhash64("rid"), F.lit(salt)).cast("int")
-            )
-            states = self.states.withColumn(
-                "salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-            ).withColumn("salt", F.col("salt").cast("int"))
-            gkeys = ["shard_id", "salt"]
-        else:
-            states = self.states
-            gkeys = ["shard_id"]
-
-        k, bps = p.n_hash_buck, p.bps
-
-        def check(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if left.empty:
-                return pd.DataFrame({"rid": pd.Series(dtype="int64"),
-                                     "hit": pd.Series(dtype="bool")})
-            if right.empty:  # untouched shard: all-zero buckets
-                return pd.DataFrame({"rid": left["rid"], "hit": False})
-            buckets = np.frombuffer(
-                decompress_blob(right["state"].iloc[0]), dtype=np.uint8
-            )
-            shard_id = int(right["shard_id"].iloc[0])
-            ib_local = left["ib"].to_numpy() - shard_id * bps
-            idx = _binary_to_idx(pa.array(left["idx"]), k)
-            byte_off, bitmask = _bit_parts(ib_local, idx, buckets.size)
-            hit = ((buckets[byte_off] & bitmask) != 0).reshape(-1, k).all(axis=1)
-            return pd.DataFrame({"rid": left["rid"], "hit": hit})
-
-        hits = (
-            tuples.groupBy(*gkeys)
-            .cogroup(states.groupBy(*gkeys))
-            .applyInPandas(check, "rid bigint, hit boolean")
-        )
-        return (
-            keyed.join(hits.withColumnRenamed("rid", "__rid"), "__rid")
-            .withColumnRenamed("hit", output_col)
-            .drop("__rid")
-        )
-
-    def _contains_columns(
-        self, df: DataFrame, col: str, output_col: str, salt: int, int_keys: str
-    ) -> DataFrame:
-        """Single-shuffle probe: rows ride the cogroup as Arrow end-to-end
-        (``applyInArrow``), hit appended in place — no join-back.
-
-        Routing is a scalar Arrow UDF over ONLY the key column (guide §4.1:
-        pass just what the function needs): the payload columns never cross
-        the Python boundary during routing — they stay in the JVM row and
-        ride the shard shuffle directly.  The former ``mapInArrow`` route
-        serialized every column to Python and back once before the shuffle
-        (~1.5x the whole probe on the 11-column bench table)."""
-        from pyspark.sql.functions import arrow_udf
-
-        from poppy_spark.spark.agg import _as_key
-
-        p = self.params
-        int_mode = _INT_MODE[int_keys]
-        in_cols = list(df.columns)
-        keyed = df.select("*", _as_key(df, col, int_keys).alias("__key"))
-
-        def route1(keys):
-            if isinstance(keys, pa.ChunkedArray):
-                keys = keys.combine_chunks()
-            shard, ib, idx, _ = _route_batch(keys, p, dedup=False, int_mode=int_mode)
-            return pa.StructArray.from_arrays(
-                [
-                    pa.array(shard, type=pa.int32()),
-                    pa.array(ib, type=pa.int64()),
-                    _idx_to_binary(idx),
-                ],
-                ["s", "ib", "idx"],
-            )
-
-        route1.__annotations__ = {"keys": pa.Array, "return": pa.Array}
-        udf = arrow_udf(route1, "struct<s:int, ib:bigint, idx:binary>")
-        tuples = (
-            keyed.withColumn("__r", udf(F.col("__key")))
-            .select(
-                *in_cols,
-                F.col("__r.s").alias("__shard_id"),
-                F.col("__r.ib").alias("__ib"),
-                F.col("__r.idx").alias("__idx"),
-            )
-        )
-        if salt > 1:
-            tuples = tuples.withColumn(
-                "salt", F.pmod(F.xxhash64("__ib"), F.lit(salt)).cast("int")
-            )
-            states = self.states.withColumn(
-                "salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-            ).withColumn("salt", F.col("salt").cast("int"))
-            gkeys = ["__shard_id", "salt"]
-            states = states.withColumnRenamed("shard_id", "__shard_id")
-        else:
-            states = self.states.withColumnRenamed("shard_id", "__shard_id")
-            gkeys = ["__shard_id"]
-        out_schema, check = _cogroup_probe(df, output_col, p)
-        return (
-            tuples.groupBy(*gkeys)
-            .cogroup(states.groupBy(*gkeys))
-            .applyInArrow(check, out_schema)
-        )
+        return _shard_probe(df, col, [], self.states, self.params, output_col, int_keys)
 
     def semi_join(self, df: DataFrame, col: str) -> DataFrame:
         return self.contains(df, col, "__hit__").filter(F.col("__hit__")).drop("__hit__")
@@ -892,11 +788,11 @@ class GroupedShardedBloom:
     This closes the shape ``build_sketch_grouped``'s memory guard points
     at: a grouped build whose per-group filter is too big for
     groups-seen x state-bytes per task.  Here the build shuffles ~(12+2k)-
-    byte index tuples keyed by (group, shard) and each task materializes
-    ONE (group, shard) slice at a time (``applyInArrow``), so task memory
-    is a single shard regardless of group count or filter size; the probe
-    cogroups on (group, shard), so each shard state crosses the wire once
-    per batch.
+    byte index tuples keyed by (group, shard) and folds them one (group,
+    shard) at a time (``agg.fold_groups``), so task memory is a single
+    shard plus one Arrow batch regardless of group count or filter size;
+    the probe is the flat filter's shuffle probe keyed by (group, shard),
+    so each shard state crosses the wire once.
 
     All groups share one sizing (``capacity`` / ``fpp`` per group) — the
     params ARE the merge-compatibility contract, exactly like
@@ -917,42 +813,10 @@ class GroupedShardedBloom:
     ) -> DataFrame:
         """Append ``output_col``: is ``col`` a member of ITS OWN row's
         group filter?  Groups never built probe all-False (nothing was
-        inserted).  Single shuffle, columns carried through the cogroup —
-        no join-back."""
-        from poppy_spark.spark.agg import _as_key
-
-        p = self.params
-        g = self.group_col
-        int_mode = _INT_MODE[int_keys]
-        in_cols = list(df.columns)
-        keyed = df.select("*", _as_key(df, col, int_keys).alias("__key"))
-
-        def index_fn(batches):
-            for b in batches:
-                shard, ib, idx, _ = _route_batch(
-                    b.column(b.num_columns - 1), p, dedup=False, int_mode=int_mode
-                )
-                cols = [b.column(i) for i in range(b.num_columns - 1)]
-                yield pa.RecordBatch.from_arrays(
-                    cols + [pa.array(shard), pa.array(ib), _idx_to_binary(idx)],
-                    in_cols + ["__shard_id", "__ib", "__idx"],
-                )
-
-        route_schema = T.StructType(
-            list(df.schema.fields)
-            + [
-                T.StructField("__shard_id", T.IntegerType()),
-                T.StructField("__ib", T.LongType()),
-                T.StructField("__idx", T.BinaryType()),
-            ]
-        )
-        tuples = keyed.mapInArrow(index_fn, route_schema)
-        states = self.states.withColumnRenamed("shard_id", "__shard_id")
-        out_schema, check = _cogroup_probe(df, output_col, p)
-        return (
-            tuples.groupBy(g, "__shard_id")
-            .cogroup(states.groupBy(g, "__shard_id"))
-            .applyInArrow(check, out_schema)
+        inserted).  The flat filter's shuffle probe (:func:`_shard_probe`)
+        with the group column added to the cogroup key."""
+        return _shard_probe(
+            df, col, [self.group_col], self.states, self.params, output_col, int_keys
         )
 
     def semi_join(self, df: DataFrame, col: str) -> DataFrame:
@@ -1139,9 +1003,10 @@ def build_sharded_bloom_grouped(
 ) -> GroupedShardedBloom:
     """Distributed build of one bucket-range-sharded v2 filter PER GROUP,
     sized ``capacity``/``fpp`` each.  Shuffle carries index tuples keyed
-    by (group, shard); each task materializes one (group, shard) slice at
-    a time, so task memory = one shard's bytes regardless of group count."""
-    from poppy_spark.spark.agg import _as_key, compress_blob
+    by (group, shard); the fold ORs one (group, shard) at a time into one
+    shard's buckets, so task memory = one shard's bytes regardless of group
+    count."""
+    from poppy_spark.spark.agg import _as_key, fold_groups
 
     total_buckets = math.ceil(capacity / cap_from_bit_size(BUCKET_BITS, fpp))
     if n_shards is None:
@@ -1171,34 +1036,29 @@ def build_sharded_bloom_grouped(
         ]
     )
     tuples = keyed.mapInArrow(index_fn, route_schema)
-    k, bps, n_buckets = p.n_hash_buck, p.bps, p.n_buckets
-    state_schema = _grouped_state_schema(gfield)
+    k, bps = p.n_hash_buck, p.bps
 
-    def build_fn(tbl: pa.Table) -> pa.Table:
-        s = int(tbl.column("shard_id")[0].as_py())
-        nb = min(bps, n_buckets - s * bps)
-        arr = np.zeros(nb * BUCKET_SIZE, dtype=np.uint8)
-        ib = tbl.column("ib").to_numpy(zero_copy_only=False)
-        idx = _binary_to_idx(tbl.column("idx"), k)
-        _or_bits_into(arr, ib - s * bps, idx)
-        return pa.Table.from_arrays(
-            [
-                tbl.column(group_col).slice(0, 1),
-                pa.array([s], pa.int32()),
-                pa.array([compress_blob(arr.tobytes())], pa.binary()),
-                pa.array([tbl.num_rows], pa.int64()),
-            ],
-            schema=pa.schema(
-                [
-                    tbl.schema.field(group_col),
-                    pa.field("shard_id", pa.int32()),
-                    pa.field("state", pa.binary()),
-                    pa.field("n_rows", pa.int64()),
-                ]
-            ),
-        )
+    def start(key: tuple) -> list:
+        shard = key[1]
+        return [np.zeros(p.shard_buckets(shard) * BUCKET_SIZE, dtype=np.uint8), 0, shard * bps]
 
-    states = tuples.groupBy(group_col, "shard_id").applyInArrow(build_fn, state_schema)
+    def add(acc: list, view: tuple, lo: int, hi: int) -> None:
+        ib, idx = view
+        _or_bits_into(acc[0], ib[lo:hi] - acc[2], idx[lo:hi])
+        acc[1] += hi - lo
+
+    def prepare(b: pa.RecordBatch) -> tuple:
+        return b.column("ib").to_numpy(zero_copy_only=False), _binary_to_idx(b.column("idx"), k)
+
+    states = fold_groups(
+        tuples,
+        [group_col, "shard_id"],
+        _grouped_state_schema(gfield),
+        start,
+        add,
+        lambda key, acc: _shard_row(key, acc[0], acc[1]),
+        prepare,
+    )
     if persist:
         states = states.persist()
     return GroupedShardedBloom(p, group_col, states)

@@ -152,10 +152,10 @@ class TestFoldGroups:
 
 
 class _Sites(ast.NodeVisitor):
-    """Enclosing class/function path of every ``.applyInPandas(`` call."""
+    """Enclosing class/function path of every ``.<attr>(`` call."""
 
-    def __init__(self):
-        self.path, self.sites = [], []
+    def __init__(self, attr):
+        self.attr, self.path, self.sites = attr, [], []
 
     def _scope(self, node):
         self.path.append(node.name)
@@ -165,32 +165,41 @@ class _Sites(ast.NodeVisitor):
     visit_ClassDef = visit_FunctionDef = _scope
 
     def visit_Call(self, node):
-        if isinstance(node.func, ast.Attribute) and node.func.attr == "applyInPandas":
+        if isinstance(node.func, ast.Attribute) and node.func.attr == self.attr:
             self.sites.append(".".join(self.path))
         self.generic_visit(node)
+
+
+def _call_sites(attr):
+    """``module:scope`` of every ``.<attr>(`` call in ``poppy_spark/spark``."""
+    sites = []
+    for p in sorted(SPARK_DIR.glob("*.py")):
+        src = p.read_text()
+        v = _Sites(attr)
+        v.visit(ast.parse(src))
+        # every textual call site is one the AST walk attributed
+        assert src.count(f"{attr}(") == len(v.sites), p.name
+        sites += [f"{p.name}:{s}" for s in v.sites]
+    return sorted(sites)
 
 
 class TestOneShapeGuard:
     def test_apply_in_pandas_sites(self):
         """Grouped state merges go through ``fold_groups``; ``applyInPandas``
         stays only where per-group compute IS the algorithm (bin packing,
-        per-cell similarity edges) and in the ``carry="join"`` probe."""
-        sites = []
-        for p in sorted(SPARK_DIR.glob("*.py")):
-            src = p.read_text()
-            v = _Sites()
-            v.visit(ast.parse(src))
-            # every textual call site is one the AST walk attributed
-            assert src.count("applyInPandas(") == len(v.sites), p.name
-            sites += [f"{p.name}:{s}" for s in v.sites]
-        assert sorted(sites) == [
+        per-cell similarity edges)."""
+        assert _call_sites("applyInPandas") == [
             "packing.py:pack_assignments",
-            "sharded.py:ShardedBloom.contains",
             "similarity.py:_cell_edges",
         ]
-        # the sharded site is the carry="join" cogroup, not the columns path
+
+    def test_one_shard_probe(self):
+        """Both sharded filters probe through ``_shard_probe`` (the only
+        cogroup), with no row id to join hits back on."""
+        assert _call_sites("applyInArrow") == ["sharded.py:_shard_probe"]
         src = (SPARK_DIR / "sharded.py").read_text()
-        assert src.index('if carry == "columns"') < src.index("applyInPandas(")
+        assert "localCheckpoint" not in src
+        assert "monotonically_increasing_id" not in src
 
     def test_nan_key_defined_once(self):
         pkg = SPARK_DIR.parent
@@ -200,3 +209,12 @@ class TestOneShapeGuard:
             for m in re.finditer(r"def _?nan_key\b|\b_?nan_key\s*=[^=]", p.read_text())
         ]
         assert len(defs) == 1, defs
+
+    def test_int_mode_defined_once(self):
+        pkg = SPARK_DIR.parent
+        defs = [
+            p.name
+            for p in sorted(pkg.rglob("*.py"))
+            for _ in re.finditer(r"\b_INT_MODE\s*=[^=]", p.read_text())
+        ]
+        assert defs == ["base.py"], defs

@@ -66,11 +66,6 @@ class TestShardedProbe:
         fp = sharded.contains(non, "k", "hit", strategy="shuffle").filter("hit").count()
         assert fp / 20000 <= 0.001 * 2
 
-    def test_salted_probe_same_answers(self, spark, keys_df, sharded):
-        plain = sharded.contains(keys_df, "k", "hit", strategy="shuffle")
-        salted = sharded.contains(keys_df, "k", "hit", salt=4, strategy="shuffle")
-        assert plain.filter("NOT hit").count() == salted.filter("NOT hit").count() == 0
-
     def test_semi_anti_join(self, spark, keys_df, sharded):
         assert sharded.semi_join(keys_df, "k").count() == 30000
         absent = spark.range(0, 5000).select(
@@ -164,23 +159,21 @@ class TestAutoStrategy:
 
 
 class TestCarryColumnsProbe:
-    def test_columns_probe_matches_join_probe(self, spark, keys_df, sharded):
-        j = sharded.contains(keys_df, "k", "hit", carry="join", strategy="shuffle")
-        c = sharded.contains(keys_df, "k", "hit", carry="columns", strategy="shuffle")
+    def test_shuffle_probe_matches_broadcast(self, spark, keys_df, sharded):
+        """Rows carry their columns through the shuffle probe and answer
+        row for row as the reassembled broadcast filter does."""
+        b = sharded.contains(keys_df, "k", "hit", strategy="broadcast")
+        c = sharded.contains(keys_df, "k", "hit", strategy="shuffle")
         assert c.columns == keys_df.columns + ["hit"]
-        assert c.filter("NOT hit").count() == j.filter("NOT hit").count() == 0
+        assert c.filter("NOT hit").count() == b.filter("NOT hit").count() == 0
         assert c.count() == 30000
         # non-members agree row-for-row
         non = spark.range(0, 8000).select(
             F.format_string("colsprobe-%08d", F.col("id")).alias("k")
         )
-        jj = {r["k"]: r["hit"] for r in sharded.contains(non, "k", "hit", carry="join", strategy="shuffle").collect()}
-        cc = {r["k"]: r["hit"] for r in sharded.contains(non, "k", "hit", carry="columns", strategy="shuffle").collect()}
-        assert jj == cc
-
-    def test_columns_probe_salted(self, spark, keys_df, sharded):
-        c = sharded.contains(keys_df, "k", "hit", carry="columns", salt=3, strategy="shuffle")
-        assert c.filter("NOT hit").count() == 0
+        bb = {r["k"]: r["hit"] for r in sharded.contains(non, "k", "hit", strategy="broadcast").collect()}
+        cc = {r["k"]: r["hit"] for r in sharded.contains(non, "k", "hit", strategy="shuffle").collect()}
+        assert len(cc) == 8000 and bb == cc
 
 
 class TestImportFromPoppyBytes:
@@ -393,13 +386,24 @@ class TestGroupedSharded:
         from poppy_spark.spark.sharded import build_sharded_bloom_grouped
 
         ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        gsb = build_sharded_bloom_grouped(
-            ev, "user_id", "event_type", capacity=5_000, fpp=0.001, n_shards=4
-        )
-        for gval in ["click", "view"]:
-            one = ev.filter(F.col("event_type") == gval)
-            single = build_sketch(one, "user_id", BloomSketch.factory(5_000, 0.001))
-            assert gsb.reassemble_group(gval) == single.dumps()
+        singles = {
+            gval: build_sketch(
+                ev.filter(F.col("event_type") == gval),
+                "user_id",
+                BloomSketch.factory(5_000, 0.001),
+            ).dumps()
+            for gval in ["click", "view"]
+        }
+        # the per-(group, shard) fold ORs the same bits at any input
+        # partitioning
+        for parts in (1, 7):
+            gsb = build_sharded_bloom_grouped(
+                ev.repartition(parts), "user_id", "event_type",
+                capacity=5_000, fpp=0.001, n_shards=4,
+            )
+            assert gsb.params.n_shards > 1
+            for gval, single in singles.items():
+                assert gsb.reassemble_group(gval) == single, (parts, gval)
 
     def test_task_memory_is_one_shard(self, spark):
         from poppy_spark.spark.sharded import build_sharded_bloom_grouped
@@ -627,8 +631,7 @@ class TestProbeSessionZones:
 
     def test_sharded_shuffle_probes(self, spark, zone, ts_df):
         sb = build_sharded_bloom(ts_df, "k", capacity=2000, fpp=0.001, n_shards=4)
-        for carry in ("columns", "join"):
-            self._check(sb.contains(ts_df, "k", carry=carry, strategy="shuffle"), ts_df)
+        self._check(sb.contains(ts_df, "k", strategy="shuffle"), ts_df)
 
     def test_grouped_probes(self, spark, zone, ts_df):
         from poppy_spark.sketches import BloomSketch

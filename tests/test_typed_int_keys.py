@@ -148,5 +148,5 @@ def test_sharded_typed_build_matches_classic(spark):
     driver.update_count()
     assert sb.to_poppy_bytes() == driver.dumps()
     # sharded typed probe: zero FN
-    hits = sb.contains(df, "k", int_keys="typed", carry="columns")
+    hits = sb.contains(df, "k", int_keys="typed")
     assert hits.filter("hit").count() == 3000
