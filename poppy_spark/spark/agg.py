@@ -396,30 +396,30 @@ def _reassemble_states_df(sb) -> DataFrame:
     driver.  The single task must hold the whole filter: inherent to the
     one-state contract of ``build_sketch_df`` (callers needing filters past
     one worker keep the ShardedBloom itself)."""
-    from poppy_spark.core.statekern import BUCKET_SIZE
+    from poppy_spark.spark.sharded import _v2_file
 
     p = sb.params
 
-    def start(key):
-        return [np.zeros(p.n_buckets * BUCKET_SIZE, dtype=np.uint8), 0]
+    def assemble(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        n_rows = []
 
-    def add(acc, b, lo, hi):
-        for i in range(lo, hi):
-            off = int(b.column("shard_id")[i].as_py()) * p.bps * BUCKET_SIZE
-            v = np.frombuffer(decompress_blob(b.column("state")[i].as_py()), dtype=np.uint8)
-            acc[0][off : off + v.size] = v
-        acc[1] += pc.sum(b.column("n_rows").slice(lo, hi - lo)).as_py() or 0
+        def rows():
+            for b in batches:
+                n_rows.append(pc.sum(b.column("n_rows")).as_py() or 0)
+                yield from zip(b.column("shard_id").to_pylist(), b.column("state").to_pylist())
 
-    def emit(key, acc):
-        from poppy_spark.core.v2 import BloomV2
-
-        filt = BloomV2(p.capacity, p.fpp, p.n_hash_buck, p.n_buckets, 0, 0, acc[0])
-        filt.update_count()
         # a BloomSketch state IS the poppy v2 file, so the assembled filter's
         # bytes are directly loadable by the sketch class downstream
-        return (0, filt.dumps(), acc[1])
+        raw = _v2_file(p, rows())
+        if n_rows:  # no shard rows: no state row, as a fold over nothing
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([0], pa.int64()), pa.array([raw], pa.binary()),
+                 pa.array([sum(n_rows)], pa.int64())],
+                ["pid", "state", "n_rows"],
+            )
 
-    return fold_groups(sb.states, [], _STATES_SCHEMA, start, add, emit)
+    states = sb.states.select("shard_id", "state", "n_rows").repartition(1)
+    return states.mapInArrow(assemble, _STATES_SCHEMA)
 
 
 def build_sketch_df(

@@ -8,33 +8,40 @@ poppy v2 is *already bucketed* — fixed 4096-byte buckets addressed by
 contiguous bucket range ``[s*bps, (s+1)*bps)`` and lives as one row of a
 DataFrame, nowhere near the driver.
 
+A per-group filter is the same filter with the group column added to the
+shard key: one :class:`ShardedBloom` type serves both, and every operation
+keys on ``(group?, shard_id)`` rows.
+
 Shapes (and why they scale):
 
-* **build** — phase 1 maps each key to its ``(shard_id, ibucket, k bit
-  indexes)`` with the existing vectorized wyhash kernels (one ``mapInArrow``
-  pass, batch-deduped); phase 2 repartitions those index tuples BY SHARD and
-  streams them into per-shard bucket arrays (``mapInArrow``, dict of shards
-  per task — memory per task = its shards' bytes, never the row group).
-  Shuffle volume is ~``4 + 8 + 2k`` bytes per distinct key — when the filter
-  is far larger than any partition's data (the 10^12 regime), shipping index
-  tuples beats shipping partial filter states by orders of magnitude.
-* **probe** — broadcast the reassembled filter when it fits, else ONE
-  shuffle probe for flat and per-group filters alike (:func:`_shard_probe`):
+* **build** — phase 1 maps each key to its ``(group?, shard_id, ibucket,
+  k bit indexes)`` with the existing vectorized wyhash kernels (one
+  ``mapInArrow`` pass; a flat build dedups per batch); phase 2 folds those
+  index tuples per ``(group?, shard_id)`` (``agg.fold_groups``) into ONE
+  shard's bucket array at a time — memory per task = one shard plus one
+  batch, never the row group or the group count.  Shuffle volume is
+  ~``4 + 8 + 2k`` bytes per key — when the filter is far larger than any
+  partition's data (the 10^12 regime), shipping index tuples beats
+  shipping partial filter states by orders of magnitude.
+* **probe** — broadcast the reassembled flat filter when it fits, else ONE
+  shuffle probe (:func:`_shard_probe`):
   a key-only Arrow UDF routes each row to its shard, then a cogrouped
   ``applyInArrow`` on ``(group?, shard_id)`` sees (its rows, its ONE shard
   state) and appends the hit — every shard state crosses the shuffle
   exactly once, a probe row never drags a copy of the state along (a plain
   join would), and there is no row id or join-back.
 * **algebra** — union/intersection are per-shard byte OR/AND: both sides'
-  shard rows, tagged by side, fold per shard (``agg.fold_groups``, no
-  join); the count estimate is poppy's per-bucket-sum formula
-  (``v2.rs:575-588``), which decomposes exactly over contiguous shards.
+  shard rows, tagged by side, fold per ``(group?, shard_id)``
+  (``agg.fold_groups``, no join); the count estimate is poppy's
+  per-bucket-sum formula (``v2.rs:575-588``), which decomposes exactly over
+  contiguous shards.
 
 ``to_poppy_bytes()`` reassembles a byte-identical single poppy v2 file (the
-equivalence is the correctness gate), guarded by a size budget since it is a
-driver-side materialization.  Only ``OptLevel.NONE`` is shardable (SPEED /
-BEST add a global index cache that does not decompose; poppy's own parallel
-path clones the whole filter per job instead, ``bin/poppy.rs:31-37``).
+equivalence is the correctness gate; ``reassemble_group(g)`` does the same
+for one group), guarded by a size budget since it is a driver-side
+materialization.  Only ``OptLevel.NONE`` is shardable (SPEED / BEST add a
+global index cache that does not decompose; poppy's own parallel path
+clones the whole filter per job instead, ``bin/poppy.rs:31-37``).
 """
 
 from __future__ import annotations
@@ -79,10 +86,19 @@ class _Params:
     bps: int  # buckets per shard (last shard may be short)
 
     @classmethod
-    def make(cls, capacity: int, fpp: float, n_shards: int) -> "_Params":
+    def make(
+        cls,
+        capacity: int,
+        fpp: float,
+        n_shards: int | None = None,
+        target_shard_bytes: int = 64 << 20,
+    ) -> "_Params":
+        """``n_shards=None`` keeps a shard near ``target_shard_bytes``."""
         bucket_cap = cap_from_bit_size(BUCKET_BITS, fpp)
         n_buckets = math.ceil(capacity / bucket_cap)
         n_hash_buck = k_fn(BUCKET_BITS, bucket_cap)
+        if n_shards is None:
+            n_shards = math.ceil(n_buckets * BUCKET_SIZE / target_shard_bytes)
         n_shards = max(1, min(n_shards, n_buckets))
         bps = math.ceil(n_buckets / n_shards)
         n_shards = math.ceil(n_buckets / bps)
@@ -268,16 +284,58 @@ def _or_bits_into(buckets: np.ndarray, ib_local: np.ndarray, idx: np.ndarray) ->
     np.bitwise_or.at(buckets, byte_off, bitmask)
 
 
+def _state_schema(gfields: list) -> T.StructType:
+    """``(group?, shard_id, state, n_rows)``: one state row per touched shard."""
+    return T.StructType([*gfields, *_STATE_SCHEMA.fields])
+
+
+def _shard_row(key: tuple, bits: np.ndarray, n_rows: int) -> tuple:
+    """One folded ``(group?, shard_id, state, n_rows)`` output row."""
+    from poppy_spark.spark.agg import compress_blob
+
+    return (*key, compress_blob(bits.tobytes()), n_rows)
+
+
+def _v2_file(p: _Params, rows) -> bytes:
+    """The one shard reassembly: ``(shard_id, state)`` rows -> a poppy v2
+    file, byte-identical to a one-node build with the same (capacity, fpp,
+    OptLevel.NONE).  Each shard is OR'd into its bucket range, so a
+    duplicated shard row can never drop bits; untouched shards stay zero."""
+    from poppy_spark.core.v2 import BloomV2
+    from poppy_spark.spark.agg import decompress_blob
+
+    buckets = np.zeros(p.n_buckets * BUCKET_SIZE, dtype=np.uint8)
+    for shard_id, state in rows:
+        blob = np.frombuffer(decompress_blob(state), dtype=np.uint8)
+        lo = shard_id * p.bps * BUCKET_SIZE
+        view = buckets[lo : lo + blob.size]
+        np.bitwise_or(view, blob, out=view)
+    filt = BloomV2(p.capacity, p.fpp, p.n_hash_buck, p.n_buckets, 0, 0, buckets)
+    filt.update_count()
+    return filt.dumps()
+
+
 class ShardedBloom:
-    """Handle over ``(shard_id, state, n_rows)`` DataFrame + shared params.
+    """Handle over ``(group?, shard_id, state, n_rows)`` rows + shared params.
 
     ``states`` holds one row per *touched* shard (raw shard bucket bytes,
-    lz4-wrapped); untouched shards are implicit all-zero.
+    lz4-wrapped); untouched shards are implicit all-zero.  With a
+    ``group_col`` the handle is one logical filter per group value, each
+    split into the same bucket-range shards: every operation keys on
+    ``(group, shard_id)`` instead of ``shard_id`` and otherwise runs the
+    same code.  All groups share one sizing (``capacity`` / ``fpp`` per
+    group) — the params ARE the merge-compatibility contract, exactly like
+    ``has_same_params`` gates poppy unions (``poppy/src/bloom.rs``).
     """
 
-    def __init__(self, params: _Params, states: DataFrame):
+    def __init__(self, params: _Params, states: DataFrame, group_col: str | None = None):
         self.params = params
         self.states = states
+        self.group_col = group_col
+
+    @property
+    def _groups(self) -> list:
+        return [self.group_col] if self.group_col else []
 
     # --- probe -----------------------------------------------------------------
     def contains(
@@ -290,7 +348,9 @@ class ShardedBloom:
         broadcast_budget: int = 128 << 20,
     ) -> DataFrame:
         """Append a boolean membership column; output columns are
-        ``df.columns + [output_col]``.
+        ``df.columns + [output_col]``.  A grouped filter answers whether
+        ``col`` is in ITS OWN row's group filter; a group never built
+        probes all-False (nothing was inserted).
 
         ``strategy`` picks the probe's physical shape:
 
@@ -298,17 +358,23 @@ class ShardedBloom:
           ``broadcast_budget`` (reassembled once, cached on this handle,
           shipped once per executor; the probe is then a narrow, shuffle-free
           transformation ~2.5x faster at bench scale), shuffle otherwise.
+          A grouped filter always takes the shuffle probe.
         * ``"broadcast"`` — force the reassembled broadcast probe (raises
-          past the budget).
+          past the budget, and on a grouped filter).
         * ``"shuffle"`` — force the shuffle probe (:func:`_shard_probe`):
           rows carry their columns to their shard and come back with the
           hit appended, each shard state crosses the wire exactly once —
           the only shape for filters no single worker can hold.
         """
-        if strategy == "auto":
-            strategy = (
-                "broadcast" if self.size_in_bytes() <= broadcast_budget else "shuffle"
+        if strategy not in ("auto", "broadcast", "shuffle"):
+            raise ValueError(
+                f"unknown strategy {strategy!r}; use 'auto', 'broadcast' or 'shuffle'"
             )
+        if self.group_col and strategy == "broadcast":
+            raise ValueError("a grouped sharded filter has no broadcast probe")
+        if strategy == "auto":
+            fits = not self.group_col and self.size_in_bytes() <= broadcast_budget
+            strategy = "broadcast" if fits else "shuffle"
         if strategy == "broadcast":
             from poppy_spark.spark.probe import bloom_contains
 
@@ -325,7 +391,9 @@ class ShardedBloom:
                     max_bytes=broadcast_budget
                 )
             return bloom_contains(df, col, raw, output_col, int_keys)
-        return _shard_probe(df, col, [], self.states, self.params, output_col, int_keys)
+        return _shard_probe(
+            df, col, self._groups, self.states, self.params, output_col, int_keys
+        )
 
     def semi_join(self, df: DataFrame, col: str) -> DataFrame:
         return self.contains(df, col, "__hit__").filter(F.col("__hit__")).drop("__hit__")
@@ -334,27 +402,79 @@ class ShardedBloom:
         return self.contains(df, col, "__hit__").filter(~F.col("__hit__")).drop("__hit__")
 
     # --- algebra ---------------------------------------------------------------
-    def _merge(self, other: "ShardedBloom", op: str) -> "ShardedBloom":
-        if self.params != other.params:
-            raise MergeError("cannot merge sharded blooms with different parameters")
-        merged = _fold_shards(self.states, other.states, ["shard_id"], op, _STATE_SCHEMA)
-        return ShardedBloom(self.params, merged)
+    def _fold(self, other: "ShardedBloom | None", op: str) -> "ShardedBloom":
+        """The one shape of the shard algebra: fold the shard rows of this
+        filter (and of ``other``, tagged by ``__src``) per ``(group?,
+        shard_id)``, OR-ing each side's rows in place.  With ``op="and"``
+        the two sides then AND, a key present on one side only (AND with
+        the implicit all-zero shard) is dropped, and ``n_rows`` is reset to
+        0 (insert counts do not survive an AND; every estimate recomputes
+        from the bits); otherwise ``n_rows`` sums."""
+        from poppy_spark.spark.agg import decompress_blob, fold_groups
+
+        both = self.states.withColumn("__src", F.lit(0))
+        if other is not None:
+            if self.params != other.params or self.group_col != other.group_col:
+                raise MergeError(
+                    f"cannot combine sharded blooms ({op}) with different "
+                    "parameters or group columns"
+                )
+            both = both.unionByName(other.states.withColumn("__src", F.lit(1)))
+        sided = op == "and"
+
+        def add(acc: list, rows: pa.RecordBatch, lo: int, hi: int) -> None:
+            src, states = rows.column("__src"), rows.column("state")
+            for i in range(lo, hi):
+                s = src[i].as_py() if sided else 0
+                v = np.frombuffer(decompress_blob(states[i].as_py()), dtype=np.uint8)
+                if acc[s] is None:
+                    acc[s] = v.copy()
+                else:
+                    np.bitwise_or(acc[s], v, out=acc[s])
+            acc[2] += pc.sum(rows.column("n_rows").slice(lo, hi - lo)).as_py() or 0
+
+        def emit(key: tuple, acc: list):
+            bits, other_bits, n_rows = acc
+            if sided:
+                if bits is None or other_bits is None:
+                    return None
+                np.bitwise_and(bits, other_bits, out=bits)
+                n_rows = 0
+            return _shard_row(key, bits, n_rows)
+
+        gfields = [self.states.schema[g] for g in self._groups]
+        states = fold_groups(
+            both,
+            [*self._groups, "shard_id"],
+            _state_schema(gfields),
+            lambda key: [None, None, 0],
+            add,
+            emit,
+        )
+        return ShardedBloom(self.params, states, self.group_col)
 
     def union(self, other: "ShardedBloom") -> "ShardedBloom":
-        """Per-shard bitwise OR (poppy ``union_merge``, ``v2.rs:476-494``)."""
-        return self._merge(other, "or")
+        """Per-(group?, shard) bitwise OR (poppy ``union_merge``,
+        ``v2.rs:476-494``); a group present on one side only passes through
+        unchanged (OR with all-zero)."""
+        return self._fold(other, "or")
 
     def intersection(self, other: "ShardedBloom") -> "ShardedBloom":
-        """Per-shard bitwise AND (poppy ``intersection_merge``)."""
-        return self._merge(other, "and")
+        """Per-(group?, shard) bitwise AND (poppy ``intersection_merge``,
+        ``v2.rs:628-646``).  A GROUP present on one side only vanishes: its
+        intersection is the empty filter, which probes all-False exactly
+        like a never-built group."""
+        return self._fold(other, "and")
 
     # --- estimates ---------------------------------------------------------------
-    def count_estimate(self) -> int:
-        """Sum of per-bucket truncated estimates (``v2.rs:575-588``) — the
-        per-bucket sum decomposes exactly over contiguous shards, so this
-        equals ``BloomV2.update_count()`` on the reassembled filter."""
-        from poppy_spark.spark.agg import decompress_blob
+    def count_estimates(self) -> DataFrame:
+        """Cardinality estimates ``(group?, estimate)``: poppy's per-bucket
+        truncated sum (``v2.rs:575-588``), which decomposes exactly over
+        contiguous shards, summed per group — equal to
+        ``BloomV2.update_count()`` on each reassembled filter.  Stays
+        distributed: one pandas UDF over state rows + one grouped sum."""
         from poppy_spark.core.statekern import _sum_bucket_estimates, v2_bucket_ones
+        from poppy_spark.spark.agg import decompress_blob
 
         n_hash = self.params.n_hash_buck
 
@@ -363,14 +483,29 @@ class ShardedBloom:
             import decimal
 
             out = []
-            for s in states:
-                buckets = np.frombuffer(decompress_blob(s), dtype=np.uint8)
-                nb = buckets.size // BUCKET_SIZE
-                out.append(decimal.Decimal(_sum_bucket_estimates(v2_bucket_ones(buckets, nb), n_hash)))
+            for raw in states:
+                buckets = np.frombuffer(decompress_blob(raw), dtype=np.uint8)
+                ones = v2_bucket_ones(buckets, buckets.size // BUCKET_SIZE)
+                out.append(decimal.Decimal(_sum_bucket_estimates(ones, n_hash)))
             return pd.Series(out)
 
-        row = self.states.agg(F.sum(shard_est(F.col("state"))).alias("est")).collect()[0]
-        return int(row["est"] or 0)
+        return self.states.groupBy(*self._groups).agg(
+            F.sum(shard_est(F.col("state"))).cast("long").alias("estimate")
+        )
+
+    def count_estimate(self) -> int:
+        """The flat filter's :meth:`count_estimates` value."""
+        if self.group_col:
+            raise ValueError("a grouped filter has one estimate per group; use count_estimates()")
+        return int(self.count_estimates().collect()[0]["estimate"] or 0)
+
+    def count_common(self, other: "ShardedBloom") -> DataFrame:
+        """Common-entry estimates ``(group?, estimate)`` — poppy
+        ``count_common_entries`` (``bloom.rs:343-356``): the count estimate
+        of the intersection, equal to ``BloomV2.count_common_entries`` on
+        each group's two reassembled filters.  Groups with no commonly
+        touched shard are omitted (their estimate is 0)."""
+        return self.intersection(other).count_estimates()
 
     def n_rows(self) -> int:
         return int(self.states.agg(F.sum("n_rows")).collect()[0][0] or 0)
@@ -408,44 +543,42 @@ class ShardedBloom:
             "buckets_per_shard": self.params.bps,
             "shard_bytes": self.params.bps * BUCKET_SIZE,
             "size_in_bytes": self.size_in_bytes(),
+            "group_col": self.group_col,
             "n_touched_shards": self.states.count(),
         }
 
     # --- export / persistence ------------------------------------------------------
     def size_in_bytes(self) -> int:
-        """Uncompressed logical filter size (all shards)."""
+        """Uncompressed logical filter size (all shards of one group)."""
         return self.params.n_buckets * BUCKET_SIZE
 
     def to_poppy_bytes(self, max_bytes: int = 1 << 30) -> bytes:
         """Reassemble the single-file poppy v2 filter — byte-identical to a
-        one-node build with the same (capacity, fpp, OptLevel.NONE).
+        one-node build with the same (capacity, fpp, OptLevel.NONE).  On a
+        grouped filter this ORs every group: the filter of all their keys.
 
         Driver-side materialization: guarded by ``max_bytes`` because a
         sharded filter exists precisely to exceed single-process memory.
         """
-        from poppy_spark.core.v2 import BloomV2
-        from poppy_spark.spark.agg import decompress_blob
-
-        p = self.params
         if self.size_in_bytes() > max_bytes:
             raise MemoryError(
                 f"sharded filter is {self.size_in_bytes()} bytes uncompressed; "
                 f"refusing driver-side reassembly past max_bytes={max_bytes}"
             )
-        buckets = np.zeros(p.n_buckets * BUCKET_SIZE, dtype=np.uint8)
-        for r in self.states.select("shard_id", "state").collect():
-            lo = r["shard_id"] * p.bps * BUCKET_SIZE
-            blob = np.frombuffer(decompress_blob(r["state"]), dtype=np.uint8)
-            buckets[lo : lo + blob.size] = blob
-        filt = BloomV2(
-            p.capacity, p.fpp, p.n_hash_buck, p.n_buckets, 0, 0, buckets
-        )
-        filt.update_count()
-        return filt.dumps()
+        return _v2_file(self.params, self.states.select("shard_id", "state").collect())
+
+    def reassemble_group(self, group_value) -> bytes:
+        """One group's shards as a complete poppy v2 file: the
+        ``to_poppy_bytes`` reassembly after a group filter.  Collect-based:
+        intended for tests/export of a single group."""
+        rows = self.states.filter(F.col(self.group_col) == group_value)
+        return _v2_file(self.params, rows.select("shard_id", "state").collect())
 
     def save(self, directory: str) -> None:
-        """Persist as parquet shard rows + a JSON params sidecar."""
-        self.states.write.mode("overwrite").parquet(os.path.join(directory, "shards"))
+        """Persist as parquet state rows + a JSON params sidecar.  A grouped
+        filter's rows are partitioned by the group column (single-group
+        reads prune at the scan) and the sidecar names the column."""
+        writer = self.states.write.mode("overwrite")
         meta = {
             "capacity": self.params.capacity,
             "fpp": self.params.fpp,
@@ -454,6 +587,15 @@ class ShardedBloom:
             "n_shards": self.params.n_shards,
             "bps": self.params.bps,
         }
+        if self.group_col:
+            writer = writer.partitionBy(self.group_col)
+            meta["group_col"] = self.group_col
+            # partition-column values round-trip through directory names;
+            # record the true dataType so load() can undo Spark's partition
+            # type inference (string groups that look numeric come back int
+            # otherwise, breaking union/probe against freshly built states)
+            meta["group_type"] = self.states.schema[self.group_col].dataType.json()
+        writer.parquet(os.path.join(directory, "shards"))
         spark = self.states.sparkSession
         spark.createDataFrame([(json.dumps(meta),)], "meta string").coalesce(1).write.mode(
             "overwrite"
@@ -480,10 +622,7 @@ class ShardedBloom:
         filt = BloomV2.loads(raw)
         if filt.opt != OptLevel.NONE:
             raise ValueError("only OptLevel NONE filters are shardable")
-        total_bytes = filt.n_buckets * BUCKET_SIZE
-        if n_shards is None:
-            n_shards = max(1, math.ceil(total_bytes / target_shard_bytes))
-        p = _Params.make(filt.capacity, filt.fpp, n_shards)
+        p = _Params.make(filt.capacity, filt.fpp, n_shards, target_shard_bytes)
         if (p.n_buckets, p.n_hash_buck) != (filt.n_buckets, filt.n_hash_buck):
             raise ValueError(
                 "filter params do not match NONE-level sizing; cannot shard"
@@ -500,72 +639,32 @@ class ShardedBloom:
 
     @classmethod
     def load(cls, spark: SparkSession, directory: str) -> "ShardedBloom":
+        """Load a :meth:`save` directory, flat or grouped as its sidecar
+        says."""
+        from pyspark.sql.types import _parse_datatype_json_string
+
         meta_raw = spark.read.json(os.path.join(directory, "meta")).collect()[0]["meta"]
         m = json.loads(meta_raw)
         p = _Params(
             m["capacity"], m["fpp"], m["n_buckets"], m["n_hash_buck"],
             m["n_shards"], m["bps"],
         )
-        return cls(p, spark.read.parquet(os.path.join(directory, "shards")))
-
-
-def _shard_row(key: tuple, bits: np.ndarray, n_rows: int) -> tuple:
-    """One folded ``(group?, shard_id, state, n_rows)`` output row."""
-    from poppy_spark.spark.agg import compress_blob
-
-    return (*key, compress_blob(bits.tobytes()), n_rows)
-
-
-def _fold_shards(
-    a: DataFrame,
-    b: DataFrame | None,
-    keys: list,
-    op: str,
-    schema: T.StructType,
-    finish=_shard_row,
-) -> DataFrame:
-    """The one shape of the shard algebra: fold the shard rows of ``a`` (and
-    of ``b``, tagged by ``__src``) per ``keys`` — ``shard_id`` or ``(group,
-    shard_id)`` — OR-ing each side's rows in place.  With ``op="and"`` the
-    two sides then AND, and a key present on one side only (AND with the
-    implicit all-zero shard) is dropped.  ``finish(key, bits, n_rows)``
-    makes the output row in ``schema`` order; ``n_rows`` sums both sides."""
-    from poppy_spark.spark.agg import decompress_blob, fold_groups
-
-    both = a.withColumn("__src", F.lit(0))
-    if b is not None:
-        both = both.unionByName(b.withColumn("__src", F.lit(1)))
-    sided = op == "and"
-
-    def add(acc: list, rows: pa.RecordBatch, lo: int, hi: int) -> None:
-        src, states = rows.column("__src"), rows.column("state")
-        for i in range(lo, hi):
-            s = src[i].as_py() if sided else 0
-            v = np.frombuffer(decompress_blob(states[i].as_py()), dtype=np.uint8)
-            if acc[s] is None:
-                acc[s] = v.copy()
-            else:
-                np.bitwise_or(acc[s], v, out=acc[s])
-        acc[2] += pc.sum(rows.column("n_rows").slice(lo, hi - lo)).as_py() or 0
-
-    def emit(key: tuple, acc: list):
-        bits, other, n_rows = acc
-        if sided:
-            if bits is None or other is None:
-                return None
-            np.bitwise_and(bits, other, out=bits)
-        return finish(key, bits, n_rows)
-
-    return fold_groups(both, keys, schema, lambda key: [None, None, 0], add, emit)
-
-
-def _grouped_state_schema(gfield: T.StructField) -> T.StructType:
-    return T.StructType([gfield, *_STATE_SCHEMA.fields])
-
-
-def _or_merge_states(states: DataFrame) -> DataFrame:
-    """Collapse duplicate shard rows (appended deltas) by bitwise OR."""
-    return _fold_shards(states, None, ["shard_id"], "or", _STATE_SCHEMA)
+        # read a partition column as string (inference off), then cast to
+        # the saved dataType: "0123"-style string groups keep their exact
+        # bytes and numeric groups come back with their original type, so
+        # loaded filters union/probe against freshly built states unchanged
+        conf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+        prev = spark.conf.get(conf_key, "true")
+        spark.conf.set(conf_key, "false")
+        try:
+            states = spark.read.parquet(os.path.join(directory, "shards"))
+        finally:
+            spark.conf.set(conf_key, prev)
+        group_col = m.get("group_col")
+        if m.get("group_type"):
+            gt = _parse_datatype_json_string(m["group_type"])
+            states = states.withColumn(group_col, F.col(group_col).cast(gt))
+        return cls(p, states, group_col)
 
 
 class ShardedBloomStream:
@@ -582,6 +681,10 @@ class ShardedBloomStream:
         q = stream.writeStream.foreachBatch(sink).start()
         ...
         filt = sink.current(spark)   # a ShardedBloom over the merged states
+
+    Reopening a directory (a stream restart) must pass the same sizing it
+    was created with: the deltas of two sizings cannot merge, so a
+    mismatch with the stored ``params.json`` raises ``MergeError``.
     """
 
     def __init__(
@@ -593,44 +696,45 @@ class ShardedBloomStream:
         target_shard_bytes: int = 64 << 20,
         col: str = "value",
     ):
-        total_buckets = math.ceil(capacity / cap_from_bit_size(BUCKET_BITS, fpp))
-        if n_shards is None:
-            n_shards = max(1, math.ceil(total_buckets * BUCKET_SIZE / target_shard_bytes))
-        self.params = _Params.make(capacity, fpp, n_shards)
+        self.params = _Params.make(capacity, fpp, n_shards, target_shard_bytes)
         self.dir = directory
         self.col = col
+        meta = {
+            "capacity": self.params.capacity,
+            "fpp": self.params.fpp,
+            "n_shards": self.params.n_shards,
+        }
+        path = os.path.join(directory, "params.json")
+        if os.path.exists(path):
+            with open(path) as f:
+                stored = json.load(f)
+            if stored != meta:
+                raise MergeError(
+                    f"{directory} holds a sharded filter with params {stored}; "
+                    f"cannot append deltas sized {meta}"
+                )
+            return
         os.makedirs(directory, exist_ok=True)
-        with open(os.path.join(directory, "params.json"), "w") as f:
-            json.dump(
-                {
-                    "capacity": self.params.capacity,
-                    "fpp": self.params.fpp,
-                    "n_shards": self.params.n_shards,
-                },
-                f,
-            )
+        with open(path, "w") as f:
+            json.dump(meta, f)
 
     @property
     def _shards_path(self) -> str:
         return os.path.join(self.dir, "shards")
 
+    def _merged(self, states: DataFrame) -> ShardedBloom:
+        """Appended delta rows, duplicate shards OR-merged."""
+        return ShardedBloom(self.params, states)._fold(None, "or")
+
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        delta = build_sharded_bloom(
-            batch_df,
-            self.col,
-            self.params.capacity,
-            self.params.fpp,
-            n_shards=self.params.n_shards,
-            persist=False,
-        )
+        delta = _build(batch_df, self.col, None, self.params, False, "string")
         delta.states.write.mode("append").parquet(self._shards_path)
 
     def current(self, spark: SparkSession) -> ShardedBloom:
         """The merged filter over everything appended so far."""
-        states = _or_merge_states(spark.read.parquet(self._shards_path))
-        return ShardedBloom(self.params, states)
+        return self._merged(spark.read.parquet(self._shards_path))
 
     def compact(self, spark: SparkSession) -> None:
         """Rewrite appended deltas as one row per shard — safe to run while
@@ -654,7 +758,7 @@ class ShardedBloomStream:
         consumed = sorted(glob.glob(os.path.join(self._shards_path, "*.parquet")))
         if not consumed:
             return
-        merged = _or_merge_states(spark.read.parquet(*consumed))
+        merged = self._merged(spark.read.parquet(*consumed)).states
         tmp = os.path.join(self.dir, f".compact-{uuid.uuid4().hex}")
         try:
             merged.write.mode("overwrite").parquet(tmp)
@@ -687,6 +791,77 @@ def estimate_distinct_keys(
     return int(build_sketch(df, col, HllSketch.factory(p), int_keys=int_keys).result())
 
 
+def _build(
+    df: DataFrame,
+    col: str,
+    group_col: str | None,
+    p: _Params,
+    persist: bool,
+    int_keys: str,
+) -> ShardedBloom:
+    """The one sharded build, flat (``group_col=None``) or per group.
+
+    Phase 1 (the module's one ``mapInArrow``) maps each key to its
+    ``(group?, shard_id, ibucket, k bit indexes)`` tuple.  A flat build
+    drops repeated keys within a batch (``h1`` dedup); a per-group build
+    cannot, since one key may belong to several groups of a batch.
+    Phase 2 folds the tuples per ``(group?, shard_id)`` with
+    ``agg.fold_groups``, OR-ing them into one shard's buckets, so task
+    memory is one shard plus one Arrow batch at any capacity or group
+    count.  ``n_rows`` counts the tuples that reached the fold."""
+    from poppy_spark.spark.agg import _as_key, fold_groups
+
+    groups = [group_col] if group_col else []
+    gfields = [df.schema[g] for g in groups]
+    keyed = _spread_low_split(df.select(*groups, _as_key(df, col, int_keys).alias("__key")))
+    int_mode = _INT_MODE[int_keys]
+    dedup = not groups
+
+    def index_fn(batches):
+        for b in batches:
+            shard, ib, idx, _ = _route_batch(b.column("__key"), p, dedup, int_mode)
+            yield pa.RecordBatch.from_arrays(
+                [*b.columns[: len(groups)], pa.array(shard), pa.array(ib), _idx_to_binary(idx)],
+                [*groups, "shard_id", "ib", "idx"],
+            )
+
+    route_schema = T.StructType(
+        [
+            *gfields,
+            T.StructField("shard_id", T.IntegerType()),
+            T.StructField("ib", T.LongType()),
+            T.StructField("idx", T.BinaryType()),
+        ]
+    )
+    tuples = keyed.mapInArrow(index_fn, route_schema)
+    k, bps = p.n_hash_buck, p.bps
+
+    def start(key: tuple) -> list:
+        shard = key[-1]
+        return [np.zeros(p.shard_buckets(shard) * BUCKET_SIZE, dtype=np.uint8), 0, shard * bps]
+
+    def add(acc: list, view: tuple, lo: int, hi: int) -> None:
+        ib, idx = view
+        _or_bits_into(acc[0], ib[lo:hi] - acc[2], idx[lo:hi])
+        acc[1] += hi - lo
+
+    def prepare(b: pa.RecordBatch) -> tuple:
+        return b.column("ib").to_numpy(zero_copy_only=False), _binary_to_idx(b.column("idx"), k)
+
+    states = fold_groups(
+        tuples,
+        [*groups, "shard_id"],
+        _state_schema(gfields),
+        start,
+        add,
+        lambda key, acc: _shard_row(key, acc[0], acc[1]),
+        prepare,
+    )
+    if persist:
+        states = states.persist()
+    return ShardedBloom(p, states, group_col)
+
+
 def build_sharded_bloom(
     df: DataFrame,
     col: str,
@@ -714,280 +889,14 @@ def build_sharded_bloom(
     half the cluster's filter memory.  Costs one extra scan of the key
     column (shuffles only 16 KB HLL states).
     """
-    from poppy_spark.spark.agg import _as_key, compress_blob
-
     if capacity == "auto":
         est = estimate_distinct_keys(df, col, int_keys=int_keys)
         pad = auto_headroom + 3 * 1.04 / math.sqrt(2**14)
         capacity = max(1024, math.ceil(est * (1.0 + pad)))
     elif not isinstance(capacity, int):
         raise TypeError(f"capacity must be an int or 'auto', got {capacity!r}")
-
-    total_buckets = math.ceil(capacity / cap_from_bit_size(BUCKET_BITS, fpp))
-    if n_shards is None:
-        n_shards = max(1, math.ceil(total_buckets * BUCKET_SIZE / target_shard_bytes))
-    p = _Params.make(capacity, fpp, n_shards)
-
-    keys = _spread_low_split(df.select(_as_key(df, col, int_keys).alias("__key")))
-    int_mode = _INT_MODE[int_keys]
-
-    def index_fn(batches):
-        for b in batches:
-            shard, ib, idx, _ = _route_batch(b.column(0), p, dedup=True, int_mode=int_mode)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(shard), pa.array(ib), _idx_to_binary(idx)],
-                ["shard_id", "ib", "idx"],
-            )
-
-    # n_rows below counts deduped index tuples (diagnostic), not input rows
-    tuples = keys.mapInArrow(index_fn, "shard_id int, ib bigint, idx binary")
-
-    k, bps, n_buckets = p.n_hash_buck, p.bps, p.n_buckets
-
-    def build_shards(batches):
-        shards: dict[int, np.ndarray] = {}
-        rows: dict[int, int] = {}
-        for b in batches:
-            shard = b.column(0).to_numpy(zero_copy_only=False)
-            ib = b.column(1).to_numpy(zero_copy_only=False)
-            idx = _binary_to_idx(b.column(2), k)
-            for s in np.unique(shard):
-                s = int(s)
-                arr = shards.get(s)
-                if arr is None:
-                    nb = min(bps, n_buckets - s * bps)
-                    arr = shards[s] = np.zeros(nb * BUCKET_SIZE, dtype=np.uint8)
-                    rows[s] = 0
-                m = shard == s
-                _or_bits_into(arr, ib[m] - s * bps, idx[m])
-                rows[s] += int(m.sum())
-        for s, arr in shards.items():
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([s], pa.int32()),
-                    pa.array([compress_blob(arr.tobytes())], pa.binary()),
-                    pa.array([rows[s]], pa.int64()),
-                ],
-                ["shard_id", "state", "n_rows"],
-            )
-
-    states = (
-        tuples.repartition(p.n_shards, "shard_id")
-        .mapInArrow(build_shards, _STATE_SCHEMA)
-    )
-    if persist:
-        states = states.persist()
-    return ShardedBloom(p, states)
-
-
-class GroupedShardedBloom:
-    """Per-GROUP bucket-range-sharded poppy v2 filters: one logical filter
-    per group value, each physically split into bucket-range shards, all
-    held as rows of one ``(group, shard_id, state, n_rows)`` DataFrame.
-
-    This closes the shape ``build_sketch_grouped``'s memory guard points
-    at: a grouped build whose per-group filter is too big for
-    groups-seen x state-bytes per task.  Here the build shuffles ~(12+2k)-
-    byte index tuples keyed by (group, shard) and folds them one (group,
-    shard) at a time (``agg.fold_groups``), so task memory is a single
-    shard plus one Arrow batch regardless of group count or filter size;
-    the probe is the flat filter's shuffle probe keyed by (group, shard),
-    so each shard state crosses the wire once.
-
-    All groups share one sizing (``capacity`` / ``fpp`` per group) — the
-    params ARE the merge-compatibility contract, exactly like
-    ``has_same_params`` gates poppy unions (``poppy/src/bloom.rs``).
-    """
-
-    def __init__(self, params: _Params, group_col: str, states: DataFrame):
-        self.params = params
-        self.group_col = group_col
-        self.states = states
-
-    def contains(
-        self,
-        df: DataFrame,
-        col: str,
-        output_col: str = "hit",
-        int_keys: str = "string",
-    ) -> DataFrame:
-        """Append ``output_col``: is ``col`` a member of ITS OWN row's
-        group filter?  Groups never built probe all-False (nothing was
-        inserted).  The flat filter's shuffle probe (:func:`_shard_probe`)
-        with the group column added to the cogroup key."""
-        return _shard_probe(
-            df, col, [self.group_col], self.states, self.params, output_col, int_keys
-        )
-
-    def semi_join(self, df: DataFrame, col: str) -> DataFrame:
-        return self.contains(df, col, "__hit__").filter(F.col("__hit__")).drop("__hit__")
-
-    def _fold(self, other: "GroupedShardedBloom", op: str, schema, finish=_shard_row):
-        """Per-(group, shard) two-sided fold of both filters' state rows."""
-        if self.params != other.params or self.group_col != other.group_col:
-            raise MergeError(
-                f"cannot combine grouped sharded blooms ({op}) with different "
-                "parameters or group columns"
-            )
-        keys = [self.group_col, "shard_id"]
-        return _fold_shards(self.states, other.states, keys, op, schema, finish)
-
-    def _gfield(self) -> T.StructField:
-        return self.states.schema[self.group_col]
-
-    def union(self, other: "GroupedShardedBloom") -> "GroupedShardedBloom":
-        """Per-(group, shard) bitwise OR — poppy ``union_merge`` semantics
-        applied independently to every group's filter; groups present on
-        one side only pass through unchanged (OR with all-zero).  Same
-        two-sided fold as ``ShardedBloom._merge``, keyed by (group,
-        shard)."""
-        merged = self._fold(other, "or", _grouped_state_schema(self._gfield()))
-        return GroupedShardedBloom(self.params, self.group_col, merged)
-
-    def intersection(self, other: "GroupedShardedBloom") -> "GroupedShardedBloom":
-        """Per-(group, shard) bitwise AND — poppy ``intersection_merge``
-        (``v2.rs:628-646``) applied independently to every group's filter.
-        A (group, shard) present on one side only ANDs with the implicit
-        all-zero shard and is dropped; a GROUP present on one side only
-        therefore vanishes entirely — its intersection is the empty
-        filter, which probes all-False exactly like a never-built group.
-        ``n_rows`` is reset to 0 (insert counts do not survive an AND;
-        poppy re-estimates — ``reassemble_group``'s ``update_count`` and
-        ``count_estimates`` both recompute from the bits)."""
-        merged = self._fold(
-            other, "and", _grouped_state_schema(self._gfield()),
-            lambda key, bits, n_rows: _shard_row(key, bits, 0),
-        )
-        return GroupedShardedBloom(self.params, self.group_col, merged)
-
-    def count_common(self, other: "GroupedShardedBloom") -> DataFrame:
-        """Per-group common-entry estimates ``(group, estimate)`` — poppy
-        ``count_common_entries`` (``bloom.rs:343-356``): the count-estimate
-        formula on popcount(AND), decomposed per (group, shard) and summed
-        per group.  Equals ``BloomV2.count_common_entries`` on each group's
-        two reassembled filters (empty buckets estimate 0, so shards or
-        groups touched on one side only contribute nothing; groups with no
-        commonly-touched shard are omitted — their estimate is 0).  One
-        AND+popcount fold, states cross the wire once; no intersection
-        filter is materialized."""
-        import decimal
-
-        from poppy_spark.core.statekern import _sum_bucket_estimates, v2_bucket_ones
-
-        n_hash = self.params.n_hash_buck
-
-        def common(key, bits, n_rows):
-            ones = v2_bucket_ones(bits, bits.size // BUCKET_SIZE)
-            return (key[0], decimal.Decimal(_sum_bucket_estimates(ones, n_hash)))
-
-        schema = T.StructType([self._gfield(), T.StructField("partial", T.DecimalType(38, 0))])
-        partials = self._fold(other, "and", schema, common)
-        return partials.groupBy(self.group_col).agg(
-            F.sum("partial").cast("long").alias("estimate")
-        )
-
-    def count_estimates(self) -> DataFrame:
-        """Per-group cardinality estimates ``(group, estimate)``: the same
-        per-bucket truncated sum as ``ShardedBloom.count_estimate``
-        (``v2.rs:575-588``), decomposed per (group, shard) and summed per
-        group — equal to ``BloomV2.update_count()`` on each group's
-        reassembled filter.  Stays distributed: one pandas UDF over state
-        rows + one grouped sum."""
-        from poppy_spark.core.statekern import _sum_bucket_estimates, v2_bucket_ones
-        from poppy_spark.spark.agg import decompress_blob
-
-        n_hash = self.params.n_hash_buck
-
-        @F.pandas_udf("decimal(38,0)")
-        def shard_est(states: pd.Series) -> pd.Series:
-            import decimal
-
-            out = []
-            for raw in states:
-                buckets = np.frombuffer(decompress_blob(raw), dtype=np.uint8)
-                nb = buckets.size // BUCKET_SIZE
-                out.append(
-                    decimal.Decimal(
-                        _sum_bucket_estimates(v2_bucket_ones(buckets, nb), n_hash)
-                    )
-                )
-            return pd.Series(out)
-
-        return self.states.groupBy(self.group_col).agg(
-            F.sum(shard_est(F.col("state"))).cast("long").alias("estimate")
-        )
-
-    def save(self, directory: str) -> None:
-        """Persist as parquet state rows (partitioned by the group column,
-        so single-group reads prune at the scan) + a JSON params sidecar
-        carrying the group column name — same layout family as
-        ``ShardedBloom.save``."""
-        self.states.write.mode("overwrite").partitionBy(self.group_col).parquet(
-            os.path.join(directory, "shards")
-        )
-        meta = {
-            "capacity": self.params.capacity,
-            "fpp": self.params.fpp,
-            "n_buckets": self.params.n_buckets,
-            "n_hash_buck": self.params.n_hash_buck,
-            "n_shards": self.params.n_shards,
-            "bps": self.params.bps,
-            "group_col": self.group_col,
-            # partition-column values round-trip through directory names;
-            # record the true dataType so load() can undo Spark's partition
-            # type inference (string groups that look numeric come back int
-            # otherwise, breaking union/probe against freshly built states)
-            "group_type": self.states.schema[self.group_col].dataType.json(),
-        }
-        spark = self.states.sparkSession
-        spark.createDataFrame([(json.dumps(meta),)], "meta string").coalesce(
-            1
-        ).write.mode("overwrite").json(os.path.join(directory, "meta"))
-
-    @classmethod
-    def load(cls, spark: SparkSession, directory: str) -> "GroupedShardedBloom":
-        meta_raw = spark.read.json(os.path.join(directory, "meta")).collect()[0]["meta"]
-        m = json.loads(meta_raw)
-        p = _Params(
-            m["capacity"], m["fpp"], m["n_buckets"], m["n_hash_buck"],
-            m["n_shards"], m["bps"],
-        )
-        # read the partition column as string (inference off), then cast to
-        # the saved dataType: "0123"-style string groups keep their exact
-        # bytes and numeric groups come back with their original type, so
-        # loaded filters union/probe against freshly built states unchanged
-        conf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        prev = spark.conf.get(conf_key, "true")
-        spark.conf.set(conf_key, "false")
-        try:
-            states = spark.read.parquet(os.path.join(directory, "shards"))
-        finally:
-            spark.conf.set(conf_key, prev)
-        if "group_type" in m and m["group_type"]:
-            from pyspark.sql.types import _parse_datatype_json_string
-
-            gt = _parse_datatype_json_string(m["group_type"])
-            states = states.withColumn(
-                m["group_col"], F.col(m["group_col"]).cast(gt)
-            )
-        return cls(p, m["group_col"], states)
-
-    def reassemble_group(self, group_value) -> bytes:
-        """One group's shards OR'd into a complete poppy v2 file (bytes).
-        Collect-based: intended for tests/export of a single group."""
-        from poppy_spark.core.v2 import BloomV2
-        from poppy_spark.spark.agg import decompress_blob
-
-        p = self.params
-        rows = self.states.filter(F.col(self.group_col) == group_value).collect()
-        buckets = np.zeros(p.n_buckets * BUCKET_SIZE, dtype=np.uint8)
-        for r in rows:
-            lo = int(r["shard_id"]) * p.bps * BUCKET_SIZE
-            v = np.frombuffer(decompress_blob(bytes(r["state"])), dtype=np.uint8)
-            buckets[lo : lo + v.size] = v
-        filt = BloomV2(p.capacity, p.fpp, p.n_hash_buck, p.n_buckets, 0, 0, buckets)
-        filt.update_count()
-        return filt.dumps()
+    p = _Params.make(capacity, fpp, n_shards, target_shard_bytes)
+    return _build(df, col, None, p, persist, int_keys)
 
 
 def build_sharded_bloom_grouped(
@@ -1000,65 +909,11 @@ def build_sharded_bloom_grouped(
     target_shard_bytes: int = 64 << 20,
     persist: bool = True,
     int_keys: str = "string",
-) -> GroupedShardedBloom:
+) -> ShardedBloom:
     """Distributed build of one bucket-range-sharded v2 filter PER GROUP,
-    sized ``capacity``/``fpp`` each.  Shuffle carries index tuples keyed
-    by (group, shard); the fold ORs one (group, shard) at a time into one
-    shard's buckets, so task memory = one shard's bytes regardless of group
-    count."""
-    from poppy_spark.spark.agg import _as_key, fold_groups
-
-    total_buckets = math.ceil(capacity / cap_from_bit_size(BUCKET_BITS, fpp))
-    if n_shards is None:
-        n_shards = max(1, math.ceil(total_buckets * BUCKET_SIZE / target_shard_bytes))
-    p = _Params.make(capacity, fpp, n_shards)
-    int_mode = _INT_MODE[int_keys]
-
-    gfield = df.schema[group_col]
-    keyed = _spread_low_split(
-        df.select(F.col(group_col), _as_key(df, col, int_keys).alias("__key"))
-    )
-
-    def index_fn(batches):
-        for b in batches:
-            shard, ib, idx, _ = _route_batch(b.column(1), p, dedup=False, int_mode=int_mode)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0), pa.array(shard), pa.array(ib), _idx_to_binary(idx)],
-                [group_col, "shard_id", "ib", "idx"],
-            )
-
-    route_schema = T.StructType(
-        [
-            gfield,
-            T.StructField("shard_id", T.IntegerType()),
-            T.StructField("ib", T.LongType()),
-            T.StructField("idx", T.BinaryType()),
-        ]
-    )
-    tuples = keyed.mapInArrow(index_fn, route_schema)
-    k, bps = p.n_hash_buck, p.bps
-
-    def start(key: tuple) -> list:
-        shard = key[1]
-        return [np.zeros(p.shard_buckets(shard) * BUCKET_SIZE, dtype=np.uint8), 0, shard * bps]
-
-    def add(acc: list, view: tuple, lo: int, hi: int) -> None:
-        ib, idx = view
-        _or_bits_into(acc[0], ib[lo:hi] - acc[2], idx[lo:hi])
-        acc[1] += hi - lo
-
-    def prepare(b: pa.RecordBatch) -> tuple:
-        return b.column("ib").to_numpy(zero_copy_only=False), _binary_to_idx(b.column("idx"), k)
-
-    states = fold_groups(
-        tuples,
-        [group_col, "shard_id"],
-        _grouped_state_schema(gfield),
-        start,
-        add,
-        lambda key, acc: _shard_row(key, acc[0], acc[1]),
-        prepare,
-    )
-    if persist:
-        states = states.persist()
-    return GroupedShardedBloom(p, group_col, states)
+    sized ``capacity``/``fpp`` each: the flat build with ``group_col``
+    added to the shard key.  This closes the shape
+    ``build_sketch_grouped``'s memory guard points at — per-group filters
+    too big for groups-seen x state-bytes per task."""
+    p = _Params.make(capacity, fpp, n_shards, target_shard_bytes)
+    return _build(df, col, group_col, p, persist, int_keys)

@@ -218,3 +218,25 @@ class TestOneShapeGuard:
             for _ in re.finditer(r"\b_INT_MODE\s*=[^=]", p.read_text())
         ]
         assert defs == ["base.py"], defs
+
+    def test_one_sharded_bloom_type(self):
+        """Flat and per-group sharded filters are one type: one filter
+        class (beside the stream sink), one build (the index-phase
+        ``mapInArrow``), one sizing, one shard-estimate UDF."""
+        src = (SPARK_DIR / "sharded.py").read_text()
+        tree = ast.parse(src)
+        public = [
+            n.name for n in ast.walk(tree)
+            if isinstance(n, ast.ClassDef) and not n.name.startswith("_")
+        ]
+        assert public == ["ShardedBloom", "ShardedBloomStream"]
+        sites = [s for s in _call_sites("mapInArrow") if s.startswith("sharded.py:")]
+        assert sites == ["sharded.py:_build"]
+        sizing = re.compile(r"/\s*target_shard_bytes")
+        make = next(
+            n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef) and n.name == "make"
+        )
+        assert len(sizing.findall(src)) == 1
+        assert sizing.search(ast.get_source_segment(src, make))
+        assert src.count("pandas_udf(") == 1
+        assert src.count("_sum_bucket_estimates(") == 1

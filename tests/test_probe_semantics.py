@@ -1,6 +1,6 @@
 """Planted semantics every membership probe name shares: the flat sharded
 filter probed by broadcast and by shuffle, and the three per-group probes
-(``GroupedShardedBloom.contains``, ``bloom_contains_grouped_join``,
+(grouped ``ShardedBloom.contains``, ``bloom_contains_grouped_join``,
 ``bloom_contains_grouped``).
 
 * a NULL key hits exactly where the empty-string key hits (``pack_arrow``

@@ -160,7 +160,7 @@ class TestGroupedShardedPartitionTypes:
         look numeric into ints on load (ADVICE r4): loaded filters must
         union/probe against freshly built states."""
         from poppy_spark.spark.sharded import (
-            GroupedShardedBloom,
+            ShardedBloom,
             build_sharded_bloom_grouped,
         )
 
@@ -171,7 +171,7 @@ class TestGroupedShardedPartitionTypes:
         )
         d = str(tmp_path / "gsb_types")
         gsb.save(d)
-        back = GroupedShardedBloom.load(spark, d)
+        back = ShardedBloom.load(spark, d)
         assert back.states.schema["grp"].dataType.simpleString() == "string"
         got = {r["grp"] for r in back.states.select("grp").distinct().collect()}
         assert got == {"0123", "77", "west"}  # leading zero preserved
@@ -184,7 +184,7 @@ class TestGroupedShardedPartitionTypes:
 
     def test_long_groups_restore_type(self, spark, tmp_path):
         from poppy_spark.spark.sharded import (
-            GroupedShardedBloom,
+            ShardedBloom,
             build_sharded_bloom_grouped,
         )
 
@@ -195,7 +195,7 @@ class TestGroupedShardedPartitionTypes:
         )
         d = str(tmp_path / "gsb_long")
         gsb.save(d)
-        back = GroupedShardedBloom.load(spark, d)
+        back = ShardedBloom.load(spark, d)
         assert back.states.schema["grp"].dataType.simpleString() == "bigint"
         probed = back.contains(df.select("grp", "key"), "key")
         assert probed.filter(~F.col("hit")).count() == 0

@@ -5,7 +5,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from poppy_spark.spark.sharded import ShardedBloom, build_sharded_bloom
+from poppy_spark.spark.sharded import (
+    ShardedBloom,
+    build_sharded_bloom,
+    build_sharded_bloom_grouped,
+)
 
 
 @pytest.fixture(scope="module")
@@ -116,6 +120,33 @@ class TestShardedPartitionInvariance:
         assert blobs[0] == blobs[1] == blobs[2]
 
 
+#: the sidecar keys of a flat save directory; a grouped one adds the group
+#: column and its type
+FLAT_META = {"capacity", "fpp", "n_buckets", "n_hash_buck", "n_shards", "bps"}
+
+
+def _meta(spark, d):
+    import json
+    import os
+
+    return json.loads(spark.read.json(os.path.join(d, "meta")).collect()[0]["meta"])
+
+
+def _write_layout(spark, sb, d, meta):
+    """A save directory written field by field: state parquet (partitioned
+    by the group column when there is one) plus the JSON sidecar."""
+    import json
+    import os
+
+    w = sb.states.write.mode("overwrite")
+    if sb.group_col:
+        w = w.partitionBy(sb.group_col)
+    w.parquet(os.path.join(d, "shards"))
+    spark.createDataFrame([(json.dumps(meta),)], "meta string").coalesce(1).write.mode(
+        "overwrite"
+    ).json(os.path.join(d, "meta"))
+
+
 class TestShardedPersistence:
     def test_save_load_roundtrip(self, spark, keys_df, sharded, tmp_path):
         d = str(tmp_path / "shardedbloom")
@@ -124,6 +155,39 @@ class TestShardedPersistence:
         assert loaded.params == sharded.params
         assert loaded.to_poppy_bytes() == sharded.to_poppy_bytes()
         assert loaded.contains(keys_df, "k", "hit").filter("NOT hit").count() == 0
+        # a directory in the flat layout (params-only sidecar) loads as flat
+        assert _meta(spark, d).keys() == FLAT_META
+        assert loaded.group_col is None
+
+    def test_load_both_meta_layouts(self, spark, keys_df, sharded, tmp_path):
+        """Directories with a flat sidecar (params only) and a grouped one
+        (plus ``group_col``/``group_type``) load as the kind they describe."""
+        p = sharded.params
+        meta = {
+            "capacity": p.capacity, "fpp": p.fpp, "n_buckets": p.n_buckets,
+            "n_hash_buck": p.n_hash_buck, "n_shards": p.n_shards, "bps": p.bps,
+        }
+        d = str(tmp_path / "flat_layout")
+        _write_layout(spark, sharded, d, meta)
+        flat = ShardedBloom.load(spark, d)
+        assert flat.group_col is None and flat.params == p
+        assert flat.to_poppy_bytes() == sharded.to_poppy_bytes()
+
+        ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+        gsb = build_sharded_bloom_grouped(
+            ev, "user_id", "event_type", capacity=5_000, fpp=0.001, n_shards=4
+        )
+        gp = gsb.params
+        d = str(tmp_path / "grouped_layout")
+        _write_layout(spark, gsb, d, {
+            "capacity": gp.capacity, "fpp": gp.fpp, "n_buckets": gp.n_buckets,
+            "n_hash_buck": gp.n_hash_buck, "n_shards": gp.n_shards, "bps": gp.bps,
+            "group_col": "event_type", "group_type": '"string"',
+        })
+        grouped = ShardedBloom.load(spark, d)
+        assert grouped.group_col == "event_type" and grouped.params == gp
+        for gval in ["click", "view"]:
+            assert grouped.reassemble_group(gval) == gsb.reassemble_group(gval)
 
     def test_reassembly_budget_guard(self, sharded):
         with pytest.raises(MemoryError):
@@ -272,6 +336,24 @@ class TestShardedStream:
         assert spark.read.parquet(os.path.join(d, "shards")).count() <= 3
         assert before == sink.current(spark).to_poppy_bytes()
 
+    def test_reopen_needs_same_params(self, spark, tmp_path):
+        """A sink reopened on its directory must carry the sizing the
+        directory was made with: deltas of two sizings cannot OR together,
+        so a mismatch raises before any append; a restart with the same
+        arguments appends on."""
+        from poppy_spark.core.params import MergeError
+        from poppy_spark.spark.sharded import ShardedBloomStream
+
+        d = str(tmp_path / "reopen")
+        full = spark.range(0, 9000).select(F.format_string("ro-%06d", "id").alias("value"))
+        ShardedBloomStream(d, capacity=9000, fpp=0.001, n_shards=3)(full.filter("id % 2 = 0"), 0)
+        for kw in (dict(capacity=9000, n_shards=4), dict(capacity=20000, n_shards=3)):
+            with pytest.raises(MergeError):
+                ShardedBloomStream(d, fpp=0.001, **kw)
+        sink = ShardedBloomStream(d, capacity=9000, fpp=0.001, n_shards=3)
+        sink(full.filter("id % 2 = 1"), 1)
+        assert sink.current(spark).contains(full, "value", "hit").filter("NOT hit").count() == 0
+
     def test_real_stream_foreachbatch(self, spark, tmp_path):
         from pyspark.sql import functions as F
 
@@ -316,6 +398,17 @@ class TestShardedInfo:
         out = capsys.readouterr().out
         assert "n_shards: 7" in out and "capacity: 30000" in out
 
+        ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+        gsb = build_sharded_bloom_grouped(
+            ev, "user_id", "event_type", capacity=5_000, fpp=0.001, n_shards=4
+        )
+        d = str(tmp_path / "showme_grouped")
+        gsb.save(d)
+        assert main(["show", d]) == 0
+        out = capsys.readouterr().out
+        assert "n_shards: 3" in out and "capacity: 5000" in out
+        assert "group_col: event_type" in out
+
 
 class TestProbeStrategyAuto:
     """Round-3: contains() picks broadcast when the filter fits the budget
@@ -352,6 +445,8 @@ class TestProbeStrategyAuto:
                 keys_df, "k", "hit", strategy="broadcast",
                 broadcast_budget=small_budget,
             )
+        with pytest.raises(ValueError, match="unknown strategy"):
+            sharded.contains(keys_df, "k", "hit", strategy="brodcast")
 
     def test_broadcast_cache_reused(self, spark, keys_df, sharded):
         sharded._poppy_cache = None
@@ -377,6 +472,12 @@ class TestGroupedSharded:
         # a group never built answers all-False
         ghost = ev.select(F.lit("no-such-type").alias("event_type"), "user_id")
         assert gsb.contains(ghost, "user_id").filter("hit").count() == 0
+        # "auto" is the shuffle probe; a grouped filter has no broadcast one
+        auto = gsb.contains(ev.select("event_type", "user_id"), "user_id", strategy="auto")
+        assert auto.filter(~F.col("hit")).count() == 0
+        for bad in ("broadcast", "brodcast"):
+            with pytest.raises(ValueError):
+                gsb.contains(ev.select("event_type", "user_id"), "user_id", strategy=bad)
 
     def test_group_reassembly_byte_equals_classic_build(self, spark):
         from pyspark.sql import functions as F
@@ -414,13 +515,15 @@ class TestGroupedSharded:
         )
         from poppy_spark.spark.agg import decompress_blob
 
-        p = gsb.params
-        for r in gsb.states.collect():
-            nb = min(p.bps, p.n_buckets - r["shard_id"] * p.bps)
-            # every persisted state is exactly one shard's bucket range
-            from poppy_spark.core.statekern import BUCKET_SIZE
+        flat = build_sharded_bloom(ev, "user_id", capacity=5_000, fpp=0.001, n_shards=4)
+        for sb in (gsb, flat):
+            p = sb.params
+            for r in sb.states.collect():
+                nb = min(p.bps, p.n_buckets - r["shard_id"] * p.bps)
+                # every persisted state is exactly one shard's bucket range
+                from poppy_spark.core.statekern import BUCKET_SIZE
 
-            assert len(decompress_blob(bytes(r["state"]))) == nb * BUCKET_SIZE
+                assert len(decompress_blob(bytes(r["state"]))) == nb * BUCKET_SIZE
 
     def test_grouped_union_matches_combined_build(self, spark):
         from pyspark.sql import functions as F
@@ -549,7 +652,7 @@ class TestGroupedSharded:
         from pyspark.sql import functions as F
 
         from poppy_spark.spark.sharded import (
-            GroupedShardedBloom,
+            ShardedBloom,
             build_sharded_bloom_grouped,
         )
 
@@ -559,9 +662,10 @@ class TestGroupedSharded:
         )
         d = str(tmp_path / "gsb")
         gsb.save(d)
-        back = GroupedShardedBloom.load(spark, d)
+        back = ShardedBloom.load(spark, d)
         assert back.params == gsb.params
         assert back.group_col == "event_type"
+        assert _meta(spark, d).keys() == FLAT_META | {"group_col", "group_type"}
         for gval in ["click", "view"]:
             assert back.reassemble_group(gval) == gsb.reassemble_group(gval)
         probed = back.contains(ev.select("event_type", "user_id"), "user_id")
