@@ -194,7 +194,7 @@ def main() -> None:
             .agg(F.sum(F.col("hit").cast("long")))
             .collect(),
         )
-        sb.states.unpersist()
+        sb.unpersist()
 
     if "media_codecs" in wanted:
         from poppy_spark.spark.multimodal import encode_bmp, extract_media_features

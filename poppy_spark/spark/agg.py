@@ -21,7 +21,8 @@ therefore cost one state per partition, not one shuffle partition of rows.
 
 :func:`fold_groups` is the one shape of every grouped state merge in the
 package (this module, ``sharded``, ``profile``, ``streaming``); its run
-finder also drives the grouped-join probe in ``probe``.
+finder also drives :func:`probe_runs`, the one shuffle probe (the sharded
+filters' and ``probe``'s grouped join).
 """
 
 from __future__ import annotations
@@ -303,6 +304,103 @@ class _StateMerge:
     def final_state(self) -> bytes:
         self.sk.finalize_merge()
         return self.sk.dumps()
+
+
+def probe_runs(
+    rows: DataFrame,
+    states: DataFrame,
+    keys: Sequence[str],
+    route: Sequence[str],
+    out_cols: Sequence[str],
+    output_col: str,
+    add: Callable[[Any, bytes], Any],
+    prepare: Callable[[list], Any],
+    test: Callable[[Any, Any, int, int], np.ndarray],
+) -> DataFrame:
+    """The ``out_cols`` of ``rows`` plus ``output_col``: does the filter of
+    a row's run key ``keys`` hold it?  The one shape of every shuffle
+    probe (the sharded filters' and the grouped join's).
+
+    ``rows`` carries ``keys``, the ``route`` columns the filter tests and
+    ``out_cols``; ``states`` carries ``keys`` and ``state``.  State rows
+    (tag 0) union with the probe rows (tag 1), ``repartition(*keys)``
+    (never ``rebalance``: AQE may split a rebalanced partition and so a
+    run) and ``sortWithinPartitions(*keys, tag)``, so each run's state
+    rows precede its probe rows.  One iterator Arrow UDF then walks the
+    runs; it sees only the keys, the tag, the state and the routing, and
+    returns one boolean per row: the payload columns stay in the JVM,
+    which zips the hit back on.  The UDF is stateful, so it is marked
+    nondeterministic: Catalyst must not push the ``tag == 1`` filter below
+    it.  Columns the caller drops are pruned before the exchange.
+
+    Per run: ``acc = add(acc, state)`` for each of its state rows, from
+    ``acc = None`` (several state rows fold together); per batch, ``view =
+    prepare(route arrays of its probe rows)``; then ``test(acc, view, lo,
+    hi)`` answers probe rows ``[lo, hi)`` of the view.  A run with no
+    state probes all-False.  Task memory is one ``acc`` plus one Arrow
+    batch, and state rows ride in the batches too: Spark cuts a batch at
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows or at
+    ``spark.sql.execution.arrow.maxBytesPerBatch`` bytes (64 MB by
+    default), whichever comes first, so a batch holds at most that many
+    bytes plus one state row.  When runs far outnumber the shuffle
+    partitions and few probe rows arrive, batches are mostly state rows
+    and fill to that byte cap; every state row reaches Python, met by a
+    probe row or not.
+    NULL equals NULL and NaN equals NaN in the run key, as Spark groups
+    them."""
+    from pyspark.sql.functions import arrow_udf
+
+    keys, route = list(keys), list(route)
+    n_keys = len(keys)
+    names = [*keys, "__tag", "__state", *route]
+    probe = rows.select(
+        *keys,
+        F.lit(1).alias("__tag"),
+        *route,
+        *[c for c in out_cols if c not in keys and c not in route],
+    )
+    tagged = states.select(*keys, F.lit(0).alias("__tag"), F.col("state").alias("__state"))
+    runs = (
+        probe.unionByName(tagged, allowMissingColumns=True)
+        .repartition(*keys)
+        .sortWithinPartitions(*keys, "__tag")
+    )
+
+    def walk(batches: Iterator[tuple[pa.Array, ...]]) -> Iterator[pa.Array]:
+        acc = None
+        as_batches = (pa.RecordBatch.from_arrays(list(cols), names) for cols in batches)
+        for b, bounds, cont in _key_runs(as_batches, n_keys):
+            n = b.num_rows
+            probe_pos = np.flatnonzero(b.column(n_keys).to_numpy(zero_copy_only=False))
+            pb = np.searchsorted(probe_pos, bounds)
+            n_state = np.diff(bounds) - np.diff(pb)  # state rows lead each run
+            state = b.column(n_keys + 1)
+            hit = np.zeros(probe_pos.size, dtype=bool)
+            view = None
+            if probe_pos.size:
+                cols = b.columns[n_keys + 2 :]
+                if probe_pos.size < n:
+                    cols = [c.take(probe_pos) for c in cols]
+                view = prepare(cols)
+            for j in range(len(bounds) - 1):
+                if j or not cont:
+                    acc = None
+                lo = int(bounds[j])
+                for i in range(lo, lo + int(n_state[j])):
+                    acc = add(acc, state[i].as_py())
+                if acc is not None and pb[j] < pb[j + 1]:
+                    hit[pb[j] : pb[j + 1]] = test(acc, view, int(pb[j]), int(pb[j + 1]))
+            out = np.zeros(n, dtype=bool)
+            out[probe_pos] = hit
+            yield pa.array(out)
+
+    walker = arrow_udf(walk, "boolean").asNondeterministic()
+    kept = [F.col(c).cast(rows.schema[c].dataType) if c in keys else F.col(c) for c in out_cols]
+    return (
+        runs.withColumn("__hit", walker(*names))
+        .filter(F.col("__tag") == 1)
+        .select(*kept, F.col("__hit").alias(output_col))
+    )
 
 
 #: Spark types whose values feed hash-based sketches as utf-8 strings.  Keys

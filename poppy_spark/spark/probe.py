@@ -217,97 +217,55 @@ def bloom_contains_grouped_join(
     """Per-group membership for HIGH-cardinality groups (e.g. ``conv_id``):
     a single group-keyed shuffle instead of a broadcast dict.
 
-    States and probe rows union into one stream tagged ``state-first``,
-    shuffle ONCE on the group key, and sort within partitions so each
-    group's state row immediately precedes its probe rows; one
-    ``mapInArrow`` pass then probes segment-by-segment — thousands of
-    groups per Python invocation.  This replaces the round-5 shape
+    The sorted run walker (``agg.probe_runs``) keyed on the group: states
+    and probe rows shuffle ONCE on the group key and sort so each group's
+    state rows precede its probe rows; one iterator Arrow UDF then probes
+    run by run — thousands of groups per Python invocation, each batch
+    packed and routed once.  Python sees only the group, the key and the
+    states and returns one bit per row: the payload columns stay in the
+    JVM, so there is no row id, no materialization and no join-back, and
+    each group's filter crosses the wire exactly once (several state rows
+    of one group OR together).  This replaces the round-5 shape
     (``cogroup().applyInPandas`` = one Python call PER GROUP — the
     per-row-Python anti-pattern at group granularity, 599 s at sf1 — plus
     a full-input ``localCheckpoint`` pinning a ``monotonically_increasing_
-    id`` for the join-back).  Rows ride the shuffle as columns and come
-    back with ``output_col`` appended (as in the sharded filters' shuffle
-    probe), so there is no row id, no materialization, and no join-back;
-    each group's filter crosses the wire exactly once.  Rows
-    whose group has no state probe False.  Output = ``df`` columns +
-    ``output_col``.
+    id`` for the join-back).  Rows whose group has no state probe False.
+    Output = ``df`` columns + ``output_col``.
     """
-    import pyspark.sql.types as T
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from poppy_spark.spark.agg import _as_key
+    from poppy_spark.spark.agg import _TEXTUAL, _as_key, probe_runs
 
     gname = states_df.columns[0] if group_col not in states_df.columns else group_col
-    in_cols = list(df.columns)
-    key_expr = _as_key(df, col)
-    ktype = df.select(key_expr.alias("__k")).schema[0].dataType
-    probe_side = df.select(
-        F.col(group_col).alias("__pgj_g"),
-        F.lit(1).cast("int").alias("__pgj_tag"),
-        key_expr.alias("__pgj_key"),
-        F.lit(None).cast("binary").alias("__pgj_state"),
-        *[F.col(c) for c in in_cols],
-    )
-    state_side = states_df.select(
-        F.col(gname).alias("__pgj_g"),
-        F.lit(0).cast("int").alias("__pgj_tag"),
-        F.lit(None).cast(ktype).alias("__pgj_key"),
-        F.col("state").alias("__pgj_state"),
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in df.schema.fields],
-    )
-    u = (
-        probe_side.unionByName(state_side)
-        .repartition(F.col("__pgj_g"))
-        .sortWithinPartitions("__pgj_g", "__pgj_tag")
-    )
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(output_col, T.BooleanType())]
-    )
-    arrow_out = to_arrow_schema(out_schema)
-    n_meta = 4
+    # a string/binary key is its own routing column, so it crosses the
+    # shuffle once; any other key routes on its canonical string copy
+    textual = col in df.columns and df.schema[col].dataType.simpleString() in _TEXTUAL
+    kcol = col if textual and col != group_col else "__key"
+    rows = df if kcol == col else df.select("*", _as_key(df, col).alias("__key"))
+    states = states_df.select(F.col(gname).alias(group_col), "state")
 
-    def probe_fn(batches):
+    def add(f: BloomFilter | None, state: bytes) -> BloomFilter:
         from poppy_spark.core import loads
+
+        g = loads(bytes(state))
+        if f is not None:
+            g.union_merge(f)
+        return g
+
+    def prepare(route: list) -> list:
         from poppy_spark.core.hashkern import pack_arrow
-        from poppy_spark.spark.agg import _key_runs
 
-        cur_f = None
-        for b, bounds, cont in _key_runs(batches, 1):
-            tags = b.column(1).to_numpy(zero_copy_only=False)
-            states_col = b.column(3)
-            probe_pos = np.flatnonzero(tags == 1)
-            hit = np.zeros(probe_pos.size, dtype=bool)
-            route = None  # (template_filter, ibucket, idx, bucket_hash)
-            if probe_pos.size:
-                mat, lens = pack_arrow(b.column(2).take(pa.array(probe_pos)))
-            # per group run: its state rows (tag 0) sort before its probe
-            # rows, which are probe_pos[pb[j]:pb[j + 1]]
-            n_state = np.add.reduceat((tags == 0).astype(np.int64), bounds[:-1])
-            pb = np.searchsorted(probe_pos, bounds)
-            for j in range(len(bounds) - 1):
-                if j or not cont:
-                    cur_f = None
-                if n_state[j] and cur_f is None:  # first state row wins
-                    cur_f = loads(bytes(states_col[int(bounds[j])].as_py()))
-                if cur_f is None or pb[j] == pb[j + 1]:
-                    continue
-                sel = slice(pb[j], pb[j + 1])
-                # route the batch ONCE (same-params filters share hashing)
-                # and test each group's slice against its own filter: ~7x
-                # cheaper than a full pack+hash+test per segment
-                if route is None and getattr(cur_f, "version", None) == 2:
-                    route = (cur_f, *cur_f.route_packed(mat, lens))
-                if route is not None and route[0].has_same_params(cur_f):
-                    hit[sel] = cur_f.contains_routed(
-                        route[1][sel], route[2][sel], route[3][sel]
-                    )
-                else:
-                    hit[sel] = cur_f.contains_packed(mat[sel], lens[sel])
-            if probe_pos.size:
-                take = pa.array(probe_pos)
-                cols = [b.column(n_meta + i).take(take) for i in range(len(in_cols))]
-                cols.append(pa.array(hit))
-                yield pa.RecordBatch.from_arrays(cols, schema=arrow_out)
+        return [*pack_arrow(route[0]), None]  # mat, lens, lazy routing
 
-    return u.mapInArrow(probe_fn, out_schema)
+    def test(f: BloomFilter, view: list, lo: int, hi: int) -> np.ndarray:
+        mat, lens, routed = view
+        # route the batch ONCE (same-params filters share hashing) and
+        # test each group's slice against its own filter: ~7x cheaper than
+        # a full pack+hash+test per group
+        if routed is None and getattr(f, "version", None) == 2:
+            routed = view[2] = (f, *f.route_packed(mat, lens))
+        if routed is not None and routed[0].has_same_params(f):
+            return f.contains_routed(routed[1][lo:hi], routed[2][lo:hi], routed[3][lo:hi])
+        return f.contains_packed(mat[lo:hi], lens[lo:hi])
+
+    return probe_runs(
+        rows, states, [group_col], [kcol], df.columns, output_col, add, prepare, test
+    )

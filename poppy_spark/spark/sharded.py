@@ -24,12 +24,14 @@ Shapes (and why they scale):
   partition's data (the 10^12 regime), shipping index tuples beats
   shipping partial filter states by orders of magnitude.
 * **probe** — broadcast the reassembled flat filter when it fits, else ONE
-  shuffle probe (:func:`_shard_probe`):
-  a key-only Arrow UDF routes each row to its shard, then a cogrouped
-  ``applyInArrow`` on ``(group?, shard_id)`` sees (its rows, its ONE shard
-  state) and appends the hit — every shard state crosses the shuffle
-  exactly once, a probe row never drags a copy of the state along (a plain
-  join would), and there is no row id or join-back.
+  shuffle probe (:func:`_shard_probe`): a key-only Arrow UDF routes each
+  row to its shard, then the sorted run walker ``agg.probe_runs`` on
+  ``(group?, shard_id)`` meets each shard state (its duplicate rows OR'd)
+  with that shard's probe rows.  Python sees only the run key, the state
+  and the routing and returns one bit per row; the payload columns stay
+  in the JVM.  Every shard state crosses the shuffle exactly once, a probe
+  row never drags a copy of the state along (a plain join would), and
+  there is no row id or join-back.
 * **algebra** — union/intersection are per-shard byte OR/AND: both sides'
   shard rows, tagged by side, fold per ``(group?, shard_id)``
   (``agg.fold_groups``, no join); the count estimate is poppy's
@@ -199,31 +201,20 @@ def _shard_probe(
     for a flat filter)?  ``states`` holds ``(*groups, shard_id, state,
     ...)`` rows.
 
-    Routing is a scalar Arrow UDF over ONLY the key column: the payload
-    columns never cross the Python boundary during routing — they stay in
-    the JVM row and ride the shard shuffle directly.  ``cogroup`` on ``(*groups, shard_id)``
-    then hands ``check`` one group's rows and its ONE shard state, which
-    crosses the shuffle once; rows come back with the hit appended, so
-    there is no row id and no join-back.  A group without a state
-    (untouched shard, group never built) probes all-False.
-
-    Input timestamps arrive tagged with the session zone (``Etc/UTC``,
-    ``America/New_York``, ...) while Spark checks the result against
-    ``tz=UTC``; the final cast to Spark's Arrow schema only rewrites that
-    type metadata."""
+    A scalar Arrow UDF over ONLY the key column routes each row to its
+    shard: ``(shard_id, shard-local bucket, k bit indexes)``.  The sorted
+    run walker (``agg.probe_runs``) then runs over ``(*groups, shard_id)``:
+    each shard state crosses the shuffle once and is OR'd with any
+    duplicate row of the same shard, and Python sees only the run key, the
+    state and the routing — it returns one bit per row, and the payload
+    columns never leave the JVM.  A row whose shard has no state
+    (untouched shard, group never built) probes all-False."""
     from pyspark.sql.functions import arrow_udf
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    from poppy_spark.spark.agg import _as_key, decompress_blob
+    from poppy_spark.spark.agg import _as_key, decompress_blob, probe_runs
 
     int_mode = _INT_MODE[int_keys]
-    in_cols = list(df.columns)
     k, bps = p.n_hash_buck, p.bps
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(output_col, T.BooleanType())]
-    )
-    large = df.sparkSession.conf.get("spark.sql.execution.arrow.useLargeVarTypes", "false")
-    arrow_out = to_arrow_schema(out_schema, prefers_large_types=large.lower() == "true")
 
     def route1(keys):
         if isinstance(keys, pa.ChunkedArray):
@@ -232,46 +223,42 @@ def _shard_probe(
         return pa.StructArray.from_arrays(
             [
                 pa.array(shard, type=pa.int32()),
-                pa.array(ib, type=pa.int64()),
+                pa.array(ib - shard.astype(np.int64) * bps, type=pa.int32()),
                 _idx_to_binary(idx),
             ],
             ["s", "ib", "idx"],
         )
 
     route1.__annotations__ = {"keys": pa.Array, "return": pa.Array}
-    udf = arrow_udf(route1, "struct<s:int, ib:bigint, idx:binary>")
-    tuples = (
-        df.select("*", _as_key(df, col, int_keys).alias("__key"))
-        .withColumn("__r", udf(F.col("__key")))
-        .select(
-            *in_cols,
-            F.col("__r.s").alias("__shard_id"),
-            F.col("__r.ib").alias("__ib"),
-            F.col("__r.idx").alias("__idx"),
-        )
+    udf = arrow_udf(route1, "struct<s:int, ib:int, idx:binary>")
+    rows = df.select("*", udf(_as_key(df, col, int_keys)).alias("__r")).select(
+        *df.columns,
+        F.col("__r.s").alias("__shard_id"),
+        F.col("__r.ib").alias("__ib"),
+        F.col("__r.idx").alias("__idx"),
     )
 
-    def check(left: pa.Table, right: pa.Table) -> pa.Table:
-        n = left.num_rows
-        if n == 0 or right.num_rows == 0:
-            hit = np.zeros(n, dtype=bool)
-        else:
-            buckets = np.frombuffer(
-                decompress_blob(right.column("state")[0].as_py()), dtype=np.uint8
-            )
-            shard_id = int(right.column("__shard_id")[0].as_py())
-            ib_local = left.column("__ib").to_numpy(zero_copy_only=False) - shard_id * bps
-            idx = _binary_to_idx(left.column("__idx"), k)
-            byte_off, bitmask = _bit_parts(ib_local, idx, buckets.size)
-            hit = ((buckets[byte_off] & bitmask) != 0).reshape(-1, k).all(axis=1)
-        keep = left.select(in_cols).append_column(output_col, pa.array(hit))
-        return keep.cast(arrow_out)
+    def add(bits, state: bytes) -> np.ndarray:
+        blob = np.frombuffer(decompress_blob(state), dtype=np.uint8)
+        return blob if bits is None else bits | blob
 
-    gkeys = [*groups, "__shard_id"]
-    return (
-        tuples.groupBy(*gkeys)
-        .cogroup(states.withColumnRenamed("shard_id", "__shard_id").groupBy(*gkeys))
-        .applyInArrow(check, out_schema)
+    def prepare(route: list) -> tuple:
+        return route[0].to_numpy(zero_copy_only=False), _binary_to_idx(route[1], k)
+
+    def test(bits: np.ndarray, view: tuple, lo: int, hi: int) -> np.ndarray:
+        byte_off, bitmask = _bit_parts(view[0][lo:hi], view[1][lo:hi], bits.size)
+        return ((bits[byte_off] & bitmask) != 0).reshape(-1, k).all(axis=1)
+
+    return probe_runs(
+        rows,
+        states.withColumnRenamed("shard_id", "__shard_id"),
+        [*groups, "__shard_id"],
+        ["__ib", "__idx"],
+        df.columns,
+        output_col,
+        add,
+        prepare,
+        test,
     )
 
 
@@ -337,6 +324,14 @@ class ShardedBloom:
     def _groups(self) -> list:
         return [self.group_col] if self.group_col else []
 
+    def unpersist(self) -> "ShardedBloom":
+        """Release what this handle pins: the ``states`` a ``persist=True``
+        build cached and the filter bytes the broadcast probe reassembled.
+        The handle stays usable; a later action recomputes the states."""
+        self.states.unpersist()
+        self._poppy_cache = None
+        return self
+
     # --- probe -----------------------------------------------------------------
     def contains(
         self,
@@ -362,9 +357,10 @@ class ShardedBloom:
         * ``"broadcast"`` — force the reassembled broadcast probe (raises
           past the budget, and on a grouped filter).
         * ``"shuffle"`` — force the shuffle probe (:func:`_shard_probe`):
-          rows carry their columns to their shard and come back with the
-          hit appended, each shard state crosses the wire exactly once —
-          the only shape for filters no single worker can hold.
+          rows meet their shard's state in one sorted shuffle and only the
+          routing crosses into Python, each shard state crosses the wire
+          exactly once — the only shape for filters no single worker can
+          hold.
         """
         if strategy not in ("auto", "broadcast", "shuffle"):
             raise ValueError(

@@ -165,20 +165,22 @@ class _Sites(ast.NodeVisitor):
     visit_ClassDef = visit_FunctionDef = _scope
 
     def visit_Call(self, node):
-        if isinstance(node.func, ast.Attribute) and node.func.attr == self.attr:
+        f = node.func
+        if getattr(f, "attr", None) == self.attr or getattr(f, "id", None) == self.attr:
             self.sites.append(".".join(self.path))
         self.generic_visit(node)
 
 
 def _call_sites(attr):
-    """``module:scope`` of every ``.<attr>(`` call in ``poppy_spark/spark``."""
+    """``module:scope`` of every ``<attr>(`` or ``.<attr>(`` call in
+    ``poppy_spark/spark``."""
     sites = []
     for p in sorted(SPARK_DIR.glob("*.py")):
         src = p.read_text()
         v = _Sites(attr)
         v.visit(ast.parse(src))
         # every textual call site is one the AST walk attributed
-        assert src.count(f"{attr}(") == len(v.sites), p.name
+        assert src.count(f"{attr}(") - src.count(f"def {attr}(") == len(v.sites), p.name
         sites += [f"{p.name}:{s}" for s in v.sites]
     return sorted(sites)
 
@@ -194,12 +196,23 @@ class TestOneShapeGuard:
         ]
 
     def test_one_shard_probe(self):
-        """Both sharded filters probe through ``_shard_probe`` (the only
-        cogroup), with no row id to join hits back on."""
-        assert _call_sites("applyInArrow") == ["sharded.py:_shard_probe"]
+        """Both sharded filters probe through ``_shard_probe``, with no
+        cogroup and no row id to join hits back on."""
+        assert _call_sites("applyInArrow") == []
         src = (SPARK_DIR / "sharded.py").read_text()
         assert "localCheckpoint" not in src
         assert "monotonically_increasing_id" not in src
+
+    def test_one_shuffle_probe(self):
+        """Every shuffle probe is the one sorted run walker
+        ``agg.probe_runs`` (no cogroup: :meth:`test_one_shard_probe`), and
+        no all-column ``mapInArrow`` in ``probe.py`` carries payload
+        through Python."""
+        assert "mapInArrow(" not in (SPARK_DIR / "probe.py").read_text()
+        assert _call_sites("probe_runs") == [
+            "probe.py:bloom_contains_grouped_join",
+            "sharded.py:_shard_probe",
+        ]
 
     def test_nan_key_defined_once(self):
         pkg = SPARK_DIR.parent

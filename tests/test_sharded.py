@@ -457,6 +457,24 @@ class TestProbeStrategyAuto:
         assert sharded._poppy_cache is raw1
 
 
+class TestUnpersist:
+    def test_unpersist_releases_states_and_cache(self, spark, keys_df):
+        """``unpersist()`` is the release point of a ``persist=True`` build:
+        the persisted RDD count returns to its baseline, the reassembled
+        broadcast bytes are dropped, and the handle still probes."""
+        jsc = spark.sparkContext._jsc
+        baseline = jsc.getPersistentRDDs().size()
+        sb = build_sharded_bloom(keys_df, "k", capacity=30000, fpp=0.001, n_shards=4)
+        assert sb.contains(keys_df, "k", "hit", strategy="broadcast").filter("NOT hit").count() == 0
+        assert jsc.getPersistentRDDs().size() == baseline + 1
+        assert sb._poppy_cache is not None
+        assert sb.unpersist() is sb
+        assert jsc.getPersistentRDDs().size() == baseline
+        assert sb._poppy_cache is None
+        assert sb.contains(keys_df, "k", "hit", strategy="shuffle").filter("NOT hit").count() == 0
+        assert jsc.getPersistentRDDs().size() == baseline
+
+
 class TestGroupedSharded:
     def test_zero_fn_and_group_isolation(self, spark):
         from pyspark.sql import functions as F
