@@ -56,10 +56,10 @@ class Sketch(abc.ABC):
 
     def memory_bound_bytes(self) -> int:
         """Upper bound on this sketch's IN-MEMORY footprint once populated —
-        used by grouped builds to size per-task flush thresholds.  Defaults
-        to the serialized size, which is only correct when the wire form is
-        the dense form; sketches with a compact wire encoding (sparse HLL)
-        must override with their dense size."""
+        checked by grouped builds once per Arrow batch.  Defaults to the
+        serialized size, a whole serialization per call: fixed-size sketches
+        override it from their parameters, and sketches with a compact wire
+        encoding (sparse HLL) with their dense size."""
         return len(self.dumps())
 
     def batch_context(self, arr):

@@ -89,6 +89,10 @@ class BloomSketch(Sketch):
     def merge(self, other: "BloomSketch") -> None:
         self.filter.union_merge(other.filter)
 
+    def memory_bound_bytes(self) -> int:
+        """The filter's fixed size, from its parameters (no serialization)."""
+        return self.filter.size_in_bytes()
+
     def dumps(self) -> bytes:
         return self.filter.dumps()
 

@@ -112,6 +112,10 @@ class CmsSketch(Sketch):
     def result(self) -> int:
         return self.total()
 
+    def memory_bound_bytes(self) -> int:
+        """The fixed ``d x w`` uint64 table, from its parameters."""
+        return 8 * self.w * self.d
+
     # --- serialization -----------------------------------------------------------------
     def dumps(self) -> bytes:
         return _MAGIC + struct.pack("<II", self.w, self.d) + self.table.tobytes()

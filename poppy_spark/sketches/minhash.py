@@ -87,6 +87,10 @@ class MinHashSketch(Sketch):
     def result(self) -> list[int]:
         return [int(x) for x in self.sig]
 
+    def memory_bound_bytes(self) -> int:
+        """The fixed ``n_perms`` uint64 signature, from its parameters."""
+        return 8 * self.n_perms
+
     def dumps(self) -> bytes:
         return _MAGIC + struct.pack("<I", self.n_perms) + self.sig.tobytes()
 

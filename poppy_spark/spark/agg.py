@@ -4,8 +4,10 @@ This is the distributed shape of poppy's ``parallel_insert`` (clone filter per
 thread, insert, fold union — ``poppy/src/bin/poppy.rs:232-282``), re-expressed
 Spark-first:
 
-* **update**: ``df.mapInArrow`` builds ONE sketch state per input partition
-  (Arrow batches -> numpy kernels; no per-row Python, no row shuffle);
+* **update**: ``df.mapInArrow`` over :func:`_partition_update`, the one
+  per-partition loop, builds one sketch state per (input partition, group,
+  spec) (Arrow batches -> numpy kernels; no per-row Python, no row
+  shuffle).  The flat, grouped, profile and checkpoint builds all run it;
 * **merge**: a bounded-fan-in tree of :func:`fold_groups` stages ORs the
   partial states together (shuffle volume = n_partitions x state_size,
   never the data).
@@ -109,36 +111,6 @@ def _z_loads(cls: type, raw: bytes) -> Sketch:
     return cls.loads(decompress_blob(raw))
 
 
-def _update_fn(
-    factory: Callable[[], Sketch],
-    col_idx: int = 0,
-    compress: bool = True,
-    int_keys: str = "string",
-):
-    def update(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        sk = factory()
-        sk.int_keys = int_keys
-        n = 0
-        for batch in batches:
-            sk.update_arrow(batch.column(col_idx))
-            n += batch.num_rows
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
-        payload = _z_dumps(sk) if compress else sk.dumps()
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([pid], type=pa.int64()),
-                pa.array([payload], type=pa.binary()),
-                pa.array([n], type=pa.int64()),
-            ],
-            ["pid", "state", "n_rows"],
-        )
-
-    return update
-
-
 _STATES_SCHEMA = StructType(
     [
         StructField("pid", LongType()),
@@ -197,9 +169,137 @@ def _rows_to_batch(rows: list, arrow_schema: pa.Schema) -> pa.RecordBatch:
     )
 
 
-#: pending output of one fold task before it is yielded as a batch
+#: pending output of one task before it is yielded as a batch
 _FLUSH_ROWS = 1024
 _FLUSH_BYTES = 64 << 20
+
+
+def _batches(rows: Iterator[tuple], arrow_schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    """Output rows as batches of at most ``_FLUSH_ROWS`` rows or about
+    ``_FLUSH_BYTES`` of binary values."""
+    out: list = []
+    out_bytes = 0
+    for row in rows:
+        out.append(row)
+        out_bytes += sum(len(v) for v in row if isinstance(v, bytes))
+        if len(out) >= _FLUSH_ROWS or out_bytes >= _FLUSH_BYTES:
+            yield _rows_to_batch(out, arrow_schema)
+            out, out_bytes = [], 0
+    if out:
+        yield _rows_to_batch(out, arrow_schema)
+
+
+def _new_sketch(factory: Callable[[], Sketch], int_keys: str) -> Sketch:
+    sk = factory()
+    sk.int_keys = int_keys
+    return sk
+
+
+def _absorb(ent: list, view: tuple, lo: int, hi: int) -> None:
+    """Rows ``[lo, hi)`` of a key column into ``ent = [sketch, n_rows,
+    ...]``, ``view = (column, batch_context or None)``: a pre-routed numpy
+    scatter with a context, else ``update_arrow`` on a zero-copy slice."""
+    col, ctx = view
+    if ctx is not None:
+        ent[0].update_slice(ctx, lo, hi)
+    else:
+        ent[0].update_arrow(col.slice(lo, hi - lo))
+    ent[1] += hi - lo
+
+
+def _partition_update(
+    batches: Iterator[pa.RecordBatch],
+    n_groups: int,
+    factories: Sequence[Callable[[], Sketch]],
+    int_keys: str = "string",
+    max_bytes: int | None = None,
+    nulls: bool = True,
+) -> Iterator[tuple[tuple, int, Sketch, int]]:
+    """The one per-partition sketch update (poppy's "clone a filter per
+    worker, insert") over a task's Arrow batches, laid out ``[*groups,
+    key_1 ... key_N]``: spec ``i`` folds ``key_{i+1}`` into sketches from
+    ``factories[i]``.  Per batch: sort by the ``n_groups`` group columns
+    (none: no sort), find the runs of equal groups (:func:`_run_starts`)
+    and :func:`_absorb` each into its live (group, spec) sketch, keyed
+    through :func:`_nan_key`.  A one-run batch goes through
+    ``update_arrow`` whole; several runs share one ``batch_context``.  A
+    NULL key is a value (counted in ``n_rows``); ``nulls=False`` drops it.
+
+    Yields ``(group values, spec, sketch, n_rows)`` for every live state at
+    the end, and after a batch when more than one state is live and their
+    count x one state's ``memory_bound_bytes`` passes ``max_bytes`` (the
+    flushed states are dropped: downstream merges per group).  With no
+    groups a task yields one state per spec even when it saw no rows."""
+    live: dict = {}
+    if not n_groups:
+        live.update((((), i), [_new_sketch(f, int_keys), 0, ()]) for i, f in enumerate(factories))
+    est = 0  # one state's memory bound; bounds grow with data (TopK keys)
+
+    def flush():
+        for (_, i), (sk, n, vals) in live.items():
+            yield vals, i, sk, n
+        live.clear()
+
+    for b in batches:
+        if not b.num_rows:
+            continue
+        if n_groups:
+            by = [(c, "ascending") for c in b.schema.names[:n_groups]]
+            b = b.take(pc.sort_indices(b, sort_keys=by))
+        for i, factory in enumerate(factories):
+            cols = [*b.columns[:n_groups], b.column(n_groups + i)]
+            if not nulls and cols[-1].null_count:
+                valid = pc.is_valid(cols[-1])
+                cols = [c.filter(valid) for c in cols]
+            n = len(cols[-1])
+            if not n:
+                continue
+            bounds = np.append(_run_starts(cols[:-1], n), n)
+            heads = [c.take(bounds[:-1]).to_pylist() for c in cols[:-1]]
+            ctx = None
+            for j, vals in enumerate(zip(*heads) if n_groups else [()]):
+                key = (tuple(_nan_key(v) for v in vals), i)
+                ent = live.get(key)
+                if ent is None:
+                    ent = live[key] = [_new_sketch(factory, int_keys), 0, vals]
+                if j == 0 and len(bounds) > 2:
+                    ctx = ent[0].batch_context(cols[-1])
+                _absorb(ent, (cols[-1], ctx), int(bounds[j]), int(bounds[j + 1]))
+        if max_bytes is not None and len(live) > 1:
+            est = max(est, next(iter(live.values()))[0].memory_bound_bytes())
+            if len(live) * est > max_bytes:
+                yield from flush()
+    yield from flush()
+
+
+def _update_states(
+    df: DataFrame,
+    n_groups: int,
+    factories: Sequence[Callable[[], Sketch]],
+    schema: StructType,
+    row: Callable[[int, tuple, int, bytes, int], tuple],
+    int_keys: str = "string",
+    max_bytes: int | None = None,
+    nulls: bool = True,
+) -> DataFrame:
+    """One ``mapInArrow`` of :func:`_partition_update` over ``df``: each
+    yielded state becomes the ``schema`` row ``row(partition id, group
+    values, spec, lz4 state, n_rows)``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+
+    def update(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from pyspark import TaskContext
+
+        tc = TaskContext.get()
+        pid = tc.partitionId() if tc is not None else 0
+        states = _partition_update(batches, n_groups, factories, int_keys, max_bytes, nulls)
+        yield from _batches(
+            (row(pid, vals, i, _z_dumps(sk), n) for vals, i, sk, n in states), arrow_schema
+        )
+
+    return df.mapInArrow(update, schema)
 
 
 def fold_groups(
@@ -265,19 +365,8 @@ def fold_groups(
             yield key, acc
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        out: list = []
-        out_bytes = 0
-        for key, acc in groups(batches):
-            row = emit(key, acc)
-            if row is None:
-                continue
-            out.append(row)
-            out_bytes += sum(len(v) for v in row if isinstance(v, bytes))
-            if len(out) >= _FLUSH_ROWS or out_bytes >= _FLUSH_BYTES:
-                yield _rows_to_batch(out, arrow_schema)
-                out, out_bytes = [], 0
-        if out:
-            yield _rows_to_batch(out, arrow_schema)
+        rows = (emit(key, acc) for key, acc in groups(batches))
+        return _batches((r for r in rows if r is not None), arrow_schema)
 
     return df.mapInArrow(fold, schema)
 
@@ -444,25 +533,35 @@ def _as_key(df: DataFrame, col: str | Column, int_keys: str = "string") -> Colum
 def _key_expr(
     df: DataFrame,
     col: str | Column,
-    factory: Callable[[], Sketch],
+    sk0: Sketch,
     int_keys: str = "string",
 ) -> Column:
-    """Pick the cheapest sound key representation for the sketch: sketches
-    that accept any 64-bit hash get JVM-side xxhash64 (8 bytes/row across the
-    JVM->Python boundary instead of the raw text); poppy-compatible sketches
-    need the raw bytes."""
-    if getattr(factory(), "prehash_jvm", False):
+    """Pick the cheapest sound key representation for the sketch ``sk0``:
+    sketches that accept any 64-bit hash get JVM-side xxhash64 (8 bytes/row
+    across the JVM->Python boundary instead of the raw text);
+    poppy-compatible sketches need the raw bytes."""
+    if getattr(sk0, "prehash_jvm", False):
         return F.xxhash64(_as_key(df, col))
     return _as_key(df, col, int_keys)
 
 
-def _auto_strategy(
-    sk0: Sketch, df: DataFrame, repartition: int | None
-) -> str:
+def _spread(df: DataFrame, repartition: int | None = None) -> tuple[DataFrame, int]:
+    """``(df over repartition partitions, or over at least
+    defaultParallelism when None, that count)``: a scan with fewer splits
+    than cores must not run a per-row Python pass on a few cores (round-5:
+    a one-split scan ran a whole update on ONE core).  The package's one
+    read of a partition count."""
+    n = df.rdd.getNumPartitions()
+    want = repartition or max(n, df.sparkSession.sparkContext.defaultParallelism)
+    return (df.repartition(want) if want != n else df), want
+
+
+def _auto_strategy(sk0: Sketch, n_parts: int) -> str:
     """states-vs-sharded cost model (the engine's one non-Catalyst planning
     decision, since Catalyst cannot see inside state blobs): with a big v2
-    NONE filter over many partitions, shipping one filter-sized state per
-    partition dwarfs shipping ~(12+2k)-byte index tuples per key."""
+    NONE filter over many (``n_parts``) partitions, shipping one
+    filter-sized state per partition dwarfs shipping ~(12+2k)-byte index
+    tuples per key."""
     filt = getattr(sk0, "filter", None)
     if (
         filt is None
@@ -476,10 +575,6 @@ def _auto_strategy(
         # below ~8 MB the byte model is noise: the sharded pipeline's two
         # extra shuffle stages cost more than shipping small states ever can
         return "states"
-    n_parts = repartition or max(
-        df.rdd.getNumPartitions(),
-        df.sparkSession.sparkContext.defaultParallelism,
-    )
     k_ = filt._inner.n_hash_buck
     # rows unknown pre-scan; capacity is the sizing proxy (callers size
     # capacity at the expected key count)
@@ -546,31 +641,30 @@ def build_sketch_df(
     reassembles the single state in one executor task.  Both yield
     byte-identical results.
     """
+    _, built = _build_flat(df, col, factory, repartition, merge_fanout, int_keys, strategy)
+    return built if isinstance(built, DataFrame) else _reassemble_states_df(built)
+
+
+def _build_flat(df, col, factory, repartition, merge_fanout, int_keys, strategy):
+    """``(the verb's one driver-side factory() sketch, the merged one-row
+    states frame or the sharded build)`` of the two flat build verbs."""
     sk0 = factory()
-    if strategy == "auto":
-        strategy = _auto_strategy(sk0, df, repartition)
+    if strategy != "sharded":
+        key = _key_expr(df, col, sk0, int_keys).alias("__key__")
+        keyed, n_parts = _spread(df.select(key), repartition)
+        if strategy == "auto":
+            strategy = _auto_strategy(sk0, n_parts)
     if strategy == "sharded":
         from poppy_spark.spark.sharded import build_sharded_bloom
 
         filt = sk0.filter
-        sb = build_sharded_bloom(
+        return sk0, build_sharded_bloom(
             df, col, filt.capacity, filt.fpp, persist=False, int_keys=int_keys
         )
-        return _reassemble_states_df(sb)
-    sdf = df.select(_key_expr(df, col, factory, int_keys).alias("__key__"))
-    n_parts = sdf.rdd.getNumPartitions()
-    if repartition is None:
-        # a small file count must not serialize the update phase: spread the
-        # scan across the cluster (scale inputs arrive with plenty of splits,
-        # so this only fires for toy inputs)
-        cores = df.sparkSession.sparkContext.defaultParallelism
-        if n_parts < cores:
-            repartition = cores
-    if repartition and repartition != n_parts:
-        sdf = sdf.repartition(repartition)
-        n_parts = repartition
-    states = sdf.mapInArrow(_update_fn(factory, int_keys=int_keys), _STATES_SCHEMA)
-    return merge_states_tree(states, factory, n_parts, merge_fanout)
+    states = _update_states(
+        keyed, 0, [factory], _STATES_SCHEMA, lambda pid, vals, i, z, n: (pid, z, n), int_keys
+    )
+    return sk0, _merge_tree(states, type(sk0), n_parts, merge_fanout)
 
 
 def merge_states_tree(
@@ -582,8 +676,10 @@ def merge_states_tree(
     """Reduce a ``(pid, state, n_rows)`` DataFrame to one finalized state row
     via a bounded-fan-in merge tree (poppy folds sequentially; we tree-reduce
     so no single task ORs more than ``merge_fanout`` multi-MB states)."""
-    cls = type(factory())
+    return _merge_tree(states, type(factory()), n_parts, merge_fanout)
 
+
+def _merge_tree(states: DataFrame, cls: type, n_parts: int, merge_fanout: int) -> DataFrame:
     def start(key):
         return _StateMerge(cls)
 
@@ -630,26 +726,15 @@ def build_sketch(
       over few-ish rows per partition (the 10^9-key regime), shipping one
       filter-sized state per partition dwarfs shipping index tuples.
     """
-    sk0 = factory()
-    if strategy == "auto":
-        strategy = _auto_strategy(sk0, df, repartition)
-    if strategy == "sharded":
+    sk0, built = _build_flat(df, col, factory, repartition, merge_fanout, int_keys, strategy)
+    if isinstance(built, DataFrame):
+        raw = built.collect()[0]["state"]
+    else:
         # driver-destined result: reassemble driver-side from the lz4 shard
         # rows (compressed transfer) rather than collecting one giant raw
         # state row through build_sketch_df's executor-side assembly
-        from poppy_spark.spark.sharded import build_sharded_bloom
-
-        filt = sk0.filter
-        sb = build_sharded_bloom(
-            df, col, filt.capacity, filt.fpp, persist=False, int_keys=int_keys
-        )
-        merged = type(sk0).loads(sb.to_poppy_bytes(max_bytes=8 << 30))
-        return merged
-    row = build_sketch_df(
-        df, col, factory, repartition, merge_fanout, int_keys, strategy="states"
-    ).collect()[0]
-    cls = type(factory())
-    return cls.loads(bytes(row["state"]))
+        raw = built.to_poppy_bytes(max_bytes=8 << 30)
+    return type(sk0).loads(bytes(raw))
 
 
 def _grouped_schema(df: DataFrame, group_cols: Sequence[str]) -> StructType:
@@ -691,13 +776,15 @@ def build_sketch_grouped(
       size; memory stays O(1)) — keep ``"states"`` for skewed keys.
 
     Task memory is BOUNDED regardless of group cardinality (round-2 verdict
-    item): whenever a ``"states"`` task's live states exceed
-    ``max_task_state_bytes`` (estimated as groups-seen x one state's
-    serialized size), the dict is flushed as partial rows and cleared —
-    phase 2 merges per group anyway, so multiple partials per (partition,
-    group) are free.  High-cardinality group keys therefore cost extra
-    merge rows, never worker memory.  For per-group filters individually
-    too large for one task, use
+    item): phase 1 is the one per-partition update
+    (:func:`_partition_update`), and after a batch, whenever more than one
+    state is live and live states x one state's ``memory_bound_bytes``
+    exceed ``max_task_state_bytes``, the live states are flushed as
+    partial rows and dropped — phase 2 merges per group anyway, so
+    multiple partials per (partition, group) are free.  One live state is
+    never flushed: the next batch would only rebuild it.  High-cardinality
+    group keys therefore cost extra merge rows, never worker memory.  For
+    per-group filters individually too large for one task, use
     :func:`poppy_spark.spark.sharded.build_sharded_bloom_grouped` — one
     bucket-range-sharded filter per group, task memory = one shard.
 
@@ -710,105 +797,39 @@ def build_sketch_grouped(
     if shuffle not in ("states", "rows"):
         raise ValueError(f"unknown shuffle shape {shuffle!r}")
     group_cols = list(group_cols)
-    sel = df.select(*group_cols, _key_expr(df, col, factory, int_keys).alias("__key__"))
-    n_parts = sel.rdd.getNumPartitions()
-    if repartition is None:
-        cores = df.sparkSession.sparkContext.defaultParallelism
-        if n_parts < cores:
-            repartition = cores
-    if repartition and repartition != n_parts:
-        sel = sel.repartition(repartition)
+    sk0 = factory()
+    key = _key_expr(df, col, sk0, int_keys).alias("__key__")
+    sel, _ = _spread(df.select(*group_cols, key), repartition)
     out_schema = _grouped_schema(df, group_cols)
-    n_group_cols = len(group_cols)
-    cls = type(factory())
-    template: list = []  # one routing template per Python worker, made on first use
-
-    def new_sketch() -> Sketch:
-        sk = factory()
-        sk.int_keys = int_keys
-        return sk
-
-    def keyed_view(b: pa.RecordBatch):
-        # hash-once fast path: sketches that can route the whole batch once
-        # absorb each group's rows as a pre-routed numpy scatter
-        # (``batch_context``/``update_slice``); others take ``update_arrow``
-        # on a zero-copy slice
-        if not template:
-            template.append(new_sketch())
-        key_col = b.column(n_group_cols)
-        return key_col, template[0].batch_context(key_col)
-
-    def absorb(ent: list, view, lo: int, hi: int) -> None:
-        key_col, ctx = view
-        if ctx is not None:
-            ent[0].update_slice(ctx, lo, hi)
-        else:
-            ent[0].update_arrow(key_col.slice(lo, hi - lo))
-        ent[1] += hi - lo
-
-    def emit_final(key: tuple, ent: list) -> tuple:
-        ent[0].finalize_merge()
-        return (*key, ent[0].dumps(), ent[1])
+    cls = type(sk0)
 
     if shuffle == "rows":
         # single-shuffle shape: co-locate each group's rows, sort them
         # contiguous, and fold finalized states directly — no partials
+        template: list = []  # routes each batch once; made on first use per task
+
+        def keyed_view(b: pa.RecordBatch):
+            if not template:
+                template.append(_new_sketch(factory, int_keys))
+            key_col = b.column(len(group_cols))
+            return key_col, template[0].batch_context(key_col)
+
+        def emit_final(key: tuple, ent: list) -> tuple:
+            ent[0].finalize_merge()
+            return (*key, ent[0].dumps(), ent[1])
+
         return fold_groups(
             sel, group_cols, out_schema,
-            lambda key: [new_sketch(), 0], absorb, emit_final, prepare=keyed_view,
+            lambda key: [_new_sketch(factory, int_keys), 0], _absorb, emit_final,
+            prepare=keyed_view,
         )
 
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(out_schema)
-
-    def update(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # Per-batch shape (round-6 rework, guide §4.2): sort the batch by
-        # the group key once (Arrow C++), so each group's rows are a
-        # CONTIGUOUS run — per-group work is then a dict probe plus one
-        # ``absorb`` of the run.  The former pandas ``groupby().indices`` +
-        # per-group ``take`` + ``iloc`` shape cost ~360us per (partition,
-        # group) — 63% of the sf1 suite wall on the high-cardinality row.
-        states: dict = {}
-        state_bytes_est = 0  # in-memory size of ONE state, set lazily
-        sort_keys = [(c, "ascending") for c in group_cols]
-
-        def flush():
-            rows = [(*vals, _z_dumps(sk), n) for sk, n, vals in states.values()]
-            states.clear()
-            return _rows_to_batch(rows, arrow_schema)
-
-        for batch in batches:
-            n = batch.num_rows
-            if not n:
-                continue
-            sb = batch.take(pc.sort_indices(batch, sort_keys=sort_keys))
-            view = keyed_view(sb)
-            bounds = np.append(_run_starts(sb.columns[:n_group_cols], n), n)
-            heads = [sb.column(i).take(bounds[:-1]).to_pylist() for i in range(n_group_cols)]
-            for j, vals in enumerate(zip(*heads)):
-                gkey = tuple(_nan_key(v) for v in vals)
-                ent = states.get(gkey)
-                if ent is None:
-                    ent = states[gkey] = [new_sketch(), 0, vals]
-                    if not state_bytes_est:
-                        # in-memory bound, NOT len(dumps()): sketches with a
-                        # compact serialized form (sparse HLL) still cost
-                        # their dense size once updated
-                        state_bytes_est = max(ent[0].memory_bound_bytes(), 1)
-                absorb(ent, view, int(bounds[j]), int(bounds[j + 1]))
-            # re-estimate from a LIVE sketch each batch: bounds that depend
-            # on observed data (TopK key sizes) grow after the fresh-sketch
-            # estimate was taken (round-3 advice)
-            live = next(iter(states.values()))[0]
-            state_bytes_est = max(state_bytes_est, live.memory_bound_bytes())
-            if len(states) * state_bytes_est > max_task_state_bytes:
-                yield flush()
-        if states:
-            yield flush()
-
-    # Phase 2: merge partials per group in one fold pass.
-    partials = sel.mapInArrow(update, out_schema)
+    # Phase 1: partial states per (partition, group); phase 2 merges them
+    # per group in one fold pass.
+    partials = _update_states(
+        sel, len(group_cols), [factory], out_schema,
+        lambda pid, vals, i, z, n: (*vals, z, n), int_keys, max_task_state_bytes,
+    )
     return fold_groups(
         partials, group_cols, out_schema,
         lambda key: _StateMerge(cls), _StateMerge.add,

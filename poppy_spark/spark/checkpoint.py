@@ -11,6 +11,10 @@ timing).  A resumed build loads the manifest, recomputes ONLY missing or
 fingerprint-changed partitions, and unions everything — the poppy ``insert``
 command's incremental shape (load filter, add new data, save —
 ``poppy/src/bin/poppy.rs:320-335``) generalized to partitioned inputs.
+Each partition's state comes from the package's one per-partition update
+(``agg._partition_update``, one spec, no groups); its thin ``mapInArrow``
+wrapper keeps the two checkpoint-only steps: skipping an up-to-date
+partition before it consumes a batch, and the raw, atomic part-file write.
 
 Layout under ``dir``::
 
@@ -145,13 +149,11 @@ class SketchCheckpoint:
         (input shrank or was repartitioned) are pruned — their stale state
         files are deleted, not silently merged in.
         """
-        from poppy_spark.spark.agg import _key_expr, merge_states_tree
+        from poppy_spark.spark.agg import _key_expr, _merge_tree, _partition_update
 
-        manifest = (
-            self.load_manifest()
-            if resume
-            else {"sketch": type(self.factory()).kind, "partitions": {}}
-        )
+        sk0 = self.factory()
+        cls = type(sk0)
+        manifest = self.load_manifest() if resume else {"sketch": cls.kind, "partitions": {}}
         done = manifest["partitions"]
 
         snap = _input_snapshot(df) if fingerprint == "files" else None
@@ -165,7 +167,7 @@ class SketchCheckpoint:
         ):
             # zero-scan resume: listing matched, nothing to recompute
             with open(final_path, "rb") as f:
-                return type(self.factory()).loads(f.read())
+                return cls.loads(f.read())
 
         fps = {r["pid"]: r for r in _fingerprint(df, col).collect()}
 
@@ -186,7 +188,7 @@ class SketchCheckpoint:
 
         spark = df.sparkSession
         if todo:
-            sdf = df.select(_key_expr(df, col, self.factory, int_keys).alias("__key__"))
+            sdf = df.select(_key_expr(df, col, sk0, int_keys).alias("__key__"))
             factory = self.factory
             out_dir = self.dir
             bc_todo = spark.sparkContext.broadcast(todo)
@@ -200,23 +202,18 @@ class SketchCheckpoint:
                 pid = tc.partitionId() if tc is not None else 0
                 if pid not in bc_todo.value:
                     return  # batches never consumed -> scan short-circuits
-                sk = factory()
-                sk.int_keys = int_keys
-                n = 0
-                for b in batches:
-                    sk.update_arrow(b.column(0))
-                    n += b.num_rows
-                # checkpoint files stay raw (each one a valid poppy/sketch
-                # file); written executor-side, atomically via rename
-                path = os.path.join(out_dir, f"part-{pid:05d}.state")
-                tmp = f"{path}.tmp-{tc.taskAttemptId() if tc else 0}"
-                with open(tmp, "wb") as f:
-                    f.write(sk.dumps())
-                os.replace(tmp, path)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([pid], pa.int64()), pa.array([n], pa.int64())],
-                    ["pid", "n_rows"],
-                )
+                for _, _, sk, n in _partition_update(batches, 0, [factory], int_keys):
+                    # checkpoint files stay raw (each one a valid poppy/sketch
+                    # file); written executor-side, atomically via rename
+                    path = os.path.join(out_dir, f"part-{pid:05d}.state")
+                    tmp = f"{path}.tmp-{tc.taskAttemptId() if tc else 0}"
+                    with open(tmp, "wb") as f:
+                        f.write(sk.dumps())
+                    os.replace(tmp, path)
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array([pid], pa.int64()), pa.array([n], pa.int64())],
+                        ["pid", "n_rows"],
+                    )
 
             written = sdf.mapInArrow(update, "pid bigint, n_rows bigint").collect()
             t = time.time()
@@ -241,12 +238,11 @@ class SketchCheckpoint:
         # file where the task runs, then tree-reduce (fan-in bounded) so the
         # driver only ever receives the single final state
         if not done:
-            merged = self.factory()
+            merged = sk0
             merged.finalize_merge()
         else:
-            from poppy_spark.spark.agg import _STATES_SCHEMA, _z_dumps
+            from poppy_spark.spark.agg import _STATES_SCHEMA, compress_blob
 
-            factory = self.factory
             files = [
                 (int(pid), os.path.join(self.dir, ent["state_file"]))
                 for pid, ent in done.items()
@@ -259,25 +255,19 @@ class SketchCheckpoint:
             def load(batches):
                 import pyarrow as pa
 
-                cls = type(factory())
                 for b in batches:
-                    for pid, path in zip(
-                        b.column(0).to_pylist(), b.column(1).to_pylist()
-                    ):
+                    for pid, path in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
                         with open(path, "rb") as f:
-                            sk = cls.loads(f.read())
+                            state = compress_blob(f.read())  # a raw sketch file
                         yield pa.RecordBatch.from_arrays(
-                            [
-                                pa.array([pid], pa.int64()),
-                                pa.array([_z_dumps(sk)], pa.binary()),
-                                pa.array([n_rows_by_pid.get(pid, 0)], pa.int64()),
-                            ],
+                            [pa.array([pid], pa.int64()), pa.array([state], pa.binary()),
+                             pa.array([n_rows_by_pid.get(pid, 0)], pa.int64())],
                             ["pid", "state", "n_rows"],
                         )
 
             states = fdf.mapInArrow(load, _STATES_SCHEMA)
-            row = merge_states_tree(states, factory, len(files)).collect()[0]
-            merged = type(self.factory()).loads(bytes(row["state"]))
+            row = _merge_tree(states, cls, len(files), 8).collect()[0]
+            merged = cls.loads(bytes(row["state"]))
         with open(os.path.join(self.dir, "final.state"), "wb") as f:
             f.write(merged.dumps())
         return merged

@@ -1,8 +1,10 @@
 """One-pass data profiling built from the mergeable-sketch family.
 
 ``build_sketches_multi`` updates ONE sketch per requested column inside a
-single ``mapInArrow`` scan — profiling N columns costs one pass over the
-data plus one tiny (name-keyed) state merge, not N passes.  ``profile_table``
+single ``mapInArrow`` scan — the package's one per-partition update
+(``agg._partition_update``) with N specs and no group columns, dropping
+each column's NULLs — so profiling N columns costs one pass over the data
+plus one tiny (name-keyed) state merge, not N passes.  ``profile_table``
 layers the standard data-quality report on top: exact row/null counts and
 min/max from one JVM aggregate (a second shuffle-free scan), plus HLL
 distinct estimates and KLL quantiles from the sketch pass.  Two scans
@@ -11,7 +13,7 @@ total for any column count — the shape that survives a 100 TB table.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Mapping
+from typing import Callable, Mapping
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
@@ -33,52 +35,29 @@ def build_sketches_multi(
     emitting one (name, state) row per (partition, spec); the merge groups
     by name — states are KBs, so the collect is O(specs).
     """
-    import pyarrow as pa
-
-    from poppy_spark.spark.agg import _StateMerge, _key_expr, _z_dumps, fold_groups
+    from poppy_spark.spark.agg import _StateMerge, _key_expr, _update_states, fold_groups
 
     names = list(specs)
     if not names:
         raise ValueError("specs must name at least one column")
+    templates = {name: fac() for name, (_, fac) in specs.items()}
+    classes = {name: type(sk) for name, sk in templates.items()}
     # null-preserving key expressions: xxhash64(NULL) is a constant, not
     # NULL, so the prehash path must be gated or nulls would count as one
     # distinct value
     sel = df.select(
         *[
             F.when(
-                F.col(col).isNotNull(), _key_expr(df, col, fac, int_keys)
+                F.col(col).isNotNull(), _key_expr(df, col, templates[name], int_keys)
             ).alias(name)
-            for name, (col, fac) in specs.items()
+            for name, (col, _) in specs.items()
         ]
     )
-    factories = {n: specs[n][1] for n in names}
-
-    def update(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sks = {}
-        for n in names:
-            sk = factories[n]()
-            sk.int_keys = int_keys
-            sks[n] = sk
-        counts = dict.fromkeys(names, 0)
-        for batch in batches:
-            for i, n in enumerate(names):
-                arr = batch.column(i).drop_null()
-                if len(arr):
-                    sks[n].update_arrow(arr)
-                    counts[n] += len(arr)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(names, type=pa.string()),
-                pa.array([_z_dumps(sks[n]) for n in names], type=pa.binary()),
-                pa.array([counts[n] for n in names], type=pa.int64()),
-            ],
-            ["name", "state", "n_rows"],
-        )
-
-    schema = "name string, state binary, n_rows long"
-    states = sel.mapInArrow(update, schema)
-
-    classes = {n: type(factories[n]()) for n in names}
+    schema = T.StructType.fromDDL("name string, state binary, n_rows long")
+    states = _update_states(
+        sel, 0, [specs[n][1] for n in names], schema,
+        lambda pid, vals, i, z, n: (names[i], z, n), int_keys, nulls=False,
+    )
     merged = fold_groups(
         states, ["name"], schema,
         lambda key: _StateMerge(classes[key[0]]), _StateMerge.add,

@@ -111,16 +111,6 @@ class _Params:
         return min(self.bps, self.n_buckets - lo)
 
 
-def _spread_low_split(sel: DataFrame) -> DataFrame:
-    """A small input file count must not serialize the Arrow index phase:
-    spread a scan with fewer splits than cores round-robin before the
-    hashing mapInArrow (no-op at real scale, where inputs arrive with
-    plenty of splits) — the same guard as ``build_sketch_df``."""
-    n_parts = sel.rdd.getNumPartitions()
-    cores = sel.sparkSession.sparkContext.defaultParallelism
-    return sel.repartition(cores) if n_parts < cores else sel
-
-
 def _route_batch(keys: pa.Array, p: _Params, dedup: bool, int_mode: str = "raise"):
     """(shard_id int32, ibucket int64, idx (n,k) uint16) for one Arrow batch."""
     from poppy_spark.core import hashkern as hk
@@ -805,11 +795,11 @@ def _build(
     ``agg.fold_groups``, OR-ing them into one shard's buckets, so task
     memory is one shard plus one Arrow batch at any capacity or group
     count.  ``n_rows`` counts the tuples that reached the fold."""
-    from poppy_spark.spark.agg import _as_key, fold_groups
+    from poppy_spark.spark.agg import _as_key, _spread, fold_groups
 
     groups = [group_col] if group_col else []
     gfields = [df.schema[g] for g in groups]
-    keyed = _spread_low_split(df.select(*groups, _as_key(df, col, int_keys).alias("__key")))
+    keyed, _ = _spread(df.select(*groups, _as_key(df, col, int_keys).alias("__key")))
     int_mode = _INT_MODE[int_keys]
     dedup = not groups
 

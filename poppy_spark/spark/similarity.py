@@ -18,6 +18,10 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
+# results here are content-deterministic (hash-ordered samples, per-row
+# assignment, deterministic tie-breaks): ``_spread`` changes parallelism only
+from poppy_spark.spark.agg import _spread
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -31,21 +35,6 @@ def _norm(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(a, F.lit(0.0).cast("double"), lambda acc, v: acc + v * v)
     )
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread a low-split input across the cluster before a per-row compute
-    pass (same convention as ``agg.build_sketch_df``): a scan with fewer
-    splits than cores would otherwise serialize the whole similarity stage
-    on one task.  Everything in this module is content-deterministic
-    (hash-ordered samples, per-row assignment, set-semantics joins,
-    deterministic tie-breaks), so a round-robin repartition never changes
-    results — only parallelism."""
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < cores:
-        return df.repartition(cores)
-    return df
 
 
 def _normalize_rows_exact(arr):
@@ -148,7 +137,7 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k: (query_id, id, cosine, rank).  The query side is
     broadcast — the corpus is scanned once, no shuffle of corpus rows."""
-    c = with_normalized(_spread(corpus), vec_col).select(
+    c = with_normalized(_spread(corpus)[0], vec_col).select(
         F.col(id_col).alias("id"), F.col("vec_n").alias("cv")
     )
     q = with_normalized(queries, vec_col).select(
@@ -188,7 +177,7 @@ def cosine_near_dup_pairs(
     < 1 for pairs far below cosine ~1, so verify-stage thresholds near 1
     keep recall high — see the planted-recall gate).
     """
-    c = with_normalized(_spread(corpus), vec_col).select(
+    c = with_normalized(_spread(corpus)[0], vec_col).select(
         F.col(id_col).alias("id"), F.col("vec_n").alias("v")
     )
     if method == "exact":
@@ -288,7 +277,7 @@ def semantic_dedup(
             corpus, id_col, vec_col, n_centroids, iters=iters, seed=seed
         )
     c = (
-        with_normalized(_spread(corpus), vec_col)
+        with_normalized(_spread(corpus)[0], vec_col)
         .select(F.col(id_col).alias("id"), F.col("vec_n").alias("v"))
         .filter(F.col("v").isNotNull())
     )
@@ -382,7 +371,7 @@ def ivf_train_centroids(
         F.md5(F.concat(F.lit(f"ivf{seed}|"), F.col(id_col).cast("string"))), 1, 16
     )
     rows = (
-        with_normalized(_spread(corpus), vec_col)
+        with_normalized(_spread(corpus)[0], vec_col)
         .select(F.col("vec_n"), h.alias("__h"))
         .filter(F.col("vec_n").isNotNull())
         .orderBy("__h")
@@ -488,7 +477,7 @@ def ivf_topk(
     # NULL embeddings carry no position — drop them before the matmul UDF
     # (the brute-force path would score them as NULL cosine anyway)
     c = (
-        with_normalized(_spread(corpus), vec_col)
+        with_normalized(_spread(corpus)[0], vec_col)
         .select(F.col(id_col).alias("id"), F.col("vec_n").alias("cv"))
         .filter(F.col("cv").isNotNull())
     )
@@ -540,7 +529,7 @@ def ivf_cell_stats(
     or retrain with more centroids."""
     spark = corpus.sparkSession
     c = (
-        with_normalized(_spread(corpus), vec_col)
+        with_normalized(_spread(corpus)[0], vec_col)
         .select(F.col(id_col).alias("id"), F.col("vec_n").alias("cv"))
         .filter(F.col("cv").isNotNull())
     )
@@ -629,7 +618,7 @@ def lsh_topk(
     ~2^n_planes per table vs brute force."""
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
-    c = with_normalized(_spread(corpus), vec_col).select(
+    c = with_normalized(_spread(corpus)[0], vec_col).select(
         F.col(id_col).alias("id"), F.col("vec_n").alias("cv")
     )
     q = with_normalized(queries, vec_col).select(
@@ -689,7 +678,7 @@ def pq_train_codebooks(
         F.md5(F.concat(F.lit(f"pq{seed}|"), F.col(id_col).cast("string"))), 1, 16
     )
     rows = (
-        with_normalized(_spread(corpus), vec_col)
+        with_normalized(_spread(corpus)[0], vec_col)
         .select(F.col("vec_n"), h.alias("__h"))
         .filter(F.col("vec_n").isNotNull())
         .orderBy("__h")
@@ -916,7 +905,7 @@ def ivfpq_topk(
         codebooks = pq_train_codebooks(corpus, id_col, vec_col, m_subspaces, n_codes)
     # corpus side: one pass computes the cell AND the codes
     c = (
-        with_normalized(_spread(corpus), vec_col)
+        with_normalized(_spread(corpus)[0], vec_col)
         .select(F.col(id_col).alias("id"), F.col("vec_n").alias("cv"))
         .filter(F.col("cv").isNotNull())
     )

@@ -253,3 +253,32 @@ class TestOneShapeGuard:
         assert sizing.search(ast.get_source_segment(src, make))
         assert src.count("pandas_udf(") == 1
         assert src.count("_sum_bucket_estimates(") == 1
+
+    def test_one_partition_update(self):
+        """Every per-partition sketch update (flat, grouped, profile,
+        checkpoint) is ``agg._partition_update``: its ``_absorb`` is the one
+        ``update_arrow`` site beside the streaming state-store function,
+        which updates one stored state per group per trigger."""
+        from poppy_spark.spark import agg
+
+        assert not hasattr(agg, "_update_fn")
+        assert not any("_update_fn" in p.read_text() for p in SPARK_DIR.glob("*.py"))
+        assert _call_sites("update_arrow") == [
+            "agg.py:_absorb",
+            "streaming.py:stateful_grouped_sketch.fn",
+        ]
+        # the grouped ``rows`` shape passes ``_absorb`` to ``fold_groups``
+        assert _call_sites("_absorb") == ["agg.py:_partition_update"]
+        assert _call_sites("_partition_update") == [
+            "agg.py:_update_states.update",
+            "checkpoint.py:SketchCheckpoint.build.update",
+        ]
+        assert _call_sites("batch_context") == [
+            "agg.py:_partition_update",
+            "agg.py:build_sketch_grouped.keyed_view",
+        ]
+
+    def test_one_spread_guard(self):
+        """One helper spreads low-split inputs over the cores and reads the
+        partition count; verbs take the count from it."""
+        assert _call_sites("getNumPartitions") == ["agg.py:_spread"]

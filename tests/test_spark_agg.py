@@ -449,17 +449,17 @@ class TestAutoStrategyHoisted:
         # n_rows on the sharded path counts deduped index tuples (diagnostic)
 
     def test_df_auto_picks_sharded_for_big_filter(self, spark):
-        from poppy_spark.spark.agg import _auto_strategy
+        from poppy_spark.spark.agg import _auto_strategy, _spread
 
         # at fpp=1e-3 a v2 state is ~1.8 B/key; tuples are ~(12+2k) B/key, so
         # states traffic passes 4x tuple traffic past ~72 partitions
         big = BloomSketch.create(50_000_000, 0.001)  # ~90 MB state
         small = BloomSketch.create(10_000, 0.001)
         df = spark.range(0, 1000).selectExpr("cast(id as string) as k").repartition(256)
-        assert _auto_strategy(big, df, None) == "sharded"
-        assert _auto_strategy(small, df, None) == "states"
+        assert _auto_strategy(big, _spread(df)[1]) == "sharded"
+        assert _auto_strategy(small, _spread(df)[1]) == "states"
         few = df.coalesce(4)
-        assert _auto_strategy(big, few, None) == "states"
+        assert _auto_strategy(big, _spread(few)[1]) == "states"
 
     def test_df_auto_end_to_end_loadable(self, spark, orders):
         from poppy_spark.spark.agg import build_sketch_df
