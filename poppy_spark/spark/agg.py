@@ -37,7 +37,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BinaryType, LongType, StructField, StructType
+from pyspark.sql.types import BinaryType, IntegerType, LongType, StructField, StructType
 
 from poppy_spark.sketches.base import Sketch
 
@@ -111,13 +111,9 @@ def _z_loads(cls: type, raw: bytes) -> Sketch:
     return cls.loads(decompress_blob(raw))
 
 
-_STATES_SCHEMA = StructType(
-    [
-        StructField("pid", LongType()),
-        StructField("state", BinaryType()),
-        StructField("n_rows", LongType()),
-    ]
-)
+#: the value columns of every state row: the state and the rows it holds
+_STATE_COLS = StructType([StructField("state", BinaryType()), StructField("n_rows", LongType())])
+_STATES_SCHEMA = StructType([StructField("pid", LongType()), *_STATE_COLS])
 
 #: stand-in for NaN in dict keys: Python's NaN != NaN, Spark groups NaNs as one
 _NAN = ("__nan__",)
@@ -162,11 +158,11 @@ def _key_runs(batches: Iterator[pa.RecordBatch], n_keys: int):
         yield b, np.append(_run_starts(keys, n), n), cont
 
 
-def _rows_to_batch(rows: list, arrow_schema: pa.Schema) -> pa.RecordBatch:
-    return pa.RecordBatch.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(zip(*rows), arrow_schema)],
-        schema=arrow_schema,
-    )
+def _rows_to_batch(rows: list, keys: pa.Schema, values: pa.Schema) -> pa.RecordBatch:
+    heads, vals = zip(*rows)
+    cols = [pa.concat_arrays([h[c] for h in heads]).cast(f.type) for c, f in enumerate(keys)]
+    cols += [pa.array(c, type=f.type) for c, f in zip(zip(*vals), values)]
+    return pa.RecordBatch.from_arrays(cols, schema=pa.schema([*keys, *values]))
 
 
 #: pending output of one task before it is yielded as a batch
@@ -174,19 +170,25 @@ _FLUSH_ROWS = 1024
 _FLUSH_BYTES = 64 << 20
 
 
-def _batches(rows: Iterator[tuple], arrow_schema: pa.Schema) -> Iterator[pa.RecordBatch]:
-    """Output rows as batches of at most ``_FLUSH_ROWS`` rows or about
-    ``_FLUSH_BYTES`` of binary values."""
+def _batches(
+    rows: Iterator[tuple[list, tuple]], keys: pa.Schema, values: pa.Schema
+) -> Iterator[pa.RecordBatch]:
+    """Output rows ``(key row, values)`` as batches laid out ``[*keys,
+    *values]``, of at most ``_FLUSH_ROWS`` rows or about ``_FLUSH_BYTES`` of
+    binary values.  A key row is one Arrow row per key column, copied from
+    the input and never converted to Python: it is cast to ``keys``' types,
+    which for a timestamp's zone changes metadata only, so a key keeps its
+    value in any session zone.  ``values`` are Python values."""
     out: list = []
     out_bytes = 0
     for row in rows:
         out.append(row)
-        out_bytes += sum(len(v) for v in row if isinstance(v, bytes))
+        out_bytes += sum(len(v) for v in row[1] if isinstance(v, bytes))
         if len(out) >= _FLUSH_ROWS or out_bytes >= _FLUSH_BYTES:
-            yield _rows_to_batch(out, arrow_schema)
+            yield _rows_to_batch(out, keys, values)
             out, out_bytes = [], 0
     if out:
-        yield _rows_to_batch(out, arrow_schema)
+        yield _rows_to_batch(out, keys, values)
 
 
 def _new_sketch(factory: Callable[[], Sketch], int_keys: str) -> Sketch:
@@ -214,30 +216,33 @@ def _partition_update(
     int_keys: str = "string",
     max_bytes: int | None = None,
     nulls: bool = True,
-) -> Iterator[tuple[tuple, int, Sketch, int]]:
+) -> Iterator[tuple[list, int, Sketch, int]]:
     """The one per-partition sketch update (poppy's "clone a filter per
     worker, insert") over a task's Arrow batches, laid out ``[*groups,
     key_1 ... key_N]``: spec ``i`` folds ``key_{i+1}`` into sketches from
     ``factories[i]``.  Per batch: sort by the ``n_groups`` group columns
     (none: no sort), find the runs of equal groups (:func:`_run_starts`)
-    and :func:`_absorb` each into its live (group, spec) sketch, keyed
+    and :func:`_absorb` each into its live (group, spec) sketch, looked up
     through :func:`_nan_key`.  A one-run batch goes through
     ``update_arrow`` whole; several runs share one ``batch_context``.  A
     NULL key is a value (counted in ``n_rows``); ``nulls=False`` drops it.
 
-    Yields ``(group values, spec, sketch, n_rows)`` for every live state at
+    Yields ``(group row, spec, sketch, n_rows)`` for every live state at
     the end, and after a batch when more than one state is live and their
     count x one state's ``memory_bound_bytes`` passes ``max_bytes`` (the
-    flushed states are dropped: downstream merges per group).  With no
-    groups a task yields one state per spec even when it saw no rows."""
+    flushed states are dropped: downstream merges per group).  The group
+    row is the state's first group row as one Arrow row per group column,
+    taken from the batch that made the state: one copied row per live
+    state, never a Python value.  With no groups a task yields one state
+    per spec even when it saw no rows."""
     live: dict = {}
     if not n_groups:
-        live.update((((), i), [_new_sketch(f, int_keys), 0, ()]) for i, f in enumerate(factories))
+        live.update((((), i), [_new_sketch(f, int_keys), 0, []]) for i, f in enumerate(factories))
     est = 0  # one state's memory bound; bounds grow with data (TopK keys)
 
     def flush():
-        for (_, i), (sk, n, vals) in live.items():
-            yield vals, i, sk, n
+        for (_, i), (sk, n, row) in live.items():
+            yield row, i, sk, n
         live.clear()
 
     for b in batches:
@@ -255,15 +260,21 @@ def _partition_update(
             if not n:
                 continue
             bounds = np.append(_run_starts(cols[:-1], n), n)
-            heads = [c.take(bounds[:-1]).to_pylist() for c in cols[:-1]]
-            ctx = None
-            for j, vals in enumerate(zip(*heads) if n_groups else [()]):
-                key = (tuple(_nan_key(v) for v in vals), i)
+            vals = zip(*[c.take(bounds[:-1]).to_pylist() for c in cols[:-1]]) if n_groups else [()]
+            ents, made = [], []  # made: the runs that start a new state
+            for j, v in enumerate(vals):
+                key = (tuple(_nan_key(x) for x in v), i)
                 ent = live.get(key)
                 if ent is None:
-                    ent = live[key] = [_new_sketch(factory, int_keys), 0, vals]
-                if j == 0 and len(bounds) > 2:
-                    ctx = ent[0].batch_context(cols[-1])
+                    ent = live[key] = [_new_sketch(factory, int_keys), 0, None]
+                    made.append(j)
+                ents.append(ent)
+            # one copied group row per new state (the batch is never pinned)
+            heads = [c.take(bounds[made]) for c in cols[:-1]] if made else []
+            for m, j in enumerate(made):
+                ents[j][2] = [h.slice(m, 1) for h in heads]
+            ctx = ents[0][0].batch_context(cols[-1]) if len(ents) > 1 else None
+            for j, ent in enumerate(ents):
                 _absorb(ent, (cols[-1], ctx), int(bounds[j]), int(bounds[j + 1]))
         if max_bytes is not None and len(live) > 1:
             est = max(est, next(iter(live.values()))[0].memory_bound_bytes())
@@ -276,18 +287,22 @@ def _update_states(
     df: DataFrame,
     n_groups: int,
     factories: Sequence[Callable[[], Sketch]],
-    schema: StructType,
-    row: Callable[[int, tuple, int, bytes, int], tuple],
     int_keys: str = "string",
     max_bytes: int | None = None,
     nulls: bool = True,
 ) -> DataFrame:
-    """One ``mapInArrow`` of :func:`_partition_update` over ``df``: each
-    yielded state becomes the ``schema`` row ``row(partition id, group
-    values, spec, lz4 state, n_rows)``."""
+    """One ``mapInArrow`` of :func:`_partition_update` over ``df``: one row
+    per yielded state, laid out ``[*groups, __spec, __pid, state,
+    n_rows]`` (the group columns as :func:`_partition_update` carries them,
+    the spec index, the partition id, the lz4 state and ``n_rows``).
+    Callers select what they need."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    arrow_schema = to_arrow_schema(schema)
+    groups = StructType(df.schema.fields[:n_groups])
+    values = StructType(
+        [StructField("__spec", IntegerType()), StructField("__pid", LongType()), *_STATE_COLS]
+    )
+    keys_arrow, values_arrow = to_arrow_schema(groups), to_arrow_schema(values)
 
     def update(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
@@ -296,10 +311,11 @@ def _update_states(
         pid = tc.partitionId() if tc is not None else 0
         states = _partition_update(batches, n_groups, factories, int_keys, max_bytes, nulls)
         yield from _batches(
-            (row(pid, vals, i, _z_dumps(sk), n) for vals, i, sk, n in states), arrow_schema
+            ((row, (i, pid, _z_dumps(sk), n)) for row, i, sk, n in states),
+            keys_arrow, values_arrow,
         )
 
-    return df.mapInArrow(update, schema)
+    return df.mapInArrow(update, StructType([*groups, *values]))
 
 
 def fold_groups(
@@ -311,7 +327,8 @@ def fold_groups(
     emit: Callable[[tuple, Any], tuple | None],
     prepare: Callable[[pa.RecordBatch], Any] | None = None,
 ) -> DataFrame:
-    """Fold the rows that share ``keys`` into one output row per group.
+    """Fold the rows that share ``keys`` into one output row per group,
+    laid out ``[*keys, *schema]``.
 
     The one shape of every grouped state merge: ``repartition(*keys)``,
     ``sortWithinPartitions(*keys)``, then ONE ``mapInArrow`` pass that finds
@@ -326,11 +343,16 @@ def fold_groups(
     Per group: ``acc = start(key)`` once, ``add(acc, view, lo, hi)`` once
     per batch slice ``[lo, hi)`` (a run spanning a batch boundary continues
     into the next batch; ``view = prepare(batch)``, default the batch with
-    the key columns first), then ``emit(key, acc)`` returns one output row
-    in ``schema`` order (a ``StructType`` or DDL string) or ``None``.
-    ``key`` holds the group's values as Python objects; NULL equals NULL
-    and NaN equals NaN, as Spark groups them.  No ``keys`` folds everything
-    into one group in one task.
+    the key columns first), then ``emit(key, acc)`` returns the group's
+    ``schema`` values (a ``StructType`` or DDL string naming only the value
+    columns) or ``None`` to drop the group.  ``key`` holds the group's
+    values as Python objects, for ``start`` to read; the output's key
+    columns never pass through them: they are the run's head row, copied
+    with ``take`` (with the batch's other run heads, so pending output
+    never pins an input batch) from the batch where the run started and
+    cast to ``df``'s key types, so a key keeps its value in any session
+    zone.  NULL equals NULL and NaN equals NaN, as Spark groups them.  No
+    ``keys`` folds everything into one group in one task.
 
     Merge order within a group is shuffle arrival order, exactly as
     ``applyInPandas``' was: every sketch either merges order-invariantly
@@ -343,32 +365,36 @@ def fold_groups(
     n_keys = len(keys)
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    arrow_schema = to_arrow_schema(schema)
+    key_fields = StructType([df.schema[k] for k in keys])
+    keys_arrow, values_arrow = to_arrow_schema(key_fields), to_arrow_schema(schema)
     rest = [c for c in df.columns if c not in keys]
     df = df.select(*keys, *rest)
     df = df.repartition(*keys).sortWithinPartitions(*keys) if keys else df.repartition(1)
 
     def groups(batches: Iterator[pa.RecordBatch]):
-        """``(key, acc)`` of each group once all its rows were added."""
-        key = acc = None
+        """``(key, head row, acc)`` of each group once all its rows were
+        added."""
+        key = row = acc = None
         for b, bounds, cont in _key_runs(batches, n_keys):
             view = prepare(b) if prepare is not None else b
-            heads = [b.column(i).take(bounds[:-1]).to_pylist() for i in range(n_keys)]
+            heads = [b.column(i).take(bounds[:-1]) for i in range(n_keys)]
+            vals = [h.to_pylist() for h in heads]
             for j in range(len(bounds) - 1):
                 if j or not cont:
-                    if key is not None:
-                        yield key, acc
-                    key = tuple(h[j] for h in heads)
+                    if row is not None:
+                        yield key, row, acc
+                    key = tuple(v[j] for v in vals)
+                    row = [h.slice(j, 1) for h in heads]
                     acc = start(key)
                 add(acc, view, int(bounds[j]), int(bounds[j + 1]))
-        if key is not None:
-            yield key, acc
+        if row is not None:
+            yield key, row, acc
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        rows = (emit(key, acc) for key, acc in groups(batches))
-        return _batches((r for r in rows if r is not None), arrow_schema)
+        rows = ((row, emit(key, acc)) for key, row, acc in groups(batches))
+        return _batches(((r, v) for r, v in rows if v is not None), keys_arrow, values_arrow)
 
-    return df.mapInArrow(fold, schema)
+    return df.mapInArrow(fold, StructType([*key_fields, *schema]))
 
 
 class _StateMerge:
@@ -594,7 +620,7 @@ def _reassemble_states_df(sb) -> DataFrame:
     p = sb.params
 
     def assemble(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        n_rows = []
+        n_rows = [0]
 
         def rows():
             for b in batches:
@@ -602,14 +628,15 @@ def _reassemble_states_df(sb) -> DataFrame:
                 yield from zip(b.column("shard_id").to_pylist(), b.column("state").to_pylist())
 
         # a BloomSketch state IS the poppy v2 file, so the assembled filter's
-        # bytes are directly loadable by the sketch class downstream
+        # bytes are directly loadable by the sketch class downstream; no
+        # shard rows (an empty input) assemble the empty filter, as the
+        # states strategy's merge of fresh sketches does
         raw = _v2_file(p, rows())
-        if n_rows:  # no shard rows: no state row, as a fold over nothing
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([0], pa.int64()), pa.array([raw], pa.binary()),
-                 pa.array([sum(n_rows)], pa.int64())],
-                ["pid", "state", "n_rows"],
-            )
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([0], pa.int64()), pa.array([raw], pa.binary()),
+             pa.array([sum(n_rows)], pa.int64())],
+            ["pid", "state", "n_rows"],
+        )
 
     states = sb.states.select("shard_id", "state", "n_rows").repartition(1)
     return states.mapInArrow(assemble, _STATES_SCHEMA)
@@ -661,9 +688,8 @@ def _build_flat(df, col, factory, repartition, merge_fanout, int_keys, strategy)
         return sk0, build_sharded_bloom(
             df, col, filt.capacity, filt.fpp, persist=False, int_keys=int_keys
         )
-    states = _update_states(
-        keyed, 0, [factory], _STATES_SCHEMA, lambda pid, vals, i, z, n: (pid, z, n), int_keys
-    )
+    states = _update_states(keyed, 0, [factory], int_keys)
+    states = states.select(F.col("__pid").alias("pid"), "state", "n_rows")
     return sk0, _merge_tree(states, type(sk0), n_parts, merge_fanout)
 
 
@@ -688,19 +714,15 @@ def _merge_tree(states: DataFrame, cls: type, n_parts: int, merge_fanout: int) -
         states = fold_groups(
             states.withColumn("pid", F.col("pid") % F.lit(n_parts)),
             ["pid"],
-            _STATES_SCHEMA,
+            _STATE_COLS,
             start,
             _StateMerge.add,
-            lambda key, m: (key[0], _z_dumps(m.sk), m.n_rows),
+            lambda key, m: (_z_dumps(m.sk), m.n_rows),
         )
-    return fold_groups(
-        states,
-        [],
-        _STATES_SCHEMA,
-        start,
-        _StateMerge.add,
-        lambda key, m: (0, m.final_state(), m.n_rows),
+    merged = fold_groups(
+        states, [], _STATE_COLS, start, _StateMerge.add, lambda key, m: (m.final_state(), m.n_rows)
     )
+    return merged.select(F.lit(0).cast("long").alias("pid"), "state", "n_rows")
 
 
 def build_sketch(
@@ -735,14 +757,6 @@ def build_sketch(
         # state row through build_sketch_df's executor-side assembly
         raw = built.to_poppy_bytes(max_bytes=8 << 30)
     return type(sk0).loads(bytes(raw))
-
-
-def _grouped_schema(df: DataFrame, group_cols: Sequence[str]) -> StructType:
-    fields = [df.schema[c] for c in group_cols]
-    return StructType(
-        list(fields)
-        + [StructField("state", BinaryType()), StructField("n_rows", LongType())]
-    )
 
 
 def build_sketch_grouped(
@@ -800,7 +814,6 @@ def build_sketch_grouped(
     sk0 = factory()
     key = _key_expr(df, col, sk0, int_keys).alias("__key__")
     sel, _ = _spread(df.select(*group_cols, key), repartition)
-    out_schema = _grouped_schema(df, group_cols)
     cls = type(sk0)
 
     if shuffle == "rows":
@@ -816,24 +829,21 @@ def build_sketch_grouped(
 
         def emit_final(key: tuple, ent: list) -> tuple:
             ent[0].finalize_merge()
-            return (*key, ent[0].dumps(), ent[1])
+            return ent[0].dumps(), ent[1]
 
         return fold_groups(
-            sel, group_cols, out_schema,
+            sel, group_cols, _STATE_COLS,
             lambda key: [_new_sketch(factory, int_keys), 0], _absorb, emit_final,
             prepare=keyed_view,
         )
 
     # Phase 1: partial states per (partition, group); phase 2 merges them
     # per group in one fold pass.
-    partials = _update_states(
-        sel, len(group_cols), [factory], out_schema,
-        lambda pid, vals, i, z, n: (*vals, z, n), int_keys, max_task_state_bytes,
-    )
+    partials = _update_states(sel, len(group_cols), [factory], int_keys, max_task_state_bytes)
     return fold_groups(
-        partials, group_cols, out_schema,
+        partials.select(*group_cols, "state", "n_rows"), group_cols, _STATE_COLS,
         lambda key: _StateMerge(cls), _StateMerge.add,
-        lambda key, m: (*key, m.final_state(), m.n_rows),
+        lambda key, m: (m.final_state(), m.n_rows),
     )
 
 

@@ -2,8 +2,8 @@
 
 The distributed shape of poppy's ``check`` command (load filter once, share
 read-only across workers, stream entries — ``poppy/src/bin/poppy.rs:337-410``):
-``SparkContext.broadcast`` ships the state once per executor; a vectorized
-``pandas_udf`` gathers the k bits per Arrow batch.  No shuffle at all — the
+``SparkContext.broadcast`` ships the state once per executor; an Arrow
+UDF gathers the k bits per Arrow batch.  No shuffle at all — the
 probe is a narrow transformation, usable as an approximate semi-/anti-join
 predicate.
 """
@@ -11,11 +11,10 @@ predicate.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from poppy_spark.core import BloomFilter
 from poppy_spark.sketches.base import _INT_MODE
@@ -142,6 +141,38 @@ def bloom_anti_join(df: DataFrame, col: str, filt: BloomFilter | bytes) -> DataF
     return bloom_contains(df, col, filt, "__hit__").filter(~F.col("__hit__")).drop("__hit__")
 
 
+def _union_state(f: BloomFilter | None, state: bytes) -> BloomFilter:
+    """``f`` OR the filter ``state`` holds (``f=None``: that filter): the
+    state rows of one group fold together."""
+    from poppy_spark.core import loads
+
+    g = loads(bytes(state))
+    if f is not None:
+        g.union_merge(f)
+    return g
+
+
+def _prepare_keys(route: list) -> list:
+    """A batch's probe keys packed once: ``[mat, lens, routing]``, the
+    routing filled by the first v2 filter :func:`_test_keys` meets."""
+    from poppy_spark.core.hashkern import pack_arrow
+
+    return [*pack_arrow(route[0]), None]
+
+
+def _test_keys(f: BloomFilter, view: list, lo: int, hi: int) -> np.ndarray:
+    """Membership of keys ``[lo, hi)`` of a :func:`_prepare_keys` view in
+    ``f``.  The batch is routed ONCE (same-params filters share hashing)
+    and each group's slice tests against its own filter: ~7x cheaper than
+    a full pack+hash+test per group."""
+    mat, lens, routed = view
+    if routed is None and getattr(f, "version", None) == 2:
+        routed = view[2] = (f, *f.route_packed(mat, lens))
+    if routed is not None and routed[0].has_same_params(f):
+        return f.contains_routed(routed[1][lo:hi], routed[2][lo:hi], routed[3][lo:hi])
+    return f.contains_packed(mat[lo:hi], lens[lo:hi])
+
+
 def bloom_contains_grouped(
     df: DataFrame,
     col: str,
@@ -153,9 +184,15 @@ def bloom_contains_grouped(
     """Probe each row against *its group's* filter.
 
     ``states_df`` is the output of ``build_sketch_grouped`` restricted to one
-    group column: ``(group, state binary, ...)``.  The whole state dict is
-    broadcast, so the probe stays a narrow, shuffle-free transformation; rows
-    whose group has no filter probe False.
+    group column: ``(group, state binary, ...)``.  The states are collected
+    once as Arrow and broadcast, so the probe stays a narrow, shuffle-free
+    transformation.  Each batch finds its rows' groups with one
+    ``index_in`` over the broadcast group column, both sides in the type
+    the grouped join's union coerces them to; NULL equals NULL, NaN equals
+    NaN and a timestamp matches in any session zone, as the grouped join's
+    shuffle matches them.  It then probes each group's rows against that
+    group's filter, the batch routed once.  Several state rows of one
+    group OR together; rows whose group has no filter probe False.
 
     This shape is right ONLY for low-cardinality groups (role / tool / day
     buckets — at most ``max_groups`` of them): the states must collectively
@@ -165,46 +202,59 @@ def bloom_contains_grouped(
     .sharded`) instead, which shuffle states once each rather than
     broadcasting them everywhere.
     """
+    import pyarrow.compute as pc
+
     from poppy_spark.spark.agg import _as_key
 
     spark = df.sparkSession
     gname = states_df.columns[0] if group_col not in states_df.columns else group_col
+    # both sides' groups in the type the grouped join's union matches them in
+    gtype = df.select(group_col).unionByName(
+        states_df.select(F.col(gname).alias(group_col))
+    ).schema[0].dataType
     # at most max_groups + 1 states reach the driver: past the guard, the
     # rest are never pulled
-    rows = states_df.select(gname, "state").limit(max_groups + 1).collect()
-    if len(rows) > max_groups:
+    table = states_df.select(F.col(gname).cast(gtype), "state").limit(max_groups + 1).toArrow()
+    if table.num_rows > max_groups:
         raise ValueError(
             f"bloom_contains_grouped: more than max_groups={max_groups} group "
             "states; group-by key cardinality is too high for a broadcast "
             "probe — use a shuffle join on the states "
             "DataFrame or poppy_spark.spark.sharded instead"
         )
-    states = {r[gname]: bytes(r["state"]) for r in rows}
-    bc = spark.sparkContext.broadcast(states)
+    bc = spark.sparkContext.broadcast(table)
     cache_key = f"bloom-grouped-{_broadcast_id(bc)}"
 
-    @pandas_udf("boolean")
-    def contains(groups: pd.Series, keys: pd.Series) -> pd.Series:
-        from poppy_spark.core import loads
-        from poppy_spark.core.hashkern import pack_arrow
+    def filters() -> tuple:
+        """``(group values, one filter per group value)``, duplicate groups'
+        states OR'd into their first row's filter."""
+        ent = _cache_get(cache_key)
+        if ent is None:
+            groups = bc.value.column(0).combine_chunks()
+            first = pc.index_in(groups, value_set=groups, skip_nulls=False).to_numpy()
+            fs: list = [None] * len(groups)
+            for i, state in enumerate(bc.value.column(1).to_pylist()):
+                fs[first[i]] = _union_state(fs[first[i]], state)
+            ent = (groups, fs)
+            _cache_put(cache_key, ent)
+        return ent
 
-        filters = _cache_get(cache_key)
-        if filters is None:
-            filters = {g: loads(raw) for g, raw in bc.value.items()}
-            _cache_put(cache_key, filters)
-        out = np.zeros(len(keys), dtype=bool)
-        karr = pa.Array.from_pandas(keys)
-        mat, lens = pack_arrow(karr)
-        gvals = groups.to_numpy()
-        for g in pd.unique(groups):
-            f = filters.get(g)
-            if f is None:
-                continue
-            sel = np.flatnonzero(gvals == g)
-            out[sel] = f.contains_packed(mat[sel], lens[sel])
-        return pd.Series(out)
+    @arrow_udf("boolean")
+    def contains(groups: pa.Array, keys: pa.Array) -> pa.Array:
+        value_set, fs = filters()
+        slot = pc.index_in(groups, value_set=value_set, skip_nulls=False).fill_null(-1)
+        slot = slot.to_numpy()
+        order = np.argsort(slot, kind="stable")  # each group's rows contiguous
+        runs = slot[order]
+        starts = np.flatnonzero(np.diff(runs, prepend=-2))
+        view = _prepare_keys([keys.take(order)])
+        out = np.zeros(len(slot), dtype=bool)
+        for lo, hi in zip(starts, [*starts[1:], len(slot)]):
+            if runs[lo] >= 0:
+                out[order[lo:hi]] = _test_keys(fs[runs[lo]], view, int(lo), int(hi))
+        return pa.array(out)
 
-    return df.withColumn(output_col, contains(F.col(group_col), _as_key(df, col)))
+    return df.withColumn(output_col, contains(F.col(group_col).cast(gtype), _as_key(df, col)))
 
 
 def bloom_contains_grouped_join(
@@ -241,31 +291,7 @@ def bloom_contains_grouped_join(
     kcol = col if textual and col != group_col else "__key"
     rows = df if kcol == col else df.select("*", _as_key(df, col).alias("__key"))
     states = states_df.select(F.col(gname).alias(group_col), "state")
-
-    def add(f: BloomFilter | None, state: bytes) -> BloomFilter:
-        from poppy_spark.core import loads
-
-        g = loads(bytes(state))
-        if f is not None:
-            g.union_merge(f)
-        return g
-
-    def prepare(route: list) -> list:
-        from poppy_spark.core.hashkern import pack_arrow
-
-        return [*pack_arrow(route[0]), None]  # mat, lens, lazy routing
-
-    def test(f: BloomFilter, view: list, lo: int, hi: int) -> np.ndarray:
-        mat, lens, routed = view
-        # route the batch ONCE (same-params filters share hashing) and
-        # test each group's slice against its own filter: ~7x cheaper than
-        # a full pack+hash+test per group
-        if routed is None and getattr(f, "version", None) == 2:
-            routed = view[2] = (f, *f.route_packed(mat, lens))
-        if routed is not None and routed[0].has_same_params(f):
-            return f.contains_routed(routed[1][lo:hi], routed[2][lo:hi], routed[3][lo:hi])
-        return f.contains_packed(mat[lo:hi], lens[lo:hi])
-
     return probe_runs(
-        rows, states, [group_col], [kcol], df.columns, output_col, add, prepare, test
+        rows, states, [group_col], [kcol], df.columns, output_col,
+        _union_state, _prepare_keys, _test_keys,
     )

@@ -4,7 +4,7 @@
 single ``mapInArrow`` scan — the package's one per-partition update
 (``agg._partition_update``) with N specs and no group columns, dropping
 each column's NULLs — so profiling N columns costs one pass over the data
-plus one tiny (name-keyed) state merge, not N passes.  ``profile_table``
+plus one tiny (spec-keyed) state merge, not N passes.  ``profile_table``
 layers the standard data-quality report on top: exact row/null counts and
 min/max from one JVM aggregate (a second shuffle-free scan), plus HLL
 distinct estimates and KLL quantiles from the sketch pass.  Two scans
@@ -32,10 +32,12 @@ def build_sketches_multi(
     dropped per column before the update (each sketch sees that column's
     non-null values), and the returned dict carries ``(sketch,
     non_null_count)`` per name.  Physical shape: one mapInArrow scan
-    emitting one (name, state) row per (partition, spec); the merge groups
-    by name — states are KBs, so the collect is O(specs).
+    emitting one state row per (partition, spec); the merge groups by spec
+    — states are KBs, so the collect is O(specs).
     """
-    from poppy_spark.spark.agg import _StateMerge, _key_expr, _update_states, fold_groups
+    from poppy_spark.spark.agg import (
+        _STATE_COLS, _StateMerge, _key_expr, _update_states, fold_groups,
+    )
 
     names = list(specs)
     if not names:
@@ -53,20 +55,14 @@ def build_sketches_multi(
             for name, (col, _) in specs.items()
         ]
     )
-    schema = T.StructType.fromDDL("name string, state binary, n_rows long")
-    states = _update_states(
-        sel, 0, [specs[n][1] for n in names], schema,
-        lambda pid, vals, i, z, n: (names[i], z, n), int_keys, nulls=False,
-    )
+    states = _update_states(sel, 0, [specs[n][1] for n in names], int_keys, nulls=False)
     merged = fold_groups(
-        states, ["name"], schema,
-        lambda key: _StateMerge(classes[key[0]]), _StateMerge.add,
-        lambda key, m: (key[0], m.final_state(), m.n_rows),
+        states.select("__spec", "state", "n_rows"), ["__spec"], _STATE_COLS,
+        lambda key: _StateMerge(classes[names[key[0]]]), _StateMerge.add,
+        lambda key, m: (m.final_state(), m.n_rows),
     )
-    return {
-        r["name"]: (classes[r["name"]].loads(bytes(r["state"])), int(r["n_rows"]))
-        for r in merged.collect()
-    }
+    rows = ((names[r["__spec"]], r) for r in merged.collect())
+    return {n: (classes[n].loads(bytes(r["state"])), int(r["n_rows"])) for n, r in rows}
 
 
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,

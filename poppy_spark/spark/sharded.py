@@ -60,6 +60,7 @@ import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from poppy_spark.core import statekern
 from poppy_spark.core.params import MergeError, cap_from_bit_size, k as k_fn
 from poppy_spark.core.statekern import BUCKET_BITS, BUCKET_SIZE
 from poppy_spark.sketches.base import _INT_MODE
@@ -153,30 +154,6 @@ def _binary_to_idx(arr, k: int) -> np.ndarray:
     return flat.view("<u2").reshape(n, k)
 
 
-def _bit_parts(
-    ib_local: np.ndarray, idx: np.ndarray, nbytes: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """(byte_off, bitmask) for a shard-local (ibucket, idx) batch; uint32
-    index math when the shard state is < 512 MB (always true at the default
-    shard sizing) — half the memory traffic of the u64 formulation."""
-    from poppy_spark.core import statekern
-
-    if nbytes < statekern.U32_BYTES_LIMIT:
-        flat = (
-            (ib_local.astype(np.uint32) * np.uint32(BUCKET_BITS))[:, None]
-            + idx.astype(np.uint32)
-        ).reshape(-1)
-        return flat >> np.uint32(3), np.uint8(1) << (flat & np.uint32(7)).astype(
-            np.uint8
-        )
-    bit_ids = (
-        ib_local.astype(np.uint64) * np.uint64(BUCKET_BITS)
-    )[:, None] + idx.astype(np.uint64)
-    flat = bit_ids.reshape(-1)
-    byte_off = (flat >> np.uint64(3)).astype(np.int64)
-    return byte_off, (np.uint8(1) << (flat & np.uint64(7)).astype(np.uint8))
-
-
 def _shard_probe(
     df: DataFrame,
     col: str,
@@ -236,8 +213,7 @@ def _shard_probe(
         return route[0].to_numpy(zero_copy_only=False), _binary_to_idx(route[1], k)
 
     def test(bits: np.ndarray, view: tuple, lo: int, hi: int) -> np.ndarray:
-        byte_off, bitmask = _bit_parts(view[0][lo:hi], view[1][lo:hi], bits.size)
-        return ((bits[byte_off] & bitmask) != 0).reshape(-1, k).all(axis=1)
+        return statekern.v2_contains_batch(bits, None, view[0][lo:hi], view[1][lo:hi], None, 1)
 
     return probe_runs(
         rows,
@@ -252,25 +228,11 @@ def _shard_probe(
     )
 
 
-def _or_bits_into(buckets: np.ndarray, ib_local: np.ndarray, idx: np.ndarray) -> None:
-    # no dedup sort: the bitwise_or.at scatter makes duplicate bit ids
-    # harmless — and the sort was the phase-2 scaling bottleneck (this
-    # host's memory subsystem saturates on large sorts well before 8-way
-    # concurrency)
-    byte_off, bitmask = _bit_parts(ib_local, idx, buckets.size)
-    np.bitwise_or.at(buckets, byte_off, bitmask)
-
-
-def _state_schema(gfields: list) -> T.StructType:
-    """``(group?, shard_id, state, n_rows)``: one state row per touched shard."""
-    return T.StructType([*gfields, *_STATE_SCHEMA.fields])
-
-
-def _shard_row(key: tuple, bits: np.ndarray, n_rows: int) -> tuple:
-    """One folded ``(group?, shard_id, state, n_rows)`` output row."""
+def _shard_row(bits: np.ndarray, n_rows: int) -> tuple:
+    """One folded shard's ``(state, n_rows)`` values."""
     from poppy_spark.spark.agg import compress_blob
 
-    return (*key, compress_blob(bits.tobytes()), n_rows)
+    return compress_blob(bits.tobytes()), n_rows
 
 
 def _v2_file(p: _Params, rows) -> bytes:
@@ -396,7 +358,7 @@ class ShardedBloom:
         the implicit all-zero shard) is dropped, and ``n_rows`` is reset to
         0 (insert counts do not survive an AND; every estimate recomputes
         from the bits); otherwise ``n_rows`` sums."""
-        from poppy_spark.spark.agg import decompress_blob, fold_groups
+        from poppy_spark.spark.agg import _STATE_COLS, decompress_blob, fold_groups
 
         both = self.states.withColumn("__src", F.lit(0))
         if other is not None:
@@ -426,16 +388,10 @@ class ShardedBloom:
                     return None
                 np.bitwise_and(bits, other_bits, out=bits)
                 n_rows = 0
-            return _shard_row(key, bits, n_rows)
+            return _shard_row(bits, n_rows)
 
-        gfields = [self.states.schema[g] for g in self._groups]
         states = fold_groups(
-            both,
-            [*self._groups, "shard_id"],
-            _state_schema(gfields),
-            lambda key: [None, None, 0],
-            add,
-            emit,
+            both, [*self._groups, "shard_id"], _STATE_COLS, lambda key: [None, None, 0], add, emit
         )
         return ShardedBloom(self.params, states, self.group_col)
 
@@ -795,7 +751,7 @@ def _build(
     ``agg.fold_groups``, OR-ing them into one shard's buckets, so task
     memory is one shard plus one Arrow batch at any capacity or group
     count.  ``n_rows`` counts the tuples that reached the fold."""
-    from poppy_spark.spark.agg import _as_key, _spread, fold_groups
+    from poppy_spark.spark.agg import _STATE_COLS, _as_key, _spread, fold_groups
 
     groups = [group_col] if group_col else []
     gfields = [df.schema[g] for g in groups]
@@ -827,21 +783,17 @@ def _build(
         return [np.zeros(p.shard_buckets(shard) * BUCKET_SIZE, dtype=np.uint8), 0, shard * bps]
 
     def add(acc: list, view: tuple, lo: int, hi: int) -> None:
+        # no dedup sort: the OR scatter makes duplicate bit ids harmless
         ib, idx = view
-        _or_bits_into(acc[0], ib[lo:hi] - acc[2], idx[lo:hi])
+        statekern.v2_or_batch(acc[0], None, ib[lo:hi] - acc[2], idx[lo:hi], None)
         acc[1] += hi - lo
 
     def prepare(b: pa.RecordBatch) -> tuple:
         return b.column("ib").to_numpy(zero_copy_only=False), _binary_to_idx(b.column("idx"), k)
 
     states = fold_groups(
-        tuples,
-        [*groups, "shard_id"],
-        _state_schema(gfields),
-        start,
-        add,
-        lambda key, acc: _shard_row(key, acc[0], acc[1]),
-        prepare,
+        tuples, [*groups, "shard_id"], _STATE_COLS, start, add,
+        lambda key, acc: _shard_row(acc[0], acc[1]), prepare,
     )
     if persist:
         states = states.persist()

@@ -133,16 +133,13 @@ def merge_grouped_states(
 
     cls = type(factory())
     names = [c for c in spark_df.columns if c in (*group_cols, "state", "n_rows")]
-    schema = StructType([spark_df.schema[c] for c in names])
-
-    def emit(key: tuple, m: _StateMerge) -> tuple:
-        row = dict(zip(group_cols, key), state=m.final_state(), n_rows=m.n_rows)
-        return tuple(row[c] for c in names)
-
-    return fold_groups(
-        spark_df.select(*names), group_cols, schema,
-        lambda key: _StateMerge(cls), _StateMerge.add, emit,
+    merged = fold_groups(
+        spark_df.select(*names), group_cols,
+        StructType([spark_df.schema["state"], spark_df.schema["n_rows"]]),
+        lambda key: _StateMerge(cls), _StateMerge.add,
+        lambda key, m: (m.final_state(), m.n_rows),
     )
+    return merged.select(*names)
 
 
 def stateful_grouped_sketch(

@@ -455,16 +455,3 @@ class TestU32U64BranchParity:
         monkeypatch.setattr(statekern, "U32_BYTES_LIMIT", 0)  # force u64 path
         forced = self._run_all()
         assert forced == base
-
-    def test_sharded_bit_parts_u64_branch(self, monkeypatch):
-        from poppy_spark.core import statekern
-        from poppy_spark.spark.sharded import _bit_parts
-
-        rng = np.random.default_rng(11)
-        ib = rng.integers(0, 50, 4000).astype(np.int64)
-        idx = rng.integers(0, 32768, (4000, 9)).astype(np.uint16)
-        off32, mask32 = _bit_parts(ib, idx, 50 * 4096)
-        monkeypatch.setattr(statekern, "U32_BYTES_LIMIT", 0)
-        off64, mask64 = _bit_parts(ib, idx, 50 * 4096)
-        assert np.array_equal(np.asarray(off32, dtype=np.int64), off64)
-        assert np.array_equal(mask32, mask64)

@@ -13,7 +13,6 @@ import pyarrow.compute as pc
 import pytest
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from poppy_spark.spark.agg import _run_starts, fold_groups
 
@@ -39,13 +38,14 @@ def _count_fold(df, keys, keep=lambda n: True):
         acc[2] += 1
 
     def emit(key, acc):
-        return (*key, *acc) if keep(acc[0]) else None
+        return tuple(acc) if keep(acc[0]) else None
 
-    schema = T.StructType(
-        [df.schema[k] for k in keys]
-        + [T.StructField(c, T.LongType()) for c in ("n", "total", "slices")]
-    )
-    return fold_groups(df, keys, schema, lambda key: [0, 0, 0], add, emit)
+    schema = "n long, total long, slices long"
+    folded = fold_groups(df, keys, schema, lambda key: [0, 0, 0], add, emit)
+    # the key columns come first, with the frame's types
+    assert folded.schema.fields[: len(keys)] == [df.schema[k] for k in keys]
+    assert folded.columns[len(keys) :] == ["n", "total", "slices"]
+    return folded
 
 
 def _norm(v):
@@ -277,6 +277,29 @@ class TestOneShapeGuard:
             "agg.py:_partition_update",
             "agg.py:build_sketch_grouped.keyed_view",
         ]
+
+    def test_one_state_layout(self):
+        """Group keys stay in Arrow: ``_update_states`` emits one fixed
+        layout (no per-caller ``schema``/``row`` pair), no verb rebuilds a
+        grouped output schema, the broadcast grouped probe is an Arrow UDF,
+        and shard bits are addressed only through ``core/statekern.py``."""
+        import inspect
+
+        from poppy_spark.spark import agg, sharded
+
+        params = inspect.signature(agg._update_states).parameters
+        assert "row" not in params and "schema" not in params
+        assert not hasattr(agg, "_grouped_schema")
+        for name in ("_state_schema", "_bit_parts", "_or_bits_into"):
+            assert not hasattr(sharded, name), name
+        pkg = SPARK_DIR.parent
+        readers = [
+            p.relative_to(pkg).as_posix()
+            for p in sorted(pkg.rglob("*.py"))
+            if "U32_BYTES_LIMIT" in p.read_text()
+        ]
+        assert readers == ["core/statekern.py"]
+        assert "pandas_udf(" not in (SPARK_DIR / "probe.py").read_text()
 
     def test_one_spread_guard(self):
         """One helper spreads low-split inputs over the cores and reads the

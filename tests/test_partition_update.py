@@ -56,6 +56,19 @@ class TestEdgeSemantics:
             assert ck.build(empty, "k").dumps() == _fresh(HLL)
             assert ck.metrics()["total_rows"] == 0
 
+    def test_empty_input_every_strategy(self, spark, parts):
+        """An empty input gives one state row under every flat strategy:
+        the empty filter, byte-equal across them and to ``build_sketch``."""
+        empty = _frame(spark, [], parts)
+        rows = {}
+        for s in ("states", "sharded", "auto"):
+            built = build_sketch_df(empty, "k", BLOOM, strategy=s).collect()
+            rows[s] = [(r["n_rows"], bytes(r["state"])) for r in built]
+        assert rows["states"] == [(0, _fresh(BLOOM))]
+        assert rows["sharded"] == rows["auto"] == rows["states"]
+        for s in rows:
+            assert build_sketch(empty, "k", BLOOM, strategy=s).dumps() == _fresh(BLOOM)
+
     def test_null_keys_are_values(self, spark, parts, tmp_path):
         """In the build verbs a NULL key counts in ``n_rows`` and hashes
         like any other key; the profile drops NULLs per column."""
@@ -92,7 +105,7 @@ class TestFlushRule:
         assert len(list(_partition_update(iter(two), 1, [fac]))) == 2
 
     def test_one_group_emits_one_partial_per_partition(self, spark):
-        from poppy_spark.spark.agg import _grouped_schema, _update_states
+        from poppy_spark.spark.agg import _update_states
 
         key = "spark.sql.execution.arrow.maxRecordsPerBatch"
         prev = spark.conf.get(key)
@@ -102,10 +115,7 @@ class TestFlushRule:
                 F.lit(7).alias("g"), F.format_string("key-%08d", "id").alias("k")
             )
             fac = HllSketch.factory(12)
-            partials = _update_states(
-                df, 1, [fac], _grouped_schema(df, ["g"]),
-                lambda pid, vals, i, z, n: (*vals, z, n), max_bytes=1,
-            )
+            partials = _update_states(df, 1, [fac], max_bytes=1)
             assert partials.count() == 4
             a = build_sketch_grouped(df, "k", ["g"], fac).collect()
             b = build_sketch_grouped(df, "k", ["g"], fac, max_task_state_bytes=1).collect()
@@ -143,7 +153,7 @@ def test_fixed_size_bound_never_serializes(monkeypatch, factory, bound):
     assert sk.memory_bound_bytes() == bound(sk)
     two = [_batch([1, 2, 1], ["a", "b", "c"])] * 3
     out = list(_partition_update(iter(two), 1, [factory], max_bytes=1))
-    assert [(vals, n) for vals, _, _, n in out] == [((1,), 2), ((2,), 1)] * 3
+    assert [([g.as_py() for (g,) in row], n) for row, _, _, n in out] == [([1], 2), ([2], 1)] * 3
 
 
 def _max_stage_tasks(spark, run):

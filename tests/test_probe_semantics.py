@@ -171,6 +171,55 @@ def test_grouped_probes_agree(grouped_probes, probe_df):
         assert _rows(grouped_probes[name](probe_df)) == want, name
 
 
+@pytest.mark.parametrize("name", ["grouped_sharded", "grouped_join", "grouped_broadcast"])
+def test_grouped_probe_double_groups(spark, name):
+    """A ``double`` group holding NULL and NaN: each of them matches its own
+    state, as Spark groups them (NULL = NULL, NaN = NaN), in every
+    per-group probe; a group never built probes all-False."""
+    from poppy_spark.sketches import BloomSketch
+    from poppy_spark.spark.agg import build_sketch_grouped
+    from poppy_spark.spark.probe import bloom_contains_grouped, bloom_contains_grouped_join
+    from poppy_spark.spark.sharded import build_sharded_bloom_grouped
+
+    nan = float("nan")
+    built = [(g, f"member-{n}-{i:05d}") for n, g in enumerate([1.5, nan, None]) for i in range(40)]
+    build = spark.createDataFrame(built, "g double, k string").repartition(3)
+    probe = spark.createDataFrame(built + [(2.5, "member-0-00001")], "g double, k string")
+    probes = {
+        "grouped_sharded": lambda: build_sharded_bloom_grouped(
+            build, "k", "g", capacity=CAPACITY, fpp=FPP, n_shards=2
+        ).contains(probe, "k", "hit"),
+        "grouped_join": lambda: bloom_contains_grouped_join(probe, "k", "g", states, "hit"),
+        "grouped_broadcast": lambda: bloom_contains_grouped(probe, "k", "g", states, "hit"),
+    }
+    states = build_sketch_grouped(build, "k", ["g"], BloomSketch.factory(CAPACITY, FPP))
+    rows = probes[name]().collect()
+    assert len(rows) == len(built) + 1
+    missed = [(r["g"], r["k"]) for r in rows if r["g"] != 2.5 and not r["hit"]]
+    assert missed == []
+    assert [r["hit"] for r in rows if r["g"] == 2.5] == [False]
+
+
+def test_grouped_probes_coerce_group_types(spark):
+    """States grouped by an integer column, probed with the same groups as
+    strings: the broadcast probe matches groups in the type the grouped
+    join's union coerces both sides to, and so answers as the join does."""
+    from pyspark.sql import functions as F
+
+    from poppy_spark.sketches import BloomSketch
+    from poppy_spark.spark.agg import build_sketch_grouped
+    from poppy_spark.spark.probe import bloom_contains_grouped, bloom_contains_grouped_join
+
+    df = spark.range(0, 90).select(
+        (F.col("id") % 3).alias("g"), F.format_string("member-%05d", "id").alias("k")
+    )
+    states = build_sketch_grouped(df, "k", ["g"], BloomSketch.factory(CAPACITY, FPP))
+    probe = df.withColumn("g", F.col("g").cast("string"))
+    want = _rows(bloom_contains_grouped_join(probe, "k", "g", states, "hit"))
+    assert all(r[-1] for r in want)
+    assert _rows(bloom_contains_grouped(probe, "k", "g", states, "hit")) == want
+
+
 def test_grouped_broadcast_guard(spark, build_df, probe_df):
     """Past ``max_groups`` the broadcast probe refuses: it pulls at most
     ``max_groups + 1`` states to find out."""
