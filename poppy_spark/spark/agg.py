@@ -160,7 +160,19 @@ def _key_runs(batches: Iterator[pa.RecordBatch], n_keys: int):
 
 def _rows_to_batch(rows: list, keys: pa.Schema, values: pa.Schema) -> pa.RecordBatch:
     heads, vals = zip(*rows)
-    cols = [pa.concat_arrays([h[c] for h in heads]).cast(f.type) for c, f in enumerate(keys)]
+    # a key row ``(hs, j)`` is row j of one batch's taken run heads ``hs``:
+    # concatenate each distinct ``hs`` once, then one take per key column
+    blocks: dict = {}  # id(hs) -> (hs, its first row in the concatenation)
+    n = 0
+    for hs, _ in heads:
+        if id(hs) not in blocks:
+            blocks[id(hs)] = (hs, n)
+            n += len(hs[0]) if hs else 0
+    idx = np.fromiter((blocks[id(hs)][1] + j for hs, j in heads), np.int64, len(heads))
+    cols = [
+        pa.concat_arrays([hs[c] for hs, _ in blocks.values()]).take(idx).cast(f.type)
+        for c, f in enumerate(keys)
+    ]
     cols += [pa.array(c, type=f.type) for c, f in zip(zip(*vals), values)]
     return pa.RecordBatch.from_arrays(cols, schema=pa.schema([*keys, *values]))
 
@@ -175,10 +187,12 @@ def _batches(
 ) -> Iterator[pa.RecordBatch]:
     """Output rows ``(key row, values)`` as batches laid out ``[*keys,
     *values]``, of at most ``_FLUSH_ROWS`` rows or about ``_FLUSH_BYTES`` of
-    binary values.  A key row is one Arrow row per key column, copied from
-    the input and never converted to Python: it is cast to ``keys``' types,
-    which for a timestamp's zone changes metadata only, so a key keeps its
-    value in any session zone.  ``values`` are Python values."""
+    binary values.  A key row is ``(heads, j)``: row ``j`` of ``heads``,
+    one Arrow array per key column copied from the input with ``take`` (so
+    a pending row never pins an input batch) and never converted to
+    Python.  It is cast to ``keys``' types, which for a timestamp's zone
+    changes metadata only, so a key keeps its value in any session zone.
+    ``values`` are Python values."""
     out: list = []
     out_bytes = 0
     for row in rows:
@@ -231,13 +245,12 @@ def _partition_update(
     the end, and after a batch when more than one state is live and their
     count x one state's ``memory_bound_bytes`` passes ``max_bytes`` (the
     flushed states are dropped: downstream merges per group).  The group
-    row is the state's first group row as one Arrow row per group column,
-    taken from the batch that made the state: one copied row per live
-    state, never a Python value.  With no groups a task yields one state
-    per spec even when it saw no rows."""
+    row is the state's first group row as a :func:`_batches` key row,
+    taken from the batch that made the state, never a Python value.  With
+    no groups a task yields one state per spec even when it saw no rows."""
     live: dict = {}
     if not n_groups:
-        live.update((((), i), [_new_sketch(f, int_keys), 0, []]) for i, f in enumerate(factories))
+        live.update((((), i), [_new_sketch(f, int_keys), 0, ([], 0)]) for i, f in enumerate(factories))
     est = 0  # one state's memory bound; bounds grow with data (TopK keys)
 
     def flush():
@@ -269,10 +282,10 @@ def _partition_update(
                     ent = live[key] = [_new_sketch(factory, int_keys), 0, None]
                     made.append(j)
                 ents.append(ent)
-            # one copied group row per new state (the batch is never pinned)
+            # the new states' group rows, copied (the batch is never pinned)
             heads = [c.take(bounds[made]) for c in cols[:-1]] if made else []
             for m, j in enumerate(made):
-                ents[j][2] = [h.slice(m, 1) for h in heads]
+                ents[j][2] = (heads, m)
             ctx = ents[0][0].batch_context(cols[-1]) if len(ents) > 1 else None
             for j, ent in enumerate(ents):
                 _absorb(ent, (cols[-1], ctx), int(bounds[j]), int(bounds[j + 1]))
@@ -322,9 +335,9 @@ def fold_groups(
     df: DataFrame,
     keys: Sequence[str],
     schema: StructType | str,
-    start: Callable[[tuple], Any],
+    start: Callable[[tuple[list, int]], Any],
     add: Callable[[Any, Any, int, int], None],
-    emit: Callable[[tuple, Any], tuple | None],
+    emit: Callable[[Any], tuple | None],
     prepare: Callable[[pa.RecordBatch], Any] | None = None,
 ) -> DataFrame:
     """Fold the rows that share ``keys`` into one output row per group,
@@ -340,19 +353,19 @@ def fold_groups(
     in one frame.  Here task memory is one accumulator plus one batch (and
     at most ``_FLUSH_ROWS`` rows / ``_FLUSH_BYTES`` of pending output).
 
-    Per group: ``acc = start(key)`` once, ``add(acc, view, lo, hi)`` once
+    Per group: ``acc = start(head)`` once, ``add(acc, view, lo, hi)`` once
     per batch slice ``[lo, hi)`` (a run spanning a batch boundary continues
     into the next batch; ``view = prepare(batch)``, default the batch with
-    the key columns first), then ``emit(key, acc)`` returns the group's
+    the key columns first), then ``emit(acc)`` returns the group's
     ``schema`` values (a ``StructType`` or DDL string naming only the value
-    columns) or ``None`` to drop the group.  ``key`` holds the group's
-    values as Python objects, for ``start`` to read; the output's key
-    columns never pass through them: they are the run's head row, copied
-    with ``take`` (with the batch's other run heads, so pending output
-    never pins an input batch) from the batch where the run started and
-    cast to ``df``'s key types, so a key keeps its value in any session
-    zone.  NULL equals NULL and NaN equals NaN, as Spark groups them.  No
-    ``keys`` folds everything into one group in one task.
+    columns) or ``None`` to drop the group.  ``head = (heads, j)`` is the
+    run's head row in Arrow: ``heads[c][j]`` is key column ``c``'s value,
+    ``heads`` copied with ``take`` from the batch where the run started
+    (with the batch's other run heads, so pending output never pins an
+    input batch).  The output's key columns are those rows, taken once per
+    flush and cast to ``df``'s key types, so a key keeps its value in any
+    session zone.  NULL equals NULL and NaN equals NaN, as Spark groups
+    them.  No ``keys`` folds everything into one group in one task.
 
     Merge order within a group is shuffle arrival order, exactly as
     ``applyInPandas``' was: every sketch either merges order-invariantly
@@ -372,27 +385,24 @@ def fold_groups(
     df = df.repartition(*keys).sortWithinPartitions(*keys) if keys else df.repartition(1)
 
     def groups(batches: Iterator[pa.RecordBatch]):
-        """``(key, head row, acc)`` of each group once all its rows were
-        added."""
-        key = row = acc = None
+        """``(head row, acc)`` of each group once all its rows were added."""
+        head = acc = None
         for b, bounds, cont in _key_runs(batches, n_keys):
             view = prepare(b) if prepare is not None else b
             heads = [b.column(i).take(bounds[:-1]) for i in range(n_keys)]
-            vals = [h.to_pylist() for h in heads]
             for j in range(len(bounds) - 1):
                 if j or not cont:
-                    if row is not None:
-                        yield key, row, acc
-                    key = tuple(v[j] for v in vals)
-                    row = [h.slice(j, 1) for h in heads]
-                    acc = start(key)
+                    if head is not None:
+                        yield head, acc
+                    head = (heads, j)
+                    acc = start(head)
                 add(acc, view, int(bounds[j]), int(bounds[j + 1]))
-        if row is not None:
-            yield key, row, acc
+        if head is not None:
+            yield head, acc
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        rows = ((row, emit(key, acc)) for key, row, acc in groups(batches))
-        return _batches(((r, v) for r, v in rows if v is not None), keys_arrow, values_arrow)
+        rows = ((head, emit(acc)) for head, acc in groups(batches))
+        return _batches(((h, v) for h, v in rows if v is not None), keys_arrow, values_arrow)
 
     return df.mapInArrow(fold, StructType([*key_fields, *schema]))
 
@@ -595,8 +605,7 @@ def _auto_strategy(sk0: Sketch, n_parts: int) -> str:
         or int(getattr(filt._inner, "opt", 1)) != 0
     ):
         return "states"
-    state_bytes = filt.size_in_bytes
-    state_bytes = state_bytes() if callable(state_bytes) else state_bytes
+    state_bytes = filt.size_in_bytes()
     if state_bytes < (8 << 20):
         # below ~8 MB the byte model is noise: the sharded pipeline's two
         # extra shuffle stages cost more than shipping small states ever can
@@ -706,7 +715,7 @@ def merge_states_tree(
 
 
 def _merge_tree(states: DataFrame, cls: type, n_parts: int, merge_fanout: int) -> DataFrame:
-    def start(key):
+    def start(head):
         return _StateMerge(cls)
 
     while n_parts > merge_fanout:
@@ -717,10 +726,10 @@ def _merge_tree(states: DataFrame, cls: type, n_parts: int, merge_fanout: int) -
             _STATE_COLS,
             start,
             _StateMerge.add,
-            lambda key, m: (_z_dumps(m.sk), m.n_rows),
+            lambda m: (_z_dumps(m.sk), m.n_rows),
         )
     merged = fold_groups(
-        states, [], _STATE_COLS, start, _StateMerge.add, lambda key, m: (m.final_state(), m.n_rows)
+        states, [], _STATE_COLS, start, _StateMerge.add, lambda m: (m.final_state(), m.n_rows)
     )
     return merged.select(F.lit(0).cast("long").alias("pid"), "state", "n_rows")
 
@@ -827,13 +836,13 @@ def build_sketch_grouped(
             key_col = b.column(len(group_cols))
             return key_col, template[0].batch_context(key_col)
 
-        def emit_final(key: tuple, ent: list) -> tuple:
+        def emit_final(ent: list) -> tuple:
             ent[0].finalize_merge()
             return ent[0].dumps(), ent[1]
 
         return fold_groups(
             sel, group_cols, _STATE_COLS,
-            lambda key: [_new_sketch(factory, int_keys), 0], _absorb, emit_final,
+            lambda head: [_new_sketch(factory, int_keys), 0], _absorb, emit_final,
             prepare=keyed_view,
         )
 
@@ -842,8 +851,8 @@ def build_sketch_grouped(
     partials = _update_states(sel, len(group_cols), [factory], int_keys, max_task_state_bytes)
     return fold_groups(
         partials.select(*group_cols, "state", "n_rows"), group_cols, _STATE_COLS,
-        lambda key: _StateMerge(cls), _StateMerge.add,
-        lambda key, m: (m.final_state(), m.n_rows),
+        lambda head: _StateMerge(cls), _StateMerge.add,
+        lambda m: (m.final_state(), m.n_rows),
     )
 
 

@@ -224,14 +224,9 @@ class SketchCheckpoint:
                     "state_file": f"part-{r['pid']:05d}.state",
                     "updated_at": t,
                 }
-            if snap is not None:
-                manifest["input_snapshot"] = snap
-            self._save_manifest(manifest)
-        elif snap is not None and manifest.get("input_snapshot") != snap:
-            # content fingerprints proved nothing changed despite a listing
-            # delta (e.g. a rewrite with identical keys): refresh the
-            # snapshot so the NEXT files-mode resume is zero-scan again
-            manifest["input_snapshot"] = snap
+            # the old snapshot no longer matches final.state; the new one is
+            # recorded only once final.state holds this input
+            manifest.pop("input_snapshot", None)
             self._save_manifest(manifest)
 
         # merge all checkpointed partitions executor-side: load each state
@@ -268,8 +263,16 @@ class SketchCheckpoint:
             states = fdf.mapInArrow(load, _STATES_SCHEMA)
             row = _merge_tree(states, cls, len(files), 8).collect()[0]
             merged = cls.loads(bytes(row["state"]))
-        with open(os.path.join(self.dir, "final.state"), "wb") as f:
+        tmp = final_path + ".tmp"
+        with open(tmp, "wb") as f:
             f.write(merged.dumps())
+        os.replace(tmp, final_path)
+        if snap is not None and manifest.get("input_snapshot") != snap:
+            # final.state now holds this input (also after a listing delta
+            # that content fingerprints proved harmless, e.g. a rewrite with
+            # identical keys): the NEXT files-mode resume is zero-scan
+            manifest["input_snapshot"] = snap
+            self._save_manifest(manifest)
         return merged
 
     def metrics(self) -> dict:

@@ -46,11 +46,9 @@ def contamination_flags(
     word ``k``-grams appear in ``eval_df``.  Documents producing no
     shingles (empty text) get ``n_shingles = n_hits = 0``.
     """
-    # persist: the distinct eval shingle set feeds the sizing count AND the
-    # filter build — without the cache the eval explode runs twice.  Eval
-    # sets are small next to the training corpus by contract (module
-    # docstring); left to LRU like the dedup candidate caches.
-    ev = shingle_hashes(eval_df, text_col, id_col, k).select("sh").distinct().persist()
+    # the eval explode runs twice (sizing count, filter build): eval sets
+    # are small next to the training corpus by contract (module docstring)
+    ev = shingle_hashes(eval_df, text_col, id_col, k).select("sh").distinct()
     n_grams = ev.count()
     filt = build_sketch(
         ev, "sh", BloomSketch.factory(max(n_grams, 1), fpp), int_keys="le8"
@@ -144,16 +142,9 @@ def remove_contaminated_spans(
     from poppy_spark.spark.spans import _span_tuples
 
     out = output_col or text_col
-    # persist: the distinct eval span set is referenced up to three times
-    # (prefilter sizing count, filter build, exact join) — each reference
-    # would re-run the eval explode.  Small by the eval-set contract;
-    # LRU-managed like the other bounded caches in this family.
-    ev = (
-        _span_tuples(eval_df, text_col, F.lit(0), span_words, stride)
-        .select("__key")
-        .distinct()
-        .persist()
-    )
+    # the distinct eval span set is read up to three times (prefilter sizing
+    # count, filter build, exact join); small by the eval-set contract
+    ev = _span_tuples(eval_df, text_col, F.lit(0), span_words, stride).select("__key").distinct()
     spans = _span_tuples(train_df, text_col, id_col, span_words, stride)
     if prefilter:
         n_ev = ev.count()

@@ -229,10 +229,11 @@ def exact_ngram_jaccard(
     pair (a semi-join against the pair ids): at corpus scale candidates are
     a vanishing fraction of documents, so verify cost tracks the candidate
     set, not the corpus.  Candidate pairs sharing no shingle are omitted
-    (their Jaccard is 0, so they cannot pass any positive threshold), which
-    keeps the plan's references to ``pairs`` minimal — callers reusing the
-    same ``pairs`` DataFrame should persist it (``near_duplicate_pairs``
-    does)."""
+    (their Jaccard is 0, so they cannot pass any positive threshold).  The
+    plan reads the shingle set three times (sizes and both sides of the
+    common-shingle join) and ``pairs`` twice; each read ends in the same
+    ``distinct`` exchange, which Spark's exchange reuse runs once, so
+    nothing is cached."""
     cand_ids = (
         pairs.select(F.col("id_a").alias("id"))
         .unionAll(pairs.select(F.col("id_b").alias("id")))
@@ -245,13 +246,7 @@ def exact_ngram_jaccard(
         id_col,
         "left_semi",
     )
-    # persist: the shingle set is referenced THREE times below (sizes + both
-    # sides of the common-shingle join), and each reference would otherwise
-    # re-run the whole candidate-doc subtree (scan -> dedup -> quality ->
-    # semi-join -> shingles -> distinct).  Bounded by the candidate set;
-    # left to LRU eviction like ``near_duplicate_pairs``' candidate cache
-    # (no safe unpersist point before the caller's action).
-    sh = shingle_hashes(cdf, text_col, id_col, k).distinct().persist()
+    sh = shingle_hashes(cdf, text_col, id_col, k).distinct()
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
     # count common shingles per pair via join on shingle hash
     a = sh.select(F.col("id").alias("id_a"), "sh")
@@ -290,10 +285,7 @@ def near_duplicate_pairs(
     ``threshold``.  Zero false negatives among exact duplicates (identical
     texts share every band bucket), up to the ``max_bucket_size`` skew cap."""
     sigs = minhash_signatures(df, text_col, id_col, n_perms, k)
-    # persist candidates: the verify stage references them from two sides
-    # (pair ids + the common-shingle join) and recomputing the signature +
-    # LSH subtree per reference would dominate the pipeline
-    cands = lsh_candidate_pairs(sigs, bands, n_perms // bands, max_bucket_size).persist()
+    cands = lsh_candidate_pairs(sigs, bands, n_perms // bands, max_bucket_size)
     verified = exact_ngram_jaccard(df, text_col, id_col, cands, k)
     return verified.filter(F.col("jaccard") >= threshold)
 
@@ -429,38 +421,40 @@ def duplicate_components(
         .distinct()
         .persist()
     )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-    )
-    for it in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges["src"] == labels["id"])
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("component").alias("__nbr"))
+    try:
+        labels = (
+            edges.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("component", F.col("id"))
         )
-        new_labels = (
-            labels.join(neighbor_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("__nbr"), F.col("component"))
-                ).alias("component"),
+        for it in range(max_iter):
+            neighbor_min = (
+                edges.join(labels, edges["src"] == labels["id"])
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min("component").alias("__nbr"))
             )
-        )
-        if it % 4 == 3:
-            new_labels = new_labels.localCheckpoint()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
+            new_labels = (
+                labels.join(neighbor_min, "id", "left")
+                .select(
+                    "id",
+                    F.least(
+                        F.col("component"), F.coalesce(F.col("__nbr"), F.col("component"))
+                    ).alias("component"),
+                )
+            )
+            if it % 4 == 3:
+                new_labels = new_labels.localCheckpoint()
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "id")
+                .filter(F.col("n.component") != F.col("o.component"))
+                .count()
+            )
+            labels = new_labels
+            if changed == 0:
+                break
+    finally:
+        edges.unpersist()
     return labels
 
 

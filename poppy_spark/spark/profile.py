@@ -56,10 +56,14 @@ def build_sketches_multi(
         ]
     )
     states = _update_states(sel, 0, [specs[n][1] for n in names], int_keys, nulls=False)
+
+    def start(head):
+        heads, j = head
+        return _StateMerge(classes[names[heads[0][j].as_py()]])
+
     merged = fold_groups(
         states.select("__spec", "state", "n_rows"), ["__spec"], _STATE_COLS,
-        lambda key: _StateMerge(classes[names[key[0]]]), _StateMerge.add,
-        lambda key, m: (m.final_state(), m.n_rows),
+        start, _StateMerge.add, lambda m: (m.final_state(), m.n_rows),
     )
     rows = ((names[r["__spec"]], r) for r in merged.collect())
     return {n: (classes[n].loads(bytes(r["state"])), int(r["n_rows"])) for n, r in rows}

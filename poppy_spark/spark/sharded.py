@@ -381,7 +381,7 @@ class ShardedBloom:
                     np.bitwise_or(acc[s], v, out=acc[s])
             acc[2] += pc.sum(rows.column("n_rows").slice(lo, hi - lo)).as_py() or 0
 
-        def emit(key: tuple, acc: list):
+        def emit(acc: list):
             bits, other_bits, n_rows = acc
             if sided:
                 if bits is None or other_bits is None:
@@ -391,7 +391,7 @@ class ShardedBloom:
             return _shard_row(bits, n_rows)
 
         states = fold_groups(
-            both, [*self._groups, "shard_id"], _STATE_COLS, lambda key: [None, None, 0], add, emit
+            both, [*self._groups, "shard_id"], _STATE_COLS, lambda head: [None, None, 0], add, emit
         )
         return ShardedBloom(self.params, states, self.group_col)
 
@@ -778,8 +778,9 @@ def _build(
     tuples = keyed.mapInArrow(index_fn, route_schema)
     k, bps = p.n_hash_buck, p.bps
 
-    def start(key: tuple) -> list:
-        shard = key[-1]
+    def start(head: tuple) -> list:
+        heads, j = head
+        shard = heads[-1][j].as_py()
         return [np.zeros(p.shard_buckets(shard) * BUCKET_SIZE, dtype=np.uint8), 0, shard * bps]
 
     def add(acc: list, view: tuple, lo: int, hi: int) -> None:
@@ -793,7 +794,7 @@ def _build(
 
     states = fold_groups(
         tuples, [*groups, "shard_id"], _STATE_COLS, start, add,
-        lambda key, acc: _shard_row(acc[0], acc[1]), prepare,
+        lambda acc: _shard_row(acc[0], acc[1]), prepare,
     )
     if persist:
         states = states.persist()

@@ -181,12 +181,9 @@ def cosine_near_dup_pairs(
         F.col(id_col).alias("id"), F.col("vec_n").alias("v")
     )
     if method == "exact":
-        # the guard count is an eager job over the normalization pass;
-        # persist so the cross join below reuses it instead of recomputing
-        c = c.persist()
-        n = c.count()
+        # the guard counts rows, which needs no normalized vector
+        n = corpus.count()
         if n > max_rows:
-            c.unpersist()
             raise ValueError(
                 f"cosine_near_dup_pairs(method='exact') on {n} rows exceeds "
                 f"max_rows={max_rows} (an n^2/2 cross join); use "
@@ -260,15 +257,7 @@ def semantic_dedup(
     because near-identical vectors share a nearest centroid.  At 100 TB
     the only corpus-sized exchange is the cell-keyed shuffle feeding the
     per-cell scoring kernel, plus the component propagation over the
-    surviving edge list.
-
-    Storage note: each call persists the cell-assignment DataFrame (via
-    ``_thin_hot_cells`` — the size collect and the scoring kernel share
-    it) and ``duplicate_components`` persists the edge list; both are
-    released by Spark's LRU eviction rather than an explicit unpersist
-    (there is no safe point before the caller's action).  Callers running
-    ``semantic_dedup`` in a tight loop should expect executor-storage
-    pressure accordingly."""
+    surviving edge list."""
     from poppy_spark.spark.dedup import duplicate_components
 
     spark = corpus.sparkSession
@@ -331,7 +320,8 @@ def _cell_edges(cells: DataFrame, id_type, threshold: float) -> DataFrame:
                         for j in range(X.shape[1]):
                             S += np.outer(X[lo:hi, j], X[:, j])
                         ri, ci = np.nonzero(S >= threshold)
-                        keep = ci > (ri + lo)  # strict upper triangle: id_a < id_b
+                        # strict upper triangle of distinct ids: id_a < id_b
+                        keep = (ci > (ri + lo)) & (ids[ci] != ids[ri + lo])
                         out_a.extend(ids[ri[keep] + lo])
                         out_b.extend(ids[ci[keep]])
         return pd.DataFrame({"id_a": out_a, "id_b": out_b})
@@ -543,44 +533,26 @@ def ivf_cell_stats(
 
 def _thin_hot_cells(c_cells: DataFrame, max_cell_size: int) -> DataFrame:
     """Thin cells above ``max_cell_size`` to an expected ``max_cell_size``
-    surviving members via a deterministic content-hash filter.
-
-    Two tiny aggregates drive it: per-cell counts (<= n_centroids rows)
-    collected to the driver become a literal keep-fraction map, then a
-    codegen filter ``hash_frac(cell|id) < keep_frac`` drops the excess —
-    no shuffle of corpus rows, layout/retry-stable (content-hashed, like
-    ``sampling.hash_sample``).  Cells at or under the cap pass through
-    untouched.
-
-    The size collect is an eager job over the cell-assignment pass, so
-    ``c_cells`` is persisted first — the caller's action reuses the cached
-    assignment instead of re-running the matmul UDF (the most expensive
-    stage) a second time.  The cache is left for Spark's LRU eviction:
-    the returned plan still reads it, so there is no safe unpersist point
-    before the caller's action."""
-    c_cells = c_cells.persist()
-    sizes = {
-        r["cell"]: r["n"]
-        for r in c_cells.groupBy("cell").agg(F.count("*").alias("n")).collect()
-        if r["n"] > max_cell_size
-    }
-    if not sizes:
-        return c_cells
-    frac_map = F.create_map(
-        *[
-            F.lit(x)
-            for cell, n in sorted(sizes.items())
-            for x in (cell, float(max_cell_size) / float(n))
-        ]
-    )
+    surviving members via a deterministic content-hash filter: a row of a
+    cell of ``n`` rows survives when ``hash_frac(cell|id) < max_cell_size /
+    n``, layout/retry-stable (content-hashed, like
+    ``sampling.hash_sample``).  ``n`` is ``count(*) over (partition by
+    cell)``, so the rows reach the caller partitioned by ``cell``, which
+    :func:`semantic_dedup`'s per-cell scoring shuffles by anyway.  Cells
+    at or under the cap pass through untouched."""
+    n = F.count("*").over(Window.partitionBy("cell"))
     # first 8 md5 hex chars as a uniform [0, 1) fraction of 2^32
     h = F.conv(
         F.substring(F.md5(F.concat(F.col("cell").cast("string"), F.lit("|"), F.col("id").cast("string"))), 1, 8),
         16,
         10,
     ).cast("double") / F.lit(4294967296.0)
-    keep = frac_map[F.col("cell")]
-    return c_cells.filter(keep.isNull() | (h < keep))
+    keep = F.lit(float(max_cell_size)) / F.col("__n").cast("double")
+    return (
+        c_cells.withColumn("__n", n)
+        .filter((F.col("__n") <= max_cell_size) | (h < keep))
+        .drop("__n")
+    )
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 7_777_777) -> list[list[float]]:

@@ -24,6 +24,7 @@ probability ~1 - (1 - 1/stride)^(L - span_words + 1).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.window import Window
 
 from poppy_spark.spark.text import _words
 
@@ -142,45 +143,31 @@ def remove_repeated_spans(
     union their covered ranges; a doc whose every word is covered comes
     back as ``''``.
 
-    Physical shape mirrors ``line_dedup_corpus`` (``dedup.py:498``): the
-    span scan emits (digest, id, pos) tuples only; the occurrence-vs-
-    first filter is a digest-keyed equi-join whose right side holds ONE
-    row per repeated span (AQE broadcasts it when small; a boilerplate
-    span repeated 10^6 times is 10^6 tuple rows against 1 — skew-join
-    splittable because the right side is unique-keyed); removal starts
+    Physical shape: the span scan emits (digest, id, pos) tuples only and
+    is read once; one digest-keyed exchange feeds the windows that count
+    each span's distinct documents and find its first ``(id, pos)`` (a
+    boilerplate span repeated 10^6 times is one 10^6-row window partition,
+    which Spark's window buffer spills past its threshold); removal starts
     fold to one ``array<int>`` per doc; and the only exchange carrying
     text is the final doc-keyed equi-join (unique key, skew-free) with
     an in-place array filter.  ``stride`` thins detection AND removal by
     the same content rule, so they stay consistent under subsampling."""
     _check_span_args(span_words, stride)
     out = output_col or text_col
-    # ONE span scan shared by detection and removal: the former shape ran
-    # ``_span_tuples`` twice (once here, once inside ``repeated_spans``),
-    # i.e. two full tokenize+window+md5 passes over the corpus.  The
-    # detection aggregate is inlined over the SAME persisted tuple stream
-    # (bounded: 32-byte digests + two ints per window; left to LRU like the
-    # candidate caches in ``dedup`` — no safe unpersist point before the
-    # caller's action).
-    spans = _span_tuples(df, text_col, id_col, span_words, stride).persist()
-    per_doc = spans.groupBy("__key", "__id").agg(
-        F.count("*").alias("n_in_doc"), F.min("__pos").alias("min_pos")
-    )
-    rep = (
-        per_doc.groupBy("__key")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min(F.struct(F.col("__id"), F.col("min_pos"))).alias("f"),
-        )
-        .filter(F.col("n_docs") >= min_docs)
-        .select("__key", F.col("f.__id").alias("first_id"),
-                F.col("f.min_pos").alias("first_pos"))
-    )
+    # one digest-partitioned pass over the span tuples: the distinct-doc
+    # count and the first (id, pos) are windows over ``__key``, so the scan
+    # is read once and no aggregate joins back onto it
+    by_key = Window.partitionBy("__key")
+    first = F.min(F.struct("__id", "__pos")).over(by_key)
     starts = (
-        spans.join(rep, "__key")
+        _span_tuples(df, text_col, id_col, span_words, stride)
+        .withColumn("__rank", F.dense_rank().over(by_key.orderBy("__id")))
+        .select("__id", "__pos", F.max("__rank").over(by_key).alias("__n_docs"), first.alias("__f"))
         .filter(
-            ~(
-                (F.col("__id") == F.col("first_id"))
-                & (F.col("__pos") == F.col("first_pos"))
+            (F.col("__n_docs") >= min_docs)
+            & ~(
+                (F.col("__id") == F.col("__f.__id"))
+                & (F.col("__pos") == F.col("__f.__pos"))
             )
         )
         .groupBy("__id")

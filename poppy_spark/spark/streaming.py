@@ -52,10 +52,7 @@ class StreamingSketch:
         col: str = "value",
         max_state_bytes: int = 1 << 30,
     ):
-        sk0 = factory()
-        filt = getattr(sk0, "filter", None)
-        size = getattr(filt, "size_in_bytes", None)
-        est = (size() if callable(size) else size) if size is not None else len(sk0.dumps())
+        est = factory().memory_bound_bytes()
         if est > max_state_bytes:
             raise ValueError(
                 f"sketch state is ~{est} bytes; StreamingSketch folds the "
@@ -136,8 +133,8 @@ def merge_grouped_states(
     merged = fold_groups(
         spark_df.select(*names), group_cols,
         StructType([spark_df.schema["state"], spark_df.schema["n_rows"]]),
-        lambda key: _StateMerge(cls), _StateMerge.add,
-        lambda key, m: (m.final_state(), m.n_rows),
+        lambda head: _StateMerge(cls), _StateMerge.add,
+        lambda m: (m.final_state(), m.n_rows),
     )
     return merged.select(*names)
 
@@ -251,7 +248,7 @@ class BloomStreamDedup:
     ):
         # from the parameters: the filter's pages stay untouched, where
         # serializing it to measure would commit the whole state
-        est = factory().filter.size_in_bytes()
+        est = factory().memory_bound_bytes()
         if est > max_state_bytes:
             raise ValueError(
                 f"filter state is ~{est} bytes; BloomStreamDedup probes and "

@@ -318,6 +318,32 @@ class TestFilesFingerprint:
         sk = ck.build(spark.read.parquet(src), "k", fingerprint="files")
         assert sk.filter.contains_bytes("fk-023999")
 
+    def test_failed_merge_never_leaves_a_stale_sketch(self, spark, tmp_path, monkeypatch):
+        """The input snapshot is recorded only once ``final.state`` holds that
+        input: a build whose merge fails must not let the next files-mode
+        resume return the previous build's sketch."""
+        import poppy_spark.spark.agg as aggmod
+
+        src = str(tmp_path / "src4")
+        self._write_input(spark, src)
+        ck = SketchCheckpoint(str(tmp_path / "ck4"), BloomSketch.factory(40000, 0.001))
+        ck.build(spark.read.parquet(src), "k", fingerprint="files")
+        self._write_input(spark, src, n=24000, start=50000)
+
+        def boom(*a, **kw):
+            raise RuntimeError("merge failed")
+
+        with monkeypatch.context() as m:
+            m.setattr(aggmod, "_merge_tree", boom)
+            with pytest.raises(RuntimeError, match="merge failed"):
+                ck.build(spark.read.parquet(src), "k", fingerprint="files")
+        assert not any(f.endswith(".tmp") for f in os.listdir(str(tmp_path / "ck4")))
+        resumed = ck.build(spark.read.parquet(src), "k", fingerprint="files")
+        fresh = SketchCheckpoint(str(tmp_path / "ck4-fresh"), BloomSketch.factory(40000, 0.001))
+        assert resumed.dumps() == fresh.build(spark.read.parquet(src), "k").dumps()
+        again = ck.build(spark.read.parquet(src), "k", fingerprint="files")
+        assert again.dumps() == resumed.dumps()
+
     def test_in_memory_input_uses_content_mode(self, spark, tmp_path, keys_df):
         ck = SketchCheckpoint(str(tmp_path / "ck3"), BloomSketch.factory(20000, 0.001))
         sk = ck.build(keys_df, "k", fingerprint="files")  # no inputFiles

@@ -37,11 +37,11 @@ def _count_fold(df, keys, keep=lambda n: True):
         acc[1] += pc.sum(b.column("v").slice(lo, hi - lo)).as_py() or 0
         acc[2] += 1
 
-    def emit(key, acc):
+    def emit(acc):
         return tuple(acc) if keep(acc[0]) else None
 
     schema = "n long, total long, slices long"
-    folded = fold_groups(df, keys, schema, lambda key: [0, 0, 0], add, emit)
+    folded = fold_groups(df, keys, schema, lambda head: [0, 0, 0], add, emit)
     # the key columns come first, with the frame's types
     assert folded.schema.fields[: len(keys)] == [df.schema[k] for k in keys]
     assert folded.columns[len(keys) :] == ["n", "total", "slices"]
@@ -149,6 +149,24 @@ class TestFoldGroups:
         df = df.filter((F.col("g") != 0) | (F.col("v") < 10))  # group 0 has 2 rows
         folded = _count_fold(df, ["g"], keep=lambda n: n > 2)
         assert sorted(r["g"] for r in folded.collect()) == [1, 2, 3, 4]
+
+    def test_start_gets_the_arrow_head_row(self, small_batches):
+        """``start(head)``: ``head = (heads, j)``, the run's key values as
+        row ``j`` of Arrow arrays, one per key column."""
+        spark = small_batches
+        df = spark.range(0, 30).select(
+            F.format_string("g%d", F.col("id") % 4).alias("g"),
+            (F.col("id") % 2).alias("h"),
+            F.col("id").alias("v"),
+        )
+
+        def start(head):
+            heads, j = head
+            return f"{heads[0][j].as_py()}/{heads[1][j].as_py()}"
+
+        folded = fold_groups(df, ["g", "h"], "seen string", start, lambda *_: None, lambda acc: (acc,))
+        got = sorted((f"{r['g']}/{r['h']}", r["seen"]) for r in folded.collect())
+        assert got == [(k, k) for k in sorted(f"g{i}/{i % 2}" for i in range(4))]
 
 
 class _Sites(ast.NodeVisitor):
@@ -300,6 +318,41 @@ class TestOneShapeGuard:
         ]
         assert readers == ["core/statekern.py"]
         assert "pandas_udf(" not in (SPARK_DIR / "probe.py").read_text()
+
+    def test_cache_owners(self):
+        """Every cache a verb makes ends inside that verb (or with the
+        object it returns): ``.persist(`` only where an owner releases it,
+        the two scoped owners in a ``finally``.  Reused exchanges cover the
+        other re-reads (tests/test_verb_caches.py)."""
+        sites, trees = [], {}
+        for p in sorted(SPARK_DIR.glob("*.py")):
+            src = p.read_text()
+            assert ".cache()" not in src, p.name
+            v = _Sites("persist")
+            v.visit(trees.setdefault(p.name, ast.parse(src)))
+            assert src.count(".persist(") == len(v.sites), p.name
+            sites += [f"{p.name}:{s}" for s in v.sites]
+        assert sorted(sites) == [
+            "dedup.py:duplicate_components",
+            "sharded.py:_build",  # released by ShardedBloom.unpersist()
+            "streaming.py:BloomStreamDedup.__call__",
+        ]
+
+        def releases_in_finally(tree, *path):
+            node = tree
+            for name in path:
+                node = next(
+                    n for n in ast.walk(node)
+                    if isinstance(n, (ast.ClassDef, ast.FunctionDef)) and n.name == name
+                )
+            return any(
+                isinstance(c, ast.Call) and getattr(c.func, "attr", None) == "unpersist"
+                for t in ast.walk(node) if isinstance(t, ast.Try)
+                for stmt in t.finalbody for c in ast.walk(stmt)
+            )
+
+        assert releases_in_finally(trees["dedup.py"], "duplicate_components")
+        assert releases_in_finally(trees["streaming.py"], "BloomStreamDedup", "__call__")
 
     def test_one_spread_guard(self):
         """One helper spreads low-split inputs over the cores and reads the

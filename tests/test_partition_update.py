@@ -153,7 +153,8 @@ def test_fixed_size_bound_never_serializes(monkeypatch, factory, bound):
     assert sk.memory_bound_bytes() == bound(sk)
     two = [_batch([1, 2, 1], ["a", "b", "c"])] * 3
     out = list(_partition_update(iter(two), 1, [factory], max_bytes=1))
-    assert [([g.as_py() for (g,) in row], n) for row, _, _, n in out] == [([1], 2), ([2], 1)] * 3
+    got = [([h[j].as_py() for h in heads], n) for (heads, j), _, _, n in out]
+    assert got == [([1], 2), ([2], 1)] * 3
 
 
 def _max_stage_tasks(spark, run):

@@ -119,6 +119,24 @@ class TestCellEdgesKernel:
             assert new.exceptAll(old).count() == 0
             assert new.count() > 0 or thr > 0.99  # the planted pairs survive
 
+    def test_repeated_id_makes_no_self_edge(self, spark):
+        """A repeated id in one cell scores against itself (cosine 1), yet
+        every edge keeps ``id_a < id_b``: no ``(x, x)`` edge."""
+        from poppy_spark.spark.similarity import _cell_edges
+
+        rows = [
+            (0, 7, [1.0, 0.0]),
+            (0, 7, [1.0, 0.0]),  # same id, same vector
+            (0, 3, [1.0, 0.001]),
+            (0, 9, [0.0, 1.0]),
+            (1, 5, [0.6, 0.8]),
+            (1, 5, [0.6, 0.8]),
+        ]
+        cells = spark.createDataFrame(rows, "cell int, id bigint, v array<double>")
+        got = sorted(tuple(r) for r in _cell_edges(cells, cells.schema["id"].dataType, 0.99).collect())
+        assert all(a < b for a, b in got), got
+        assert set(got) == {(3, 7)}
+
 
 class TestWordNgramsEquivalence:
     def test_matches_transform_form(self, spark):
