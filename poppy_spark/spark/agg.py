@@ -586,7 +586,18 @@ def _spread(df: DataFrame, repartition: int | None = None) -> tuple[DataFrame, i
     defaultParallelism when None, that count)``: a scan with fewer splits
     than cores must not run a per-row Python pass on a few cores (round-5:
     a one-split scan ran a whole update on ONE core).  The package's one
-    read of a partition count."""
+    read of a partition count.
+
+    An AQE plan (its exchanges) is left as it comes unless ``repartition``
+    pins a count: AQE sizes its partitions, and reading their count would
+    run its shuffle stages.  Its count is the planned one, before AQE
+    coalesces (else the shuffle partitions): an upper bound."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        if repartition:
+            return df.repartition(repartition), repartition
+        planned = plan.inputPlan().outputPartitioning().numPartitions()
+        return df, planned or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     n = df.rdd.getNumPartitions()
     want = repartition or max(n, df.sparkSession.sparkContext.defaultParallelism)
     return (df.repartition(want) if want != n else df), want

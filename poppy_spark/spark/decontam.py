@@ -46,13 +46,16 @@ def contamination_flags(
     word ``k``-grams appear in ``eval_df``.  Documents producing no
     shingles (empty text) get ``n_shingles = n_hits = 0``.
     """
-    # the eval explode runs twice (sizing count, filter build): eval sets
-    # are small next to the training corpus by contract (module docstring)
-    ev = shingle_hashes(eval_df, text_col, id_col, k).select("sh").distinct()
-    n_grams = ev.count()
-    filt = build_sketch(
-        ev, "sh", BloomSketch.factory(max(n_grams, 1), fpp), int_keys="le8"
-    )
+    # the eval explode runs once: the sizing count fills the cache the filter
+    # build reads, and the returned plan reads only the filter bytes
+    ev = shingle_hashes(eval_df, text_col, id_col, k).select("sh").distinct().persist()
+    try:
+        n_grams = ev.count()
+        filt = build_sketch(
+            ev, "sh", BloomSketch.factory(max(n_grams, 1), fpp), int_keys="le8"
+        )
+    finally:
+        ev.unpersist()
     tr = shingle_hashes(train_df, text_col, id_col, k)
     per_doc = (
         bloom_contains(tr, "sh", filt.dumps(), "hit", int_keys="le8")

@@ -157,6 +157,22 @@ def _cap_buckets(
     )
 
 
+def _banded_self_join(
+    members: DataFrame, keys: list[str], max_bucket_size: int | None = None
+) -> DataFrame:
+    """``members`` (an ``id`` plus the bucket ``keys``) joined to itself as
+    ``a`` and ``b`` on every key with ``a.id < b.id``, each bucket first
+    capped at ``max_bucket_size`` members (:func:`_cap_buckets`; ``None``:
+    no cap).  The candidate step of every banded near-dup join (MinHash
+    bands, signature chunks, hyperplane tables); callers keep their own
+    projection, dedup and filter."""
+    m = _cap_buckets(members, keys, max_bucket_size)
+    a, b = m.alias("a"), m.alias("b")
+    return a.join(
+        b, [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys] + [F.col("a.id") < F.col("b.id")]
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: int = 32,
@@ -184,16 +200,8 @@ def lsh_candidate_pairs(
             )
         ).alias("bb"),
     ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    banded = _cap_buckets(banded, ["band", "bucket"], max_bucket_size)
-    left = banded.alias("a")
-    right = banded.alias("b")
     return (
-        left.join(
-            right,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        _banded_self_join(banded, ["band", "bucket"], max_bucket_size)
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
@@ -354,16 +362,8 @@ def signature_near_pairs(
             ])
         ).alias("c"),
     ).select("id", "__sig", F.col("c.chunk").alias("chunk"), F.col("c.val").alias("val"))
-    chunks = _cap_buckets(chunks, ["chunk", "val"], max_bucket_size)
-    a = chunks.alias("a")
-    b = chunks.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        _banded_self_join(chunks, ["chunk", "val"], max_bucket_size)
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
@@ -396,6 +396,17 @@ def simhash_near_pairs(
 # --------------------------------------------------------------------------
 
 
+def _materialized(df: DataFrame) -> DataFrame:
+    """``df`` as one leaf over the RDD one run of its plan built: its
+    shuffle stages run once (here under AQE, else in the first action) and
+    later actions skip them, so they re-read no input and no earlier
+    round, and nothing is cached (lost output recomputes from lineage)."""
+    jdf = df._jdf
+    rows = jdf.queryExecution().toRdd()
+    spark = df.sparkSession
+    return DataFrame(spark._jsparkSession.internalCreateDataFrame(rows, jdf.schema(), False), spark)
+
+
 def duplicate_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -411,8 +422,10 @@ def duplicate_components(
     Min-label propagation: every vertex repeatedly adopts the smallest
     label among itself and its neighbors; converges in O(cluster diameter)
     rounds (near-dup clusters are shallow — LSH links most members
-    directly), each round one shuffle join + one aggregation, with
-    ``localCheckpoint`` every few rounds to stop lineage/plan growth.
+    directly), each round one shuffle join + one aggregation, its labels
+    :func:`_materialized`: the caller's action re-runs neither the rounds
+    nor the input pipeline.  Raises ``ValueError`` when a label still
+    changed in round ``max_iter`` (a chain of n ids needs n rounds).
     Deterministic: labels are ids, min is order-free.
     """
     edges = (
@@ -422,18 +435,18 @@ def duplicate_components(
         .persist()
     )
     try:
-        labels = (
+        labels = _materialized(
             edges.select(F.col("src").alias("id"))
             .distinct()
             .withColumn("component", F.col("id"))
         )
-        for it in range(max_iter):
+        for _ in range(max_iter):
             neighbor_min = (
                 edges.join(labels, edges["src"] == labels["id"])
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min("component").alias("__nbr"))
             )
-            new_labels = (
+            new_labels = _materialized(
                 labels.join(neighbor_min, "id", "left")
                 .select(
                     "id",
@@ -442,8 +455,6 @@ def duplicate_components(
                     ).alias("component"),
                 )
             )
-            if it % 4 == 3:
-                new_labels = new_labels.localCheckpoint()
             changed = (
                 new_labels.alias("n")
                 .join(labels.alias("o"), "id")
@@ -453,6 +464,12 @@ def duplicate_components(
             labels = new_labels
             if changed == 0:
                 break
+        else:
+            raise ValueError(
+                f"duplicate_components: labels still changed in the last of "
+                f"max_iter={max_iter} rounds; raise max_iter (a chain of n ids "
+                "needs n rounds)"
+            )
     finally:
         edges.unpersist()
     return labels

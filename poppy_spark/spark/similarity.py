@@ -1,13 +1,19 @@
-"""Similarity search over embedding columns (``array<float>``).
+"""Similarity search and near-duplicate detection over embedding columns
+(``array<float>``): exact top-k (:func:`cosine_topk`), hyperplane LSH
+(:func:`lsh_topk`, :func:`cosine_near_dup_pairs`), an IVF index
+(:func:`ivf_train_centroids`, :func:`ivf_topk`, :func:`ivf_cell_stats`),
+product quantization scored by table lookups (:func:`pq_train_codebooks`,
+:func:`pq_encode`, :func:`pq_topk`, :func:`ivfpq_topk`) and SemDeDup
+(:func:`semantic_dedup`).
 
-* :func:`cosine_topk` — exact brute-force top-k by cosine, the correctness
-  baseline: JVM-side ``zip_with``/``aggregate`` dot products against a
-  broadcast query set, ranked with a window.
-* :func:`lsh_topk` — the scale path: random-hyperplane (sign) LSH buckets
-  prune candidates before exact scoring, so the crossJoin shrinks from
-  |corpus| x |queries| to bucket-collision pairs.
-
-Both are pure DataFrame plans (broadcast + codegen), no Python UDFs.
+Each job the verbs share has one helper: the normalized frame
+(:func:`_frame`), cell assignment (:func:`_with_cells`), the per-query
+top-k (:func:`_top_k`), the training sample (:func:`_training_sample`),
+the bucket stream (:func:`_bucket_stream`), the banded self-join
+(``dedup._banded_self_join``) and the ADC scorer (:func:`_adc_topk`).
+Joins, dot products and rankings run in the JVM; Arrow-batched numpy
+runs the normalization, cell assignment, PQ encoding, the per-cell edge
+kernel and the ADC scorer.
 """
 
 from __future__ import annotations
@@ -15,12 +21,13 @@ from __future__ import annotations
 import numpy as np
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import DoubleType, StructField, StructType
 from pyspark.sql.window import Window
 
 # results here are content-deterministic (hash-ordered samples, per-row
 # assignment, deterministic tie-breaks): ``_spread`` changes parallelism only
 from poppy_spark.spark.agg import _spread
+from poppy_spark.spark.dedup import _banded_self_join
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -28,12 +35,6 @@ def _dot(a: Column, b: Column) -> Column:
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0).cast("double"),
         lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0).cast("double"), lambda acc, v: acc + v * v)
     )
 
 
@@ -114,7 +115,10 @@ def with_normalized(df: DataFrame, vec_col: str, out_col: str = "vec_n") -> Data
     expression below the exchange — measured 8x on the 64-dim bench table.
     The UDF is opaque to both rewrites, and
     :func:`_normalize_rows_exact` reproduces the JVM float semantics
-    bit-for-bit (pytest-pinned), so results are unchanged."""
+    bit-for-bit (pytest-pinned), so results are unchanged.  A filter on
+    the output still evaluates the UDF a second time for the filter, so
+    callers drop NULLs on the input vector (NULL exactly where the output
+    is)."""
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
 
@@ -127,6 +131,28 @@ def with_normalized(df: DataFrame, vec_col: str, out_col: str = "vec_n") -> Data
     return df.withColumn(out_col, arrow_udf(norm_rows, "array<double>")(F.col(vec_col)))
 
 
+def _frame(
+    df: DataFrame, id_col: str, vec_col: str, keep_nulls: bool = False, query: bool = False
+) -> DataFrame:
+    """The L2-normalized rows a job scores: ``(id, v)`` for a corpus,
+    spread over the cores, or ``(query_id, qv)`` for a query batch, taken
+    as it comes (it is broadcast).  NULL vectors are dropped unless
+    ``keep_nulls`` (the exact and LSH verbs score them: a NULL cosine, the
+    all-zero sign bucket)."""
+    i, v = ("query_id", "qv") if query else ("id", "v")
+    src = df if query else _spread(df)[0]
+    if not keep_nulls:  # on the input vector: see with_normalized
+        src = src.filter(F.col(vec_col).isNotNull())
+    return with_normalized(src, vec_col).select(F.col(id_col).alias(i), F.col("vec_n").alias(v))
+
+
+def _top_k(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """The ``k`` best ``scored`` rows of each ``query_id`` with their
+    ``rank``: by ``score_col`` descending, ties by ``id`` ascending."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score_col), F.asc("id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -137,20 +163,12 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k: (query_id, id, cosine, rank).  The query side is
     broadcast — the corpus is scanned once, no shuffle of corpus rows."""
-    c = with_normalized(_spread(corpus)[0], vec_col).select(
-        F.col(id_col).alias("id"), F.col("vec_n").alias("cv")
-    )
-    q = with_normalized(queries, vec_col).select(
-        F.col(query_id_col).alias("query_id"), F.col("vec_n").alias("qv")
-    )
+    c = _frame(corpus, id_col, vec_col, keep_nulls=True)
+    q = _frame(queries, query_id_col, vec_col, keep_nulls=True, query=True)
     scored = c.crossJoin(F.broadcast(q)).select(
-        "query_id", "id", _dot(F.col("cv"), F.col("qv")).alias("cosine")
+        "query_id", "id", _dot(F.col("v"), F.col("qv")).alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, "cosine", k)
 
 
 def cosine_near_dup_pairs(
@@ -177,9 +195,7 @@ def cosine_near_dup_pairs(
     < 1 for pairs far below cosine ~1, so verify-stage thresholds near 1
     keep recall high — see the planted-recall gate).
     """
-    c = with_normalized(_spread(corpus)[0], vec_col).select(
-        F.col(id_col).alias("id"), F.col("vec_n").alias("v")
-    )
+    c = _frame(corpus, id_col, vec_col, keep_nulls=True)
     if method == "exact":
         # the guard counts rows, which needs no normalized vector
         n = corpus.count()
@@ -194,22 +210,9 @@ def cosine_near_dup_pairs(
         b = c.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
         pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
     elif method == "lsh":
-        dim = len(corpus.select(vec_col).first()[0])
-        cb = c
-        for t in range(n_tables):
-            planes = _hyperplanes(dim, n_planes, seed=7_777_777 + t)
-            cb = cb.withColumn(f"b{t}", lsh_bucket(F.col("v"), planes))
-        buckets = cb.select(
-            "id", "v",
-            F.explode(F.array(*[
-                F.struct(F.lit(t).alias("t"), F.col(f"b{t}").alias("b"))
-                for t in range(n_tables)
-            ])).alias("tb"),
-        ).select("id", "v", F.col("tb.t").alias("t"), F.col("tb.b").alias("b"))
-        l, r = buckets.alias("a"), buckets.alias("b")
+        buckets = _bucket_stream(c, "v", _dim(corpus, vec_col), n_planes, n_tables)
         pairs = (
-            l.join(r, (F.col("a.t") == F.col("b.t")) & (F.col("a.b") == F.col("b.b"))
-                   & (F.col("a.id") < F.col("b.id")))
+            _banded_self_join(buckets, ["t", "b"])
             .select(
                 F.col("a.id").alias("id_a"), F.col("a.v").alias("va"),
                 F.col("b.id").alias("id_b"), F.col("b.v").alias("vb"),
@@ -260,42 +263,64 @@ def semantic_dedup(
     surviving edge list."""
     from poppy_spark.spark.dedup import duplicate_components
 
-    spark = corpus.sparkSession
     if centroids is None:
         centroids = ivf_train_centroids(
             corpus, id_col, vec_col, n_centroids, iters=iters, seed=seed
         )
-    c = (
-        with_normalized(_spread(corpus)[0], vec_col)
-        .select(F.col(id_col).alias("id"), F.col("vec_n").alias("v"))
-        .filter(F.col("v").isNotNull())
-    )
-    bc = spark.sparkContext.broadcast(centroids.T.copy())
-    cells = c.withColumn(
-        "cell", _ivf_cells_udf(bc, centroids.shape[0], 1)(F.col("v"))[0]
-    )
+    cells, _ = _with_cells(centroids, _frame(corpus, id_col, vec_col))
     cells = _thin_hot_cells(cells, max_cell_size)
     edges = _cell_edges(cells, corpus.schema[id_col].dataType, threshold)
     return duplicate_components(edges)
 
 
+#: working bytes of one :func:`_edge_pairs` row block: the score block, the
+#: product term added into it and the threshold mask, 17 bytes per pair
+_EDGE_BLOCK_BYTES = 64 << 20
+
+
+def _edge_pairs(ids: np.ndarray, X: np.ndarray, threshold: float) -> tuple[np.ndarray, np.ndarray]:
+    """``(id_a, id_b)`` arrays of one cell's row pairs with exact cosine >=
+    ``threshold`` and ``id_a < id_b`` (``ids`` sorted, ``X`` of one
+    dimensionality).  Each block of rows, as many as fit
+    :data:`_EDGE_BLOCK_BYTES`, is scored against the whole cell as
+    ``S += X[lo:hi, j] (outer) X[:, j]`` over ``j`` in order from zero: the
+    IEEE multiply-then-add sequence of the left fold ``acc + a[j]*b[j]``
+    (numpy elementwise ops do not fuse), bit-exact at any block size."""
+    m = len(ids)
+    rows = max(1, min(m, _EDGE_BLOCK_BYTES // (17 * m)))
+    block, term = np.empty((rows, m)), np.empty((rows, m))
+    out_a, out_b = [ids[:0]], [ids[:0]]
+    with np.errstate(over="ignore", invalid="ignore"):
+        for lo in range(0, m, rows):
+            hi = min(lo + rows, m)
+            s, t = block[: hi - lo], term[: hi - lo]
+            s.fill(0.0)
+            for j in range(X.shape[1]):
+                np.multiply.outer(X[lo:hi, j], X[:, j], out=t)
+                s += t
+            ri, ci = np.nonzero(s >= threshold)
+            # strict upper triangle of distinct ids: id_a < id_b
+            keep = (ci > (ri + lo)) & (ids[ci] != ids[ri + lo])
+            out_a.append(ids[ri[keep] + lo])
+            out_b.append(ids[ci[keep]])
+    return np.concatenate(out_a), np.concatenate(out_b)
+
+
 def _cell_edges(cells: DataFrame, id_type, threshold: float) -> DataFrame:
     """``(id_a, id_b)`` pairs with exact cosine >= ``threshold`` WITHIN each
     cell — the scoring stage of :func:`semantic_dedup`, as one numpy kernel
-    per cell instead of a cell self-join + per-pair JVM fold (guide §4.2:
-    the join materialized sum-of-|cell|^2 pair rows, each paying an
-    interpreted ``aggregate``/``zip_with`` dot product; here only the few
-    surviving edge pairs ever leave Python).
+    (:func:`_edge_pairs`) per cell instead of a cell self-join + per-pair
+    JVM fold (guide §4.2: the join materialized sum-of-|cell|^2 pair rows,
+    each paying an interpreted ``aggregate``/``zip_with`` dot product; here
+    only the few surviving edge pairs ever leave Python).
 
-    Bit-exact with the former plan: the block accumulation ``S += outer(
-    X[:, j], X[:, j])`` applies the identical IEEE multiply-then-add
-    sequence per pair as the left fold ``acc + a[j]*b[j]`` (numpy
-    elementwise ops do not fuse), NaN elements poison the comparison the
-    same way, and rows of differing dimensionality (NULL cosine under
-    ``zip_with`` padding) are scored per-dimension-group so cross-length
-    pairs still produce no edge.  ``id_a < id_b`` ordering: numeric ids
-    compare identically in numpy and Spark; string ids compare by code
-    point in both."""
+    Bit-exact with the former plan: the kernel's per-pair arithmetic is
+    the left fold's, NaN elements poison the comparison the same way, and
+    rows of differing dimensionality (NULL cosine under ``zip_with``
+    padding) are scored per-dimension-group so cross-length pairs still
+    produce no edge.  ``id_a < id_b`` ordering: numeric ids compare
+    identically in numpy and Spark; string ids compare by code point in
+    both."""
     import pandas as pd
 
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -308,22 +333,11 @@ def _cell_edges(cells: DataFrame, id_type, threshold: float) -> DataFrame:
             lens = pdf["v"].map(len).to_numpy()
             for d in np.unique(lens):
                 sub = pdf[lens == d]
-                m = len(sub)
-                if m < 2 or d == 0:
+                if len(sub) < 2 or d == 0:
                     continue
-                ids = sub["id"].to_numpy()
-                X = np.stack(sub["v"].to_numpy())
-                with np.errstate(over="ignore", invalid="ignore"):
-                    for lo in range(0, m, 2048):
-                        hi = min(lo + 2048, m)
-                        S = np.zeros((hi - lo, m), dtype=np.float64)
-                        for j in range(X.shape[1]):
-                            S += np.outer(X[lo:hi, j], X[:, j])
-                        ri, ci = np.nonzero(S >= threshold)
-                        # strict upper triangle of distinct ids: id_a < id_b
-                        keep = (ci > (ri + lo)) & (ids[ci] != ids[ri + lo])
-                        out_a.extend(ids[ri[keep] + lo])
-                        out_b.extend(ids[ci[keep]])
+                a, b = _edge_pairs(sub["id"].to_numpy(), np.stack(sub["v"].to_numpy()), threshold)
+                out_a.extend(a)
+                out_b.extend(b)
         return pd.DataFrame({"id_a": out_a, "id_b": out_b})
 
     out_schema = StructType(
@@ -356,19 +370,9 @@ def ivf_train_centroids(
     """
     if n_centroids < 1:
         raise ValueError(f"n_centroids must be >= 1, got {n_centroids}")
-    n_sample = n_centroids * sample_per_centroid
-    h = F.substring(
-        F.md5(F.concat(F.lit(f"ivf{seed}|"), F.col(id_col).cast("string"))), 1, 16
+    x = _training_sample(
+        corpus, id_col, vec_col, f"ivf{seed}|", n_centroids * sample_per_centroid
     )
-    rows = (
-        with_normalized(_spread(corpus)[0], vec_col)
-        .select(F.col("vec_n"), h.alias("__h"))
-        .filter(F.col("vec_n").isNotNull())
-        .orderBy("__h")
-        .limit(n_sample)
-        .collect()
-    )
-    x = np.asarray([r["vec_n"] for r in rows], dtype=np.float64)
     if x.shape[0] < n_centroids:
         raise ValueError(
             f"corpus has {x.shape[0]} rows, fewer than n_centroids={n_centroids}"
@@ -384,6 +388,39 @@ def ivf_train_centroids(
                 if n > 0:
                     cents[c] = v / n
     return cents
+
+
+def _training_sample(
+    corpus: DataFrame, id_col: str, vec_col: str, salt: str, n: int
+) -> np.ndarray:
+    """The ``n`` non-NULL normalized vectors with the smallest
+    ``md5(salt + id)``, a float64 matrix on the driver: a bottom-k
+    content-hash sample (as :func:`poppy_spark.spark.sampling.bottom_k_sample`),
+    the same on every run, layout and cluster size, bounded by ``n``."""
+    h = F.substring(F.md5(F.concat(F.lit(salt), F.col("id").cast("string"))), 1, 16)
+    rows = (
+        _frame(corpus, id_col, vec_col)
+        .select("v", h.alias("__h"))
+        .orderBy("__h")
+        .limit(n)
+        .collect()
+    )
+    return np.asarray([r["v"] for r in rows], dtype=np.float64)
+
+
+def _with_cells(
+    centroids: np.ndarray, c: DataFrame, q: DataFrame | None = None, n_probe: int = 1
+) -> tuple[DataFrame, DataFrame | None]:
+    """``(c, q)`` with a ``cell`` column: the corpus frame's nearest cell,
+    and the query frame (if any, else ``None``) once per each of its
+    ``n_probe`` nearest cells.  Both sides share ONE Spark broadcast of
+    the transposed centroids (see :func:`_ivf_cells_udf`)."""
+    bc = c.sparkSession.sparkContext.broadcast(centroids.T.copy())
+    nc = centroids.shape[0]
+    c_cells = c.withColumn("cell", _ivf_cells_udf(bc, nc, 1)(F.col("v"))[0])
+    if q is None:
+        return c_cells, None
+    return c_cells, q.withColumn("cell", F.explode(_ivf_cells_udf(bc, nc, n_probe)(F.col("qv"))))
 
 
 def _ivf_cells_udf(bc, n_centroids: int, n_probe: int):
@@ -466,25 +503,8 @@ def ivf_topk(
         )
     # NULL embeddings carry no position — drop them before the matmul UDF
     # (the brute-force path would score them as NULL cosine anyway)
-    c = (
-        with_normalized(_spread(corpus)[0], vec_col)
-        .select(F.col(id_col).alias("id"), F.col("vec_n").alias("cv"))
-        .filter(F.col("cv").isNotNull())
-    )
-    q = (
-        with_normalized(queries, vec_col)
-        .select(F.col(query_id_col).alias("query_id"), F.col("vec_n").alias("qv"))
-        .filter(F.col("qv").isNotNull())
-    )
-    spark = corpus.sparkSession
-    # one broadcast per job, shared by both assignment UDFs (two separate
-    # broadcasts would double executor memory and neither was released)
-    bc = spark.sparkContext.broadcast(centroids.T.copy())
-    nc = centroids.shape[0]
-    c_cells = c.withColumn("cell", _ivf_cells_udf(bc, nc, 1)(F.col("cv"))[0])
-    q_cells = q.withColumn(
-        "cell", F.explode(_ivf_cells_udf(bc, nc, n_probe)(F.col("qv")))
-    )
+    q = _frame(queries, query_id_col, vec_col, query=True)
+    c_cells, q_cells = _with_cells(centroids, _frame(corpus, id_col, vec_col), q, n_probe)
     if max_cell_size is not None:
         c_cells = _thin_hot_cells(c_cells, max_cell_size)
     # (query_id, id) pairs are unique by construction — one cell per corpus
@@ -495,14 +515,10 @@ def ivf_topk(
     # max_groups / _cap_buckets elsewhere in this family)
     n_q = q.limit(max_queries + 1).count()
     q_side = F.broadcast(q_cells) if n_q <= max_queries else q_cells
-    cands = c_cells.join(q_side, "cell").select(
-        "query_id", "id", "cv", "qv"
+    scored = c_cells.join(q_side, "cell").select(
+        "query_id", "id", _dot(F.col("v"), F.col("qv")).alias("cosine")
     )
-    scored = cands.select(
-        "query_id", "id", _dot(F.col("cv"), F.col("qv")).alias("cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_k(scored, "cosine", k)
 
 
 def ivf_cell_stats(
@@ -517,18 +533,8 @@ def ivf_cell_stats(
     :func:`ivf_topk`: a cell holding >> |corpus|/n_centroids vectors
     means a degenerate embedding cluster — cap it with ``max_cell_size``
     or retrain with more centroids."""
-    spark = corpus.sparkSession
-    c = (
-        with_normalized(_spread(corpus)[0], vec_col)
-        .select(F.col(id_col).alias("id"), F.col("vec_n").alias("cv"))
-        .filter(F.col("cv").isNotNull())
-    )
-    bc = spark.sparkContext.broadcast(centroids.T.copy())
-    return (
-        c.withColumn("cell", _ivf_cells_udf(bc, centroids.shape[0], 1)(F.col("cv"))[0])
-        .groupBy("cell")
-        .agg(F.count("*").alias("n_vectors"))
-    )
+    cells, _ = _with_cells(centroids, _frame(corpus, id_col, vec_col))
+    return cells.groupBy("cell").agg(F.count("*").alias("n_vectors"))
 
 
 def _thin_hot_cells(c_cells: DataFrame, max_cell_size: int) -> DataFrame:
@@ -573,6 +579,31 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return bits
 
 
+def _dim(corpus: DataFrame, vec_col: str) -> int:
+    """Length of the corpus's first non-NULL vector (one small job)."""
+    row = corpus.filter(F.col(vec_col).isNotNull()).select(F.size(vec_col)).first()
+    if row is None:
+        raise ValueError(f"column {vec_col!r} holds no non-NULL vector")
+    return row[0]
+
+
+def _bucket_stream(
+    df: DataFrame, v: str, dim: int, n_planes: int, n_tables: int
+) -> DataFrame:
+    """``df``'s rows once per hyperplane table, with the table ``t`` and the
+    vector ``v``'s sign bucket ``b`` in it (:func:`lsh_bucket` over the
+    seeded :func:`_hyperplanes` of each table): the stream both LSH verbs
+    join on.  A NULL vector lands in bucket 0 of every table."""
+    tb = F.explode(F.array(*[
+        F.struct(
+            F.lit(t).alias("t"),
+            lsh_bucket(F.col(v), _hyperplanes(dim, n_planes, seed=7_777_777 + t)).alias("b"),
+        )
+        for t in range(n_tables)
+    ])).alias("tb")
+    return df.select(*df.columns, tb).select(*df.columns, "tb.t", "tb.b")
+
+
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -589,35 +620,18 @@ def lsh_topk(
     on the candidates only.  Recall grows with ``n_tables``; cost shrinks by
     ~2^n_planes per table vs brute force."""
     if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
-    c = with_normalized(_spread(corpus)[0], vec_col).select(
-        F.col(id_col).alias("id"), F.col("vec_n").alias("cv")
-    )
-    q = with_normalized(queries, vec_col).select(
-        F.col(query_id_col).alias("query_id"), F.col("vec_n").alias("qv")
-    )
-    cb, qb = c, q
-    for t in range(n_tables):
-        planes = _hyperplanes(dim, n_planes, seed=7_777_777 + t)
-        cb = cb.withColumn(f"b{t}", lsh_bucket(F.col("cv"), planes))
-        qb = qb.withColumn(f"b{t}", lsh_bucket(F.col("qv"), planes))
-    # one bucket stream per table; candidates = matches in any table
-    c_buckets = cb.select(
-        "id", "cv",
-        F.explode(F.array(*[F.struct(F.lit(t).alias("t"), F.col(f"b{t}").alias("b")) for t in range(n_tables)])).alias("tb"),
-    ).select("id", "cv", F.col("tb.t").alias("t"), F.col("tb.b").alias("b"))
-    q_buckets = qb.select(
-        "query_id", "qv",
-        F.explode(F.array(*[F.struct(F.lit(t).alias("t"), F.col(f"b{t}").alias("b")) for t in range(n_tables)])).alias("tb"),
-    ).select("query_id", "qv", F.col("tb.t").alias("t"), F.col("tb.b").alias("b"))
+        dim = _dim(corpus, vec_col)
+    c = _frame(corpus, id_col, vec_col, keep_nulls=True)
+    q = _frame(queries, query_id_col, vec_col, keep_nulls=True, query=True)
+    # candidates = matches in any table
     cands = (
-        c_buckets.join(F.broadcast(q_buckets), ["t", "b"])
-        .select("query_id", "id", "cv", "qv")
+        _bucket_stream(c, "v", dim, n_planes, n_tables)
+        .join(F.broadcast(_bucket_stream(q, "qv", dim, n_planes, n_tables)), ["t", "b"])
+        .select("query_id", "id", "v", "qv")
         .dropDuplicates(["query_id", "id"])
     )
-    scored = cands.select("query_id", "id", _dot(F.col("cv"), F.col("qv")).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    scored = cands.select("query_id", "id", _dot(F.col("v"), F.col("qv")).alias("cosine"))
+    return _top_k(scored, "cosine", k)
 
 
 # ---------------------------------------------------------------------------
@@ -645,19 +659,7 @@ def pq_train_codebooks(
     training deterministic across runs, layouts, and cluster sizes."""
     if m_subspaces < 1 or n_codes < 2:
         raise ValueError("need m_subspaces >= 1 and n_codes >= 2")
-    n_sample = n_codes * sample_per_code
-    h = F.substring(
-        F.md5(F.concat(F.lit(f"pq{seed}|"), F.col(id_col).cast("string"))), 1, 16
-    )
-    rows = (
-        with_normalized(_spread(corpus)[0], vec_col)
-        .select(F.col("vec_n"), h.alias("__h"))
-        .filter(F.col("vec_n").isNotNull())
-        .orderBy("__h")
-        .limit(n_sample)
-        .collect()
-    )
-    x = np.asarray([r["vec_n"] for r in rows], dtype=np.float64)
+    x = _training_sample(corpus, id_col, vec_col, f"pq{seed}|", n_codes * sample_per_code)
     if x.shape[0] < n_codes:
         raise ValueError(
             f"sample has {x.shape[0]} rows, fewer than n_codes={n_codes}"
@@ -717,12 +719,9 @@ def pq_encode(
     # cache the codes — spreading a small table into many tiny partitions
     # made every downstream per-batch scorer (pq_topk) pay ~30x the
     # fixed per-batch cost for no compute win
-    c = (
-        with_normalized(corpus, vec_col)
-        .select(F.col(id_col).alias("id"), F.col("vec_n").alias("cv"))
-        .filter(F.col("cv").isNotNull())
-    )
-    return c.select("id", udf(F.col("cv")).alias("codes"))
+    # NULLs dropped on the input vector: see with_normalized
+    c = with_normalized(corpus.filter(F.col(vec_col).isNotNull()), vec_col)
+    return c.select(F.col(id_col).alias("id"), udf(F.col("vec_n")).alias("codes"))
 
 
 def _collect_normalized_queries(
@@ -736,8 +735,6 @@ def _collect_normalized_queries(
     ~0.4 s of per-job overhead per call.  Returns ``[(query_id, qv
     float64 ndarray), ...]``; raises past ``max_queries``."""
     import pyarrow as pa
-
-    from pyspark.sql.types import DoubleType
 
     qraw = (
         queries.select(
@@ -786,55 +783,78 @@ def pq_topk(
     reaches driver memory.  For larger batches, loop over query chunks
     and union the results (each chunk reuses the same ``codes`` index),
     or raise ``max_queries`` deliberately."""
+    return _adc_topk(codes, queries, vec_col, query_id_col, k, codebooks, max_queries, "pq_topk")
+
+
+def _adc_topk(
+    codes: DataFrame,
+    queries: DataFrame,
+    vec_col: str,
+    query_id_col: str,
+    k: int,
+    codebooks: np.ndarray,
+    max_queries: int,
+    op: str,
+    centroids: np.ndarray | None = None,
+    n_probe: int = 1,
+) -> DataFrame:
+    """The ADC scorer of :func:`pq_topk` over ``codes`` (``id``, ``codes``,
+    and ``cell`` when ``centroids`` is given): with ``centroids``, IVF-PQ
+    is PQ with a per-query cell mask, each query scoring only the rows of
+    its ``n_probe`` nearest cells."""
     import pandas as pd
 
-    spark = codes.sparkSession
-    qpairs = _collect_normalized_queries(
-        queries, query_id_col, vec_col, max_queries, "pq_topk"
-    )
+    qpairs = _collect_normalized_queries(queries, query_id_col, vec_col, max_queries, op)
     m, n_codes, dsub = codebooks.shape
-    luts, qids = [], []
+    luts, qids, probe_cells = [], [], []
     for qid, q in qpairs:
         lut = np.empty((m, n_codes), dtype=np.float64)
         for i in range(m):
             lut[i] = codebooks[i] @ q[i * dsub : (i + 1) * dsub]
         luts.append(lut)
         qids.append(qid)
-    bc = spark.sparkContext.broadcast((qids, np.stack(luts) if luts else None))
-
-    import pyspark.sql.types as T
-
-    out_schema = T.StructType(
+        if centroids is not None:
+            p = min(n_probe, centroids.shape[0])
+            top = np.argpartition(-(q @ centroids.T), p - 1)[:p]
+            probe_cells.append(sorted(int(x) for x in top))
+    bc = codes.sparkSession.sparkContext.broadcast(
+        (qids, np.stack(luts) if luts else None, probe_cells if centroids is not None else None)
+    )
+    out_schema = StructType(
         [
-            T.StructField("query_id", queries.schema[query_id_col].dataType),
-            T.StructField("id", codes.schema["id"].dataType),
-            T.StructField("approx_cosine", T.DoubleType()),
+            StructField("query_id", queries.schema[query_id_col].dataType),
+            StructField("id", codes.schema["id"].dataType),
+            StructField("approx_cosine", DoubleType()),
         ]
     )
 
     def score(batches):
-        qids_b, luts_b = bc.value
+        qids_b, luts_b, cells_b = bc.value
         if luts_b is None:
             return
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if not len(pdf):
                 continue
             cm = np.asarray(pdf["codes"].tolist(), dtype=np.int64)  # (n, m)
             ids = pdf["id"].to_numpy()
+            cell_arr = None if cells_b is None else pdf["cell"].to_numpy()
             for qi, qid in enumerate(qids_b):
+                sub, sub_ids = cm, ids
+                if cells_b is not None:
+                    mask = np.isin(cell_arr, cells_b[qi])
+                    if not mask.any():
+                        continue
+                    sub, sub_ids = cm[mask], ids[mask]
                 lut = luts_b[qi]  # (m, n_codes)
-                s = lut[0][cm[:, 0]].copy()
+                s = lut[0][sub[:, 0]].copy()
                 for i in range(1, lut.shape[0]):
-                    s += lut[i][cm[:, i]]
+                    s += lut[i][sub[:, i]]
                 top = np.argsort(-s, kind="stable")[:k]
                 yield pd.DataFrame(
-                    {"query_id": qid, "id": ids[top], "approx_cosine": s[top]}
+                    {"query_id": qid, "id": sub_ids[top], "approx_cosine": s[top]}
                 )
 
-    cand = codes.mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("approx_cosine"), F.asc("id"))
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_k(codes.mapInPandas(score, out_schema), "approx_cosine", k)
 
 
 def ivfpq_topk(
@@ -865,87 +885,19 @@ def ivfpq_topk(
     :func:`pq_encode` (codes computed on the full normalized vector — the
     flat-PQ variant; residual encoding would couple the codebooks to the
     quantizer and is unnecessary for cosine on normalized vectors), and
-    the per-batch local-top-k ADC scorer from :func:`pq_topk` restricted
-    by a broadcast cell equi-join.
+    the per-batch local-top-k ADC scorer of :func:`pq_topk`, masked per
+    query to its probed cells (queries bounded by ``max_queries`` alike).
     """
-    import pandas as pd
-
-    spark = corpus.sparkSession
     if centroids is None:
         centroids = ivf_train_centroids(corpus, id_col, vec_col, n_centroids)
     if codebooks is None:
         codebooks = pq_train_codebooks(corpus, id_col, vec_col, m_subspaces, n_codes)
     # corpus side: one pass computes the cell AND the codes
-    c = (
-        with_normalized(_spread(corpus)[0], vec_col)
-        .select(F.col(id_col).alias("id"), F.col("vec_n").alias("cv"))
-        .filter(F.col("cv").isNotNull())
-    )
-    bc_cent = spark.sparkContext.broadcast(centroids.T.copy())
-    nc = centroids.shape[0]
-    c_cells = c.withColumn("cell", _ivf_cells_udf(bc_cent, nc, 1)(F.col("cv")))
-    c_cells = c_cells.withColumn("cell", F.col("cell")[0])
-    codes = pq_encode(c_cells, "id", "cv", codebooks).join(
+    c_cells, _ = _with_cells(centroids, _frame(corpus, id_col, vec_col))
+    codes = pq_encode(c_cells, "id", "v", codebooks).join(
         c_cells.select("id", "cell"), "id"
     )
-
-    # query side: probe cells + an ADC lookup table per query — driver-built
-    # from one bounded collect (chunk + union for larger batches; the
-    # corpus-side index is reused across chunks)
-    qpairs = _collect_normalized_queries(
-        queries, query_id_col, vec_col, max_queries, "ivfpq_topk"
+    return _adc_topk(
+        codes, queries, vec_col, query_id_col, k, codebooks, max_queries,
+        "ivfpq_topk", centroids, n_probe,
     )
-    m, n_codes_b, dsub = codebooks.shape
-    cent_t = centroids.T
-    luts, qids, probe_cells = [], [], []
-    p = min(n_probe, nc)
-    for qid, q in qpairs:
-        scores = q @ cent_t
-        top = np.argpartition(-scores, p - 1)[:p]
-        probe_cells.append(set(int(x) for x in top))
-        lut = np.empty((m, n_codes_b), dtype=np.float64)
-        for i in range(m):
-            lut[i] = codebooks[i] @ q[i * dsub : (i + 1) * dsub]
-        luts.append(lut)
-        qids.append(qid)
-    bc = spark.sparkContext.broadcast(
-        (qids, np.stack(luts) if luts else None, probe_cells)
-    )
-
-    import pyspark.sql.types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[query_id_col].dataType),
-            T.StructField("id", corpus.schema[id_col].dataType),
-            T.StructField("approx_cosine", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        qids_b, luts_b, cells_b = bc.value
-        if luts_b is None:
-            return
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cm = np.asarray(pdf["codes"].tolist(), dtype=np.int64)
-            ids = pdf["id"].to_numpy()
-            cell_arr = pdf["cell"].to_numpy()
-            for qi, qid in enumerate(qids_b):
-                mask = np.isin(cell_arr, list(cells_b[qi]))
-                if not mask.any():
-                    continue
-                sub = cm[mask]
-                lut = luts_b[qi]
-                s = lut[0][sub[:, 0]].copy()
-                for i in range(1, lut.shape[0]):
-                    s += lut[i][sub[:, i]]
-                top = np.argsort(-s, kind="stable")[:k]
-                yield pd.DataFrame(
-                    {"query_id": qid, "id": ids[mask][top], "approx_cosine": s[top]}
-                )
-
-    cand = codes.mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("approx_cosine"), F.asc("id"))
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

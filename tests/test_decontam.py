@@ -73,6 +73,25 @@ class TestContamination:
         assert ids == set(range(100, 150)) | set(range(300, 305))
         assert clean.columns == trdf.columns
 
+    def test_eval_rows_evaluated_once(self, spark, corpora):
+        """The eval-set shingles are computed once per call (the sizing
+        count fills the cache the filter build reads), and the returned
+        plan reads only the filter bytes: the caller's action evaluates
+        no eval row again."""
+        evdf, trdf = corpora
+        seen = spark.sparkContext.accumulator(0)
+
+        def count(text):
+            seen.add(1)
+            return text
+
+        counted = evdf.select("doc_id", F.udf(count, "string")("text").alias("text"))
+        out = contamination_flags(trdf, counted, "text", "doc_id", k=8)
+        assert seen.value == evdf.count()
+        flagged = {r["doc_id"] for r in out.filter("contaminated").collect()}
+        assert flagged == set(range(200, 210))
+        assert seen.value == evdf.count()
+
 
 class TestRemoveContaminatedSpans:
     def _brute(self, train, ev_texts, span_words):

@@ -322,7 +322,7 @@ class TestOneShapeGuard:
     def test_cache_owners(self):
         """Every cache a verb makes ends inside that verb (or with the
         object it returns): ``.persist(`` only where an owner releases it,
-        the two scoped owners in a ``finally``.  Reused exchanges cover the
+        the three scoped owners in a ``finally``.  Reused exchanges cover the
         other re-reads (tests/test_verb_caches.py)."""
         sites, trees = [], {}
         for p in sorted(SPARK_DIR.glob("*.py")):
@@ -333,6 +333,7 @@ class TestOneShapeGuard:
             assert src.count(".persist(") == len(v.sites), p.name
             sites += [f"{p.name}:{s}" for s in v.sites]
         assert sorted(sites) == [
+            "decontam.py:contamination_flags",
             "dedup.py:duplicate_components",
             "sharded.py:_build",  # released by ShardedBloom.unpersist()
             "streaming.py:BloomStreamDedup.__call__",
@@ -351,6 +352,7 @@ class TestOneShapeGuard:
                 for stmt in t.finalbody for c in ast.walk(stmt)
             )
 
+        assert releases_in_finally(trees["decontam.py"], "contamination_flags")
         assert releases_in_finally(trees["dedup.py"], "duplicate_components")
         assert releases_in_finally(trees["streaming.py"], "BloomStreamDedup", "__call__")
 
@@ -358,3 +360,44 @@ class TestOneShapeGuard:
         """One helper spreads low-split inputs over the cores and reads the
         partition count; verbs take the count from it."""
         assert _call_sites("getNumPartitions") == ["agg.py:_spread"]
+
+    def test_one_similarity_shape(self):
+        """Each job the similarity verbs share has one helper: the
+        normalized frame, cell assignment, per-query top-k, training
+        sample, hyperplane bucket stream, banded self-join and ADC scorer.
+        The corpus dimension is read once, from the first non-NULL vector."""
+        from poppy_spark.spark import similarity
+
+        def sites(module, attr):
+            v = _Sites(attr)
+            v.visit(ast.parse((SPARK_DIR / module).read_text()))
+            return sorted(v.sites)
+
+        sim = "similarity.py"
+        # pq_encode normalizes without spreading: callers cache its codes
+        assert sites(sim, "with_normalized") == ["_frame", "pq_encode"]
+        assert sites(sim, "_spread") == ["_frame"]
+        assert sites(sim, "_ivf_cells_udf") == ["_with_cells", "_with_cells"]
+        assert (SPARK_DIR / sim).read_text().count("broadcast(centroids.T") == 1
+        assert sites(sim, "row_number") == ["_top_k"]
+        assert sites(sim, "_top_k") == [
+            "_adc_topk", "cosine_topk", "ivf_topk", "lsh_topk",
+        ]
+        assert sites(sim, "md5") == ["_thin_hot_cells", "_training_sample"]
+        assert sites(sim, "_training_sample") == ["ivf_train_centroids", "pq_train_codebooks"]
+        assert sites(sim, "lsh_bucket") == sites(sim, "_hyperplanes") == ["_bucket_stream"]
+        assert sites(sim, "_bucket_stream") == [
+            "cosine_near_dup_pairs", "lsh_topk", "lsh_topk",
+        ]
+        assert sites(sim, "_dim") == ["cosine_near_dup_pairs", "lsh_topk"]
+        assert sites(sim, "first") == ["_dim"]
+        assert sites("dedup.py", "_cap_buckets") == ["_banded_self_join"]
+        assert _call_sites("_banded_self_join") == [
+            "dedup.py:lsh_candidate_pairs",
+            "dedup.py:signature_near_pairs",
+            "similarity.py:cosine_near_dup_pairs",
+        ]
+        assert sites(sim, "mapInPandas") == ["_adc_topk"]
+        assert sites(sim, "_collect_normalized_queries") == ["_adc_topk"]
+        assert sites(sim, "_adc_topk") == ["ivfpq_topk", "pq_topk"]
+        assert not hasattr(similarity, "_norm")

@@ -216,3 +216,40 @@ class TestSpread:
         assert {name: _max_stage_tasks(spark, run) for name, run in runs.items()} == dict.fromkeys(
             runs, 3
         )
+
+
+class TestSpreadExchanged:
+    """``_spread`` over a plan whose exchanges AQE runs reads no partition
+    count, so it submits no job; such an input keeps AQE's partitions and
+    the flat build over it stays byte-equal."""
+
+    @pytest.fixture()
+    def exchanged(self, spark):
+        return spark.range(0, 4000, numPartitions=3).select(
+            F.format_string("key-%08d", F.col("id") % 1500).alias("k")
+        ).distinct()
+
+    def test_no_job_for_an_exchanged_plan(self, spark, exchanged):
+        from poppy_spark.spark.agg import _spread
+
+        sc = spark.sparkContext
+        group = f"spread-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            spread, n = _spread(exchanged)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert spread is exchanged
+        # the planned count bounds what AQE runs (the merge tree's fan-in)
+        assert n >= exchanged.rdd.getNumPartitions()
+
+    def test_flat_build_byte_equal(self, spark, exchanged):
+        fac = BloomSketch.factory(1500, 0.01)
+        keys = spark.createDataFrame(exchanged.collect(), exchanged.schema).repartition(1)
+        assert keys.count() == 1500
+        assert (
+            build_sketch(exchanged, "k", fac, strategy="states").dumps()
+            == build_sketch(keys, "k", fac, strategy="states").dumps()
+        )

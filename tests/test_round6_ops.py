@@ -24,9 +24,9 @@ from pyspark.sql import functions as F
 
 def _jvm_normalize(df, vec_col, out_col="vec_n"):
     """The pre-round-6 JVM expression form of with_normalized."""
-    from poppy_spark.spark.similarity import _norm
-
-    n = _norm(F.col(vec_col))
+    n = F.sqrt(
+        F.aggregate(F.col(vec_col), F.lit(0.0).cast("double"), lambda acc, v: acc + v * v)
+    )
     return df.withColumn(
         out_col,
         F.transform(F.col(vec_col), lambda v: (v / F.greatest(n, F.lit(1e-12))).cast("double")),

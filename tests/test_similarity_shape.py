@@ -1,0 +1,146 @@
+"""The shared similarity jobs: the per-cell edge kernel's memory bound and
+arithmetic, the corpus dimension read, and the connected-components
+rounds (converged, materialized, never re-reading their input)."""
+
+import tracemalloc
+
+import numpy as np
+import pytest
+
+from pyspark.sql import functions as F
+
+
+def _left_fold_pairs(ids, X, threshold):
+    """Reference: every pair's cosine as the JVM left fold
+    ``acc + a[j]*b[j]`` from 0.0, pair by pair in Python floats."""
+    out = []
+    for i in range(len(ids)):
+        for c in range(i + 1, len(ids)):
+            acc = 0.0
+            for j in range(X.shape[1]):
+                acc = acc + float(X[i, j]) * float(X[c, j])
+            if acc >= threshold and ids[i] != ids[c]:
+                out.append((ids[i], ids[c]))
+    return out
+
+
+class TestEdgeKernel:
+    def _cell(self, m, d, seed):
+        rng = np.random.default_rng(seed)
+        X = rng.standard_normal((m, d))
+        X[3] = X[2]
+        X[m // 2 :] = X[: m - m // 2] * 1.0001  # planted near-duplicates
+        X /= np.linalg.norm(X, axis=1)[:, None]
+        ids = np.arange(m, dtype=np.int64)
+        ids[3] = ids[2]  # a repeated id makes no self edge
+        return ids, X
+
+    @pytest.mark.parametrize("budget", [None, 17 * 40 * 3, 1])
+    def test_pairs_equal_left_fold(self, monkeypatch, budget):
+        """Bit-exact with the left fold at any row-block size (the default
+        budget, 3-row blocks, 1-row blocks)."""
+        from poppy_spark.spark import similarity
+
+        if budget is not None:
+            monkeypatch.setattr(similarity, "_EDGE_BLOCK_BYTES", budget)
+        ids, X = self._cell(40, 6, 1)
+        for thr in (0.0, 0.5, 0.9999):
+            a, b = similarity._edge_pairs(ids, X, thr)
+            assert list(zip(a.tolist(), b.tolist())) == _left_fold_pairs(ids, X, thr)
+        assert len(similarity._edge_pairs(ids, X, 0.9999)[0]) >= 19
+
+    def test_peak_memory_within_budget(self):
+        """A 5,000-row cell peaks within the row-block byte budget, where a
+        fixed 2048-row block would hold two ~82 MB arrays."""
+        from poppy_spark.spark.similarity import _EDGE_BLOCK_BYTES, _edge_pairs
+
+        ids, X = self._cell(5000, 8, 2)
+        tracemalloc.start()
+        try:
+            a, _ = _edge_pairs(ids, X, 0.999)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert len(a) >= 2499  # the planted pairs
+        assert peak <= _EDGE_BLOCK_BYTES + (1 << 20), peak
+        assert 2 * 2048 * 5000 * 8 > _EDGE_BLOCK_BYTES + (1 << 20)
+
+
+class TestCorpusDim:
+    @pytest.fixture()
+    def corpora(self, spark):
+        rng = np.random.default_rng(4)
+        rows = [(i, [float(x) for x in rng.standard_normal(6).astype(np.float32)]) for i in range(60)]
+        schema = "vec_id bigint, embedding array<float>"
+        null_first = spark.createDataFrame(
+            spark.sparkContext.parallelize([(99, None)] + rows, 1), schema
+        )
+        null_last = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows + [(99, None)], 1), schema
+        )
+        return null_first, null_last
+
+    def test_null_first_row(self, corpora):
+        """The dimension comes from the first non-NULL vector, so a corpus
+        whose first row is NULL gives the rows of the same corpus with the
+        NULL row last."""
+        from poppy_spark.spark.similarity import cosine_near_dup_pairs, lsh_topk
+
+        def lsh_runs(corpus):
+            q = corpus.filter(F.col("vec_id") < 4).select(F.col("vec_id").alias("qid"), "embedding")
+            return [
+                cosine_near_dup_pairs(corpus, "vec_id", "embedding", 0.5, method="lsh", n_planes=3),
+                lsh_topk(corpus, q, "vec_id", "embedding", "qid", k=3, n_planes=3),
+            ]
+
+        null_first, null_last = corpora
+        for got, want in zip(lsh_runs(null_first), lsh_runs(null_last)):
+            rows = sorted(map(tuple, got.collect()), key=repr)
+            assert rows and rows == sorted(map(tuple, want.collect()), key=repr)
+
+    def test_no_vector_raises(self, spark):
+        from poppy_spark.spark.similarity import cosine_near_dup_pairs
+
+        empty = spark.createDataFrame([(1, None)], "vec_id bigint, embedding array<float>")
+        with pytest.raises(ValueError, match="non-NULL vector"):
+            cosine_near_dup_pairs(empty, "vec_id", "embedding", method="lsh")
+
+
+def _chain(spark, n, seen=None):
+    """``(id_a, id_b)`` edges of the path ``0 - 1 - ... - n-1``; ``seen``
+    (an accumulator) counts each evaluation of an input row."""
+    df = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "a bigint, b bigint")
+    if seen is None:
+        return df.select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
+
+    def count(x):
+        seen.add(1)
+        return x
+
+    return df.select(F.udf(count, "bigint")("a").alias("id_a"), F.col("b").alias("id_b"))
+
+
+class TestDuplicateComponents:
+    @pytest.mark.parametrize("n", [5, 6, 7, 8])
+    def test_labels_read_no_input(self, spark, n):
+        """The caller's action reads the last round's output: it evaluates
+        no input row again, whichever round the labels converged in."""
+        from poppy_spark.spark.dedup import duplicate_components
+
+        seen = spark.sparkContext.accumulator(0)
+        labels = duplicate_components(_chain(spark, n, seen))
+        during = seen.value
+        assert during >= n - 1
+        rows = labels.collect()
+        assert seen.value == during
+        assert sorted(rows) == sorted((i, 0) for i in range(n))
+
+    def test_unconverged_raises(self, spark):
+        """A 40-id chain needs 40 rounds: 25 raise, 50 give one component."""
+        from poppy_spark.spark.dedup import duplicate_components
+
+        pairs = _chain(spark, 40)
+        with pytest.raises(ValueError, match="max_iter=25"):
+            duplicate_components(pairs)
+        rows = duplicate_components(pairs, max_iter=50).collect()
+        assert sorted(rows) == [(i, 0) for i in range(40)]
