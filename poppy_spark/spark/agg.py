@@ -588,19 +588,31 @@ def _spread(df: DataFrame, repartition: int | None = None) -> tuple[DataFrame, i
     a one-split scan ran a whole update on ONE core).  The package's one
     read of a partition count.
 
-    An AQE plan (its exchanges) is left as it comes unless ``repartition``
-    pins a count: AQE sizes its partitions, and reading their count would
-    run its shuffle stages.  Its count is the planned one, before AQE
-    coalesces (else the shuffle partitions): an upper bound."""
+    An AQE plan (one with exchanges) reads its count from the plan when a
+    ``repartition(n)`` exchange fixes it (AQE never resizes those), else
+    is always spread: AQE knows the count only once the shuffle stages
+    have run, so reading it would run them in a job of their own, and its
+    coalescing can leave a small input on fewer partitions than cores."""
+    want = repartition or df.sparkSession.sparkContext.defaultParallelism
     plan = df._jdf.queryExecution().executedPlan()
-    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        if repartition:
-            return df.repartition(repartition), repartition
-        planned = plan.inputPlan().outputPartitioning().numPartitions()
-        return df, planned or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    n = df.rdd.getNumPartitions()
-    want = repartition or max(n, df.sparkSession.sparkContext.defaultParallelism)
+    if plan.getClass().getSimpleName() != "AdaptiveSparkPlanExec":
+        n = df.rdd.getNumPartitions()
+    elif (n := _pinned_count(plan.inputPlan())) is None:
+        return df.repartition(want), want
+    want = repartition or max(n, want)
     return (df.repartition(want) if want != n else df), want
+
+
+def _pinned_count(node) -> int | None:
+    """The partition count of a physical plan whose output partitions are
+    those of a ``repartition(n)`` exchange under single-child nodes only,
+    else ``None``."""
+    n = node.outputPartitioning().numPartitions()
+    while node.getClass().getSimpleName() != "ShuffleExchangeExec":
+        if node.children().size() != 1:
+            return None
+        node = node.children().apply(0)
+    return n if node.shuffleOrigin().toString() == "REPARTITION_BY_NUM" else None
 
 
 def _auto_strategy(sk0: Sketch, n_parts: int) -> str:

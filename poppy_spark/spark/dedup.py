@@ -400,7 +400,15 @@ def _materialized(df: DataFrame) -> DataFrame:
     """``df`` as one leaf over the RDD one run of its plan built: its
     shuffle stages run once (here under AQE, else in the first action) and
     later actions skip them, so they re-read no input and no earlier
-    round, and nothing is cached (lost output recomputes from lineage)."""
+    round, and nothing is cached (lost output recomputes from lineage).
+
+    The leaf keeps that lineage, so every shuffle below it keeps its
+    files on executor disk until the caller drops the frame: for the last
+    round of :func:`duplicate_components`, each round's exchanges, about
+    rounds x (|edges| + a few x |labels|) rows.  Its rows are ``toRdd``'s,
+    uncopied (a task may reuse one row object); that is safe because the
+    only reader of that RDD is this frame's scan, which projects each row
+    into its own buffer as it arrives, and nothing caches the RDD."""
     jdf = df._jdf
     rows = jdf.queryExecution().toRdd()
     spark = df.sparkSession
@@ -424,8 +432,10 @@ def duplicate_components(
     rounds (near-dup clusters are shallow — LSH links most members
     directly), each round one shuffle join + one aggregation, its labels
     :func:`_materialized`: the caller's action re-runs neither the rounds
-    nor the input pipeline.  Raises ``ValueError`` when a label still
-    changed in round ``max_iter`` (a chain of n ids needs n rounds).
+    nor the input pipeline, and every round's shuffle files stay on
+    executor disk until the caller drops the returned frame.  Raises
+    ``ValueError`` when a label still changed in round ``max_iter`` (a
+    chain of n ids needs n rounds).
     Deterministic: labels are ids, min is order-free.
     """
     edges = (

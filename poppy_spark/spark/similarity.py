@@ -267,8 +267,7 @@ def semantic_dedup(
         centroids = ivf_train_centroids(
             corpus, id_col, vec_col, n_centroids, iters=iters, seed=seed
         )
-    cells, _ = _with_cells(centroids, _frame(corpus, id_col, vec_col))
-    cells = _thin_hot_cells(cells, max_cell_size)
+    cells = _thin_hot_cells(_with_cells(centroids, _frame(corpus, id_col, vec_col)), max_cell_size)
     edges = _cell_edges(cells, corpus.schema[id_col].dataType, threshold)
     return duplicate_components(edges)
 
@@ -409,18 +408,20 @@ def _training_sample(
 
 
 def _with_cells(
-    centroids: np.ndarray, c: DataFrame, q: DataFrame | None = None, n_probe: int = 1
-) -> tuple[DataFrame, DataFrame | None]:
-    """``(c, q)`` with a ``cell`` column: the corpus frame's nearest cell,
-    and the query frame (if any, else ``None``) once per each of its
-    ``n_probe`` nearest cells.  Both sides share ONE Spark broadcast of
-    the transposed centroids (see :func:`_ivf_cells_udf`)."""
+    centroids: np.ndarray, c: DataFrame, probe: DataFrame | None = None, n_probe: int = 1
+):
+    """The corpus frame ``c`` with a ``cell`` column, its nearest cell.
+    Given a query frame ``probe`` (only :func:`ivf_topk` passes one), the
+    pair ``(c, probe)``, ``probe`` once per each of its ``n_probe``
+    nearest cells; both sides share ONE Spark broadcast of the transposed
+    centroids (see :func:`_ivf_cells_udf`)."""
     bc = c.sparkSession.sparkContext.broadcast(centroids.T.copy())
     nc = centroids.shape[0]
     c_cells = c.withColumn("cell", _ivf_cells_udf(bc, nc, 1)(F.col("v"))[0])
-    if q is None:
-        return c_cells, None
-    return c_cells, q.withColumn("cell", F.explode(_ivf_cells_udf(bc, nc, n_probe)(F.col("qv"))))
+    if probe is None:
+        return c_cells
+    probe_cells = _ivf_cells_udf(bc, nc, n_probe)(F.col("qv"))
+    return c_cells, probe.withColumn("cell", F.explode(probe_cells))
 
 
 def _ivf_cells_udf(bc, n_centroids: int, n_probe: int):
@@ -533,7 +534,7 @@ def ivf_cell_stats(
     :func:`ivf_topk`: a cell holding >> |corpus|/n_centroids vectors
     means a degenerate embedding cluster — cap it with ``max_cell_size``
     or retrain with more centroids."""
-    cells, _ = _with_cells(centroids, _frame(corpus, id_col, vec_col))
+    cells = _with_cells(centroids, _frame(corpus, id_col, vec_col))
     return cells.groupBy("cell").agg(F.count("*").alias("n_vectors"))
 
 
@@ -724,42 +725,6 @@ def pq_encode(
     return c.select(F.col(id_col).alias("id"), udf(F.col("vec_n")).alias("codes"))
 
 
-def _collect_normalized_queries(
-    queries: DataFrame, query_id_col: str, vec_col: str, max_queries: int, op: str
-) -> list:
-    """Driver-side query prep for the LUT-building top-k verbs: collect at
-    most ``max_queries + 1`` non-null query rows in ONE bounded JVM job and
-    normalize them on the driver through the exact kernel
-    (:func:`_normalize_rows_exact`) — the former shape ran a distributed
-    normalize UDF plus a separate guard-count job for a <=10k-row batch,
-    ~0.4 s of per-job overhead per call.  Returns ``[(query_id, qv
-    float64 ndarray), ...]``; raises past ``max_queries``."""
-    import pyarrow as pa
-
-    qraw = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        )
-        .filter(F.col("qv").isNotNull())
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(qraw) > max_queries:
-        raise ValueError(
-            f"{op} query batch exceeds max_queries={max_queries} (LUTs are "
-            "driver-built); chunk the query batch and union results, or raise "
-            "max_queries deliberately"
-        )
-    el = queries.schema[vec_col].dataType.elementType
-    pa_el = pa.float64() if isinstance(el, DoubleType) else pa.float32()
-    vecs = pa.array([list(r["qv"]) for r in qraw], type=pa.list_(pa_el))
-    normed = _normalize_rows_exact(vecs)
-    return [
-        (r["query_id"], np.asarray(normed[i].as_py(), dtype=np.float64))
-        for i, r in enumerate(qraw)
-    ]
-
-
 def pq_topk(
     codes: DataFrame,
     queries: DataFrame,
@@ -783,7 +748,7 @@ def pq_topk(
     reaches driver memory.  For larger batches, loop over query chunks
     and union the results (each chunk reuses the same ``codes`` index),
     or raise ``max_queries`` deliberately."""
-    return _adc_topk(codes, queries, vec_col, query_id_col, k, codebooks, max_queries, "pq_topk")
+    return _adc_topk(codes, queries, vec_col, query_id_col, k, codebooks, max_queries)
 
 
 def _adc_topk(
@@ -794,31 +759,46 @@ def _adc_topk(
     k: int,
     codebooks: np.ndarray,
     max_queries: int,
-    op: str,
     centroids: np.ndarray | None = None,
     n_probe: int = 1,
 ) -> DataFrame:
     """The ADC scorer of :func:`pq_topk` over ``codes`` (``id``, ``codes``,
     and ``cell`` when ``centroids`` is given): with ``centroids``, IVF-PQ
     is PQ with a per-query cell mask, each query scoring only the rows of
-    its ``n_probe`` nearest cells."""
+    its ``n_probe`` nearest cells.  At most ``max_queries + 1`` non-NULL
+    query rows are collected in ONE bounded job and normalized on the
+    driver through the exact kernel (:func:`_normalize_rows_exact`)."""
     import pandas as pd
+    import pyarrow as pa
 
-    qpairs = _collect_normalized_queries(queries, query_id_col, vec_col, max_queries, op)
+    qraw = (
+        queries.select(F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+        .filter(F.col("qv").isNotNull())
+        .limit(max_queries + 1)
+        .collect()
+    )
+    if len(qraw) > max_queries:
+        raise ValueError(
+            f"{'pq_topk' if centroids is None else 'ivfpq_topk'} query batch exceeds "
+            f"max_queries={max_queries} (LUTs are driver-built); chunk the query "
+            "batch and union results, or raise max_queries deliberately"
+        )
+    el = queries.schema[vec_col].dataType.elementType
+    pa_el = pa.float64() if isinstance(el, DoubleType) else pa.float32()
+    normed = _normalize_rows_exact(pa.array([list(r["qv"]) for r in qraw], type=pa.list_(pa_el)))
+    qs = [np.asarray(v, dtype=np.float64) for v in normed.to_pylist()]
     m, n_codes, dsub = codebooks.shape
-    luts, qids, probe_cells = [], [], []
-    for qid, q in qpairs:
-        lut = np.empty((m, n_codes), dtype=np.float64)
-        for i in range(m):
-            lut[i] = codebooks[i] @ q[i * dsub : (i + 1) * dsub]
-        luts.append(lut)
-        qids.append(qid)
-        if centroids is not None:
-            p = min(n_probe, centroids.shape[0])
-            top = np.argpartition(-(q @ centroids.T), p - 1)[:p]
-            probe_cells.append(sorted(int(x) for x in top))
+    luts = [
+        np.array([codebooks[i] @ q[i * dsub : (i + 1) * dsub] for i in range(m)], dtype=np.float64)
+        for q in qs
+    ]
+    probe_cells = None
+    if centroids is not None:
+        p = min(n_probe, centroids.shape[0])
+        probe_cells = [sorted(int(x) for x in np.argpartition(-(q @ centroids.T), p - 1)[:p])
+                       for q in qs]
     bc = codes.sparkSession.sparkContext.broadcast(
-        (qids, np.stack(luts) if luts else None, probe_cells if centroids is not None else None)
+        ([r["query_id"] for r in qraw], np.stack(luts) if luts else None, probe_cells)
     )
     out_schema = StructType(
         [
@@ -837,11 +817,10 @@ def _adc_topk(
                 continue
             cm = np.asarray(pdf["codes"].tolist(), dtype=np.int64)  # (n, m)
             ids = pdf["id"].to_numpy()
-            cell_arr = None if cells_b is None else pdf["cell"].to_numpy()
             for qi, qid in enumerate(qids_b):
                 sub, sub_ids = cm, ids
                 if cells_b is not None:
-                    mask = np.isin(cell_arr, cells_b[qi])
+                    mask = np.isin(pdf["cell"].to_numpy(), cells_b[qi])
                     if not mask.any():
                         continue
                     sub, sub_ids = cm[mask], ids[mask]
@@ -893,11 +872,10 @@ def ivfpq_topk(
     if codebooks is None:
         codebooks = pq_train_codebooks(corpus, id_col, vec_col, m_subspaces, n_codes)
     # corpus side: one pass computes the cell AND the codes
-    c_cells, _ = _with_cells(centroids, _frame(corpus, id_col, vec_col))
+    c_cells = _with_cells(centroids, _frame(corpus, id_col, vec_col))
     codes = pq_encode(c_cells, "id", "v", codebooks).join(
         c_cells.select("id", "cell"), "id"
     )
     return _adc_topk(
-        codes, queries, vec_col, query_id_col, k, codebooks, max_queries,
-        "ivfpq_topk", centroids, n_probe,
+        codes, queries, vec_col, query_id_col, k, codebooks, max_queries, centroids, n_probe
     )

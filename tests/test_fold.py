@@ -398,6 +398,5 @@ class TestOneShapeGuard:
             "similarity.py:cosine_near_dup_pairs",
         ]
         assert sites(sim, "mapInPandas") == ["_adc_topk"]
-        assert sites(sim, "_collect_normalized_queries") == ["_adc_topk"]
         assert sites(sim, "_adc_topk") == ["ivfpq_topk", "pq_topk"]
         assert not hasattr(similarity, "_norm")

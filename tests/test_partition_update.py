@@ -220,7 +220,9 @@ class TestSpread:
 
 class TestSpreadExchanged:
     """``_spread`` over a plan whose exchanges AQE runs reads no partition
-    count, so it submits no job; such an input keeps AQE's partitions and
+    count, so it submits no job: a ``repartition(n)`` count is read from
+    the plan and kept as the parent kept it, any other such input is
+    spread over the cores (AQE may coalesce a small one below them), and
     the flat build over it stays byte-equal."""
 
     @pytest.fixture()
@@ -229,21 +231,36 @@ class TestSpreadExchanged:
             F.format_string("key-%08d", F.col("id") % 1500).alias("k")
         ).distinct()
 
-    def test_no_job_for_an_exchanged_plan(self, spark, exchanged):
+    @staticmethod
+    def _no_job(spark, df, repartition=None):
         from poppy_spark.spark.agg import _spread
 
         sc = spark.sparkContext
         group = f"spread-{uuid.uuid4().hex}"
         sc.setJobGroup(group, group)
         try:
-            spread, n = _spread(exchanged)
+            out = _spread(df, repartition)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-        assert spread is exchanged
-        # the planned count bounds what AQE runs (the merge tree's fan-in)
-        assert n >= exchanged.rdd.getNumPartitions()
+        return out
+
+    def test_no_job_for_an_exchanged_plan(self, spark, exchanged):
+        dp = spark.sparkContext.defaultParallelism
+        spread, n = self._no_job(spark, exchanged)
+        assert n == dp == spread.rdd.getNumPartitions()
+        assert self._no_job(spark, exchanged, 3)[0].rdd.getNumPartitions() == 3
+
+    def test_repartition_count_read_from_the_plan(self, spark, exchanged):
+        dp = spark.sparkContext.defaultParallelism
+        wide = exchanged.repartition(dp + 3).select("k")
+        spread, n = self._no_job(spark, wide)
+        assert spread is wide and n == dp + 3 == spread.rdd.getNumPartitions()
+        spread, n = self._no_job(spark, exchanged.repartition(2, "k"))
+        assert n == dp == spread.rdd.getNumPartitions()
+        spread, n = self._no_job(spark, wide.coalesce(2))
+        assert n == dp == spread.rdd.getNumPartitions()
 
     def test_flat_build_byte_equal(self, spark, exchanged):
         fac = BloomSketch.factory(1500, 0.01)
