@@ -1,42 +1,37 @@
-"""North-rule ``spark-submit --py-files`` evidence at two parallelism levels.
+"""North-rule ``spark-submit --py-files`` evidence at an N->4N pair.
 
 Packages ``poppy_spark`` into a zip, then runs bench/submit_job.py via the
 real ``spark-submit`` binary at N and 4N cores (the sandbox's stand-in for N
 and 4N executors) FROM A NEUTRAL CWD — the repo is not on sys.path, so the
 import inside the job proves the archive is complete and self-contained.
-Appends the throughput table + scaling efficiency to BENCH/BASELINE.md.
+Each level is one steal-gated sample, re-sampled while steal exceeds the
+2% contamination threshold.  The dataset is bench/scaling.py's
+transcripts (``POPPY_SCALE_DATA``); ``n_convs`` regenerates it first.
+Appends bench/scaling.py's report to BENCH/BASELINE.md.
 
-Run: python bench/submit_scaling.py [n_convs]
+Run: python bench/submit_scaling.py [--pair N,4N] [n_convs]
+
+The default pair is 8,32.  This host's memory subsystem saturates below 32
+string-feed workers (see BENCH/PERF_NOTES.md), so the in-cache pair 2,8 is
+the contention-free reading of the north rule's N->4N criterion.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
 import subprocess
 import sys
-from datetime import datetime, timezone
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-#: N -> 4N parallelism pair; override e.g. POPPY_SUBMIT_PAIR=2,8.  This
-#: host's memory subsystem saturates below 32 string-feed workers (see
-#: PERF_NOTES), so the in-cache pair (2,8) is the honest uniprocessor-
-#: contention-free reading of the north rule's N->4N criterion.
-PAIR = tuple(
-    int(x) for x in os.environ.get("POPPY_SUBMIT_PAIR", "8,32").split(",")
-)
+import scaling  # noqa: E402  sibling in bench/ (not a package: bench.py shadows it)
+from poppy_spark.spark.session import _MALLOC_ENV  # noqa: E402
+
 ZIP_BASE = "/tmp/poppy_spark_pyfiles"
-#: same glibc-malloc + scan-split pinning as bench/scaling.py so numbers
-#: are comparable across the two harnesses
-ENV_TUNING = {
-    "MALLOC_MMAP_THRESHOLD_": str(16 << 30),
-    "MALLOC_TRIM_THRESHOLD_": str(16 << 30),
-    "MALLOC_TOP_PAD_": str(256 << 20),
-}
-MAX_PARTITION_BYTES = "4m"
 
 
 def make_zip() -> str:
@@ -49,12 +44,13 @@ def submit(cores: int, zip_path: str, data: str) -> dict:
         "--master", f"local[{cores}]",
         "--py-files", zip_path,
         "--conf", f"spark.sql.shuffle.partitions={cores}",
-        "--conf", f"spark.sql.files.maxPartitionBytes={MAX_PARTITION_BYTES}",
+        "--conf", f"spark.sql.files.maxPartitionBytes={scaling.MAX_PARTITION_BYTES}",
         "--conf", "spark.sql.adaptive.enabled=true",
         os.path.join(REPO, "bench", "submit_job.py"),
         "--data", data,
     ]
-    env = dict(os.environ, **ENV_TUNING)
+    # same glibc-malloc tuning as get_spark, so the harnesses compare
+    env = dict(os.environ, **_MALLOC_ENV)
     # neutral cwd: poppy_spark must come from the zip, not the checkout
     proc = subprocess.run(cmd, cwd="/tmp", env=env, capture_output=True, text=True)
     for line in proc.stdout.splitlines():
@@ -67,89 +63,41 @@ def submit(cores: int, zip_path: str, data: str) -> dict:
 
 
 def submit_steal_gated(cores: int, zip_path: str, data: str, retries: int = 2) -> dict:
-    """One steal-gated sample: probe /proc/stat steal BEFORE submitting
-    (30 s default), measure steal DURING the run, and re-sample when
-    either exceeds the ~2% contamination threshold — the round-4 manual
-    forensics protocol (BENCH/BASELINE.md) made automatic."""
-    import bench as _bench  # repo-root bench.py (shadows this directory)
-
-    probe_sec = float(os.environ.get("POPPY_STEAL_PROBE_SEC", "30"))
-    last = None
-    for attempt in range(retries + 1):
-        probe = _bench.steal_probe(probe_sec)
-        start = _bench._read_steal()
-        r = submit(cores, zip_path, data)
-        end = _bench._read_steal()
-        r["steal"] = probe or {}
-        if start and end:
-            dt = max(1, end[1] - start[1])
-            r["steal"]["run_steal_jiffies"] = end[0] - start[0]
-            r["steal"]["run_steal_frac"] = round((end[0] - start[0]) / dt, 5)
-        frac = max(
-            r["steal"].get("probe_steal_frac", 0.0),
-            r["steal"].get("run_steal_frac", 0.0),
-        )
-        r["steal"]["contaminated"] = bool(frac > 0.02)
-        last = r
-        if not r["steal"]["contaminated"]:
-            return r
-    return last
+    """One sample under a 30 s steal probe (``scaling.steal_stamped``),
+    re-sampled up to ``retries`` times while contaminated."""
+    for _ in range(retries + 1):
+        r, steal = scaling.steal_stamped(lambda: submit(cores, zip_path, data), 30)
+        r["steal"] = steal or {}
+        if not r["steal"].get("contaminated"):
+            break
+    return r
 
 
 def main() -> None:
-    if len(sys.argv) > 1:
-        # load the sibling generator by path: the repo-root bench.py module
-        # shadows the bench/ directory, so `import bench.scaling` would fail
-        import importlib.util
-
-        spec = importlib.util.spec_from_file_location(
-            "_poppy_bench_scaling", os.path.join(REPO, "bench", "scaling.py")
-        )
-        scaling = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(scaling)
-        data = os.environ.get("POPPY_SCALE_DATA", "/tmp/poppy_scaling_transcripts")
-        scaling._make_dataset(data, int(sys.argv[1]))
-    else:
-        data = os.environ.get("POPPY_SCALE_DATA", "/tmp/poppy_scaling_transcripts")
+    ap = argparse.ArgumentParser()
+    ap.add_argument("n_convs", nargs="?", type=int, help="regenerate the dataset first")
+    ap.add_argument("--pair", default="8,32", help="the N,4N core counts")
+    args = ap.parse_args()
+    lo, hi = (int(x) for x in args.pair.split(","))
+    data = scaling.data_path("sketch")
+    if args.n_convs:
+        scaling.make_dataset("sketch", data, args.n_convs)
 
     zip_path = make_zip()
-    runs = {c: submit_steal_gated(c, zip_path, data) for c in PAIR}
-    lo, hi = PAIR
-    effs = {
-        job: round((runs[lo][f"{job}_sec"] / runs[hi][f"{job}_sec"]) / (hi / lo), 3)
-        for job in ("sharded", "hll")
-    }
-
-    lines = [
-        f"\n## spark-submit --py-files run {datetime.now(timezone.utc).isoformat(timespec='seconds')}",
-        "",
-        f"Real `spark-submit --py-files {os.path.basename(zip_path)}` from a neutral cwd",
+    runs = {c: submit_steal_gated(c, zip_path, data) for c in (lo, hi)}
+    steal_note = "; ".join(
+        f"local[{c}] steal probe {runs[c]['steal'].get('probe_steal_frac', 'n/a')}"
+        f" / run {runs[c]['steal'].get('run_steal_frac', 'n/a')}"
+        f" ({'CONTAMINATED' if runs[c]['steal'].get('contaminated') else 'clean'})"
+        for c in (lo, hi)
+    )
+    effs = scaling.report(
+        "spark-submit --py-files run",
+        f"Real `spark-submit --py-files {os.path.basename(zip_path)}` from a neutral cwd\n"
         f"(package imported from the archive, not the checkout) over "
         f"{runs[lo]['n_rows']:,} transcript turns; best of 3 per level.",
-        "",
-        "| cores | sharded s | hll s | sharded M/s | hll M/s |",
-        "|---|---|---|---|---|",
-    ]
-    for c in PAIR:
-        r = runs[c]
-        lines.append(
-            f"| {c} | {r['sharded_sec']} | {r['hll_sec']} "
-            f"| {r['sharded_M_turns_per_sec']} | {r['hll_M_turns_per_sec']} |"
-        )
-    steal_note = "; ".join(
-        f"local[{c}] steal probe {runs[c].get('steal', {}).get('probe_steal_frac', 'n/a')}"
-        f" / run {runs[c].get('steal', {}).get('run_steal_frac', 'n/a')}"
-        f" ({'CONTAMINATED' if runs[c].get('steal', {}).get('contaminated') else 'clean'})"
-        for c in PAIR
+        runs, [(lo, hi)], "turns", [f"Steal gate (auto): {steal_note}."],
     )
-    lines += [
-        "",
-        f"Scaling efficiency {lo}->{hi}: sharded {effs['sharded']}, hll {effs['hll']} "
-        "(= (T_low/T_high)/(high/low), target >= 0.8 per the north rule).",
-        f"Steal gate (auto): {steal_note}.",
-    ]
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "a") as f:
-        f.write("\n".join(lines) + "\n")
     print(json.dumps({"runs": runs, "efficiency": effs, "zip": zip_path}))
 
 

@@ -20,6 +20,7 @@ table-scale inputs.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import sys
 import time
 
@@ -48,6 +49,24 @@ def _session_exists() -> bool:
         except Exception:
             pass
     return getattr(SparkSession, "_instantiatedSession", None) is not None
+
+
+@contextlib.contextmanager
+def _session(app_name: str, jobs: int):
+    """A ``local[jobs]`` session for one command.  ``getOrCreate`` may hand
+    back a session owned by the embedding process (tests, notebooks): it
+    is reused and left running; only a session this command created is
+    stopped on exit."""
+    from poppy_spark.spark.session import get_spark
+
+    owned = not _session_exists()
+    spark = get_spark(app_name, master=f"local[{jobs}]", shuffle_partitions=max(jobs, 1))
+    try:
+        spark.sparkContext.setLogLevel("ERROR")
+        yield spark
+    finally:
+        if owned:
+            spark.stop()
 
 
 def _iter_chunks(paths: list[str]):
@@ -98,16 +117,7 @@ def _create_spark(args) -> int:
     if args.shards > 1 and (args.version != 2 or args.opt != 0):
         print("--shards requires v2 with OptLevel NONE", file=sys.stderr)
         return 2
-    from poppy_spark.spark.session import get_spark
-
-    # only stop the session on exit if WE created it — getOrCreate may hand
-    # back a session owned by the embedding process (tests, notebooks)
-    owned = not _session_exists()
-    spark = get_spark(
-        "poppy-cli-create", master=f"local[{args.jobs}]", shuffle_partitions=args.jobs
-    )
-    try:
-        spark.sparkContext.setLogLevel("ERROR")
+    with _session("poppy-cli-create", args.jobs) as spark:
         df = spark.read.text(args.files)
         cap = df.count()  # capacity from exact line count, like the local path
         if args.shards > 1:
@@ -125,9 +135,6 @@ def _create_spark(args) -> int:
                 df, "value", BloomSketch.factory(cap, args.fpp, args.version, args.opt)
             )
             sk.filter.save(args.filter)
-    finally:
-        if owned:
-            spark.stop()
     return 0
 
 
@@ -156,19 +163,11 @@ def cmd_show(args) -> int:
 
     if _os.path.isdir(args.filter) and _os.path.isdir(_os.path.join(args.filter, "shards")):
         # a ShardedBloom.save() directory: show shard layout via Spark
-        from poppy_spark.spark.session import get_spark
         from poppy_spark.spark.sharded import ShardedBloom
 
-        owned = not _session_exists()
-        spark = get_spark("poppy-cli-show", master="local[2]", shuffle_partitions=2)
-        try:
-            spark.sparkContext.setLogLevel("ERROR")
-            sb = ShardedBloom.load(spark, args.filter)
-            for k, v in sb.info().items():
+        with _session("poppy-cli-show", 2) as spark:
+            for k, v in ShardedBloom.load(spark, args.filter).info().items():
                 print(f"{k}: {v}")
-        finally:
-            if owned:
-                spark.stop()
         return 0
     bf = load(args.filter, partial=True)
     for k, v in bf.info().items():
@@ -234,30 +233,13 @@ def cmd_bench(args) -> int:
     return 0
 
 
-def _get_session(jobs: int):
-    """(session, owned): an active session from an embedding process
-    (tests, notebooks) is REUSED and must not be stopped — only a session
-    this command created gets stopped on exit (same ownership contract as
-    ``_create_spark``)."""
-    from poppy_spark.spark.session import get_spark
-
-    owned = not _session_exists()
-    spark = get_spark(
-        app_name="poppy-spark-cli", master=f"local[{jobs}]",
-        shuffle_partitions=max(jobs, 1),
-    )
-    return spark, owned
-
-
 def cmd_profile(args) -> int:
     """Beyond-reference: one-line-per-column data profile of a parquet
     table (exact counts/nulls/min/max + HLL distinct + KLL median — two
     scans at any width, ``spark/profile.py``)."""
     import json
 
-    spark, owned = _get_session(args.jobs)
-    try:
-        spark.sparkContext.setLogLevel("ERROR")
+    with _session("poppy-spark-cli", args.jobs) as spark:
         from poppy_spark.spark.profile import profile_table
 
         df = spark.read.parquet(args.table)
@@ -265,9 +247,6 @@ def cmd_profile(args) -> int:
         for r in profile_table(df, cols).collect():
             print(json.dumps(r.asDict()))
         return 0
-    finally:
-        if owned:
-            spark.stop()
 
 
 def cmd_clean(args) -> int:
@@ -279,9 +258,7 @@ def cmd_clean(args) -> int:
 
     from pyspark.sql import functions as F
 
-    spark, owned = _get_session(args.jobs)
-    try:
-        spark.sparkContext.setLogLevel("ERROR")
+    with _session("poppy-spark-cli", args.jobs) as spark:
         from poppy_spark.spark.dedup import drop_exact_duplicates, line_dedup_corpus
         from poppy_spark.spark.text import (
             gopher_quality_filters,
@@ -319,9 +296,6 @@ def cmd_clean(args) -> int:
         n_out = spark.read.parquet(args.out).count()
         print(json.dumps({"rows_in": n_in, "rows_out": n_out, "out": args.out}))
         return 0
-    finally:
-        if owned:
-            spark.stop()
 
 
 def cmd_spans(args) -> int:
@@ -332,9 +306,7 @@ def cmd_spans(args) -> int:
 
     from pyspark.sql import functions as F
 
-    spark, owned = _get_session(args.jobs)
-    try:
-        spark.sparkContext.setLogLevel("ERROR")
+    with _session("poppy-spark-cli", args.jobs) as spark:
         from poppy_spark.spark.spans import repeated_spans, span_texts
 
         df = spark.read.parquet(args.table)
@@ -352,9 +324,6 @@ def cmd_spans(args) -> int:
         ):
             print(json.dumps(r.asDict()))
         return 0
-    finally:
-        if owned:
-            spark.stop()
 
 
 def main(argv=None) -> int:

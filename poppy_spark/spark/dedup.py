@@ -13,10 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-
-def normalized_words(text: Column) -> Column:
-    """Lowercased whitespace tokens with empties removed."""
-    return F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != "")
+from poppy_spark.spark.text import _words as normalized_words
 
 
 # --------------------------------------------------------------------------

@@ -463,12 +463,48 @@ def audio_near_pairs(
     )
 
 
-def extract_media_features(
-    df: DataFrame, allow_fake: bool = True, batch_rows: int = 1024
-) -> DataFrame:
+#: rows :func:`extract_media_features` decodes and pools at once: a task
+#: holds one chunk of luma planes, never a whole Arrow batch
+_POOL_CHUNK_ROWS = 1024
+
+
+def _pool_grid(X: np.ndarray) -> np.ndarray:
+    """``(n, 64)`` float64: each of the ``n`` stacked ``(h, w)`` planes cut
+    into an 8x8 ``np.array_split`` grid, one mean per cell.  One
+    ``mean(axis=(1, 2))`` per cell applies the identical float32 reduction
+    as a per-plane ``.mean()`` (bit-equal, pytest-pinned) at ~1/30 of the
+    cost; an empty cell is NaN, as ``.mean()`` gives."""
+    rb = np.cumsum([0] + [len(a) for a in np.array_split(np.arange(X.shape[1]), 8)])
+    cb = np.cumsum([0] + [len(a) for a in np.array_split(np.arange(X.shape[2]), 8)])
+    pooled = np.full((X.shape[0], 64), np.nan)
+    for k in range(64):
+        sub = X[:, rb[k // 8] : rb[k // 8 + 1], cb[k % 8] : cb[k % 8 + 1]]
+        if sub.size:
+            pooled[:, k] = sub.mean(axis=(1, 2))
+    return pooled
+
+
+def _pooled_features(bufs, ws, hs, allow_fake: bool):
+    """``(row indexes, _pool_grid of their planes)`` per plane shape of
+    each ``_POOL_CHUNK_ROWS``-row chunk of the non-NULL rows."""
+    for start in range(0, len(bufs), _POOL_CHUNK_ROWS):
+        by_shape: dict = {}
+        for i in range(start, min(start + _POOL_CHUNK_ROWS, len(bufs))):
+            if bufs[i] is None:
+                continue
+            plane = decode_image(bytes(bufs[i]), int(ws[i]), int(hs[i]), allow_fake=allow_fake)
+            grp = by_shape.setdefault((plane.shape, plane.dtype.str), ([], []))
+            grp[0].append(i)
+            grp[1].append(plane)
+        for idxs, planes in by_shape.values():
+            yield idxs, _pool_grid(np.stack(planes))
+
+
+def extract_media_features(df: DataFrame, allow_fake: bool = True) -> DataFrame:
     """Append ``feat array<float>`` (FEATURE_DIM) per media row via
     ``mapInPandas`` — the real Arrow plumbing for a decode/feature stage:
-    bounded batch memory, null-safe, schema-checked."""
+    bounded batch memory (:func:`_pooled_features`), null-safe,
+    schema-checked."""
     import pyspark.sql.types as T
 
     out_schema = T.StructType(
@@ -477,40 +513,11 @@ def extract_media_features(
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            n = len(pdf)
-            feats: list = [None] * n
-            # decode per row, then pool per shape-group VECTORIZED: the 64
-            # per-cell ``.mean()`` calls per row were ~96% of this stage
-            # (~360us/row vs 13us to decode); ``mean(axis=(1, 2))`` over the
-            # stacked planes applies the identical float32 reduction per
-            # cell, so the pooled values are bit-equal (pytest-pinned)
-            by_shape: dict = {}
-            for i, (buf, w, h) in enumerate(
-                zip(pdf["media"], pdf["media_w"], pdf["media_h"])
-            ):
-                if buf is None:
-                    continue
-                plane = decode_image(bytes(buf), int(w), int(h), allow_fake=allow_fake)
-                grp = by_shape.setdefault((plane.shape, plane.dtype.str), ([], []))
-                grp[0].append(i)
-                grp[1].append(plane)
-            for ((ph, pw), _), (idxs, planes) in by_shape.items():
-                X = np.stack(planes)
-                rb = np.cumsum([0] + [len(a) for a in np.array_split(np.arange(ph), 8)])
-                cb = np.cumsum([0] + [len(a) for a in np.array_split(np.arange(pw), 8)])
-                pooled = np.empty((len(planes), 64), dtype=np.float64)
-                with np.errstate(invalid="ignore"):
-                    k = 0
-                    for ri in range(8):
-                        for cj in range(8):
-                            sub = X[:, rb[ri] : rb[ri + 1], cb[cj] : cb[cj + 1]]
-                            if sub.shape[1] == 0 or sub.shape[2] == 0:
-                                pooled[:, k] = np.nan  # empty cell, as .mean() gave
-                            else:
-                                pooled[:, k] = sub.mean(axis=(1, 2))
-                            k += 1
+            feats: list = [None] * len(pdf)
+            cols = (pdf[c].tolist() for c in ("media", "media_w", "media_h"))
+            for idxs, pooled in _pooled_features(*cols, allow_fake=allow_fake):
                 for row_i, vals in zip(idxs, pooled):
-                    feats[row_i] = [float(x) for x in vals]
+                    feats[row_i] = vals.tolist()
             pdf = pdf.copy()
             pdf["feat"] = feats
             yield pdf

@@ -689,13 +689,14 @@ def pq_train_codebooks(
 
 
 def pq_encode(
-    corpus: DataFrame, id_col: str, vec_col: str, codebooks: np.ndarray
+    corpus: DataFrame, id_col: str, vec_col: str, codebooks: np.ndarray, carry: tuple = ()
 ) -> DataFrame:
-    """``(id, codes array<int>)``: each vector's nearest codeword per
-    subspace — the 8-bit-per-subspace compressed index (a 768-dim float32
-    embedding becomes ``m_subspaces`` bytes, ~768x smaller at m=4).  One
-    Arrow-batched distance pass per 16k-row batch; the codebooks ship as a
-    single Spark broadcast."""
+    """``(id, codes array<int>, *carry)``: each vector's nearest codeword
+    per subspace — the 8-bit-per-subspace compressed index (a 768-dim
+    float32 embedding becomes ``m_subspaces`` bytes, ~768x smaller at
+    m=4) — with the ``carry`` columns of its row.  One Arrow-batched
+    distance pass per 16k-row batch; the codebooks ship as a single Spark
+    broadcast."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -722,7 +723,7 @@ def pq_encode(
     # fixed per-batch cost for no compute win
     # NULLs dropped on the input vector: see with_normalized
     c = with_normalized(corpus.filter(F.col(vec_col).isNotNull()), vec_col)
-    return c.select(F.col(id_col).alias("id"), udf(F.col("vec_n")).alias("codes"))
+    return c.select(F.col(id_col).alias("id"), udf(F.col("vec_n")).alias("codes"), *carry)
 
 
 def pq_topk(
@@ -871,11 +872,10 @@ def ivfpq_topk(
         centroids = ivf_train_centroids(corpus, id_col, vec_col, n_centroids)
     if codebooks is None:
         codebooks = pq_train_codebooks(corpus, id_col, vec_col, m_subspaces, n_codes)
-    # corpus side: one pass computes the cell AND the codes
+    # corpus side: one projection carries each row's cell AND its codes
+    # (a join back on id would multiply an id held by k rows into k^2 rows)
     c_cells = _with_cells(centroids, _frame(corpus, id_col, vec_col))
-    codes = pq_encode(c_cells, "id", "v", codebooks).join(
-        c_cells.select("id", "cell"), "id"
-    )
+    codes = pq_encode(c_cells, "id", "v", codebooks, carry=("cell",))
     return _adc_topk(
         codes, queries, vec_col, query_id_col, k, codebooks, max_queries, centroids, n_probe
     )

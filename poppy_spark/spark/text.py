@@ -78,6 +78,8 @@ STOPWORDS = {
 
 
 def _words(text: Column) -> Column:
+    """Lowercased whitespace tokens with empties removed: the one word
+    tokenizer (``dedup.normalized_words`` is this function)."""
     return F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != "")
 
 
@@ -273,7 +275,7 @@ def gopher_quality_filters(
     no shuffle: at 100 TB this fuses into the scan."""
     t = F.col(text_col)
     words = F.filter(F.split(t, r"\s+"), lambda w: w != "")
-    words_lc = F.filter(F.split(F.lower(t), r"\s+"), lambda w: w != "")
+    words_lc = _words(t)
     n_words = F.size(words).cast("bigint")
     total_chars = F.aggregate(
         words, F.lit(0).cast("bigint"), lambda acc, w: acc + F.length(w)

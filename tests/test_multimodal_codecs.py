@@ -4,6 +4,7 @@ through real file bytes and the Spark feature stages recover the known
 ground truth."""
 
 import math
+import tracemalloc
 
 import numpy as np
 import pytest
@@ -90,6 +91,58 @@ class TestWav:
             f.writeframes(inter.tobytes())
         x, r = decode_wav(out.getvalue())
         assert x.size == 100 and abs(x.mean()) < 1e-4  # L/R cancel
+
+
+class TestPooledFeatures:
+    """``_pooled_features``, the decode-and-pool kernel of
+    ``extract_media_features``."""
+
+    @pytest.mark.filterwarnings("ignore::RuntimeWarning")  # the reference's empty cells
+    def test_equals_per_plane_means(self, monkeypatch):
+        """Bit-equal to each plane's per-cell ``.mean()`` across chunk
+        edges, mixed shapes, planes too small for 8 cells and NULL rows."""
+        from poppy_spark.spark import multimodal
+
+        monkeypatch.setattr(multimodal, "_POOL_CHUNK_ROWS", 16)
+        rng = np.random.default_rng(5)
+        shapes = [(int(rng.integers(1, 30)), int(rng.integers(1, 30))) for _ in range(70)]
+        bufs = [
+            None if i % 9 == 0 else encode_bmp(rng.integers(0, 256, (h, w, 3)).astype(np.uint8))
+            for i, (h, w) in enumerate(shapes)
+        ]
+        ws, hs = [w for _, w in shapes], [h for h, _ in shapes]
+        got = {}
+        for idxs, pooled in multimodal._pooled_features(bufs, ws, hs, allow_fake=False):
+            got.update(zip(idxs, pooled))
+        assert sorted(got) == [i for i, b in enumerate(bufs) if b is not None]
+        for i, vals in got.items():
+            plane = decode_image(bufs[i], ws[i], hs[i])
+            want = [
+                float(c.mean())
+                for row in np.array_split(plane, 8, axis=0)
+                for c in np.array_split(row, 8, axis=1)
+            ]
+            np.testing.assert_array_equal(vals, want)
+
+    def test_peak_memory_within_one_chunk(self):
+        """Five chunks of 32x32 planes peak within one chunk's bound (its
+        planes held once as a list and once stacked, the pooled rows of it
+        and of the chunk before), not the whole input's planes."""
+        from poppy_spark.spark.multimodal import _POOL_CHUNK_ROWS, _pooled_features
+
+        n = 5 * _POOL_CHUNK_ROWS
+        bufs = [i.to_bytes(8, "little") for i in range(n)]
+        per_row = 32 * 32 * 4 + 256  # a plane's bytes and its ndarray object
+        bound = _POOL_CHUNK_ROWS * (2 * per_row + 2 * 64 * 8) + (1 << 20)
+        tracemalloc.start()
+        try:
+            rows = sum(len(idxs) for idxs, _ in _pooled_features(bufs, [32] * n, [32] * n, True))
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert rows == n
+        assert peak <= bound, peak
+        assert n * per_row > bound
 
 
 class TestSparkStages:

@@ -144,3 +144,57 @@ class TestDuplicateComponents:
             duplicate_components(pairs)
         rows = duplicate_components(pairs, max_iter=50).collect()
         assert sorted(rows) == [(i, 0) for i in range(40)]
+
+
+class TestIvfpqDuplicateIds:
+    @pytest.fixture()
+    def index(self, spark):
+        from poppy_spark.spark.similarity import ivf_train_centroids, pq_train_codebooks
+
+        rng = np.random.default_rng(11)
+        X = rng.standard_normal((80, 8))
+        rows = [(i, [float(x) for x in v]) for i, v in enumerate(X)]
+        corpus = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+        cents = ivf_train_centroids(corpus, "vec_id", "embedding", 4)
+        books = pq_train_codebooks(corpus, "vec_id", "embedding", 2, 8)
+        return rows, corpus, cents, books
+
+    def test_no_pair_outnumbers_its_rows(self, spark, index):
+        """An id held by 2 corpus rows comes back at most twice per query."""
+        from poppy_spark.spark.similarity import ivfpq_topk
+
+        rows, unique, cents, books = index
+        dup = rows + [(7, [x * 1.01 for x in rows[7][1]])]
+        corpus = spark.createDataFrame(dup, "vec_id bigint, embedding array<double>")
+        queries = unique.filter(F.col("vec_id") < 10).select(
+            F.col("vec_id").alias("qid"), "embedding"
+        )
+        got = ivfpq_topk(
+            corpus, queries, "vec_id", "embedding", "qid", k=10, n_probe=4,
+            centroids=cents, codebooks=books,
+        ).groupBy("query_id", "id").count().collect()
+        held = {7: 2}
+        assert any(r["id"] == 7 for r in got)
+        assert all(r["count"] <= held.get(r["id"], 1) for r in got), got
+
+    def test_unique_ids_match_the_join(self, spark, index):
+        """On unique ids the carried codes and the top-k equal the former
+        codes-join-cells composition."""
+        from poppy_spark.spark.similarity import (
+            _adc_topk, _frame, _with_cells, ivfpq_topk, pq_encode,
+        )
+
+        _, corpus, cents, books = index
+        c_cells = _with_cells(cents, _frame(corpus, "vec_id", "embedding"))
+        joined = pq_encode(c_cells, "id", "v", books).join(c_cells.select("id", "cell"), "id")
+        carried = pq_encode(c_cells, "id", "v", books, carry=("cell",))
+        assert sorted(carried.collect()) == sorted(joined.collect())
+        queries = corpus.filter(F.col("vec_id") < 10).select(
+            F.col("vec_id").alias("qid"), "embedding"
+        )
+        want = _adc_topk(joined, queries, "embedding", "qid", 5, books, 100, cents, 2)
+        got = ivfpq_topk(
+            corpus, queries, "vec_id", "embedding", "qid", k=5, n_probe=2,
+            centroids=cents, codebooks=books,
+        )
+        assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
