@@ -24,6 +24,7 @@ import os
 import shutil
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -31,11 +32,11 @@ sys.path.insert(0, REPO)
 import scaling  # noqa: E402  sibling in bench/ (not a package: bench.py shadows it)
 from poppy_spark.spark.session import _MALLOC_ENV  # noqa: E402
 
-ZIP_BASE = "/tmp/poppy_spark_pyfiles"
 
-
-def make_zip() -> str:
-    return shutil.make_archive(ZIP_BASE, "zip", root_dir=REPO, base_dir="poppy_spark")
+def make_zip(directory: str) -> str:
+    """Archive ``poppy_spark`` as ``<directory>/poppy_spark_pyfiles.zip``."""
+    base = os.path.join(directory, "poppy_spark_pyfiles")
+    return shutil.make_archive(base, "zip", root_dir=REPO, base_dir="poppy_spark")
 
 
 def submit(cores: int, zip_path: str, data: str) -> dict:
@@ -51,8 +52,11 @@ def submit(cores: int, zip_path: str, data: str) -> dict:
     ]
     # same glibc-malloc tuning as get_spark, so the harnesses compare
     env = dict(os.environ, **_MALLOC_ENV)
-    # neutral cwd: poppy_spark must come from the zip, not the checkout
-    proc = subprocess.run(cmd, cwd="/tmp", env=env, capture_output=True, text=True)
+    # neutral cwd (the archive's own directory): poppy_spark must come from
+    # the zip, not the checkout
+    proc = subprocess.run(
+        cmd, cwd=os.path.dirname(zip_path), env=env, capture_output=True, text=True
+    )
     for line in proc.stdout.splitlines():
         if line.startswith("POPPY_SUBMIT_RESULT "):
             return json.loads(line[len("POPPY_SUBMIT_RESULT "):])
@@ -83,8 +87,12 @@ def main() -> None:
     if args.n_convs:
         scaling.make_dataset("sketch", data, args.n_convs)
 
-    zip_path = make_zip()
-    runs = {c: submit_steal_gated(c, zip_path, data) for c in (lo, hi)}
+    tmp = tempfile.mkdtemp()
+    try:
+        zip_path = make_zip(tmp)
+        runs = {c: submit_steal_gated(c, zip_path, data) for c in (lo, hi)}
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     steal_note = "; ".join(
         f"local[{c}] steal probe {runs[c]['steal'].get('probe_steal_frac', 'n/a')}"
         f" / run {runs[c]['steal'].get('run_steal_frac', 'n/a')}"
@@ -98,7 +106,7 @@ def main() -> None:
         f"{runs[lo]['n_rows']:,} transcript turns; best of 3 per level.",
         runs, [(lo, hi)], "turns", [f"Steal gate (auto): {steal_note}."],
     )
-    print(json.dumps({"runs": runs, "efficiency": effs, "zip": zip_path}))
+    print(json.dumps({"runs": runs, "efficiency": effs, "zip": os.path.basename(zip_path)}))
 
 
 if __name__ == "__main__":

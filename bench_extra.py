@@ -34,23 +34,31 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     ncpu = int(cpus)
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet").repartition(ncpu).cache()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(min(ncpu, 8)).cache()
-    n_line = lineitem.count()
-    docs.count()
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
-    emb.count()
+    spread = {"lineitem": ncpu, "documents": min(ncpu, 8)}
+    tables: dict = {}
+
+    def table(name):
+        """The ``name`` table, read, cached and counted when a wanted row
+        first needs it (before that row's timing starts)."""
+        if name not in tables:
+            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+            tables[name] = (df.repartition(spread[name]) if name in spread else df).cache()
+            tables[name].count()
+        return tables[name]
 
     timings: dict[str, float] = {}
 
-    def bench(name, fn, runs=2):
+    def bench(name, fn, *needs, runs=2):
+        """Time ``fn(*tables named by needs)``, best of ``runs``, when
+        ``name`` is wanted."""
         if name not in wanted:
             return None
+        args = [table(t) for t in needs]
         spark.sparkContext.setJobDescription(f"bench_extra: {name}")
         best, out = float("inf"), None
         for _ in range(runs):
             t0 = time.perf_counter()
-            out = fn()
+            out = fn(*args)
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 4)
         spark.sparkContext.setJobDescription(None)
@@ -69,89 +77,108 @@ def main() -> None:
     from poppy_spark.spark.spans import remove_repeated_spans, repeated_spans
     from poppy_spark.spark.text import quality_score, repetition_stats
 
-    ivf_queries = emb.limit(50).select(F.col("vec_id").alias("qid"), "embedding")
+    def ivf_queries(emb):
+        return emb.limit(50).select(F.col("vec_id").alias("qid"), "embedding")
 
     cents = bench(
-        "ivf_train", lambda: ivf_train_centroids(emb, "vec_id", "embedding", 32)
+        "ivf_train", lambda emb: ivf_train_centroids(emb, "vec_id", "embedding", 32),
+        "embeddings",
     )
     if "ivf_topk" in wanted:
         if cents is None:
-            cents = ivf_train_centroids(emb, "vec_id", "embedding", 32)
+            cents = ivf_train_centroids(table("embeddings"), "vec_id", "embedding", 32)
         bench(
             "ivf_topk",
-            lambda: ivf_topk(
-                emb, ivf_queries, "vec_id", "embedding", "qid",
+            lambda emb: ivf_topk(
+                emb, ivf_queries(emb), "vec_id", "embedding", "qid",
                 k=10, n_centroids=32, n_probe=4, centroids=cents,
             ).count(),
+            "embeddings",
         )
     bench(
         "semantic_dedup_emb",
-        lambda: semantic_dedup(emb, "vec_id", "embedding", threshold=0.95,
-                               n_centroids=32, iters=3).count(),
+        lambda emb: semantic_dedup(emb, "vec_id", "embedding", threshold=0.95,
+                                   n_centroids=32, iters=3).count(),
+        "embeddings",
     )
     pq_books = bench(
         "pq_train_encode",
-        lambda: (
+        lambda emb: (
             lambda b: (pq_encode(emb, "vec_id", "embedding", b).count(), b)[1]
         )(pq_train_codebooks(emb, "vec_id", "embedding", 16, 64, iters=5)),
+        "embeddings",
     )
     if "pq_topk" in wanted:
+        emb = table("embeddings")
         if pq_books is None:
             pq_books = pq_train_codebooks(emb, "vec_id", "embedding", 16, 64, iters=5)
         pq_codes = pq_encode(emb, "vec_id", "embedding", pq_books).cache()
         pq_codes.count()
         bench(
             "pq_topk",
-            lambda: pq_topk(pq_codes, ivf_queries, "embedding", "qid", 10, pq_books).count(),
+            lambda emb: pq_topk(pq_codes, ivf_queries(emb), "embedding", "qid", 10, pq_books)
+            .count(),
+            "embeddings",
         )
         pq_codes.unpersist()
 
     bench(
         "spans_docs",
-        lambda: repeated_spans(docs, "text", "doc_id", span_words=10, min_docs=2).count(),
+        lambda docs: repeated_spans(docs, "text", "doc_id", span_words=10, min_docs=2).count(),
+        "documents",
     )
-    spans_docs = docs.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 4 == 0,
-            F.concat(F.col("text"),
-                     F.lit(" all rights reserved contact the site administrator today")),
-        ).otherwise(F.col("text")).alias("text"),
-    )
+
+    def spans_docs(docs):
+        return docs.select(
+            "doc_id",
+            F.when(
+                F.col("doc_id") % 4 == 0,
+                F.concat(F.col("text"),
+                         F.lit(" all rights reserved contact the site administrator today")),
+            ).otherwise(F.col("text")).alias("text"),
+        )
+
     bench(
         "remove_spans_docs",
-        lambda: remove_repeated_spans(spans_docs, "text", "doc_id",
-                                      span_words=8, min_docs=2)
+        lambda docs: remove_repeated_spans(spans_docs(docs), "text", "doc_id",
+                                           span_words=8, min_docs=2)
         .agg(F.sum(F.length("text"))).collect(),
+        "documents",
     )
-    ev_docs = docs.filter(F.col("doc_id") % 7 == 0)
-    tr_docs = docs.filter(F.col("doc_id") % 7 != 0)
+
+    def tr_ev(docs):
+        """(training docs, eval docs): every seventh document is eval."""
+        return docs.filter(F.col("doc_id") % 7 != 0), docs.filter(F.col("doc_id") % 7 == 0)
+
     bench(
         "decontam_docs",
-        lambda: contamination_flags(tr_docs, ev_docs, "text", "doc_id", k=5)
+        lambda docs: contamination_flags(*tr_ev(docs), "text", "doc_id", k=5)
         .filter("contaminated")
         .count(),
+        "documents",
     )
     bench(
         "decontam_spans",
-        lambda: remove_contaminated_spans(
-            tr_docs, ev_docs, "text", "doc_id", span_words=5
-        )
+        lambda docs: remove_contaminated_spans(*tr_ev(docs), "text", "doc_id", span_words=5)
         .agg(F.sum(F.length("text")))
         .collect(),
+        "documents",
     )
     bench(
         "repetition_docs",
-        lambda: repetition_stats(docs, "text", "doc_id")
+        lambda docs: repetition_stats(docs, "text", "doc_id")
         .agg(F.avg("dup_line_frac"), F.avg("top_ngram_char_frac"))
         .collect(),
+        "documents",
     )
     bench(
         "neardup_docs",
-        lambda: near_duplicate_pairs(docs, "text", "doc_id", threshold=0.8, n_perms=64, bands=16).count(),
+        lambda docs: near_duplicate_pairs(docs, "text", "doc_id", threshold=0.8,
+                                          n_perms=64, bands=16).count(),
+        "documents",
     )
 
-    def corpus_pipeline():
+    def corpus_pipeline(docs):
         long_docs = docs.filter(F.size(normalized_words(F.col("text"))) >= 30)
         corpus = docs.select("doc_id", "text").unionAll(
             docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
@@ -168,11 +195,12 @@ def main() -> None:
             pairs.select(F.col("id_b").alias("doc_id")).distinct(), "doc_id", "left_anti"
         ).count()
 
-    bench("corpus_pipeline", corpus_pipeline)
+    bench("corpus_pipeline", corpus_pipeline, "documents")
 
     if "sharded_probe" in wanted or "sharded_build" in wanted:
         from poppy_spark.spark.sharded import build_sharded_bloom
 
+        lineitem = table("lineitem")
         n_keys = lineitem.select("l_orderkey").distinct().count()
 
         def sharded_build():
@@ -199,7 +227,7 @@ def main() -> None:
     if "media_codecs" in wanted:
         from poppy_spark.spark.multimodal import encode_bmp, extract_media_features
 
-        def media_row():
+        def media_row(docs):
             import numpy as _np
             import pandas as _pd
             import pyspark.sql.types as T
@@ -238,10 +266,12 @@ def main() -> None:
                 F.count("feat")
             ).collect()
 
-        bench("media_codecs", media_row)
+        bench("media_codecs", media_row, "documents")
 
     print(json.dumps({"queries": timings, "sf": os.path.basename(sf_dir.rstrip("/")),
                       "cpus": int(cpus)}))
+    for df in tables.values():
+        df.unpersist()
     spark.stop()
 
 

@@ -35,6 +35,16 @@ from pyspark.sql import DataFrame, functions as F
 from poppy_spark.sketches.base import Sketch
 
 
+def _write_atomic(path: str, data: bytes, tag: int | str) -> None:
+    """The package's one state-file writer: ``data`` goes to
+    ``<path>.tmp<tag>`` and is renamed over ``path``, so a reader sees the
+    old file or the new one, never a torn one."""
+    tmp = f"{path}.tmp{tag}"
+    with open(tmp, "wb") as f:
+        f.write(data)
+    os.replace(tmp, path)
+
+
 def _fingerprint(df: DataFrame, col: str) -> DataFrame:
     """Cheap per-partition input fingerprint: row count + xor/sum of
     xxhash64(key) — order-insensitive, so it is stable under rescans."""
@@ -108,10 +118,8 @@ class SketchCheckpoint:
         return {"sketch": type(self.factory()).kind, "partitions": {}}
 
     def _save_manifest(self, manifest: dict) -> None:
-        tmp = self.manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.manifest_path)
+        raw = json.dumps(manifest, indent=1, sort_keys=True).encode()
+        _write_atomic(self.manifest_path, raw, "")
 
     def build(
         self,
@@ -204,12 +212,11 @@ class SketchCheckpoint:
                     return  # batches never consumed -> scan short-circuits
                 for _, _, sk, n in _partition_update(batches, 0, [factory], int_keys):
                     # checkpoint files stay raw (each one a valid poppy/sketch
-                    # file); written executor-side, atomically via rename
-                    path = os.path.join(out_dir, f"part-{pid:05d}.state")
-                    tmp = f"{path}.tmp-{tc.taskAttemptId() if tc else 0}"
-                    with open(tmp, "wb") as f:
-                        f.write(sk.dumps())
-                    os.replace(tmp, path)
+                    # file); written executor-side, one temp file per attempt
+                    _write_atomic(
+                        os.path.join(out_dir, f"part-{pid:05d}.state"), sk.dumps(),
+                        f"-{tc.taskAttemptId() if tc else 0}",
+                    )
                     yield pa.RecordBatch.from_arrays(
                         [pa.array([pid], pa.int64()), pa.array([n], pa.int64())],
                         ["pid", "n_rows"],
@@ -263,10 +270,7 @@ class SketchCheckpoint:
             states = fdf.mapInArrow(load, _STATES_SCHEMA)
             row = _merge_tree(states, cls, len(files), 8).collect()[0]
             merged = cls.loads(bytes(row["state"]))
-        tmp = final_path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(merged.dumps())
-        os.replace(tmp, final_path)
+        _write_atomic(final_path, merged.dumps(), "")
         if snap is not None and manifest.get("input_snapshot") != snap:
             # final.state now holds this input (also after a listing delta
             # that content fingerprints proved harmless, e.g. a rewrite with

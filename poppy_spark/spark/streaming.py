@@ -2,24 +2,31 @@
 
 The reference is a pure batch library; its incremental story is "load filter,
 insert new entries, save" (``poppy/src/bin/poppy.rs:320-335``).  The streaming
-analog here: ``foreachBatch`` folds each micro-batch through the same
-two-phase aggregation and unions the result into a checkpointed state — the
+analog here is one ``foreachBatch`` sink, :class:`StreamingSketch`: each
+micro-batch folds through the same two-phase aggregation into a state file
+that records the last folded batch id, so the sink is exactly-once — the
 sketch state *is* the streaming state, and merge associativity makes
 micro-batch boundaries invisible in the final bytes.
+:class:`BloomStreamDedup` is that sink plus a gate: only a batch's
+first-seen keys are written out and folded.
 
 For grouped sketches, a watermarked window + grouped build per micro-batch
-appends (window, group, state) rows that downstream readers merge on read.
+writes (window, group, state) rows under ``batch=<id>`` (a replay overwrites
+its own rows) that downstream readers merge on read.
 """
 
 from __future__ import annotations
 
 import os
+import struct
+from contextlib import contextmanager
 from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructType
 
 from poppy_spark.sketches.base import Sketch
+from poppy_spark.spark.checkpoint import _write_atomic
 
 
 class StreamingSketch:
@@ -31,10 +38,12 @@ class StreamingSketch:
         q = (stream.writeStream.foreachBatch(ss)
              .option("checkpointLocation", "/ckpt/turns_bloom/offsets").start())
 
-    The state file is written atomically after every batch; a restarted query
-    resumes from it (exactly-once per micro-batch is inherited from the sink
-    checkpoint — re-processing a batch is harmless for idempotent updates
-    like Bloom/HLL/MinHash, and documented as at-least-once for CMS counts).
+    The sink is EXACTLY-ONCE per micro-batch: the state file holds the
+    last folded ``batch_id`` ahead of the sketch bytes, written atomically
+    with them, so a batch the restarted query re-offers is skipped — a
+    replay never counts a CMS/KLL/t-digest/top-k batch twice.  Batch ids
+    must increase, so a directory belongs to ONE query checkpoint.  A
+    batch that folds no rows writes nothing.
 
     WORKER-SIZED STATES ONLY: every micro-batch the driver holds two copies
     of the state (the collected delta and the current) and rewrites the
@@ -45,6 +54,8 @@ class StreamingSketch:
     cost is one append of touched SHARD deltas, driver-free.
     """
 
+    _state_name = "stream.state"
+
     def __init__(
         self,
         directory: str,
@@ -52,10 +63,12 @@ class StreamingSketch:
         col: str = "value",
         max_state_bytes: int = 1 << 30,
     ):
+        # from the parameters: serializing the state to measure it would
+        # commit all of its pages
         est = factory().memory_bound_bytes()
         if est > max_state_bytes:
             raise ValueError(
-                f"sketch state is ~{est} bytes; StreamingSketch folds the "
+                f"sketch state is ~{est} bytes; {type(self).__name__} folds the "
                 f"whole state through the driver every micro-batch and is "
                 f"capped at max_state_bytes={max_state_bytes} — use "
                 f"poppy_spark.spark.sharded.ShardedBloomStream for filters "
@@ -65,28 +78,37 @@ class StreamingSketch:
         self.factory = factory
         self.col = col
         os.makedirs(directory, exist_ok=True)
-        self._state_path = os.path.join(directory, "stream.state")
+        self._state_path = os.path.join(directory, self._state_name)
+
+    def _load(self) -> tuple[Sketch, int]:
+        """``(sketch, last folded batch id)``; ``(empty, -1)`` before any."""
+        if not os.path.exists(self._state_path):
+            return self.factory(), -1
+        with open(self._state_path, "rb") as f:
+            raw = f.read()
+        (last_batch,) = struct.unpack_from("<q", raw)
+        return type(self.factory()).loads(raw[8:]), last_batch
 
     def current(self) -> Sketch:
-        cls = type(self.factory())
-        if os.path.exists(self._state_path):
-            with open(self._state_path, "rb") as f:
-                return cls.loads(f.read())
-        return self.factory()
+        return self._load()[0]
+
+    @contextmanager
+    def _rows(self, batch_df: DataFrame, batch_id: int, sk: Sketch):
+        """The rows of a batch to fold into ``sk``: the batch itself."""
+        yield batch_df
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from poppy_spark.spark.agg import build_sketch
 
-        if batch_df.isEmpty():
+        sk, last_batch = self._load()
+        if batch_id <= last_batch:  # replayed batch: already folded
             return
-        delta = build_sketch(batch_df, self.col, self.factory)
-        merged = self.current()
-        merged.merge(delta)
-        merged.finalize_merge()
-        tmp = self._state_path + f".tmp{batch_id}"
-        with open(tmp, "wb") as f:
-            f.write(merged.dumps())
-        os.replace(tmp, self._state_path)
+        with self._rows(batch_df, batch_id, sk) as rows:
+            if rows.isEmpty():
+                return
+            sk.merge(build_sketch(rows, self.col, self.factory))
+        sk.finalize_merge()
+        _write_atomic(self._state_path, struct.pack("<q", batch_id) + sk.dumps(), batch_id)
 
 
 def windowed_grouped_sketch_sink(
@@ -99,9 +121,11 @@ def windowed_grouped_sketch_sink(
     window: str = "1 hour",
     watermark: str = "2 hours",
 ):
-    """writeStream pipeline appending (window, group..., state, n_rows) per
-    micro-batch; readers union states per (window, group) — late data within
-    the watermark lands as extra mergeable rows rather than updates."""
+    """writeStream pipeline writing (window, group..., state, n_rows) per
+    micro-batch to ``out_path/batch=<id>`` (overwrite: a replayed batch
+    replaces its own rows, exactly-once); readers union states per
+    (window, group) — late data within the watermark lands as extra
+    mergeable rows rather than updates."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         from poppy_spark.spark.agg import build_sketch_grouped
@@ -110,7 +134,9 @@ def windowed_grouped_sketch_sink(
             return
         g = batch_df.withColumn("window", F.window(F.col(ts_col), window).start)
         states = build_sketch_grouped(g, col, ["window", *group_cols], factory)
-        states.write.mode("append").parquet(out_path)
+        # per-batch subdirectory + overwrite: a replayed batch replaces its
+        # own states instead of appending a second copy
+        states.write.mode("overwrite").parquet(os.path.join(out_path, f"batch={batch_id}"))
 
     return (
         stream.withWatermark(ts_col, watermark)
@@ -158,17 +184,20 @@ def stateful_grouped_sketch(
     serialized sketch (KBs–MBs), so cardinality × state size must fit the
     state store — for huge single filters use :class:`ShardedBloomStream`.
 
-    The value column is hashed as-is by the sketch's Python kernel (the
-    JVM-prehash fast path is a batch-aggregation optimization); pre-hash
-    integers to strings or ``xxhash64`` upstream if key canonicalization
-    matters for cross-filter compatibility.
+    The value column is keyed as the batch builds key it (``int_keys=
+    "string"``): a group's state is byte-equal to
+    :func:`poppy_spark.spark.agg.build_sketch_grouped` over the same rows.
     """
     import pandas as pd
     import pyarrow as pa
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    sketch_cls = type(factory())
-    by_name = {f.name: f.dataType.simpleString() for f in stream_df.schema.fields}
+    from poppy_spark.spark.agg import _key_expr
+
+    sk0 = factory()
+    sketch_cls = type(sk0)
+    keyed = stream_df.select(*group_cols, _key_expr(stream_df, col, sk0).alias(col))
+    by_name = {f.name: f.dataType.simpleString() for f in keyed.schema.fields}
     out_schema = ", ".join(
         [f"{g} {by_name[g]}" for g in group_cols]
         + [f"estimate {estimate_type}", "n_rows bigint"]
@@ -189,7 +218,7 @@ def stateful_grouped_sketch(
             columns=[*group_cols, "estimate", "n_rows"],
         )
 
-    return stream_df.groupBy(*group_cols).applyInPandasWithState(
+    return keyed.groupBy(*group_cols).applyInPandasWithState(
         fn, out_schema, "state binary, n bigint", "update",
         GroupStateTimeout.NoTimeout,
     )
@@ -214,7 +243,7 @@ def exact_stream_dedup(
     )
 
 
-class BloomStreamDedup:
+class BloomStreamDedup(StreamingSketch):
     """Corpus-lifetime streaming dedup with BOUNDED memory: a persistent
     Bloom filter gates each micro-batch, emitting only first-seen keys to
     ``out_path``.
@@ -227,16 +256,17 @@ class BloomStreamDedup:
 
     Per micro-batch: within-batch ``dropDuplicates`` → broadcast probe
     against the current filter (Arrow-vectorized, no shuffle of the batch)
-    → append survivors → fold survivors' keys into the filter via the same
-    two-phase build as everything else → atomic state replace.  A
-    processed ``batch_id`` is recorded inside the state file, so a
-    restarted query re-offering the same batch is SKIPPED — replays
-    neither drop rows (as already-inserted "seen" keys) nor double-append.
+    → write survivors → fold survivors' keys into the filter, as
+    :class:`StreamingSketch` folds a batch, exactly-once by batch id: a
+    replayed batch neither drops rows (as already-inserted "seen" keys)
+    nor double-writes.
 
     Driver holds the filter (worker-sized states; for >broadcast-budget
     filters the same gate composes with
     :class:`poppy_spark.spark.sharded.ShardedBloomStream` probes).
     """
+
+    _state_name = "dedup.state"
 
     def __init__(
         self,
@@ -246,65 +276,26 @@ class BloomStreamDedup:
         out_path: str,
         max_state_bytes: int = 1 << 30,
     ):
-        # from the parameters: the filter's pages stay untouched, where
-        # serializing it to measure would commit the whole state
-        est = factory().memory_bound_bytes()
-        if est > max_state_bytes:
-            raise ValueError(
-                f"filter state is ~{est} bytes; BloomStreamDedup probes and "
-                f"folds it through the driver each micro-batch (cap "
-                f"{max_state_bytes}) — compose ShardedBloomStream probes for "
-                f"filters this large"
-            )
-        self.dir = directory
-        self.factory = factory
-        self.key_col = key_col
+        super().__init__(directory, factory, key_col, max_state_bytes)
         self.out_path = out_path
-        os.makedirs(directory, exist_ok=True)
-        self._state_path = os.path.join(directory, "dedup.state")
 
-    def _load(self):
-        import struct as _struct
-
-        cls = type(self.factory())
-        if os.path.exists(self._state_path):
-            with open(self._state_path, "rb") as f:
-                raw = f.read()
-            (last_batch,) = _struct.unpack_from("<q", raw)
-            return cls.loads(raw[8:]), last_batch
-        return self.factory(), -1
-
-    def current(self) -> Sketch:
-        return self._load()[0]
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        import struct as _struct
-
-        from poppy_spark.spark.agg import build_sketch
+    @contextmanager
+    def _rows(self, batch_df: DataFrame, batch_id: int, sk: Sketch):
+        """The batch's first-seen rows, written to ``out_path/batch=<id>``."""
         from poppy_spark.spark.probe import bloom_contains
 
-        sk, last_batch = self._load()
-        if batch_id <= last_batch:  # replayed batch: already fully applied
-            return
-        fresh = batch_df.dropDuplicates([self.key_col])
-        if not fresh.isEmpty():
-            probed = bloom_contains(fresh, self.key_col, sk.dumps(), "__seen")
-            # persist: the parquet write and the delta build would otherwise
-            # each re-run the dedup shuffle + probe over the batch
-            survivors = probed.filter(~F.col("__seen")).drop("__seen").persist()
-            try:
-                # per-batch subdirectory + overwrite: re-running a batch whose
-                # state write never landed replaces its own output instead of
-                # appending a second copy — the whole step is idempotent
-                survivors.write.mode("overwrite").parquet(
-                    os.path.join(self.out_path, f"batch={batch_id}")
-                )
-                delta = build_sketch(survivors, self.key_col, self.factory)
-            finally:
-                survivors.unpersist()
-            sk.merge(delta)
-            sk.finalize_merge()
-        tmp = self._state_path + f".tmp{batch_id}"
-        with open(tmp, "wb") as f:
-            f.write(_struct.pack("<q", batch_id) + sk.dumps())
-        os.replace(tmp, self._state_path)
+        fresh = batch_df.dropDuplicates([self.col])
+        probed = bloom_contains(fresh, self.col, sk.dumps(), "__seen")
+        # persist: the parquet write and the fold would otherwise each re-run
+        # the dedup shuffle + probe over the batch
+        survivors = probed.filter(~F.col("__seen")).drop("__seen").persist()
+        try:
+            # per-batch subdirectory + overwrite: re-running a batch whose
+            # state write never landed replaces its own output instead of
+            # appending a second copy — the whole step is idempotent
+            survivors.write.mode("overwrite").parquet(
+                os.path.join(self.out_path, f"batch={batch_id}")
+            )
+            yield survivors
+        finally:
+            survivors.unpersist()

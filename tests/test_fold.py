@@ -170,10 +170,11 @@ class TestFoldGroups:
 
 
 class _Sites(ast.NodeVisitor):
-    """Enclosing class/function path of every ``.<attr>(`` call."""
+    """Enclosing class/function path of every ``.<attr>(`` call that
+    ``where(call node)`` accepts."""
 
-    def __init__(self, attr):
-        self.attr, self.path, self.sites = attr, [], []
+    def __init__(self, attr, where=lambda call: True):
+        self.attr, self.where, self.path, self.sites = attr, where, [], []
 
     def _scope(self, node):
         self.path.append(node.name)
@@ -185,7 +186,8 @@ class _Sites(ast.NodeVisitor):
     def visit_Call(self, node):
         f = node.func
         if getattr(f, "attr", None) == self.attr or getattr(f, "id", None) == self.attr:
-            self.sites.append(".".join(self.path))
+            if self.where(node):
+                self.sites.append(".".join(self.path))
         self.generic_visit(node)
 
 
@@ -336,7 +338,7 @@ class TestOneShapeGuard:
             "decontam.py:contamination_flags",
             "dedup.py:duplicate_components",
             "sharded.py:_build",  # released by ShardedBloom.unpersist()
-            "streaming.py:BloomStreamDedup.__call__",
+            "streaming.py:BloomStreamDedup._rows",
         ]
 
         def releases_in_finally(tree, *path):
@@ -354,7 +356,43 @@ class TestOneShapeGuard:
 
         assert releases_in_finally(trees["decontam.py"], "contamination_flags")
         assert releases_in_finally(trees["dedup.py"], "duplicate_components")
-        assert releases_in_finally(trees["streaming.py"], "BloomStreamDedup", "__call__")
+        assert releases_in_finally(trees["streaming.py"], "BloomStreamDedup", "_rows")
+
+    def test_one_stream_sink(self):
+        """One micro-batch sketch sink: ``BloomStreamDedup`` is a
+        ``StreamingSketch`` that adds only its gate, one batch-id state
+        header is packed, and one helper writes state files through a
+        temp file and a rename."""
+        from poppy_spark.spark.streaming import BloomStreamDedup, StreamingSketch
+
+        assert issubclass(BloomStreamDedup, StreamingSketch)
+        assert not {"__call__", "_load", "current"} & set(vars(BloomStreamDedup))
+
+        def sites(needle, owner, attr, *args):
+            """Scopes of ``<owner>.<attr>(*args, ...`` calls in the package;
+            every textual ``needle`` is one of them."""
+
+            def where(call):
+                head = [getattr(x, "value", None) for x in call.args[: len(args)]]
+                on = getattr(getattr(call.func, "value", None), "id", None)
+                return on == owner and head == list(args)
+
+            found = []
+            for p in sorted(SPARK_DIR.parent.rglob("*.py")):
+                src = p.read_text()
+                v = _Sites(attr, where)
+                v.visit(ast.parse(src))
+                assert src.count(needle) == len(v.sites), p.name
+                found += [f"{p.name}:{s}" for s in v.sites]
+            return found
+
+        assert sites('struct.pack("<q"', "struct", "pack", "<q") == [
+            "streaming.py:StreamingSketch.__call__"
+        ]
+        assert sites("os.replace(", "os", "replace") == [
+            "checkpoint.py:_write_atomic",
+            "sharded.py:ShardedBloomStream.compact",
+        ]
 
     def test_one_spread_guard(self):
         """One helper spreads low-split inputs over the cores and reads the

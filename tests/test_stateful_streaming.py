@@ -61,3 +61,55 @@ class TestStatefulGroupedSketch:
             # (largest-n) estimate against it
             n_final, est_final = seq[-1]
             assert abs(est_final - n_final) <= tol * n_final
+
+    def test_int_key_column_keyed_like_batch_build(self, spark, tmp_path):
+        """A bigint value column is keyed as the batch builds key it: the
+        estimate is within 4 SE, and each group's stored state is byte-equal
+        to ``build_sketch_grouped`` over the same rows."""
+        from poppy_spark.sketches import HllSketch
+        from poppy_spark.spark.agg import build_sketch_grouped
+        from poppy_spark.spark.streaming import stateful_grouped_sketch
+
+        src = str(tmp_path / "src")
+        for i in range(3):  # one file per micro-batch
+            spark.range(i * 3000, (i + 1) * 3000).select(
+                F.format_string("g%d", F.col("id") % 3).alias("grp"),
+                F.col("id").alias("key"),
+            ).coalesce(1).write.mode("append").parquet(src)
+        stream = (
+            spark.readStream.schema("grp string, key bigint")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        factory = HllSketch.factory(12)
+        ckpt = str(tmp_path / "ckpt")
+        q = (
+            stateful_grouped_sketch(stream, "key", ["grp"], factory)
+            .writeStream.format("memory")
+            .queryName("stateful_int_keys")
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        rows = spark.sql("SELECT * FROM stateful_int_keys").collect()
+        final = {}
+        for r in rows:
+            if r["n_rows"] > final.get(r["grp"], (0, 0))[0]:
+                final[r["grp"]] = (r["n_rows"], r["estimate"])
+        assert final.keys() == {"g0", "g1", "g2"}
+        tol = 4 * (1.04 / (1 << 6))  # 4 standard errors at p=12
+        for n, est in final.values():
+            assert n == 3000
+            assert abs(est - n) <= tol * n
+        stored = {
+            r["key"]["grp"]: bytes(r["value"]["groupState"]["state"])
+            for r in spark.read.format("statestore").load(ckpt).collect()
+        }
+        built = {
+            r["grp"]: bytes(r["state"])
+            for r in build_sketch_grouped(spark.read.parquet(src), "key", ["grp"], factory)
+            .collect()
+        }
+        assert stored == built
