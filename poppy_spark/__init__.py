@@ -40,14 +40,17 @@ __version__ = "0.1.0"
 
 # Every library UDF imports this package when a Spark Python worker
 # unpickles it; from then on the worker's per-task import-cache reset costs
-# a stat per zip archive instead of a re-parse (see _worker).
+# a stat per zip archive instead of a re-parse, and each task start freezes
+# the worker's long-lived objects so the after-task gc.collect() skips them
+# (see _worker).
 if "pyspark" in sys.modules:
     from pyspark.taskcontext import TaskContext
 
     if TaskContext.get() is not None:
-        from ._worker import install_lazy_zip_invalidation
+        from ._worker import freeze_at_task_start, install_lazy_zip_invalidation
 
         install_lazy_zip_invalidation()
+        freeze_at_task_start()
 
 __all__ = [
     "BloomFilter",

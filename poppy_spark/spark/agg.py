@@ -339,6 +339,7 @@ def fold_groups(
     add: Callable[[Any, Any, int, int], None],
     emit: Callable[[Any], tuple | None],
     prepare: Callable[[pa.RecordBatch], Any] | None = None,
+    seed: DataFrame | None = None,
 ) -> DataFrame:
     """Fold the rows that share ``keys`` into one output row per group,
     laid out ``[*keys, *schema]``.
@@ -365,7 +366,10 @@ def fold_groups(
     input batch).  The output's key columns are those rows, taken once per
     flush and cast to ``df``'s key types, so a key keeps its value in any
     session zone.  NULL equals NULL and NaN equals NaN, as Spark groups
-    them.  No ``keys`` folds everything into one group in one task.
+    them.  No ``keys`` folds everything into one group in one task; the
+    rows of a ``seed`` frame (no keys only) join that task after the
+    exchange, so it runs even when AQE finds the input empty and drops the
+    plan above it.
 
     Merge order within a group is shuffle arrival order, exactly as
     ``applyInPandas``' was: every sketch either merges order-invariantly
@@ -382,7 +386,12 @@ def fold_groups(
     keys_arrow, values_arrow = to_arrow_schema(key_fields), to_arrow_schema(schema)
     rest = [c for c in df.columns if c not in keys]
     df = df.select(*keys, *rest)
-    df = df.repartition(*keys).sortWithinPartitions(*keys) if keys else df.repartition(1)
+    if keys:
+        df = df.repartition(*keys).sortWithinPartitions(*keys)
+    elif seed is None:
+        df = df.repartition(1)
+    else:
+        df = df.repartition(1).unionByName(seed).coalesce(1)
 
     def groups(batches: Iterator[pa.RecordBatch]):
         """``(head row, acc)`` of each group once all its rows were added."""
@@ -409,7 +418,8 @@ def fold_groups(
 
 class _StateMerge:
     """:func:`fold_groups` accumulator merging a group's ``state`` and
-    ``n_rows`` rows (lz4-wrapped or raw states alike) into one sketch."""
+    ``n_rows`` rows (lz4-wrapped or raw states alike) into one sketch.  A
+    NULL state (the merge tree's seed row) holds nothing and is skipped."""
 
     __slots__ = ("cls", "sk", "n_rows")
 
@@ -419,14 +429,20 @@ class _StateMerge:
     def add(self, b: pa.RecordBatch, lo: int, hi: int) -> None:
         states = b.column("state")
         for i in range(lo, hi):
-            part = _z_loads(self.cls, states[i].as_py())
+            raw = states[i].as_py()
+            if raw is None:
+                continue
+            part = _z_loads(self.cls, raw)
             if self.sk is None:
                 self.sk = part
             else:
                 self.sk.merge(part)
         self.n_rows += pc.sum(b.column("n_rows").slice(lo, hi - lo)).as_py() or 0
 
-    def final_state(self) -> bytes:
+    def final_state(self, factory: Callable[[], Sketch] | None = None) -> bytes:
+        """The merged state; ``factory()``'s empty sketch if no state came."""
+        if self.sk is None:
+            self.sk = factory()
         self.sk.finalize_merge()
         return self.sk.dumps()
 
@@ -706,23 +722,21 @@ def build_sketch_df(
 
 def _build_flat(df, col, factory, repartition, merge_fanout, int_keys, strategy):
     """``(the verb's one driver-side factory() sketch, the merged one-row
-    states frame or the sharded build)`` of the two flat build verbs."""
+    states frame or the sharded build)`` of the two flat build verbs.  Both
+    routes update over the one spread key frame."""
     sk0 = factory()
-    if strategy != "sharded":
-        key = _key_expr(df, col, sk0, int_keys).alias("__key__")
-        keyed, n_parts = _spread(df.select(key), repartition)
-        if strategy == "auto":
-            strategy = _auto_strategy(sk0, n_parts)
+    key = _key_expr(df, col, sk0, int_keys).alias("__key")
+    keyed, n_parts = _spread(df.select(key), repartition)
+    if strategy == "auto":
+        strategy = _auto_strategy(sk0, n_parts)
     if strategy == "sharded":
-        from poppy_spark.spark.sharded import build_sharded_bloom
+        from poppy_spark.spark.sharded import _build, _Params
 
         filt = sk0.filter
-        return sk0, build_sharded_bloom(
-            df, col, filt.capacity, filt.fpp, persist=False, int_keys=int_keys
-        )
+        return sk0, _build(keyed, None, _Params.make(filt.capacity, filt.fpp), False, int_keys)
     states = _update_states(keyed, 0, [factory], int_keys)
     states = states.select(F.col("__pid").alias("pid"), "state", "n_rows")
-    return sk0, _merge_tree(states, type(sk0), n_parts, merge_fanout)
+    return sk0, _merge_tree(states, type(sk0), factory, n_parts, merge_fanout)
 
 
 def merge_states_tree(
@@ -734,10 +748,22 @@ def merge_states_tree(
     """Reduce a ``(pid, state, n_rows)`` DataFrame to one finalized state row
     via a bounded-fan-in merge tree (poppy folds sequentially; we tree-reduce
     so no single task ORs more than ``merge_fanout`` multi-MB states)."""
-    return _merge_tree(states, type(factory()), n_parts, merge_fanout)
+    return _merge_tree(states, type(factory()), factory, n_parts, merge_fanout)
 
 
-def _merge_tree(states: DataFrame, cls: type, n_parts: int, merge_fanout: int) -> DataFrame:
+def _merge_tree(
+    states: DataFrame,
+    cls: type,
+    factory: Callable[[], Sketch],
+    n_parts: int,
+    merge_fanout: int,
+) -> DataFrame:
+    """The one-row ``(pid, state, n_rows)`` merge of ``cls`` states, also
+    over an empty ``states``: the last fold's seed row (a NULL state) makes
+    it run one task, which emits ``factory()``'s empty sketch when no state
+    came.  Without it, AQE's empty-relation propagation drops the fold (and
+    its output row) once an upstream shuffle stage comes back empty."""
+
     def start(head):
         return _StateMerge(cls)
 
@@ -751,8 +777,12 @@ def _merge_tree(states: DataFrame, cls: type, n_parts: int, merge_fanout: int) -
             _StateMerge.add,
             lambda m: (_z_dumps(m.sk), m.n_rows),
         )
+    seed = states.sparkSession.sql(
+        "SELECT 0L AS pid, CAST(NULL AS BINARY) AS state, 0L AS n_rows"
+    )
     merged = fold_groups(
-        states, [], _STATE_COLS, start, _StateMerge.add, lambda m: (m.final_state(), m.n_rows)
+        states, [], _STATE_COLS, start, _StateMerge.add,
+        lambda m: (m.final_state(factory), m.n_rows), seed=seed,
     )
     return merged.select(F.lit(0).cast("long").alias("pid"), "state", "n_rows")
 

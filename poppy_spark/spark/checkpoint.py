@@ -268,7 +268,7 @@ class SketchCheckpoint:
                         )
 
             states = fdf.mapInArrow(load, _STATES_SCHEMA)
-            row = _merge_tree(states, cls, len(files), 8).collect()[0]
+            row = _merge_tree(states, cls, self.factory, len(files), 8).collect()[0]
             merged = cls.loads(bytes(row["state"]))
         _write_atomic(final_path, merged.dumps(), "")
         if snap is not None and manifest.get("input_snapshot") != snap:

@@ -671,7 +671,8 @@ class ShardedBloomStream:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        delta = _build(batch_df, self.col, None, self.params, False, "string")
+        keyed = _keyed(batch_df, self.col, None, "string")
+        delta = _build(keyed, None, self.params, False, "string")
         delta.states.write.mode("append").parquet(self._shards_path)
 
     def current(self, spark: SparkSession) -> ShardedBloom:
@@ -733,15 +734,25 @@ def estimate_distinct_keys(
     return int(build_sketch(df, col, HllSketch.factory(p), int_keys=int_keys).result())
 
 
+def _keyed(df: DataFrame, col: str, group_col: str | None, int_keys: str) -> DataFrame:
+    """``[group_col?, __key]`` of ``df``, spread by ``agg._spread``: the
+    input of :func:`_build`."""
+    from poppy_spark.spark.agg import _as_key, _spread
+
+    groups = [group_col] if group_col else []
+    return _spread(df.select(*groups, _as_key(df, col, int_keys).alias("__key")))[0]
+
+
 def _build(
-    df: DataFrame,
-    col: str,
+    keyed: DataFrame,
     group_col: str | None,
     p: _Params,
     persist: bool,
     int_keys: str,
 ) -> ShardedBloom:
-    """The one sharded build, flat (``group_col=None``) or per group.
+    """The one sharded build, flat (``group_col=None``) or per group, over
+    a spread ``[group_col?, __key]`` frame (:func:`_keyed`; the flat
+    ``agg`` build passes its own, so a call spreads its input once).
 
     Phase 1 (the module's one ``mapInArrow``) maps each key to its
     ``(group?, shard_id, ibucket, k bit indexes)`` tuple.  A flat build
@@ -751,11 +762,10 @@ def _build(
     ``agg.fold_groups``, OR-ing them into one shard's buckets, so task
     memory is one shard plus one Arrow batch at any capacity or group
     count.  ``n_rows`` counts the tuples that reached the fold."""
-    from poppy_spark.spark.agg import _STATE_COLS, _as_key, _spread, fold_groups
+    from poppy_spark.spark.agg import _STATE_COLS, fold_groups
 
     groups = [group_col] if group_col else []
-    gfields = [df.schema[g] for g in groups]
-    keyed, _ = _spread(df.select(*groups, _as_key(df, col, int_keys).alias("__key")))
+    gfields = [keyed.schema[g] for g in groups]
     int_mode = _INT_MODE[int_keys]
     dedup = not groups
 
@@ -835,7 +845,7 @@ def build_sharded_bloom(
     elif not isinstance(capacity, int):
         raise TypeError(f"capacity must be an int or 'auto', got {capacity!r}")
     p = _Params.make(capacity, fpp, n_shards, target_shard_bytes)
-    return _build(df, col, None, p, persist, int_keys)
+    return _build(_keyed(df, col, None, int_keys), None, p, persist, int_keys)
 
 
 def build_sharded_bloom_grouped(
@@ -855,4 +865,4 @@ def build_sharded_bloom_grouped(
     ``build_sketch_grouped``'s memory guard points at — per-group filters
     too big for groups-seen x state-bytes per task."""
     p = _Params.make(capacity, fpp, n_shards, target_shard_bytes)
-    return _build(df, col, group_col, p, persist, int_keys)
+    return _build(_keyed(df, col, group_col, int_keys), group_col, p, persist, int_keys)

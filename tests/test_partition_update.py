@@ -69,6 +69,23 @@ class TestEdgeSemantics:
         for s in rows:
             assert build_sketch(empty, "k", BLOOM, strategy=s).dumps() == _fresh(BLOOM)
 
+    def test_input_emptied_at_runtime(self, spark, parts):
+        """An input that only turns out empty when its shuffle stage runs
+        (AQE then drops the plan above that stage) still gives the one
+        empty-sketch row, byte-equal to a statically empty input's; a
+        non-empty input of the same plan shape still merges every key."""
+        keys = _frame(spark, [(i % 3, f"k{i}") for i in range(60)], parts)
+        emptied = keys.dropDuplicates(["k"]).filter("k = 'x'")
+        kept = keys.dropDuplicates(["k"]).filter("k != 'x'")
+        for fac in (BLOOM, HLL):
+            rows = build_sketch_df(emptied, "k", fac).collect()
+            assert [(r["n_rows"], bytes(r["state"])) for r in rows] == [(0, _fresh(fac))]
+            assert build_sketch(emptied, "k", fac).dumps() == _fresh(fac)
+            assert (
+                build_sketch(kept, "k", fac).dumps()
+                == build_sketch(keys, "k", fac, strategy="states").dumps()
+            )
+
     def test_null_keys_are_values(self, spark, parts, tmp_path):
         """In the build verbs a NULL key counts in ``n_rows`` and hashes
         like any other key; the profile drops NULLs per column."""

@@ -211,6 +211,25 @@ class TestAutoStrategy:
         probe = [f"auto-{i:06d}" for i in range(0, 5000, 13)]
         assert all(via_auto.filter.contains_batch(probe))
 
+    def test_auto_spreads_input_once(self, spark, monkeypatch):
+        """The auto route to the sharded build spreads (and counts the
+        partitions of) its input once per call, and builds the filter
+        the states shape does."""
+        from poppy_spark.sketches import BloomSketch
+        from poppy_spark.spark import agg, sharded
+
+        keys = spark.range(0, 5000).select(F.format_string("once-%06d", "id").alias("k"))
+        # a 9 MB filter over 80 partitions: 80 states outweigh the tuples
+        factory = BloomSketch.factory(5_000_000, 0.001)
+        via_states = agg.build_sketch(keys, "k", factory, strategy="states")
+        spreads, builds = [], []
+        spread, build = agg._spread, sharded._build
+        monkeypatch.setattr(agg, "_spread", lambda *a, **k: spreads.append(1) or spread(*a, **k))
+        monkeypatch.setattr(sharded, "_build", lambda *a, **k: builds.append(1) or build(*a, **k))
+        via_auto = agg.build_sketch(keys, "k", factory, repartition=80, strategy="auto")
+        assert (len(spreads), len(builds)) == (1, 1)
+        assert via_auto.dumps() == via_states.dumps()
+
     def test_auto_keeps_states_for_small_filters(self, spark):
         from poppy_spark.sketches import BloomSketch
         from poppy_spark.spark.agg import build_sketch

@@ -1,6 +1,9 @@
-"""Lazy ``zipimporter.invalidate_caches`` in Spark Python workers: an
-unchanged archive is not re-read, a rewritten one is, and only worker
-processes on CPython < 3.13 carry the patch."""
+"""Per-task tuning of Spark Python workers.  Lazy
+``zipimporter.invalidate_caches``: an unchanged archive is not re-read, a
+rewritten one is, and only worker processes on CPython < 3.13 carry the
+patch.  The task-start ``gc.freeze()``: workers start each task with their
+long-lived objects frozen, keep no task's objects frozen, and the driver
+freezes nothing."""
 
 import importlib
 import sys
@@ -136,3 +139,102 @@ def test_installed_in_workers_only(spark):
         ("poppy_spark._worker._lazy_invalidate_caches", 0)
     ]
     assert zipimport.zipimporter.invalidate_caches is _worker._stdlib_invalidate_caches
+
+
+
+#: Runs in a fresh ``local[2]`` session, so every worker in its small pool
+#: has run library tasks by the 10th build.  After builds 10 and 20, one
+#: 8-task probe reports, per task, the worker's pid, whether an earlier
+#: task imported ``poppy_spark`` (the probe, pickled by value from
+#: ``__main__``, imports nothing new), and its frozen and unfrozen object
+#: counts as the task found them.
+_FRESH_SESSION_SCRIPT = """
+import json
+from pyspark.sql import functions as F
+from poppy_spark.sketches import HllSketch
+from poppy_spark.spark.agg import build_sketch_grouped
+from poppy_spark.spark.session import get_spark
+
+
+def report(batches):
+    import gc, os, sys
+    import pyarrow as pa
+
+    row = [os.getpid(), "poppy_spark" in sys.modules, gc.get_freeze_count(),
+           len(gc.get_objects())]
+    for b in batches:
+        yield pa.RecordBatch.from_pylist([dict(zip(["pid", "lib", "frozen", "unfrozen"], row))])
+
+
+spark = get_spark(app_name="freeze-at-task-start", master="local[2]", shuffle_partitions=2)
+df = spark.range(0, 2000, numPartitions=4).select(
+    (F.col("id") % 8).alias("g"), F.format_string("k%d", "id").alias("k")
+)
+probes = {}
+for job in range(1, 21):
+    build_sketch_grouped(df, "k", ["g"], HllSketch.factory(10)).collect()
+    if job in (10, 20):
+        probe = spark.range(0, 8, numPartitions=8).mapInArrow(
+            report, "pid long, lib boolean, frozen long, unfrozen long"
+        )
+        probes[job] = [r.asDict() for r in probe.collect()]
+spark.stop()
+print(json.dumps(probes))
+"""
+
+
+@pytest.fixture(scope="module")
+def probes():
+    """``{build: probe rows}`` of :data:`_FRESH_SESSION_SCRIPT`."""
+    import json
+    import os
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (root, env.get("PYTHONPATH")) if p)
+    out = subprocess.run(
+        [sys.executable, "-c", _FRESH_SESSION_SCRIPT],
+        capture_output=True, text=True, check=True, cwd=root, env=env, timeout=600,
+    ).stdout
+    return {int(k): v for k, v in json.loads(out.splitlines()[-1]).items()}
+
+
+class TestFreezeAtTaskStart:
+    def test_next_task_starts_frozen(self, probes):
+        """A worker that ran a library task starts its next task with the
+        survivors of the daemon's after-task collection frozen: what the
+        collection still walks is a small fraction of what it holds."""
+        rows = [r for job in (10, 20) for r in probes[job] if r["lib"]]
+        assert rows
+        for r in rows:
+            assert r["frozen"] > 0, r
+            assert r["unfrozen"] < 0.1 * r["frozen"], r
+
+    def test_driver_freezes_nothing(self):
+        """Importing the package outside a Spark task installs no hook: a
+        later ``importlib.invalidate_caches()`` freezes nothing."""
+        import subprocess
+
+        code = (
+            "import gc, importlib, sys\n"
+            "import pyspark.sql, poppy_spark, poppy_spark.spark\n"
+            "importlib.invalidate_caches()\n"
+            "hooks = [f for f in sys.meta_path if f.__module__.startswith('poppy_spark')]\n"
+            "print(gc.get_freeze_count(), len(hooks))\n"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", code], capture_output=True, text=True, check=True
+        ).stdout.split()
+        assert out == ["0", "0"]
+
+    def test_frozen_count_does_not_grow_per_task(self, probes):
+        """Between grouped build 10 and build 20 a worker's frozen set grows
+        by at most a few objects: the per-task freeze keeps no task's
+        objects alive."""
+        at = [{r["pid"]: r["frozen"] for r in probes[job] if r["lib"]} for job in (10, 20)]
+        both = at[0].keys() & at[1].keys()
+        assert both
+        for pid in both:
+            assert at[0][pid] > 0
+            assert at[1][pid] - at[0][pid] < 200, (pid, at)
